@@ -63,15 +63,6 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-#: Experimental A/B flag (r18): probe the SCC trim fixpoint with a
-#: narrow flags-agg before paying the e2 checkpoint (ADVICE r17).
-#: Measured and REJECTED on web_host_scc (scripts/graph_ab_r18.py):
-#: plain 6.59 s vs probe 7.28 s at sf0.1, 10.93 vs 11.56 at sf1 — the
-#: per-layer probe agg (a node-keyed shuffle every ACTIVE layer) costs
-#: more than the one e2 materialization it saves on the FINAL layer.
-#: The flag stays so the A/B is reproducible; False is the winner.
-_TRIM_PROBE = False
-
 #: Default fixpoint-round budget shared by the iterative operators AND
 #: the recursive-CTE oracles that gate them: an oracle recursion bound
 #: lower than the engine's round budget would silently truncate the
@@ -442,17 +433,6 @@ def strongly_connected_components(edges: DataFrame,
                                   F.lit(1).alias("i")))
                      .groupBy("node")
                      .agg(F.max("o").alias("o"), F.max("i").alias("i")))
-            if _TRIM_PROBE:
-                # ADVICE r17 experimental probe: decide "nothing to
-                # trim" from one narrow agg over the flags instead of
-                # materializing an identical e2 — n_core == n_endpoints
-                # ⟺ e2 == e exactly (a non-core endpoint always owns
-                # >= 1 live edge, which the semi-join then removes)
-                n_nodes, n_core = flags.agg(
-                    F.count(F.lit(1)),
-                    F.sum(F.col("o") * F.col("i"))).first()
-                if n_core == n_nodes:
-                    break
             core = (flags.filter((F.col("o") == 1) & (F.col("i") == 1))
                     .select("node"))
             e2 = (e.join(core.withColumnRenamed("node", "src"),

@@ -17,8 +17,11 @@ Determinism discipline (why results hash-match the oracle bit-for-bit):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -287,583 +290,59 @@ def us(col: Column | str) -> Column:
     return F.unix_micros(col.cast("timestamp"))
 
 
-# The driver's correctness gate verifies the first ~50 registry entries per
-# round. Rotation policy: queries whose most recent green CORRECTNESS row is
-# OLDEST register first, then queries added this round (never gated), then
-# the rest (freshly re-verified last round). Every query keeps at least one
-# green row across rounds, and no row goes stale for more than two rounds.
-# Cheap batch checks lead; multi-second stream-startup queries trail their
-# block so they never starve cheap checks.
-_VERIFY_FIRST_R10 = [
-    # --- never driver-gated first: the three late-r9 registrations
-    # (VERDICT r10 item 1) + the two r10 registrations (robots/licensing
-    # gate, WARC request/response/metadata pairing); the one stream
-    # among them sits at the stream tail ---
-    "io_orc_roundtrip", "web_host_stats",
-    "web_robots_filter", "warc_record_pairing", "web_robots_parse",
-    "u11_partitioned_upsert", "text_quality_classifier",
-    "web_link_graph", "web_host_pagerank", "web_pagerank_warm_start",
-    "pipeline_crawl_corpus",
-    # --- the r6-latest backlog (VERDICT r10 item 2), twins and
-    # headliners first as the verdict ordered: the four contract twins
-    # standing in for their permanent rows-only partners ---
-    "ann_arrow_fold_equality", "ann_ivf_trained_recall_bound",
-    "text_bpe_roundtrip", "w16_ewma_agreement",
-    # --- the five benched headliners (also re-executed by every bench
-    # run, but a bench run is not a CORRECTNESS row) ---
-    "ann_cosine_topk", "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier_volume", "text_quality_metrics",
-    # --- u7: its CDC/merge machinery changed this round (version-dir
-    # epochs) — re-gate with priority ---
-    "u7_merge_with_deletes",
-    # --- the remaining r6-latest batch rows, name order ---
-    "a17_iqr_outliers", "a18_key_skew_profile", "ann_ivf_topk",
-    "ann_lsh_buckets", "ann_recall_at_k", "contamination_check",
-    "dedup_clusters", "dedup_embedding_cosine", "dedup_ngram_jaccard",
-    "dedup_repeated_ngrams", "dedup_simhash_pairs", "emb_quantize_int8",
-    "f6_coalesce_fallback", "j2_composite_key_join", "j4_semi_anti_join",
-    "j7_asof_join", "j8_interval_join", "mm_frame_offsets",
-    "mm_gif_pixel_stats", "p10_time_range", "p7_p8_in_comparison",
-    "p9_like_rlike", "pii_redact", "pipeline_llm_curation",
-    "q6_forecast_revenue", "seq_pack_bins",
-    # --- streams at the tail (multi-second startup each): the
-    # never-gated crawl-ingest stream + the r6 CDC-apply stream whose
-    # sink machinery changed this round ---
-    "stream_web_ingest", "stream_cdc_apply",
-    "stream_partitioned_upsert",
+# The driver's correctness gate verifies the first 50 registry entries
+# per round, and every round writes its rows to CORRECTNESS_r<N>.json
+# beside the package. The head is computed from that ledger; the only
+# hand-kept input is _REGATE: queries whose execution path or oracle
+# text changed since their latest green row. Empty it once a green row
+# for them lands.
+_REGATE = [
+    # strongly_connected_components lost its unused trim-probe branch
+    "web_host_scc", "web_bowtie_classes",
 ]
-# Exactly 50 head entries: 13 never-gated (3 late-r9 + 10 new r10 —
-# web_robots_filter, warc_record_pairing, web_robots_parse,
-# u11_partitioned_upsert, text_quality_classifier, web_link_graph,
-# web_host_pagerank, web_pagerank_warm_start, pipeline_crawl_corpus,
-# stream_partitioned_upsert — two of the thirteen streams at the
-# tail) + 37 r6-latest refreshes (4 twins, 5 headliners, u7, 26 batch
-# rows, stream_cdc_apply).
+VERIFY_HEAD_SIZE = 50
+_LEDGER_DIR = Path(__file__).resolve().parents[2]
+_LEDGER_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-_VERIFY_FIRST_R11 = [
-    # --- never-driver-gated rows lead (VERDICT r10 item 1 + this
-    # round's registrations): the persisted-signature dedup screen (a
-    # bench headliner since r10 whose oracle had only ever run inside
-    # bench.py), then the two new robots-governance rows (RFC 9309
-    # §2.2.1 agent-fallback selection, Crawl-delay crawl budgets) ---
-    "dedup_screen_persisted",
-    "web_robots_agent_fallback", "web_robots_crawl_delay",
-    "web_crawl_frontier", "web_robots_wildcards", "web_sitemap_parse",
-    "pipeline_wet_export", "pipeline_wat_export",
-    # --- changed-code r11 rows: robots Allow/longest-match precedence
-    # + RFC 3986 href resolution rewrote these relations' fixtures and
-    # oracles (queries/web.py); the partitioned store's merge-base read
-    # and compaction rendering changed (streaming/__init__.py); the
-    # PageRank inner loop moved to true integer division
-    # (operators/graph.py); functions/url.py gained the resolver.
-    # All re-gate before any refresh does. ---
-    "web_robots_parse", "web_link_graph", "web_host_pagerank",
-    "web_pagerank_warm_start", "pipeline_crawl_corpus",
-    "u11_partitioned_upsert", "text_url_canonicalize",
-    # --- the r6-latest stale remainder (VERDICT r10 item 2): the
-    # reference's three landmark window operators + the text-analysis
-    # batch, enumerated for this round since r10 ---
-    "w1_lead_episodes", "w2_downup_fill", "w3_keep_last_dedup",
-    "w13_cumulative_distinct", "text_fingerprint", "text_lang_id",
-    "text_rolling_fingerprint", "tfidf_top_terms",
-    # --- the one r7 contract twin from the stale list ---
-    "dedup_semantic_contract",
-    # --- r7-latest refreshes (oldest remaining green), name order;
-    # the 21 r7 rows left over (q18/q19/q22/q7/q8, r2/r4,
-    # sample_split_assign, text_sentence_chunks, w4-w9, and the five
-    # r7 streams) are the enumerated r12 due list ---
-    "a10_moment_corr", "a11_exact_percentiles", "a24_chisq_association",
-    "a25_equi_depth_histogram", "a9_grouping_sets", "corpus_curation",
-    "curation_dsir_importance", "dedup_exact",
-    "dedup_incremental_minhash", "dedup_prefix_filter_join",
-    "dedup_simhash64", "f14_from_json_typed",
-    "j10_levenshtein_vocab_match", "j1_vocab_broadcast_star",
-    "j3_full_outer_join", "j6_fuzzy_vocab_match", "j9_salted_skew_join",
-    "mm_audio_resample", "mm_jpeg_pixel_stats",
-    # --- streams at the tail (multi-second startup each): the NEW
-    # never-gated streaming funnel (registered this round), the five
-    # r6-stale streams, and the partitioned-upsert stream whose store
-    # machinery changed this round ---
-    "stream_crawl_corpus",
-    "stream_click_to_buy", "stream_dedup_counts",
-    "stream_session_episodes", "stream_sliding_agg",
-    "stream_tumbling_agg", "stream_partitioned_upsert",
-]
-# Exactly 50: 9 never-gated (dedup_screen_persisted,
-# web_robots_agent_fallback, web_robots_crawl_delay,
-# web_crawl_frontier, web_robots_wildcards, web_sitemap_parse,
-# pipeline_wet_export, pipeline_wat_export, stream_crawl_corpus) + 7
-# changed-code re-gates + 14 stale (8 r6 batch + 5 r6 streams +
-# dedup_semantic_contract@r7) + 19 r7 refreshes +
-# stream_partitioned_upsert (changed code, stream tail). The nine r11
-# registrations took their slots from the last r7 refreshes in name
-# order (q10_returned_items, q15_top_supplier, q17_small_qty_revenue,
-# p5_p6_null_handling, p2_p4_drop_positional, p1_p3_project_rename,
-# mm_video_frame_stats, mm_resize_pixels pre-empted): new operators
-# get a driver row before any refresh does. r12 due list = those
-# pre-empted rows + the 17 remaining r7 rows (q18/q19/q22/q7/q8,
-# r2/r4, sample_split_assign, text_sentence_chunks, w4-w9, the five
-# r7 streams). After this gate no oracle row's latest green predates
-# r7.
 
-_VERIFY_FIRST_R12 = [
-    # --- never-driver-gated first (this round's registrations): the
-    # CDX capture index, the two-level sitemap index, and the LSM
-    # keep-best store (its stream twin sits at the stream tail) ---
-    "web_cdx_index", "web_cdx_point_lookup", "web_sitemap_index",
-    "web_robots_sitemap_discovery", "text_main_content",
-    "o5_global_sorted_index", "web_cdx_revisit", "web_recrawl_plan",
-    "u12_lsm_keep_best", "web_host_components", "web_crawl_depth",
-    "u13_lsm_size_tiered", "web_mirror_sets",
-    # --- changed-code re-gates: the RFC 3986 resolver fixes (§5.3
-    # empty-base merge + collapse on absolute/protocol-relative
-    # branches) rewrote the link fixtures feeding the D5 rows and the
-    # WAT export; percent-encoding normalization (pct_normalize +
-    # _sql_pct + the %-decoys planted in _RAW_URL_SQL) changed every
-    # _CANON_CTES/_sql_canon_of consumer; _sql_agent_verdict's guard
-    # became a raise. All re-gate before any refresh does. ---
-    "web_link_graph", "web_host_pagerank", "web_pagerank_warm_start",
-    "web_crawl_frontier", "pipeline_wat_export",
-    "text_url_canonicalize", "web_host_stats", "web_robots_filter",
-    "web_robots_parse", "web_robots_wildcards",
-    "web_robots_agent_fallback", "web_robots_crawl_delay",
-    "web_sitemap_parse", "pipeline_crawl_corpus",
-    # --- the enumerated r11 due list: every remaining r7-latest batch
-    # row (the r11 pre-emptions + the r7 remainder), name order ---
-    "mm_resize_pixels", "mm_video_frame_stats", "p1_p3_project_rename",
-    "p2_p4_drop_positional", "p5_p6_null_handling",
-    "q10_returned_items", "q15_top_supplier", "q17_small_qty_revenue",
-    "q18_large_volume_customer", "q19_disjunctive_filter",
-    "q22_global_sales_opportunity", "q7_nation_volume",
-    "q8_market_share", "r2_pivot_wide", "r4_explode_top_tokens",
-    "sample_split_assign",
-    # --- streams at the tail (multi-second startup each): the new LSM
-    # stream twin, the pct-changed funnel stream, and the five
-    # r7-latest streams from the due list ---
-    "stream_lsm_keep_best", "stream_crawl_corpus",
-    "stream_dedup_bounded_state", "stream_session_windows",
-    "stream_stateful_user_stats", "stream_static_enrich",
-    "stream_video_demux",
-]
-# Exactly 50: 14 never-gated (web_cdx_index, web_cdx_point_lookup,
-# web_sitemap_index, web_robots_sitemap_discovery, text_main_content,
-# o5_global_sorted_index, web_cdx_revisit, web_recrawl_plan,
-# u12_lsm_keep_best, web_host_components, web_crawl_depth,
-# u13_lsm_size_tiered, web_mirror_sets, stream_lsm_keep_best) + 15
-# changed-code re-gates (14 batch + stream_crawl_corpus; u12/
-# stream_lsm also cover this round's compact_lsm/_lsm_segments
-# changes) + 21 due (16 batch + 5 r7 streams). The three r8 refresh
-# fills (a12/a13/a14) and the due-tail rows in name order
-# (text_sentence_chunks, w4_rank_lag, w5_moving_avg,
-# w6_sessionize_gap, w7_session_window_native, w8_tumbling_window,
-# w9_ntile_percent_rank) were pre-empted by this round's
-# registrations (new operators get a driver row before any refresh
-# does; r11 set the same precedent on its due tail). r13 due list =
-# text_sentence_chunks + w4..w9 + a12/a13/a14 + the remaining
-# r8-latest cohort, oldest-first. After this gate no oracle row's
-# latest green predates r8 except the seven pre-empted rows (r7).
+def latest_green_rounds(ledger_dir: Path = _LEDGER_DIR) -> dict[str, int]:
+    """Round of each query's latest green CORRECTNESS row: rows, schema
+    and hash all match and ``err`` is null."""
+    latest: dict[str, int] = {}
+    for path in ledger_dir.iterdir():
+        m = _LEDGER_NAME.fullmatch(path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(path.read_text()).items():
+            green = (row["rows_match"] and row["schema_match"]
+                     and row["hash_match"] and row["err"] is None)
+            if green and rnd > latest.get(name, 0):
+                latest[name] = rnd
+    return latest
 
-_VERIFY_FIRST_R13 = [
-    # --- never-driver-gated first (this round's registrations): the
-    # compressed-member CDX contract twin (its rows-only sibling
-    # web_cdx_member_lookup never rotates in, per the rows-only
-    # policy), anchor-text aggregation, and the star-contraction
-    # components row gated under web_host_components' exact oracle
-    # (the streaming CDX maintenance fold sits at the stream tail) ---
-    "web_cdx_member_contract", "web_anchor_text",
-    "web_host_components_star", "web_cocitation_triangles",
-    "web_host_hits", "web_mirror_sets_incremental",
-    "web_hits_warm_start",
-    # --- continuation registrations (still never-gated, still lead):
-    # strongly connected components + the bowtie decomposition (the
-    # directed refinement of the components rows), LSM snapshot reads
-    # (read_lsm grew as_of — u12/u13 below also re-cover that path),
-    # and BM25F fielded retrieval (which refactored web_anchor_text's
-    # extraction into _anchor_rows; that row re-gates above) ---
-    "web_host_scc", "web_bowtie_classes", "u14_lsm_snapshot_read",
-    "web_host_bm25f", "web_host_kcore", "web_pagerank_personalized",
-    "text_unigram_surprisal", "text_pmi_collocations",
-    "text_surprisal_incremental", "web_registered_domain",
-    "dedup_entity_clusters",
-    # --- changed-code re-gates: the LSM crash-safety rework
-    # (publish-first folds, atomic meta, fanout guard) + footer-stats
-    # segment skipping touch every LSM read/fold path; the bounded
-    # decompress + WARC/-magic stale-offset policy rewrote
-    # read_records_at; _cdx_files_and_index was factored into
-    # _cdx_rows/_cdx_rank for the streaming fold; web_crawl_depth's
-    # oracle bound now shares FIXPOINT_MAX_ITERS with the engine; and
-    # web_host_components' edge builder was factored for the star
-    # twin. ---
-    "u12_lsm_keep_best", "u13_lsm_size_tiered", "web_cdx_index",
-    "web_cdx_point_lookup", "web_crawl_depth", "web_host_components",
-    "web_mirror_sets",
-    # --- the enumerated r13 due list, part 1: the seven r7 rows (the
-    # r12 pre-emptions — the ONLY rows whose latest green predates
-    # r8), name order ---
-    "text_sentence_chunks", "w4_rank_lag", "w5_moving_avg",
-    "w6_sessionize_gap", "w7_session_window_native",
-    "w8_tumbling_window", "w9_ntile_percent_rank",
-    # --- due list part 2: the r8 refresh fills (a12/a13/a14 first —
-    # twice pre-empted), then the r8-latest cohort in name order; the
-    # 21 rows left over (mm_decode_meta,
-    # mm_jpeg_progressive_pixel_stats, mm_media_meta, mm_resize_meta,
-    # mm_video_pixel_stats — the five pre-empted by this round's late
-    # registrations — plus o1_o2_topk, p11_castability_extract,
-    # pipeline_dialysis, pipeline_vitals, q13, q14, r1, r3,
-    # sample_stratified_rebalance, stream_vitals_hourly, u1, u2_u3,
-    # u4, u5, w10, w11) are the r14 due list ---
-    "a12_approx_distinct_bound", "a13_sketch_merge_distinct",
-    "a14_approx_percentile_bound", "a15_ordered_string_agg",
-    "a1_group_count_histogram", "a22_kmv_set_sketch",
-    "a2_multi_key_tally", "a3_missingness_profile",
-    "a4_duplicate_profile", "a5_summary_stats",
-    "a6_distinct_dim_extract", "a7_rollup_revenue", "a8_cube_counts",
-    "dedup_incremental_persisted", "dedup_minhash_lsh",
-    "dedup_minhash_recall_bound",
-    # --- streams at the tail (multi-second startup each): the new
-    # CDX maintenance fold and the LSM stream twin whose store code
-    # changed this round ---
-    "stream_cdx_maintain", "stream_lsm_keep_best",
-]
-# Exactly 50: 19 never-gated (web_cdx_member_contract,
-# web_anchor_text, web_host_components_star, web_cocitation_triangles,
-# web_host_hits, web_mirror_sets_incremental, web_hits_warm_start,
-# web_host_scc, web_bowtie_classes, u14_lsm_snapshot_read,
-# web_host_bm25f, web_host_kcore, web_pagerank_personalized,
-# text_unigram_surprisal, text_pmi_collocations,
-# text_surprisal_incremental, web_registered_domain,
-# dedup_entity_clusters, stream_cdx_maintain) + 8 changed-code
-# re-gates (7 batch incl. web_mirror_sets, whose closure choice was
-# A/B'd against the star variant this round + stream_lsm_keep_best)
-# + 7 r7 due rows + 16 r8 rows (a12/a13/a14 + the cohort in name
-# order through dedup_minhash_recall_bound). r14 due list = the 32
-# remaining r8 rows: the 21 enumerated above plus the eleven the
-# continuation registrations pre-empted (dedup_semantic_incremental,
-# emb_label_centroids, f11_cast_clamp, f12_hash_pseudonymize,
-# f15_minmax_normalize, f1_f2_classify_regex, f3_f4_f5_dose_parse,
-# f7_f10_time_functions, f8_parse_roundtrip,
-# gopher_repetition_filter, j11_asof_forward_tolerance). After this
-# gate no oracle row's latest green predates r8.
 
-_VERIFY_FIRST_R14 = [
-    # --- never-driver-gated first (this round's registrations):
-    # incremental BM25F posting maintenance (standing fold store,
-    # gated bit-equal under the batch oracle) and WARC revisit-record
-    # emission (the S9f write side: zero-payload pointers resolved
-    # back through the CDX index) ---
-    "web_bm25f_incremental", "web_warc_revisit_roundtrip",
-    "u12b_lsm_point_lookup", "dedup_entity_incremental",
-    "o6_bucketed_colocated_join", "web_bm25f_takedown",
-    # --- changed-code re-gates (11 batch + stream_lsm at the tail):
-    # pagerank_personalized's node universe grew seeds (ADVICE) and
-    # strongly_connected_components gained the trim accelerant +
-    # self-loop singletons — scc/bowtie/personalized re-gate;
-    # registered_domains now implements the full PSL algebra
-    # (wildcard/exception/case); the anchor fixture planted the
-    # www/:443 element and the BM25F oracle adopted the url_host
-    # mirror — anchor_text/bm25f re-gate; dedup_entity_clusters went
-    # multi-pass; the WARC parser schema grew the revisit-pairing
-    # columns (every parse path widened) — io_warc_roundtrip, the CDX
-    # trio and pipeline_wet_export re-gate for it (the full suite's
-    # registry-wide sf0.001 parameterization covers the remaining
-    # WARC consumers); the LSM store grew per-segment blooms +
-    # key_eq point lookups — u12/u13/u14 re-gate ---
-    "web_pagerank_personalized", "web_host_scc", "web_bowtie_classes",
-    "web_registered_domain", "web_anchor_text",
-    "dedup_entity_clusters", "io_warc_roundtrip",
-    "web_cdx_member_contract",
-    "u12_lsm_keep_best", "u13_lsm_size_tiered",
-    "u14_lsm_snapshot_read",
-    # --- the enumerated r14 due list: the full 32-row r8-latest
-    # cohort (the ONLY rows whose latest green predates r9), name
-    # order, stream at the tail ---
-    "dedup_semantic_incremental", "emb_label_centroids",
-    "f11_cast_clamp", "f12_hash_pseudonymize", "f15_minmax_normalize",
-    "f1_f2_classify_regex", "f3_f4_f5_dose_parse",
-    "f7_f10_time_functions", "f8_parse_roundtrip",
-    "gopher_repetition_filter", "j11_asof_forward_tolerance",
-    "mm_decode_meta", "mm_jpeg_progressive_pixel_stats",
-    "mm_media_meta", "mm_resize_meta", "mm_video_pixel_stats",
-    "o1_o2_topk", "p11_castability_extract", "pipeline_dialysis",
-    "pipeline_vitals", "q13_order_count_distribution",
-    "q14_promo_revenue", "r1_unpivot_measures", "r3_split_column",
-    "sample_stratified_rebalance", "u1_union_missing_cols",
-    "u2_u3_distinct_dedup", "u4_intersect_except",
-    "u5_upsert_keep_latest", "w10_funnel_conversion",
-    "w11_range_time_frame",
-    # --- streams at the tail (multi-second startup each): the due
-    # vitals stream and the LSM stream twin whose store code changed
-    # this round ---
-    "stream_vitals_hourly", "stream_lsm_keep_best",
-]
-# Exactly 50: 6 never-gated (web_bm25f_incremental,
-# web_warc_revisit_roundtrip, u12b_lsm_point_lookup,
-# dedup_entity_incremental, o6_bucketed_colocated_join,
-# web_bm25f_takedown) + 12 changed-code re-gates (11 batch +
-# stream_lsm_keep_best; the new registrations pre-empted
-# pipeline_wet_export's, web_cdx_point_lookup's and web_cdx_index's
-# parser-schema re-gates — io_warc_roundtrip still covers parse_warc,
-# web_warc_revisit_roundtrip itself drives parse_warc AND
-# read_records_at, web_cdx_member_contract covers the member paths —
-# and web_host_bm25f's fixture/oracle re-gate, whose EXACT oracle
-# web_bm25f_incremental gates through the identical scoring leg while
-# web_anchor_text covers the fixture change; the full suite's
-# registry-wide sf0.001 parameterization gates the rest) + 32 due
-# rows (31 batch in name order + stream_vitals_hourly at the stream
-# tail). The due list IS the complete r8-latest cohort VERDICT r13
-# enumerated — after this gate no oracle row's latest green predates
-# r9 except this round's own registrations. r15 due list = the oldest
-# r9-latest rows plus pipeline_wet_export, web_cdx_point_lookup,
-# web_cdx_index and web_host_bm25f.
-_VERIFY_FIRST_R15 = [
-    # Ledger arithmetic (the ONE authoritative block): 50 slots =
-    # 6 never-gated r15 batch rows + 10 changed-code/pre-empted
-    # re-gates + 29 of the 48-row r9-latest due cohort (name order)
-    # + 5 streams at the tail (3 due + 2 new: the BM25F and ER
-    # maintenance streams). The cohort's remaining 14 batch rows
-    # spill to lead r16: pipeline_web_ingest, sample_mix_epochs,
-    # sample_reservoir_per_key, sample_temperature_mix,
-    # semantic_store_drift_recall, text_bm25_topk, text_chunk_windows,
-    # text_html_extract, text_rare_bigram_score,
-    # u10_store_schema_evolution, u6_snapshot_diff,
-    # u9_incremental_agg_maintenance, w12_rate_of_change,
-    # w14_interpolate_linear.
-    # --- never-driver-gated first (this round's registrations):
-    # weighted PageRank over link multiplicity; zero-posting
-    # compaction of the takedown'd BM25F store; the persisted ER
-    # store lifecycle and its cluster-split takedown ---
-    "web_pagerank_weighted", "web_pagerank_weighted_warm",
-    "web_bm25f_compacted",
-    "dedup_entity_persisted", "dedup_entity_store_takedown",
-    "dedup_entity_store_compacted",
-    # --- changed-code re-gates: the WARC builders grew CR/LF
-    # header-injection guards (ADVICE r15) — io_warc_roundtrip +
-    # web_warc_revisit_roundtrip re-gate; read_lsm's key_eq branch
-    # moved its key-type read off the pruned segment list (ADVICE
-    # r15) — u12b re-gates; dedup_entity_incremental's delta
-    # families factored into the shared helper the persisted rows
-    # use; compact_cdc_snapshot grew drop_zero_cols — the two
-    # semantic-store rows that invoke compaction re-gate (they are
-    # also r9-due) ---
-    "io_warc_roundtrip", "web_warc_revisit_roundtrip",
-    "u12b_lsm_point_lookup", "dedup_entity_incremental",
-    "semantic_store_takedown", "semantic_store_rebuild_contract",
-    # --- the four re-gates r14 pre-empted (named by its ledger and
-    # VERDICT r14 next-round #1): the WARC-parser-schema consumers ---
-    "pipeline_wet_export", "web_cdx_index", "web_cdx_point_lookup",
-    "web_host_bm25f",
-    # --- the r9-latest due cohort, name order (first 29 of the 43
-    # remaining batch rows after the two semantic-store rows moved
-    # up; the 3 due streams sit at the tail) ---
-    "a16_numeric_histogram", "a19_cooccurrence_pairs",
-    "a20_winsorize_clamp", "a21_countmin_heavy",
-    "a26_checked_sum_guard", "ann_ivf_pq_residual_topk",
-    "ann_ivf_pq_topk", "ann_matryoshka_topk", "ann_pq_adc_topk",
-    "corpus_c4_line_filter", "dedup_bloom_screen",
-    "dedup_chunk_paragraphs", "dedup_remove_repeated_spans",
-    "dedup_store_takedown", "emb_pq_encode", "f16_accent_fold",
-    "mm_jpeg_arithmetic_reject", "mm_sample_stats",
-    "mm_video_h264_skip", "o3_topk_per_group", "o4_zorder_key",
-    "pipeline_admission_diagnosis", "pipeline_adt",
-    "pipeline_demographics", "pipeline_encounter_dispo",
-    "pipeline_labs", "pipeline_med_admin_continuous",
-    "pipeline_resp_support", "pipeline_scores",
-    # --- streams at the tail (multi-second startup each): the three
-    # due streams plus this round's two new maintenance streams
-    # (BM25F postings, persisted-ER store) ---
-    "stream_agg_maintenance", "stream_countmin_merge",
-    "stream_incremental_dedup", "stream_bm25f_maintain",
-    "stream_er_maintain",
-]
-_VERIFY_FIRST_R16 = [
-    # Ledger arithmetic (the ONE authoritative block): 50 slots =
-    # 6 never-gated r16 batch rows + 7 changed-code batch re-gates
-    # (one of which, dedup_simhash_pairs, is ALSO r10-due — one slot
-    # covers both) + the complete 14-row r9-latest due cohort (name
-    # order) + the first 20 of the remaining 40-row r10-latest due
-    # cohort (name order, after dedup_simhash_pairs moved up) + 3
-    # streams at the tail (2 new: semantic + image-signature
-    # maintenance; 1 re-gate: ER maintenance watermark). The r10
-    # cohort's remaining 20 rows spill to lead r17:
-    # mm_frame_offsets, mm_gif_pixel_stats, p10_time_range,
-    # p7_p8_in_comparison, p9_like_rlike, pii_redact,
-    # pipeline_llm_curation, q1_pricing_summary, q3_shipping_priority,
-    # q5_local_supplier_volume, q6_forecast_revenue, seq_pack_bins,
-    # stream_cdc_apply, stream_web_ingest, text_bpe_roundtrip,
-    # text_quality_classifier, text_quality_metrics,
-    # u7_merge_with_deletes, w16_ewma_agreement, warc_record_pairing.
-    # --- never-driver-gated first (this round's registrations):
-    # image perceptual-hash dedup (real pixel decode -> dHash ->
-    # shared Hamming banding), its persisted-signature-store
-    # incremental twin + takedown/compaction leg, the audio
-    # fingerprint twin (real PCM decode -> 65-point gradient hash),
-    # the video temporal-fingerprint twin (real MP4 demux ->
-    # sampled-frame JPEG decode), and the weighted personalized
-    # PageRank composition ---
-    "dedup_image_phash", "dedup_image_phash_incremental",
-    "dedup_image_store_takedown", "dedup_audio_fingerprint",
-    "dedup_video_phash",
-    "web_pagerank_weighted_personalized",
-    # --- changed-code re-gates: the weighted-PR weight guard moved
-    # in-plan (assert_true riding the multigraph collapse — ADVICE
-    # r16) — both weighted rows re-gate; _er_store_delivery grew the
-    # backend injection points for the r16 A/B — the three persisted
-    # ER rows re-gate; the semantic screen contract factored into
-    # shared helpers the new stream row uses; simhash_pairs' banding
-    # leg factored into hamming_pairs_from_chunks (also r10-due) ---
-    "web_pagerank_weighted", "web_pagerank_weighted_warm",
-    "dedup_entity_persisted", "dedup_entity_store_takedown",
-    "dedup_entity_store_compacted", "dedup_semantic_incremental",
-    "dedup_simhash_pairs",
-    # --- the complete 14-row r9-latest due cohort (VERDICT r15 #1),
-    # name order ---
-    "pipeline_web_ingest", "sample_mix_epochs",
-    "sample_reservoir_per_key", "sample_temperature_mix",
-    "semantic_store_drift_recall", "text_bm25_topk",
-    "text_chunk_windows", "text_html_extract",
-    "text_rare_bigram_score", "u10_store_schema_evolution",
-    "u6_snapshot_diff", "u9_incremental_agg_maintenance",
-    "w12_rate_of_change", "w14_interpolate_linear",
-    # --- the r10-latest due cohort, name order (first 20 of the 40
-    # remaining after dedup_simhash_pairs moved up) ---
-    "a17_iqr_outliers", "a18_key_skew_profile",
-    "ann_arrow_fold_equality", "ann_cosine_topk", "ann_ivf_topk",
-    "ann_ivf_trained_recall_bound", "ann_lsh_buckets",
-    "ann_recall_at_k", "contamination_check", "dedup_clusters",
-    "dedup_embedding_cosine", "dedup_ngram_jaccard",
-    "dedup_repeated_ngrams", "emb_quantize_int8",
-    "f6_coalesce_fallback", "io_orc_roundtrip",
-    "j2_composite_key_join", "j4_semi_anti_join", "j7_asof_join",
-    "j8_interval_join",
-    # --- streams at the tail (multi-second startup each): the new
-    # semantic-store maintenance stream and the ER stream whose
-    # watermark read changed (ADVICE r16) ---
-    "stream_semantic_maintain", "stream_image_sig_maintain",
-    "stream_er_maintain",
-]
-_VERIFY_FIRST_R17 = [
-    # Ledger arithmetic (the ONE authoritative block): 50 slots =
-    # 21 changed-code re-gates (r17 is OPTIMIZATION round 1 — no new
-    # registrations; every row whose EXECUTION PATH the optimization
-    # touched re-gates before any refresh: the fused-probe /
-    # trim-restructure graph operators and their consumers, the
-    # single-pass anchor extraction consumers, the shared-kept-array
-    # main-content row, the link-graph row riding the memoized
-    # resolver columns, and the video row with the empty-planes decode
-    # guard) + the complete 20-row r10-latest due cohort the r16
-    # ledger enumerates (18 batch + 2 streams at the tail) + 7 oldest
-    # r11-latest fills in name order + 2 changed-code streams at the
-    # tail. After this gate no oracle row's latest green predates r11;
-    # the r18 due list = the remaining r11-latest cohort in name
-    # order.
-    # --- changed-code batch re-gates: graph-operator consumers ---
-    "web_host_components", "web_host_components_star", "web_host_scc",
-    "web_bowtie_classes", "web_host_kcore", "web_crawl_depth",
-    "web_crawl_frontier", "web_cocitation_triangles",
-    "dedup_entity_clusters", "dedup_entity_incremental",
-    "dedup_entity_persisted", "dedup_entity_store_takedown",
-    "dedup_entity_store_compacted",
-    # --- changed-code batch re-gates: anchor extraction + shared
-    # kept-array + memoized resolver columns + video decode guard ---
-    "web_anchor_text", "web_host_bm25f", "web_bm25f_incremental",
-    "web_bm25f_takedown", "web_bm25f_compacted", "text_main_content",
-    "web_link_graph", "dedup_video_phash",
-    # --- the complete 20-row r10-latest due cohort (VERDICT r16 #1),
-    # name order, its 2 streams at the stream tail ---
-    "mm_frame_offsets", "mm_gif_pixel_stats", "p10_time_range",
-    "p7_p8_in_comparison", "p9_like_rlike", "pii_redact",
-    "pipeline_llm_curation", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "seq_pack_bins", "text_bpe_roundtrip",
-    "text_quality_classifier", "text_quality_metrics",
-    "u7_merge_with_deletes", "w16_ewma_agreement",
-    "warc_record_pairing",
-    # --- r11-latest refreshes (oldest remaining green), name order ---
-    "a10_moment_corr", "a11_exact_percentiles", "a24_chisq_association",
-    "a25_equi_depth_histogram", "a9_grouping_sets", "corpus_curation",
-    "curation_dsir_importance",
-    # --- streams at the tail (multi-second startup each): the two due
-    # r10 streams, then the two changed-code maintenance streams (ER
-    # labeling via connected_components; BM25F partials via the
-    # single-pass anchor extraction) ---
-    "stream_cdc_apply", "stream_web_ingest",
-    "stream_er_maintain", "stream_bm25f_maintain",
-]
-_VERIFY_FIRST_R18 = [
-    # Ledger arithmetic (the ONE authoritative block): 50 slots =
-    # 32 changed-code re-gates (r18 is OPTIMIZATION round 2 — no new
-    # registrations; every row whose EXECUTION PATH or ORACLE TEXT
-    # this round touched re-gates before any refresh: the four
-    # MATERIALIZED-hint oracles, the pagerank family on the
-    # per-iteration checkpoint default, the BM25F family on the
-    # store-backed score leg, the _ckpt-wrapped graph fixpoint
-    # consumers, the byte-gated triangle row, and the five
-    # single-run maintenance streams at the tail) + 18 of the 29-row
-    # r11-latest due cohort in name order (16 batch + 2 streams).
-    # After this gate the r19 due list = the remaining 10 r11-latest
-    # rows (tfidf_top_terms, u11_partitioned_upsert,
-    # w13_cumulative_distinct, w1_lead_episodes, w2_downup_fill,
-    # w3_keep_last_dedup, stream_session_episodes, stream_sliding_agg,
-    # stream_tumbling_agg, stream_partitioned_upsert) then the
-    # r12-latest cohort.
-    # --- changed ORACLE text (AS MATERIALIZED physical hint): must
-    # re-gate first ---
-    "web_bowtie_classes", "web_host_hits", "web_hits_warm_start",
-    "web_crawl_depth",
-    # --- pagerank family: checkpoint_every default 4 -> 1 ---
-    "web_host_pagerank", "web_pagerank_personalized",
-    "web_pagerank_warm_start", "web_pagerank_weighted",
-    "web_pagerank_weighted_warm", "web_pagerank_weighted_personalized",
-    # --- BM25F family: store-backed score leg skips checkpoints
-    # (web_host_bm25f re-gates the unchanged default path of the
-    # changed signature) ---
-    "web_bm25f_incremental", "web_bm25f_takedown",
-    "web_bm25f_compacted", "web_host_bm25f",
-    # --- graph fixpoint consumers on the _ckpt wrapper (+ fused
-    # probe kept per the r18 A/B, bowtie broadcast, triangle byte
-    # gate, SCC sibling-abort path) ---
-    "web_cocitation_triangles", "web_host_components",
-    "web_host_components_star", "web_host_scc", "web_host_kcore",
-    "web_crawl_frontier", "web_mirror_sets",
-    "web_mirror_sets_incremental", "dedup_entity_clusters",
-    "dedup_entity_incremental", "dedup_entity_persisted",
-    "dedup_entity_store_takedown", "dedup_entity_store_compacted",
-    # --- r11-latest refreshes (oldest remaining green), name order;
-    # dedup_screen_persisted doubles as the VERDICT r17 item-9 watch
-    # row ---
-    "dedup_exact", "dedup_incremental_minhash",
-    "dedup_prefix_filter_join", "dedup_screen_persisted",
-    "dedup_semantic_contract", "f14_from_json_typed",
-    "j10_levenshtein_vocab_match", "j1_vocab_broadcast_star",
-    "j3_full_outer_join", "j6_fuzzy_vocab_match",
-    "j9_salted_skew_join", "mm_audio_resample", "mm_jpeg_pixel_stats",
-    "text_fingerprint", "text_lang_id", "text_rolling_fingerprint",
-    # --- streams at the tail (multi-second startup each): the five
-    # single-run + batch-replay-probe maintenance streams, then the
-    # two oldest r11-latest streams ---
-    "stream_cdx_maintain", "stream_bm25f_maintain",
-    "stream_er_maintain", "stream_semantic_maintain",
-    "stream_image_sig_maintain",
-    "stream_click_to_buy", "stream_dedup_counts",
-]
-_VERIFY_FIRST = _VERIFY_FIRST_R18
-
-# Rows-only queries (dedup_semantic, ann_ivf_trained_topk,
-# ann_cosine_topk_arrow, w15_ewma_smooth, text_bpe_tokenize,
-# web_cdx_member_lookup) NEVER rotate into the head — the driver gate
-# can only say 'no_oracle' about them; their driver-hashed contract
-# twins are the gateable artifact and rotate in their place (policy
-# test: tests/test_oracle.py::test_verify_head_hygiene).
-
-_VERIFY_LAST = [
-    # (empty: the single due stream sits at the tail of the head-50)
-]
+def verify_head(registry: dict[str, QueryDef], latest_green: dict[str, int],
+                regate: list[str]) -> list[str]:
+    """The driver's verify head: ``regate`` names first, then the other
+    oracle-gated queries by the round of their latest green row, oldest
+    first (never green counts as round 0; ties keep registry order),
+    cut at VERIFY_HEAD_SIZE with the multi-second ``stream_*`` startups
+    moved to its tail. Rows-only queries (no oracle) never enter: the
+    gate can only record 'no_oracle' for them."""
+    gated = [n for n, q in registry.items() if q.oracle is not None]
+    lead = [n for n in regate if n in gated]
+    rest = sorted((n for n in gated if n not in lead),
+                  key=lambda n: latest_green.get(n, 0))
+    head = (lead + rest)[:VERIFY_HEAD_SIZE]
+    return ([n for n in head if not n.startswith("stream_")]
+            + [n for n in head if n.startswith("stream_")])
 
 
 def collect_registry() -> dict[str, QueryDef]:
-    """Import all query modules and return the populated registry, ordered
-    verification-first: previously-unverified queries lead, already-green
-    streaming queries (multi-second stream startup each) trail."""
+    """Import all query modules and return the populated registry with
+    the driver's verify head (``verify_head`` over the CORRECTNESS
+    ledger) first and everything else after it in registration order."""
     from clif_spark.queries import (  # noqa: F401
         curation,
         llm,
@@ -878,7 +357,5 @@ def collect_registry() -> dict[str, QueryDef]:
         windows,
     )
 
-    head = [n for n in _VERIFY_FIRST if n in REGISTRY]
-    tail = [n for n in _VERIFY_LAST if n in REGISTRY]
-    mid = [n for n in REGISTRY if n not in set(head) | set(tail)]
-    return {n: REGISTRY[n] for n in head + mid + tail}
+    head = verify_head(REGISTRY, latest_green_rounds(), _REGATE)
+    return {n: REGISTRY[n] for n in head + list(REGISTRY)}

@@ -24,9 +24,13 @@ def spark():
 #: and the two registry-wide parameterizations paid that twice — once
 #: to compare results, once only to read the final plan string. The
 #: DataFrame (an immutable plan over store dirs that persist for the
-#: session) serves both. Keyed per session id so a session restart
-#: cannot serve plans bound to dead JVM handles.
+#: session) serves both. The cache belongs to ONE session
+#: (``_QUERY_DF_OWNER``) and is emptied when a different session asks,
+#: so a session restart can neither serve plans bound to dead JVM
+#: handles nor keep them alive (an ``id(spark)`` key could do both once
+#: the id is reused).
 _QUERY_DF_CACHE: dict = {}
+_QUERY_DF_OWNER: object = None
 
 
 def build_query_cached(spark, name: str):
@@ -47,10 +51,14 @@ def cached_plan_of(spark, name: str) -> str:
 
 
 def _build_entry(spark, name: str):
+    global _QUERY_DF_OWNER
     import __spark_entry__ as entry_mod
 
+    if _QUERY_DF_OWNER is not spark:
+        _QUERY_DF_CACHE.clear()
+        _QUERY_DF_OWNER = spark
     sf_dir = os.environ.get("CLIF_TEST_SF_DIR", "/root/testdata/sf0.001")
-    key = (id(spark), name, sf_dir)
+    key = (name, sf_dir)
     if key not in _QUERY_DF_CACHE:
         df = entry_mod.queries()[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()

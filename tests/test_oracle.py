@@ -171,22 +171,110 @@ def test_q3_preagg_shape_matches_oracle(spark, duck, monkeypatch):
 
 def test_verify_head_hygiene():
     """Rotation-policy regression gate (VERDICT r8 items 2 + 8): the
-    driver verifies the first ~50 registry entries per round, so the
-    head list must (a) be exactly 50 names, (b) reference only real
-    registry entries — an accounting typo would silently burn gate
-    slots, (c) contain no duplicates, and (d) contain NO rows-only
-    queries (oracle is None): the gate can only record 'err: no_oracle'
-    for those, wasting the slot; their driver-hashed contract twins are
-    the gateable artifact and rotate in their place."""
-    from clif_spark.queries import _VERIFY_FIRST, collect_registry
+    driver verifies the first 50 registry entries per round, so the
+    computed head must (a) be exactly 50 names, (b) reference only real
+    registry entries, (c) contain no duplicates, and (d) contain NO
+    rows-only queries (oracle is None): the gate can only record 'err:
+    no_oracle' for those, wasting the slot; their driver-hashed contract
+    twins are the gateable artifact and rotate in their place. Every
+    hand-kept re-gate name must be a real oracle-gated query — a typo
+    would silently drop a re-gate."""
+    from clif_spark.queries import (_REGATE, collect_registry,
+                                    latest_green_rounds, verify_head)
 
     reg = collect_registry()
-    assert len(_VERIFY_FIRST) == 50
-    assert len(set(_VERIFY_FIRST)) == len(_VERIFY_FIRST)
-    missing = [n for n in _VERIFY_FIRST if n not in reg]
+    head = verify_head(reg, latest_green_rounds(), _REGATE)
+    assert len(head) == 50
+    assert len(set(head)) == len(head)
+    missing = [n for n in head if n not in reg]
     assert not missing, f"head names not in registry: {missing}"
-    rows_only = [n for n in _VERIFY_FIRST if reg[n].oracle is None]
+    rows_only = [n for n in head if reg[n].oracle is None]
     assert not rows_only, f"rows-only queries in the gate head: {rows_only}"
+    bad_regate = [n for n in _REGATE
+                  if n not in reg or reg[n].oracle is None]
+    assert not bad_regate, f"re-gates without an oracle row: {bad_regate}"
     # and the head genuinely leads the registry iteration order the
     # driver consumes
-    assert list(reg)[:50] == _VERIFY_FIRST
+    assert list(reg)[:50] == head
+
+
+def _stub_registry(names, rows_only=()):
+    from clif_spark.queries import QueryDef
+
+    return {n: QueryDef(n, None, None if n in rows_only else "SELECT 1")
+            for n in names}
+
+
+def test_verify_head_ordering():
+    """verify_head's rule on a hand-built registry, no Spark: re-gates
+    lead in list order; the rest go oldest latest-green round first
+    (never green = round 0) with ties in registry order; rows-only
+    queries never enter; the cut is 50 names with its streams moved to
+    the tail; no ledger at all gives registry order."""
+    from clif_spark.queries import verify_head
+
+    names = ([f"b{i:02d}" for i in range(60)]
+             + ["stream_x", "rows_only", "stream_y", "fresh", "never"])
+    reg = _stub_registry(names, rows_only={"rows_only"})
+    green = {n: 12 for n in names}
+    green.update({"b05": 11, "b07": 11, "stream_y": 11, "fresh": 18})
+    del green["never"]
+    head = verify_head(reg, green, ["fresh", "b30"])
+
+    assert len(head) == 50
+    assert head[:2] == ["fresh", "b30"]
+    assert head[2:5] == ["never", "b05", "b07"]
+    # the round-12 ties follow in registry order
+    assert head[5:10] == ["b00", "b01", "b02", "b03", "b04"]
+    assert "rows_only" not in head
+    assert head[-1] == "stream_y"
+    assert not any(n.startswith("stream_") for n in head[:-1])
+    assert "stream_x" not in head  # round 12, past the cut
+
+    # streams inside the cut keep their relative order at its tail
+    reg = _stub_registry(["stream_b", "a", "stream_a", "b"])
+    assert verify_head(reg, {}, []) == ["a", "b", "stream_b", "stream_a"]
+
+    # empty ledger: registry order (rows-only still excluded)
+    reg = _stub_registry(names, rows_only={"rows_only"})
+    assert verify_head(reg, {}, []) == names[:50]
+
+
+def test_latest_green_rounds_reads_only_green_ledger_rows(tmp_path):
+    """A green row has rows, schema and hash matching and no err; a
+    later red row does not erase an earlier green one; files that are
+    not CORRECTNESS_r<N>.json are ignored; no ledger at all is {}."""
+    import json
+
+    from clif_spark.queries import latest_green_rounds
+
+    def row(ok, err=None):
+        return {"rows_match": ok, "schema_match": ok, "hash_match": ok,
+                "spark_rows": 1, "oracle_rows": 1, "err": err}
+
+    assert latest_green_rounds(tmp_path) == {}
+    ledger = {"CORRECTNESS_r03.json": {"a": row(True), "b": row(True)},
+              "CORRECTNESS_r11.json": {"a": row(False), "b": row(True),
+                                       "c": row(None, "no_oracle")},
+              "CORRECTNESS_r99.json.bak": {"a": row(True)}}
+    for fname, rows in ledger.items():
+        (tmp_path / fname).write_text(json.dumps(rows))
+    assert latest_green_rounds(tmp_path) == {"a": 3, "b": 11}
+
+
+def test_query_df_cache_keeps_only_the_live_session(spark, monkeypatch):
+    """The shared test build cache belongs to one session: a build
+    through a second session object drops the first session's entries
+    instead of keeping both (an id(spark) key kept them, and could
+    serve them to a new session that reused the id)."""
+    import conftest
+
+    monkeypatch.setattr(conftest, "_QUERY_DF_CACHE", {})
+    monkeypatch.setattr(conftest, "_QUERY_DF_OWNER", None, raising=False)
+    other = spark.newSession()
+    name = "p1_p3_project_rename"  # plain DataFrame build, no pq() view
+    conftest.build_query_cached(spark, name)
+    conftest.build_query_cached(other, name)
+    cached = [df for df, _ in conftest._QUERY_DF_CACHE.values()]
+    assert len(cached) == 1
+    assert cached[0].sparkSession is other
