@@ -7,7 +7,10 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 All real definitions live in ``clif_spark.queries`` (one registered query +
 oracle per SURVEY.md §2 operator and per north-star extension); this module
-just adapts the registry to the driver's shape.
+just adapts the registry to the driver's shape. The driver builds its own
+default-conf session (ANSI on, no nanosAsLong), so this boundary is where
+``configure`` applies the engine's session confs; registered queries do not
+apply them again.
 """
 
 from __future__ import annotations
@@ -66,9 +69,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ north-star
-    extensions). Each callable takes (spark, sf_dir) and returns a DataFrame
-    whose column names/types match its oracle exactly."""
-    return {name: q.fn for name, q in collect_registry().items()}
+    extensions). Each callable takes (spark, sf_dir), applies the engine
+    confs to ``spark`` and returns a DataFrame whose column names/types
+    match its oracle exactly."""
+    return {name: lambda spark, sf_dir, fn=q.fn: fn(configure(spark), sf_dir)
+            for name, q in collect_registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:

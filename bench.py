@@ -64,22 +64,18 @@ def main() -> None:
         for f in os.listdir(sf_dir) if f.endswith(".parquet"))
     local_io_confs["spark.sql.files.maxPartitionBytes"] = str(
         min(128 << 20, max(16 << 20, biggest // cpus)))
-    spark = build_session(app_name="clif-spark-bench",
-                          shuffle_partitions=parts,
-                          extra_confs=local_io_confs)
-    spark.sparkContext.setLogLevel("ERROR")
     if table_bytes < (1 << 30):
         # AQE's job is runtime re-planning of *large* shuffles (skew splits,
         # partition coalescing). Below ~1 GB of input with shuffle
         # parallelism already sized to the data and broadcasts hinted, its
         # stage-by-stage materialization only adds latency. Production
-        # scale keeps it on (session.py default). Mutate RUNTIME_CONFS —
-        # not just the session conf — because every registered query calls
-        # session.configure(), which would silently re-enable it.
-        from clif_spark import session as _session
-        _session.RUNTIME_CONFS = {**_session.RUNTIME_CONFS,
-                                  "spark.sql.adaptive.enabled": "false"}
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # scale keeps it on (session.py default); the session conf set
+        # here holds for every query, which never re-apply engine confs.
+        local_io_confs["spark.sql.adaptive.enabled"] = "false"
+    spark = build_session(app_name="clif-spark-bench",
+                          shuffle_partitions=parts,
+                          extra_confs=local_io_confs)
+    spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JVM classloading + JIT for the physical operators the
     # headliners use (shuffle, hash-agg, window, broadcast join, explode,

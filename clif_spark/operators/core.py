@@ -76,6 +76,32 @@ def vocab_join(fact: DataFrame, vocab: DataFrame, on: str | list[str],
     return fact.join(F.broadcast(vocab), on=on, how=how)
 
 
+#: Broadcast gate bounds: rows, and raw key payload bytes per broadcast
+#: side (the built hash relation inflates ~2-4x over raw bytes, keeping
+#: the executors' copies well under broadcast-pressure territory).
+BROADCAST_MAX_ROWS = 1_000_000
+BROADCAST_MAX_KEY_BYTES = 64 << 20
+
+
+def fits_broadcast(rel: DataFrame, key_cols: Sequence[str]) -> bool:
+    """Size gate for broadcasting an already-materialized relation (or
+    relations it bounds). A checkpointed LogicalRDD inherits its upstream
+    plan's size estimate — unknown (Long.Max) for regex/explode lineage —
+    so with AQE off the planner picks SortMergeJoin even for a 20-row
+    fixture. Decide from the TRUE row count AND the true key payload
+    (ADVICE r17: a row-count proxy alone can admit hundreds of MB of long
+    string keys): string keys count ``octet_length`` bytes, other keys 8.
+    One agg job over ``rel``. Above either bound the caller keeps the
+    honest SMJ (web-scale relations exceed any broadcast cap)."""
+    dtypes = dict(rel.dtypes)
+    key_bytes = sum(
+        (F.octet_length(F.col(c)) if dtypes[c] == "string" else F.lit(8)
+         for c in key_cols), F.lit(0))
+    n, nbytes = rel.agg(F.count(F.lit(1)), F.sum(key_bytes)).first()
+    return (n <= BROADCAST_MAX_ROWS
+            and (nbytes or 0) <= BROADCAST_MAX_KEY_BYTES)
+
+
 def composite_join(left: DataFrame, right: DataFrame, keys: Sequence[str],
                    how: str = "left") -> DataFrame:
     """J2/J5: big-big equi-join on an explicit composite key

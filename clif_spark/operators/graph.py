@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clif_spark.operators.core import fits_broadcast
+
 MICROS = 1_000_000
 
 #: Session conf that switches every iterative operator in this module
@@ -713,31 +715,12 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
     e1 = cn.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = cn.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = cn.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    # Size-gated broadcast (r17, guide §3.1): a checkpointed LogicalRDD
-    # INHERITS its upstream plan's size estimate — for relations built
-    # from regex/explode lineage that estimate is unknown (Long.Max),
-    # so the planner ran all three enumeration joins as SortMergeJoins
-    # with full exchanges even on a 20-row fixture relation (audit
-    # r17). The relation is already materialized, so decide from its
-    # TRUE row count AND its true key payload bytes (ADVICE r17: a
-    # row-count proxy alone can admit hundreds of MB of long string
-    # host keys into two broadcast relations) — one agg job over the
-    # checkpointed RDD, same cost as the previous bare count. Under
-    # both bounds the two probe joins broadcast the right sides and e1
-    # never shuffles; above either the honest SMJ stands (web-scale
-    # pair relations exceed any broadcast cap).
-    def _key_bytes(c: str):
-        dt = dict(cn.dtypes)[c]
-        return (F.octet_length(F.col(c)) if dt == "string"
-                else F.lit(8))
-
-    n_cn, key_bytes = cn.agg(
-        F.count(F.lit(1)),
-        F.sum(_key_bytes("u") + _key_bytes("v"))).first()
-    # 64 MiB of raw key payload per broadcast side: the built hash
-    # relation inflates ~2-4x over raw bytes, keeping the executors'
-    # copies well under broadcast-pressure territory
-    if n_cn <= 1_000_000 and (key_bytes or 0) <= (64 << 20):
+    # Size-gated broadcast (r17, guide §3.1): cn's inherited estimate
+    # is unknown, so without the gate all three enumeration joins ran
+    # as SortMergeJoins even on a 20-row fixture (audit r17). Under the
+    # bounds the two probe joins broadcast the right sides and e1 never
+    # shuffles.
+    if fits_broadcast(cn, ["u", "v"]):
         e2, e3 = F.broadcast(e2), F.broadcast(e3)
     tri = e1.join(e2, "b").join(e3, ["a", "c"])
     # ONE evaluation of the enumeration tree (r17, guide §2.4): the

@@ -26,8 +26,6 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clif_spark.session import configure
-
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -51,15 +49,8 @@ def query(name: str, oracle: str | None = None, headline: bool = False,
     driver-registered views; None marks a rows-only check (non-SQL ops)."""
 
     def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            configure(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        REGISTRY[name] = QueryDef(name, wrapped, oracle, headline,
-                                  bench_ref_sql)
-        return wrapped
+        REGISTRY[name] = QueryDef(name, fn, oracle, headline, bench_ref_sql)
+        return fn
 
     return deco
 
@@ -188,7 +179,7 @@ def sql_dmean(expr: str, scale: int = 6) -> str:
 _REGISTERED_VIEWS: dict[tuple[int, str], SparkSession] = {}
 
 
-def pq(sf_dir: str, table: str) -> str:
+def pq(spark: SparkSession, sf_dir: str, table: str) -> str:
     """Resolved table reference for one-shot Spark SQL queries.
 
     Headline (benched) queries are issued as a single ``spark.sql`` call:
@@ -204,10 +195,10 @@ def pq(sf_dir: str, table: str) -> str:
     built plan (~0.2-0.4 s for a 6-table join), while a temp view keeps the
     resolved relation in the catalog — the same setup the DuckDB oracle gets
     (the driver pre-registers its tables as views). Catalog state is
-    metadata only; scans still re-read the files each execution."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:  # no active session: fall back to the path literal
-        return f"parquet.`{sf_dir}/{table}.parquet`"
+    metadata only; scans still re-read the files each execution. The view
+    is registered on the caller's ``spark``, the session that runs the
+    SQL: temp views are per session, so one on any other session is
+    invisible to it."""
     safe = "".join(c if c.isalnum() else "_" for c in f"{sf_dir}_{table}")
     name = f"tv_{safe}"
     key = (id(spark), name)
@@ -299,6 +290,8 @@ def us(col: Column | str) -> Column:
 _REGATE = [
     # strongly_connected_components lost its unused trim-probe branch
     "web_host_scc", "web_bowtie_classes",
+    # triangle_counts' broadcast gate moved to core.fits_broadcast
+    "web_cocitation_triangles",
 ]
 VERIFY_HEAD_SIZE = 50
 _LEDGER_DIR = Path(__file__).resolve().parents[2]

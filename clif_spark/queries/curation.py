@@ -366,7 +366,7 @@ def corpus_c4_line_filter(spark, sf_dir):
     (list_filter) so kept-line sets, counts, and the rejoined clean text
     all hash-match."""
     lined = spark.sql(
-        _C4_SYNTH.format(table=pq(sf_dir, "documents"))
+        _C4_SYNTH.format(table=pq(spark, sf_dir, "documents"))
         .replace("SYMBOL_OPEN", "{"))
     return curation.c4_line_filter(lined)
 
@@ -438,7 +438,7 @@ def sample_temperature_mix(spark, sf_dir):
     bit-identical and the deterministic u01 membership threshold cannot
     flip at the boundary. Per-source counts broadcast (dimension-sized);
     the membership filter is a narrow expression over the scan."""
-    docs = spark.sql(_MIX_SYNTH.format(table=pq(sf_dir, "documents")))
+    docs = spark.sql(_MIX_SYNTH.format(table=pq(spark, sf_dir, "documents")))
     return curation.temperature_mix(docs, "source", "doc_id",
                                     temperature=2.0).select(
         "doc_id", "source")

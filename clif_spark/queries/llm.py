@@ -221,7 +221,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     planted; each must surface. All-pairs never materializes — candidate
     generation is groupBy(band_key). One-shot SQL, same plan as the operator
     (tests pin their equality)."""
-    doc = pq(sf_dir, "documents")
+    doc = pq(spark, sf_dir, "documents")
     bands, rpb, n, max_bucket, threshold = (
         dedup.DEFAULT_BANDS, dedup.DEFAULT_ROWS_PER_BAND, 3, 200, 0.5)
     w = dedup._minhash_slice_width(bands * rpb)
@@ -2229,7 +2229,7 @@ def ann_cosine_topk(spark, sf_dir):
     One-shot SQL — same plan as ``similarity.cosine_topk`` (the operator
     form, exercised by ann_lsh_buckets / dedup_embedding_cosine) without
     py4j chatter."""
-    emb = pq(sf_dir, "embeddings")
+    emb = pq(spark, sf_dir, "embeddings")
     return spark.sql(f"""
         WITH q AS (SELECT vec_id AS query_id,
                           CAST(embedding AS ARRAY<DOUBLE>) AS qv,
@@ -2647,7 +2647,7 @@ def text_quality_metrics(spark, sf_dir):
           FROM (SELECT /*+ REPARTITION({width}) */ doc_id, text,
                        split(trim(text), '\\s+') AS toks,
                        split(trim(lower(text)), '\\s+') AS ltoks
-                FROM {pq(sf_dir, 'documents')})
+                FROM {pq(spark, sf_dir, 'documents')})
         )
     """)
 
@@ -3031,7 +3031,7 @@ def emb_label_centroids(spark, sf_dir):
     discipline) so the fold is order-independent and bit-identical to the
     oracle; output stays exploded (label, pos, centroid_val) because scalar
     rows hash-compare across engines where nested float arrays would not."""
-    emb = pq(sf_dir, "embeddings")
+    emb = pq(spark, sf_dir, "embeddings")
     return spark.sql(f"""
         SELECT CAST(label AS BIGINT) AS label, CAST(pos AS BIGINT) AS pos,
                COUNT(*) AS n_vectors,

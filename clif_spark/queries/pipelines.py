@@ -97,7 +97,7 @@ def pipeline_vitals(spark, sf_dir):
     with NULL retention, branch union, junk->NULL cast, epoch->ts), gated
     against a DuckDB replica of the same algebra over an identical
     synthesized flowsheet."""
-    flow = spark.sql(_FLOW_SYNTH.format(table=pq(sf_dir, "events")))
+    flow = spark.sql(_FLOW_SYNTH.format(table=pq(spark, sf_dir, "events")))
     vocab = spark.createDataFrame(_VOCAB, ["flo_meas_name", "vital_name"])
     out = vitals_pipeline.build_vitals(flow, vocab)
     return out.select(
@@ -250,7 +250,7 @@ def pipeline_resp_support(spark, sf_dir):
     junk/negative/clamp lpm cleaning, coalesce-then-cast FiO2 fallback,
     per-encounter downup fill, post-fill high_flow flag. The oracle
     replays every step in DuckDB over the identical synthesized flowsheet."""
-    flow = spark.sql(_RESP_SYNTH.format(table=pq(sf_dir, "events")))
+    flow = spark.sql(_RESP_SYNTH.format(table=pq(spark, sf_dir, "events")))
     vocab = spark.createDataFrame(_MODE_VOCAB, ["mode_name", "mode_category"])
     out = vitals_pipeline.build_respiratory_support(flow, vocab)
     return out.select(
@@ -295,7 +295,7 @@ def pipeline_admission_diagnosis(spark, sf_dir):
     including the reference's preserved ``dianosis_code`` (sic) and
     poa->pta quirks — + the publication sort."""
     from clif_spark.pipelines import admission_diagnosis as dx_pipeline
-    dx = spark.sql(_DX_SYNTH.format(table=pq(sf_dir, "events")))
+    dx = spark.sql(_DX_SYNTH.format(table=pq(spark, sf_dir, "events")))
     return dx_pipeline.sorted_for_publication(
         dx_pipeline.build_admission_diagnosis(dx))
 
@@ -361,7 +361,7 @@ def pipeline_scores(spark, sf_dir):
     rename + epoch->ts, then SOFA-neuro banding — junk GCS casts to NULL
     and must band to NULL, band edges are first-match-wins."""
     from clif_spark.pipelines import scores as scores_pipeline
-    flow = spark.sql(_SCORE_SYNTH.format(table=pq(sf_dir, "events")))
+    flow = spark.sql(_SCORE_SYNTH.format(table=pq(spark, sf_dir, "events")))
     out = scores_pipeline.sofa_neuro_band(scores_pipeline.build_scores(flow))
     return out.select(
         "patient_id", "encounter_id",
@@ -437,7 +437,7 @@ def pipeline_adt(spark, sf_dir):
     and both regex classify ladders — the oracle replays the same branch
     order so first-match-wins shadowing must agree."""
     from clif_spark.pipelines import adt as adt_pipeline
-    stays = spark.sql(_ADT_SYNTH.format(table=pq(sf_dir, "events")))
+    stays = spark.sql(_ADT_SYNTH.format(table=pq(spark, sf_dir, "events")))
     out = adt_pipeline.build_adt(stays)
     return out.select(
         "patient_id", "encounter_id",
@@ -509,7 +509,7 @@ def pipeline_labs(spark, sf_dir):
     over planted exact duplicates, epoch->ts for order/result times, plus
     the downstream as.numeric value cast ('<0.5' -> NULL on both engines)."""
     from clif_spark.pipelines import labs as labs_pipeline
-    raw = spark.sql(_LAB_SYNTH.format(table=pq(sf_dir, "events")))
+    raw = spark.sql(_LAB_SYNTH.format(table=pq(spark, sf_dir, "events")))
     vocab = spark.createDataFrame(
         _LAB_VOCAB, ["component_name", "lab_name", "lab_group", "lab_type_name"])
     out = labs_pipeline.numeric_lab_values(labs_pipeline.build_labs(raw, vocab))
@@ -574,7 +574,7 @@ def pipeline_demographics(spark, sf_dir):
     'Not Hispanic' before 'hispanic|latino' ordering trap — replayed
     branch-for-branch by the oracle."""
     from clif_spark.pipelines import demographics as demo_pipeline
-    demo = spark.sql(_DEMO_SYNTH.format(table=pq(sf_dir, "events")))
+    demo = spark.sql(_DEMO_SYNTH.format(table=pq(spark, sf_dir, "events")))
     return demo_pipeline.build_patient_demographics(demo)
 
 
@@ -692,9 +692,9 @@ def pipeline_encounter_dispo(spark, sf_dir):
     order, the disposition classify ladder, and the sha-256 pseudonymized
     patient id."""
     from clif_spark.pipelines import demographics as demo_pipeline
-    enc = spark.sql(_ENC_SYNTH.format(table=pq(sf_dir, "events")))
-    demo = spark.sql(_BIRTH_SYNTH.format(table=pq(sf_dir, "events")))
-    xtra = spark.sql(_XTRA_SYNTH.format(table=pq(sf_dir, "events")))
+    enc = spark.sql(_ENC_SYNTH.format(table=pq(spark, sf_dir, "events")))
+    demo = spark.sql(_BIRTH_SYNTH.format(table=pq(spark, sf_dir, "events")))
+    xtra = spark.sql(_XTRA_SYNTH.format(table=pq(spark, sf_dir, "events")))
     return demo_pipeline.build_encounter_dispo(enc, demo, xtra)
 
 
@@ -815,8 +815,8 @@ def pipeline_med_admin_continuous(spark, sf_dir):
     route), semi-join to matched names (J4), and the category vocab join.
     The oracle replays each stage in DuckDB over identical synthesis."""
     from clif_spark.pipelines import medications as med_pipeline
-    admins = spark.sql(_MED_ADMIN_SYNTH.format(table=pq(sf_dir, "events")))
-    med_out = spark.sql(_MED_OUT_SYNTH.format(table=pq(sf_dir, "events")))
+    admins = spark.sql(_MED_ADMIN_SYNTH.format(table=pq(spark, sf_dir, "events")))
+    med_out = spark.sql(_MED_OUT_SYNTH.format(table=pq(spark, sf_dir, "events")))
     vocab = spark.createDataFrame(_MED_VOCAB, ["med_name", "med_category"])
     out = med_pipeline.build_admin_continuous(admins, med_out, vocab)
     return out.select(
@@ -953,7 +953,7 @@ def pipeline_dialysis(spark, sf_dir):
     (junk -> NULL -> dropped), and the 3-modality union with NULL-filled
     missing columns."""
     from clif_spark.pipelines import dialysis as dialysis_pipeline
-    flow = spark.sql(_DIALYSIS_SYNTH.format(table=pq(sf_dir, "events")))
+    flow = spark.sql(_DIALYSIS_SYNTH.format(table=pq(spark, sf_dir, "events")))
     out = dialysis_pipeline.build_dialysis(flow)
     return out.select(
         "patient_id", "encounter_id", "dialysis_type",

@@ -186,10 +186,10 @@ def j1_vocab_broadcast_star(spark, sf_dir):
                  n.n_name AS nation, r.r_name AS region,
                  COUNT(*) AS n_orders,
                  {sql_dsum('o.o_totalprice')} AS total_spend
-          FROM {pq(sf_dir, 'orders')} o
-          JOIN {pq(sf_dir, 'customer')} c ON o.o_custkey = c.c_custkey
-          JOIN {pq(sf_dir, 'nation')} n ON c.c_nationkey = n.n_nationkey
-          JOIN {pq(sf_dir, 'region')} r ON n.n_regionkey = r.r_regionkey
+          FROM {pq(spark, sf_dir, 'orders')} o
+          JOIN {pq(spark, sf_dir, 'customer')} c ON o.o_custkey = c.c_custkey
+          JOIN {pq(spark, sf_dir, 'nation')} n ON c.c_nationkey = n.n_nationkey
+          JOIN {pq(spark, sf_dir, 'region')} r ON n.n_regionkey = r.r_regionkey
           GROUP BY n.n_name, r.r_name
         ) ORDER BY total_spend DESC, nation
     """)
@@ -329,7 +329,7 @@ def a1_group_count_histogram(spark, sf_dir):
     return spark.sql(f"""
         SELECT * FROM (
           SELECT /*+ REPARTITION(1) */ event_type, COUNT(*) AS n
-          FROM {pq(sf_dir, 'events')}
+          FROM {pq(spark, sf_dir, 'events')}
           GROUP BY event_type
         ) ORDER BY n DESC, event_type
     """)
@@ -479,7 +479,7 @@ def a9_grouping_sets(spark, sf_dir):
     grouping NULLs — one pass over the fact table produces every requested
     marginal (one shuffle, expand-node fan-out; at scale this replaces N
     separate aggregation jobs)."""
-    li = pq(sf_dir, "lineitem")
+    li = pq(spark, sf_dir, "lineitem")
     return spark.sql(f"""
         SELECT l_returnflag, l_linestatus,
                CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
@@ -640,7 +640,7 @@ def r4_explode_top_tokens(spark, sf_dir):
     return spark.sql(f"""
         SELECT token, COUNT(*) AS n
         FROM (SELECT explode(split(lower(text), ' ')) AS token
-              FROM {pq(sf_dir, 'documents')})
+              FROM {pq(spark, sf_dir, 'documents')})
         GROUP BY token
         ORDER BY n DESC, token
         LIMIT 20
@@ -1408,7 +1408,7 @@ def u4_intersect_except(spark, sf_dir):
     is two hash aggregates + one join shuffle on o_custkey — the same
     geometry three hand-written semi/anti joins would cost, written in four
     lines of SQL instead."""
-    o = pq(sf_dir, "orders")
+    o = pq(spark, sf_dir, "orders")
 
     def year(y):
         return (f"SELECT DISTINCT o_custkey FROM {o} "

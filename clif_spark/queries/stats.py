@@ -150,7 +150,7 @@ def a13_sketch_merge_distinct(spark, sf_dir):
     merged estimate checked against the global exact distinct. This is the
     map-side-combine story in miniature — partial sketches commute and
     merge losslessly, so a 1000-executor rollup ships KB not keys."""
-    li = pq(sf_dir, "lineitem")
+    li = pq(spark, sf_dir, "lineitem")
     return spark.sql(f"""
         WITH sk AS (
           SELECT l_returnflag, hll_sketch_agg(l_partkey) AS s
@@ -182,7 +182,7 @@ def a14_approx_percentile_bound(spark, sf_dir):
     value, bit-identical across engines). The GK summary is the
     bounded-memory percentile for 100 TB; its observed error here is
     ~0.01%, two orders under the asserted 1% gate."""
-    li = pq(sf_dir, "lineitem")
+    li = pq(spark, sf_dir, "lineitem")
     return spark.sql(f"""
         SELECT l_returnflag AS flag,
                CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice)

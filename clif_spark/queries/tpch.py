@@ -93,7 +93,7 @@ def q1_pricing_summary(spark, sf_dir):
                  {sql_dmean('l_extendedprice')} AS avg_price,
                  {sql_dmean('l_discount')} AS avg_disc,
                  COUNT(*) AS count_order
-          FROM {pq(sf_dir, 'lineitem')}
+          FROM {pq(spark, sf_dir, 'lineitem')}
           WHERE l_shipdate <= TIMESTAMP_NTZ '2001-08-06 00:00:00'
           GROUP BY l_returnflag, l_linestatus
         ) ORDER BY l_returnflag, l_linestatus
@@ -146,9 +146,9 @@ def q3_shipping_priority(spark, sf_dir):
                    {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
                    date_format(o.o_orderdate, 'yyyy-MM-dd') AS orderdate,
                    o.o_orderpriority
-            FROM {pq(sf_dir, 'lineitem')} l
-            JOIN {pq(sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
-            JOIN {pq(sf_dir, 'customer')} c ON c.c_custkey = o.o_custkey
+            FROM {pq(spark, sf_dir, 'lineitem')} l
+            JOIN {pq(spark, sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
+            JOIN {pq(spark, sf_dir, 'customer')} c ON c.c_custkey = o.o_custkey
             WHERE c.c_mktsegment = 'BUILDING'
               AND o.o_orderdate < TIMESTAMP_NTZ '1998-01-01 00:00:00'
               AND l.l_shipdate > TIMESTAMP_NTZ '1998-01-01 00:00:00'
@@ -161,7 +161,7 @@ def q3_shipping_priority(spark, sf_dir):
             SELECT l_orderkey,
                    SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount))
                        * 1000000.0 + 0.5) AS BIGINT)) AS rev_micros
-            FROM {pq(sf_dir, 'lineitem')}
+            FROM {pq(spark, sf_dir, 'lineitem')}
             WHERE l_shipdate > TIMESTAMP_NTZ '1998-01-01 00:00:00'
             GROUP BY l_orderkey
         )
@@ -172,8 +172,8 @@ def q3_shipping_priority(spark, sf_dir):
                date_format(o.o_orderdate, 'yyyy-MM-dd') AS orderdate,
                o.o_orderpriority
         FROM lrev l
-        JOIN {pq(sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
-        JOIN {pq(sf_dir, 'customer')} c ON c.c_custkey = o.o_custkey
+        JOIN {pq(spark, sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
+        JOIN {pq(spark, sf_dir, 'customer')} c ON c.c_custkey = o.o_custkey
         WHERE c.c_mktsegment = 'BUILDING'
           AND o.o_orderdate < TIMESTAMP_NTZ '1998-01-01 00:00:00'
         ORDER BY revenue DESC, l.l_orderkey
@@ -233,13 +233,13 @@ def q5_local_supplier_volume(spark, sf_dir):
           SELECT /*+ REPARTITION(1), {_bcast_if_small(sf_dir, 'orders', 'o')}{_bcast_if_small(sf_dir, 'customer', 'c')}BROADCAST(s), BROADCAST(n), BROADCAST(r) */
                  n.n_name AS nation,
                  {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
-          FROM {pq(sf_dir, 'lineitem')} l
-          JOIN {pq(sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
-          JOIN {pq(sf_dir, 'customer')} c ON o.o_custkey = c.c_custkey
-          JOIN {pq(sf_dir, 'supplier')} s
+          FROM {pq(spark, sf_dir, 'lineitem')} l
+          JOIN {pq(spark, sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
+          JOIN {pq(spark, sf_dir, 'customer')} c ON o.o_custkey = c.c_custkey
+          JOIN {pq(spark, sf_dir, 'supplier')} s
             ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-          JOIN {pq(sf_dir, 'nation')} n ON s.s_nationkey = n.n_nationkey
-          JOIN {pq(sf_dir, 'region')} r ON n.n_regionkey = r.r_regionkey
+          JOIN {pq(spark, sf_dir, 'nation')} n ON s.s_nationkey = n.n_nationkey
+          JOIN {pq(spark, sf_dir, 'region')} r ON n.n_regionkey = r.r_regionkey
           WHERE r.r_name = 'ASIA'
             AND o.o_orderdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
             AND o.o_orderdate <  TIMESTAMP_NTZ '1998-01-01 00:00:00'
@@ -267,7 +267,7 @@ def q6_forecast_revenue(spark, sf_dir):
     return spark.sql(f"""
         SELECT {sql_dsum('l_extendedprice * l_discount')} AS revenue,
                COUNT(*) AS n_lines
-        FROM {pq(sf_dir, 'lineitem')}
+        FROM {pq(spark, sf_dir, 'lineitem')}
         WHERE l_shipdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
           AND l_shipdate <  TIMESTAMP_NTZ '1997-01-01 00:00:00'
           AND l_discount >= 0.05 AND l_discount <= 0.07
@@ -338,7 +338,7 @@ def q7_nation_volume(spark, sf_dir):
     the broadcast hash sides are 25 rows, so no join reordering is needed."""
     return spark.sql(
         "SELECT /*+ BROADCAST(s), BROADCAST(n1), BROADCAST(n2) */"
-        + _q7_sql(lambda n: pq(sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
+        + _q7_sql(lambda n: pq(spark, sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
 
 
 def _q8_sql(t, ts):
@@ -374,7 +374,7 @@ def q8_market_share(spark, sf_dir):
     engines and the quotient needs no rounding discipline."""
     return spark.sql(
         "SELECT /*+ BROADCAST(p), BROADCAST(s), BROADCAST(n1), BROADCAST(n2), BROADCAST(r) */"
-        + _q8_sql(lambda n: pq(sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
+        + _q8_sql(lambda n: pq(spark, sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
 
 
 def _q10_sql(t, ts):
@@ -403,7 +403,7 @@ def q10_returned_items(spark, sf_dir):
     the aggregate needs no second customer join."""
     return spark.sql(
         "SELECT /*+ BROADCAST(n) */"
-        + _q10_sql(lambda n: pq(sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
+        + _q10_sql(lambda n: pq(spark, sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
 
 
 def _q13_sql(t):
@@ -428,7 +428,7 @@ def q13_order_count_distribution(spark, sf_dir):
     ON-clause-predicate shape): customers with zero surviving orders must
     appear with c_count=0, which only an outer join preserves; the second
     aggregate is a tiny re-shuffle on the count value."""
-    return spark.sql(_q13_sql(lambda n: pq(sf_dir, n)))
+    return spark.sql(_q13_sql(lambda n: pq(spark, sf_dir, n)))
 
 
 def _q14_sql(t, ts):
@@ -453,7 +453,7 @@ def q14_promo_revenue(spark, sf_dir):
     pass, so one scan + one 1-row aggregate is the whole plan."""
     return spark.sql(
         "SELECT /*+ BROADCAST(p) */"
-        + _q14_sql(lambda n: pq(sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
+        + _q14_sql(lambda n: pq(spark, sf_dir, n), "TIMESTAMP_NTZ").split("SELECT", 1)[1])
 
 
 def _q15_sql(t, ts):
@@ -480,7 +480,7 @@ def q15_top_supplier(spark, sf_dir):
     equality filter is safe cross-engine because total_revenue is dsum
     fixed-point (exact 2-decimal doubles), so ties and the max compare
     identically; ORDER BY s_suppkey makes multi-winner output deterministic."""
-    return spark.sql(_q15_sql(lambda n: pq(sf_dir, n), "TIMESTAMP_NTZ"))
+    return spark.sql(_q15_sql(lambda n: pq(spark, sf_dir, n), "TIMESTAMP_NTZ"))
 
 
 def _q17_sql(t):
@@ -508,7 +508,7 @@ def q17_small_qty_revenue(spark, sf_dir):
     decorrelator targets, written explicitly. The 0.2× threshold is restated
     in integer micros (`5 * q_micros < avg_micros`), exact at the boundary in
     both engines. th is brand-restricted first, so it broadcasts."""
-    return spark.sql(_q17_sql(lambda n: pq(sf_dir, n)))
+    return spark.sql(_q17_sql(lambda n: pq(spark, sf_dir, n)))
 
 
 def _q18_sql(t):
@@ -538,7 +538,7 @@ def q18_large_volume_customer(spark, sf_dir):
     The outer CAST pins the aggregate back to BIGINT: DuckDB's SUM(BIGINT)
     yields HUGEINT, which materializes as float64 through arrow/pandas and
     hash-mismatches Spark's BIGINT (same rule as windows.py w4)."""
-    return spark.sql(_q18_sql(lambda n: pq(sf_dir, n)))
+    return spark.sql(_q18_sql(lambda n: pq(spark, sf_dir, n)))
 
 
 def _q19_sql(t):
@@ -564,7 +564,7 @@ def q19_disjunctive_filter(spark, sf_dir):
     (brand IN (...), quantity <= 30) below the broadcast join."""
     return spark.sql(
         "SELECT /*+ BROADCAST(p) */"
-        + _q19_sql(lambda n: pq(sf_dir, n)).split("SELECT", 1)[1])
+        + _q19_sql(lambda n: pq(spark, sf_dir, n)).split("SELECT", 1)[1])
 
 
 def _q22_sql(t, ts):
@@ -598,4 +598,4 @@ def q22_global_sales_opportunity(spark, sf_dir):
     Plans as scalar-subquery threshold (one-row broadcast) + left-anti join
     against date-pruned orders. The average threshold is fixed-point micros
     so the `>` boundary cannot flip between engines."""
-    return spark.sql(_q22_sql(lambda n: pq(sf_dir, n), "TIMESTAMP_NTZ"))
+    return spark.sql(_q22_sql(lambda n: pq(spark, sf_dir, n), "TIMESTAMP_NTZ"))

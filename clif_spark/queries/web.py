@@ -23,8 +23,9 @@ from pyspark.sql.window import Window
 
 from clif_spark import curation, io, warc
 from clif_spark.functions import url as urlfn
+from clif_spark.operators.core import fits_broadcast
 from clif_spark.operators.graph import FIXPOINT_MAX_ITERS
-from clif_spark.queries import memo_cols, pq, query
+from clif_spark.queries import memo_cols, query
 
 # --- shared planted inputs (Spark expression + DuckDB mirror) -----------
 
@@ -2204,10 +2205,9 @@ def _bm25f_score(bcounts, acounts, materialized: bool = False):
     leg parquet scans with pushed filters and real stats — for those,
     re-planning the scan per reference is cheaper than three eager
     checkpoint jobs + block writes (A/B on the standing store at
-    sf0.1: 3.83 -> 2.92 s min, 12 -> 9 jobs —
-    scripts/bm25f_score_ab_r18.py; results bit-identical, asserted
-    there and oracle-gated in every caller). The batch-tokenize
-    callers keep the default."""
+    sf0.1: 3.83 -> 2.92 s min, 12 -> 9 jobs, recorded in
+    OPTIMIZATION_r18.md; results bit-identical and oracle-gated in
+    every caller). The batch-tokenize callers keep the default."""
     from pyspark.sql import Window
 
     def _cut(df):
@@ -3604,21 +3604,15 @@ def web_bowtie_classes(spark, sf_dir):
                              F.col("src").alias("dst"))
     reaches_core = G.bfs_depths(rev_edges, core).select("node")
     reached_from = G.bfs_depths(edges, core).select("node")
-    # Count-gated broadcast on the three node-sized classifier joins
-    # (r18, guide §3.1 — the triangle_counts template): the fixpoint
-    # outputs are checkpointed LogicalRDDs whose inherited regex-
-    # lineage estimates are unknown (Long.Max), so the planner ran all
-    # three left joins as SortMergeJoins even on a 20-node fixture
-    # (r17 audit). scc is already materialized, so decide from its
-    # TRUE row count and key bytes (core/in/out are node subsets, so
-    # the scc bound covers all three sides): measured 0.178 -> 0.138 s
-    # at sf0.1 and 0.258 -> 0.186 s at sf1 on the isolated classifier
-    # (scripts/bowtie_bcast_ab_r18.py), plan 3 SMJ -> 3 BHJ. Above the
-    # bound the honest SMJ stands.
-    n_scc, scc_bytes = scc.agg(
-        F.count(F.lit(1)),
-        F.sum(F.octet_length("node"))).first()
-    if n_scc <= 1_000_000 and (scc_bytes or 0) <= (64 << 20):
+    # Size-gated broadcast on the three node-sized classifier joins
+    # (r18, guide §3.1 — the triangle_counts gate): the fixpoint outputs
+    # are checkpointed LogicalRDDs with unknown inherited estimates, so
+    # the planner ran all three left joins as SortMergeJoins even on a
+    # 20-node fixture (r17 audit). core/in/out are node subsets, so the
+    # scc bound covers all three sides: measured 0.178 -> 0.138 s at
+    # sf0.1 and 0.258 -> 0.186 s at sf1 on the isolated classifier, plan
+    # 3 SMJ -> 3 BHJ (OPTIMIZATION_r18.md).
+    if fits_broadcast(scc, ["node"]):
         core = F.broadcast(core)
         reaches_core = F.broadcast(reaches_core)
         reached_from = F.broadcast(reached_from)

@@ -17,10 +17,15 @@ manager + input-split parallelism + AQE replace it. What this module pins down i
   normalize to TimestampType (micros) in `clif_spark.io`.
 - AQE on (skew-join splitting + shuffle coalescing) — encounter/user keys are
   skewed in EHR data; at 100 TB this is the difference between a straggler task
-  and a balanced stage.
+  and a balanced stage. bench.py turns it off below 1 GB of input, where its
+  stage-by-stage materialization only adds latency.
 
-``configure(spark)`` is idempotent and safe to call on a session we did not build
-(the correctness driver owns its own SparkSession and merely hands it to us).
+The confs are applied where a session enters the engine, never per query:
+``build_session`` sets them through the builder, and ``configure`` sets
+them on a session we did not build (the correctness driver owns its own
+SparkSession and hands it to ``__spark_entry__``). Registered queries read
+whatever the caller's session holds, so a conf the caller set after that
+point stands.
 """
 
 from __future__ import annotations
@@ -62,7 +67,8 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
+    """Apply the engine's runtime confs to a session we did not build
+    (idempotent); ``__spark_entry__`` calls it on the driver's session."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -101,5 +107,6 @@ def build_session(
         builder = builder.config(k, v)
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return configure(spark)
+    # getOrCreate applies the builder's modifiable SQL confs to an
+    # already-running session too, so no separate configure pass
+    return builder.getOrCreate()

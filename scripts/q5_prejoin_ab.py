@@ -30,18 +30,18 @@ def variant(spark, sf_dir):
     return spark.sql(f"""
         WITH sdim AS (
           SELECT s.s_suppkey, s.s_nationkey, n.n_name
-          FROM {pq(sf_dir, 'supplier')} s
-          JOIN {pq(sf_dir, 'nation')} n ON s.s_nationkey = n.n_nationkey
-          JOIN {pq(sf_dir, 'region')} r ON n.n_regionkey = r.r_regionkey
+          FROM {pq(spark, sf_dir, 'supplier')} s
+          JOIN {pq(spark, sf_dir, 'nation')} n ON s.s_nationkey = n.n_nationkey
+          JOIN {pq(spark, sf_dir, 'region')} r ON n.n_regionkey = r.r_regionkey
           WHERE r.r_name = 'ASIA'
         )
         SELECT * FROM (
           SELECT /*+ REPARTITION(1), {_bcast_if_small(sf_dir, 'orders', 'o')}{_bcast_if_small(sf_dir, 'customer', 'c')}BROADCAST(sd) */
                  sd.n_name AS nation,
                  {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
-          FROM {pq(sf_dir, 'lineitem')} l
-          JOIN {pq(sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
-          JOIN {pq(sf_dir, 'customer')} c ON o.o_custkey = c.c_custkey
+          FROM {pq(spark, sf_dir, 'lineitem')} l
+          JOIN {pq(spark, sf_dir, 'orders')} o ON l.l_orderkey = o.o_orderkey
+          JOIN {pq(spark, sf_dir, 'customer')} c ON o.o_custkey = c.c_custkey
           JOIN sdim sd
             ON l.l_suppkey = sd.s_suppkey
            AND c.c_nationkey = sd.s_nationkey

@@ -272,9 +272,44 @@ def test_query_df_cache_keeps_only_the_live_session(spark, monkeypatch):
     monkeypatch.setattr(conftest, "_QUERY_DF_CACHE", {})
     monkeypatch.setattr(conftest, "_QUERY_DF_OWNER", None, raising=False)
     other = spark.newSession()
-    name = "p1_p3_project_rename"  # plain DataFrame build, no pq() view
+    name = "p1_p3_project_rename"
     conftest.build_query_cached(spark, name)
     conftest.build_query_cached(other, name)
     cached = [df for df, _ in conftest._QUERY_DF_CACHE.values()]
     assert len(cached) == 1
     assert cached[0].sparkSession is other
+
+
+def test_registry_query_keeps_the_callers_session_confs(spark):
+    """A registered query builds on the caller's session as it is: the
+    engine confs are applied where a session is built or handed in, never
+    per query, so a conf the caller set (bench.py's AQE-off below 1 GB)
+    survives the build."""
+    from clif_spark.queries import REGISTRY
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        REGISTRY["q1_pricing_summary"].fn(spark, SF_DIR)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_driver_adapter_configures_a_foreign_session(spark):
+    """The driver hands in its own default-conf session (ANSI on, no
+    nanosAsLong). ``__spark_entry__.queries()`` applies the engine confs
+    to it, and the query's ``pq`` views are registered on that session,
+    not on whichever session is active — so a second session object
+    gets the same result as the fixture session."""
+    from conftest import build_query_cached
+
+    name = "pipeline_vitals"
+    other = spark.newSession()
+    other.conf.set("spark.sql.ansi.enabled", "true")
+    other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    got = _pdf_rowset(QUERIES[name](other, SF_DIR).toPandas())
+    want = _pdf_rowset(build_query_cached(spark, name).toPandas())
+    assert got == want
+    assert other.conf.get("spark.sql.ansi.enabled") == "false"

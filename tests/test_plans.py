@@ -832,6 +832,19 @@ def test_cocitation_triangles_join_shape(spark):
     assert "MapInPandas" not in plan and "EvalPython" not in plan
 
 
+def test_graph_joins_ride_the_broadcast_gate(spark):
+    """operators.core.fits_broadcast admits the checkpointed fixpoint
+    outputs, whose inherited size estimates are unknown: bowtie's three
+    node-sized classifier joins plan as BroadcastHashJoin and the
+    triangle enumeration's probe joins do too. Without the gate the
+    planner falls back to SortMergeJoin on both."""
+    bowtie = plan_of(spark, "web_bowtie_classes")
+    assert bowtie.count("BroadcastHashJoin") >= 3, bowtie
+    assert "SortMergeJoin" not in bowtie, bowtie
+    tri = plan_of(spark, "web_cocitation_triangles")
+    assert "SortMergeJoin" not in tri, tri
+
+
 def test_lsm_pruned_read_scans_only_intersecting_segments(spark):
     """read_lsm(key_range=...) at the PLAN level: the union's file
     sources must contain only segments whose footer stats intersect
