@@ -320,52 +320,6 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
                  .filter(F.col("jaccard") >= threshold))
 
 
-def connected_components(pairs: DataFrame, a_col: str = "a",
-                         b_col: str = "b", max_iter: int = 25) -> DataFrame:
-    """Connected components over near-dup pairs: (doc, cluster_id) with
-    cluster_id = the smallest doc id in the component — the step that turns
-    pairwise dedup verdicts into keep-one-per-cluster groups.
-
-    Iterative min-label propagation (the simple alternating form of the
-    large-star/small-star map-reduce CC algorithm): every node starts as
-    its own label; each round every node takes the min of its own and its
-    neighbors' labels; converged when a round changes nothing. Rounds
-    needed = graph diameter (dup clusters are shallow — star-ish — so
-    convergence is fast; ``max_iter`` only guards adversarial chains).
-
-    Scale notes: each round is one join + one groupBy on the EDGE relation
-    (candidate pairs — orders of magnitude smaller than the corpus);
-    ``localCheckpoint`` truncates the lineage each round so the plan does
-    not grow exponentially across iterations — the standard Spark
-    iterative-algorithm discipline (same as GraphX/ML). The driver-side
-    loop is control flow only; no data ever reaches the driver beyond the
-    one-row convergence count. Deterministic: the fixpoint (min label per
-    component) does not depend on iteration order.
-    """
-    sym = (pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-                .unionByName(pairs.select(F.col(b_col).alias("src"),
-                                          F.col(a_col).alias("dst"))))
-    sym = sym.localCheckpoint(eager=True)
-    labels = (sym.select(F.col("src").alias("doc")).distinct()
-                 .withColumn("label", F.col("doc")))
-    for _ in range(max_iter):
-        neighbor_min = (sym.join(labels, sym.src == labels.doc)
-                           .groupBy(F.col("dst").alias("doc"))
-                           .agg(F.min("label").alias("nmin")))
-        new_labels = (labels.join(neighbor_min, "doc", "left")
-                      .select("doc",
-                              F.least("label", F.coalesce("nmin", "label"))
-                               .alias("label"))
-                      .localCheckpoint(eager=True))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "doc")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("doc", F.col("label").alias("cluster_id"))
-
-
 #: SimHash geometry: 64 bits = 4 chunks × 16 bits = 16 md5 hex chars × 4
 #: nibble bits. Chunked output keeps every value inside signed 16-bit range
 #: (engine-portable: no unsigned-64 overflow in either Spark or DuckDB) and
@@ -651,7 +605,7 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.6,
     # recomputes per occurrence — measured 36 s -> 13 s at 5k docs just
     # from this (BASELINE.md round 7). localCheckpoint is the repo's
     # sanctioned reuse tool for data-sized intermediates in multi-pass
-    # operators (same discipline as connected_components / kmeans): one
+    # operators (same discipline as operators.graph / kmeans): one
     # materialization, N reads, lineage truncated.
     toks = doc_tokens(docs, id_col, text_col).localCheckpoint(eager=True)
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

@@ -28,14 +28,23 @@ materialized node-sized relation with REAL size stats instead of
 K-compounded estimates, and the final action stops re-running broadcast
 sub-jobs over the whole chain; real deployments checkpoint to storage —
 see CHECKPOINT_DIR_CONF).
+
+Every iterative operator here reads the caller's edge lineage (for a
+crawl graph, the whole link extraction) in ONE pass into an edge-sized
+checkpoint and derives everything else from checkpointed leaves. A
+fixpoint round is ONE checkpoint job: its convergence certificate is a
+``df.observe`` metric riding that job (``_ckpt_obs``), not a separate
+count/first probe.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from clif_spark.operators.core import fits_broadcast
+from clif_spark.operators.core import fits_broadcast, with_audit
 
 MICROS = 1_000_000
 
@@ -53,16 +62,58 @@ def _ckpt(df: DataFrame) -> DataFrame:
     ``checkpoint`` when ``spark.clif.graph.checkpointDir`` is set on
     the session (cluster fault-tolerance posture — survives executor
     loss), ``localCheckpoint`` otherwise (the single-box default; same
-    plan-truncation semantics, blocks live on executors). A checkpoint
-    dir already set on the SparkContext by the caller is respected."""
+    plan-truncation semantics, blocks live on executors). When the conf
+    names a different directory than the SparkContext checkpoints to,
+    the context is re-pointed at it (``setCheckpointDir`` appends a
+    UUID subdirectory, so the context's directory is compared by its
+    parent) — a changed conf takes effect on the next call."""
     spark = df.sparkSession
     cdir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
     if cdir:
         sc = spark.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
+        hpath = sc._jvm.org.apache.hadoop.fs.Path
+        want = hpath(cdir)
+        want = want.getFileSystem(
+            sc._jsc.hadoopConfiguration()).makeQualified(want).toString()
+        cur = sc._jsc.sc().getCheckpointDir()
+        if cur.isEmpty() or hpath(cur.get()).getParent().toString() != want:
             sc.setCheckpointDir(cdir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+#: observation names must be unique among live observations
+_OBS_SEQ = itertools.count()
+
+
+def _ckpt_obs(df: DataFrame, *cols: str,
+              **metrics: Column) -> tuple[DataFrame, dict]:
+    """``_ckpt`` whose job also computes ``metrics`` (aggregates over
+    ``df``'s rows, via ``core.with_audit``): returns the checkpointed
+    relation — projected to ``cols`` when given, so a metric may read
+    a column the result does not keep — and the metric values. The
+    fixpoint loops' convergence certificates ride the round's one
+    checkpoint job this way instead of a second count/first action."""
+    df, obs = with_audit(df, f"graph_ckpt_{next(_OBS_SEQ)}", **metrics)
+    if cols:
+        df = df.select(*cols)
+    return _ckpt(df), obs.get
+
+
+def _endpoints(rel: DataFrame) -> DataFrame:
+    """Distinct ``node`` over both endpoints of a (src, dst) relation,
+    in one pass."""
+    return (rel.select(F.explode(F.array("src", "dst")).alias("node"))
+            .distinct())
+
+
+def _ckpt_out_edges(e: DataFrame, name: str, total: Column) -> DataFrame:
+    """Checkpoint a (src, dst, ...) edge relation with each source's
+    outbound ``total`` (an aggregate over its out-edges) carried as
+    column ``name`` — the loop invariant every PageRank iteration
+    divides by, computed once instead of re-aggregated per iteration."""
+    return (e.withColumn(name, total.over(Window.partitionBy("src")))
+            .transform(_ckpt))
 
 
 #: Default fixpoint-round budget shared by the iterative operators AND
@@ -92,19 +143,22 @@ def connected_components(edges: DataFrame, src_col: str = "src",
     return a half-converged labeling).
 
     Scale shape: O(graph diameter) rounds, each one edge-relation join
-    + node-keyed min-agg + one COUNT action (the convergence probe —
-    a driver scalar, not data). Labels are node-relation sized: for
-    host graphs (millions of rows at web scale) they broadcast, so a
-    round is one scan of the edge relation with no corpus shuffle.
-    Per-round localCheckpoint keeps lineage flat (without it round K
-    re-executes all K-1 predecessors — the pagerank lesson). Host-like
-    graphs have single-digit diameters; for high-diameter graphs the
-    documented alternative is the large-star/small-star contraction
-    (Kiveris et al., O(log^2 n) rounds) — not implemented because no
-    gated workload needs it."""
+    + node-keyed min-agg materialized by ONE checkpoint job, whose
+    observed changed-label count is the convergence probe (a driver
+    scalar, not data). The undirected edge relation is built from a
+    single read of the caller's lineage (each row explodes into both
+    directions). Labels are node-relation sized: for host graphs
+    (millions of rows at web scale) they broadcast, so a round is one
+    scan of the edge relation with no corpus shuffle. Per-round
+    checkpoint keeps lineage flat (without it round K re-executes all
+    K-1 predecessors — the pagerank lesson). Host-like graphs have
+    single-digit diameters; for high-diameter graphs use
+    connected_components_star (Kiveris et al., O(log^2 n) rounds)."""
     s, d = F.col(src_col), F.col(dst_col)
-    ue = (edges.select(s.alias("src"), d.alias("dst"))
-          .unionByName(edges.select(d.alias("src"), s.alias("dst")))
+    ue = (edges.select(F.explode(F.array(
+              F.struct(s.alias("src"), d.alias("dst")),
+              F.struct(d.alias("src"), s.alias("dst")))).alias("__e"))
+          .select("__e.src", "__e.dst")
           .filter(F.col("src") != F.col("dst"))
           .distinct()
           .transform(_ckpt))
@@ -112,31 +166,21 @@ def connected_components(edges: DataFrame, src_col: str = "src",
               .select("node", F.col("node").alias("component")))
     for rounds in range(1, max_iters + 1):
         cand = (ue.join(labels, ue["src"] == labels["node"])
-                  .select(F.col("dst").alias("node"),
-                          F.col("component").alias("cand")))
-        # exact convergence probe, FUSED into the round's one
-        # materialization (r17, guide §1.2/§2.4): the old-label join
-        # rides the checkpoint job (labels are already materialized, so
-        # the broadcast build is free) and the per-round probe becomes
-        # one narrow SUM over the checkpointed result — the previous
-        # separate join+count job re-read both label relations every
-        # round. A label only ever moves DOWN, so "no __chg row" ==
-        # fixpoint, exactly as before (nxt's node set equals labels' —
-        # the union seeds every node — so the inner join drops nothing).
-        nxt = (labels.unionByName(
-                   cand.withColumnRenamed("cand", "component"))
-               .groupBy("node")
-               .agg(F.min("component").alias("component"))
-               .join(labels.withColumnRenamed("component", "__old"),
-                     "node")
-               .select("node", "component",
-                       (F.col("component") != F.col("__old"))
-                       .alias("__chg"))
-               .transform(_ckpt))
-        changed = nxt.agg(
-            F.sum(F.col("__chg").cast("long"))).first()[0]
-        labels = nxt.select("node", "component")
-        if not changed:
+                  .select(F.col("dst").alias("node"), "component"))
+        # each node's own row carries its old label (__old) into the
+        # same min-aggregation, so the changed-label count is observed
+        # on the round's one checkpoint job without a join back to the
+        # old labels. A label only ever moves DOWN, so "no changed
+        # label" == fixpoint.
+        labels, m = _ckpt_obs(
+            labels.withColumn("__old", F.col("component"))
+            .unionByName(cand, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"),
+                 F.max("__old").alias("__old")),
+            "node", "component",
+            changed=F.count_if(F.col("component") != F.col("__old")))
+        if not m["changed"]:
             return (labels, rounds) if return_rounds else labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds")
@@ -158,37 +202,34 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
 
     Same scale shape as connected_components: O(max shortest-path
     length) rounds of edge-join + min-agg with a broadcastable
-    depth relation, per-round localCheckpoint, loud failure past
-    ``max_iters``."""
+    depth relation, one checkpoint job per round carrying its own
+    certificate, loud failure past ``max_iters``."""
     s, d = F.col(src_col), F.col(dst_col)
     e = (edges.select(s.alias("src"), d.alias("dst")).distinct()
          .transform(_ckpt))
-    # seed-sized checkpoint: the caller's seed lineage may itself be a
-    # corpus-scan aggregate, and the loop's first round references it
-    # three times (candidate join, merge, convergence probe)
-    depths = (seeds.select(F.col(seeds.columns[0]).alias("node"),
-                           F.lit(0).cast("long").alias("depth"))
-              .transform(_ckpt))
+
+    def cert():
+        return {"n": F.count(F.lit(1)), "total": F.sum("depth")}
+
     # depths only move down and nodes only get added, so the exact
-    # integer pair (COUNT, SUM(depth)) is a fixpoint certificate; the
-    # previous round's pair is carried in the driver (r17) instead of
-    # re-aggregating the already-certified relation — one agg job per
-    # round, not two (the relation is the same both times by
-    # construction: `depths` below IS the nxt the pair was taken from).
-    cert = tuple(depths.agg(F.count(F.lit(1)), F.sum("depth")).first())
+    # integer pair (COUNT, SUM(depth)) is a fixpoint certificate,
+    # observed on each checkpoint job. The seed-sized checkpoint also
+    # keeps the caller's seed lineage (possibly a corpus-scan
+    # aggregate) out of the loop.
+    depths, prev = _ckpt_obs(
+        seeds.select(F.col(seeds.columns[0]).alias("node"),
+                     F.lit(0).cast("long").alias("depth")), **cert())
     for _ in range(max_iters):
         cand = (e.join(depths, e["src"] == depths["node"])
                  .select(F.col("dst").alias("node"),
                          (F.col("depth") + F.lit(1)).alias("depth")))
-        nxt = (depths.unionByName(cand)
-               .groupBy("node")
-               .agg(F.min("depth").alias("depth"))
-               .transform(_ckpt))
-        a = tuple(nxt.agg(F.count(F.lit(1)), F.sum("depth")).first())
-        depths = nxt
-        if a == cert:
+        depths, now = _ckpt_obs(
+            depths.unionByName(cand)
+            .groupBy("node")
+            .agg(F.min("depth").alias("depth")), **cert())
+        if now == prev:
             return depths
-        cert = a
+        prev = now
     raise RuntimeError(f"bfs_depths did not converge in {max_iters} rounds")
 
 
@@ -214,10 +255,12 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
     (node -> component minimum), so the result equals min-label
     propagation's labeling EXACTLY — gated under the same
     recursive-closure oracle. Fixpoint test: exact set equality of the
-    edge relation between rounds (exceptAll both ways), a pure integer
-    certificate like the siblings'.
+    edge relation between rounds — both relations are distinct, so
+    equal row counts (observed on the checkpoint jobs) plus an empty
+    ``nxt EXCEPT ALL e`` prove it; the exceptAll runs only in a round
+    whose counts are equal.
 
-    Same discipline as the siblings: per-round localCheckpoint (the
+    Same discipline as the siblings: per-round checkpoint (the
     pagerank lineage lesson), loud failure past ``max_iters``. Cost
     per round: two groupBy-min + joins on a node-sized relation —
     same exchange shape as one label round, so the O(log^2 n) vs
@@ -226,12 +269,11 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
     Returns (node, component); with ``return_rounds=True`` returns
     (labels, rounds) for round-count instrumentation."""
     s, d = F.col(src_col), F.col(dst_col)
-    e = (edges.select(s.alias("u"), d.alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct()
-         .transform(_ckpt))
-    nodes = (e.select(F.col("u").alias("node"))
-             .unionByName(e.select(F.col("v").alias("node")))
+    e, m = _ckpt_obs(edges.select(s.alias("u"), d.alias("v"))
+                     .filter(F.col("u") != F.col("v"))
+                     .distinct(), n=F.count(F.lit(1)))
+    n_e = m["n"]
+    nodes = (e.select(F.explode(F.array("u", "v")).alias("node"))
              .distinct()
              .transform(_ckpt))
 
@@ -257,21 +299,17 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
         # to which the smaller neighbors AND u itself rewire
         nbrs2 = _sym(e_large).filter(F.col("v") < F.col("u"))
         mins2 = nbrs2.groupBy("u").agg(F.min("v").alias("__m"))
-        nxt = (nbrs2.join(mins2, "u")
-               .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-               .unionByName(mins2.select("u", F.col("__m").alias("v")))
-               .filter(F.col("u") != F.col("v"))
-               .distinct()
-               .transform(_ckpt))
-        # set-equality probe in ONE exceptAll instead of two (r17):
-        # both relations are distinct, so |nxt| == |e| and
-        # nxt \ e == ∅ together imply nxt == e; the counts are cheap
-        # scans of already-checkpointed RDDs, and when they differ
-        # (every non-final round) the exceptAll shuffle is skipped
-        # entirely.
-        changed = (nxt.count() != e.count()
-                   or nxt.exceptAll(e).count() != 0)
-        e = nxt
+        nxt, m = _ckpt_obs(
+            nbrs2.join(mins2, "u")
+            .select(F.col("v").alias("u"), F.col("__m").alias("v"))
+            .unionByName(mins2.select("u", F.col("__m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct(), n=F.count(F.lit(1)))
+        # set equality: both relations are distinct, so |nxt| == |e|
+        # and nxt \ e == ∅ together imply nxt == e; when the counts
+        # differ (every non-final round) the exceptAll is skipped
+        changed = m["n"] != n_e or nxt.exceptAll(e).count() != 0
+        e, n_e = nxt, m["n"]
         if not changed:
             # fixpoint: e is the star node -> component min; roots
             # (and nothing else) are absent from the child side
@@ -286,48 +324,45 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
         f"rounds")
 
 
-def _directed_min_labels(e: DataFrame, nodes: DataFrame,
-                         max_iters: int,
-                         cancel: object | None = None) -> DataFrame:
-    """Min-label propagation ALONG the directed edge relation to
-    fixpoint: label(v) = MIN(node id over {v} ∪ {u : u reaches v}).
-    The directed sibling of connected_components' inner loop — same
-    exact integer convergence probe (a label only moves DOWN), same
-    per-round localCheckpoint, same loud failure. ``e`` and ``nodes``
-    must already be materialized (the callers checkpoint them once and
-    run this twice, forward and reversed). ``cancel`` (a
-    threading.Event) aborts between rounds — the SCC caller runs two
-    of these concurrently and sets it when one fails, so the sibling
-    stops within a round instead of running out its budget
-    (ADVICE r17)."""
-    labels = nodes.select("node", F.col("node").alias("lab"))
+def _fw_bw_colors(e: DataFrame, nodes: DataFrame,
+                  max_iters: int) -> DataFrame:
+    """Both directed min-label colorings of the FW-BW SCC scheme in ONE
+    fixpoint loop over (node, f, b):
+
+        f(v) = MIN(node id over {v} ∪ {w : v reaches w})  (against e)
+        b(v) = MIN(node id over {v} ∪ {u : u reaches v})  (along e)
+
+    The two labels are independent, so carrying them side by side is
+    exactly the two separate propagations, each frozen once converged;
+    the loop stops when a round changes neither (labels only move DOWN,
+    so a zero changed-count observed on the round's checkpoint job is
+    the fixpoint). ``e`` and ``nodes`` must already be materialized.
+    Raises past ``max_iters``."""
+    lab = nodes.select("node", F.col("node").alias("f"),
+                       F.col("node").alias("b"))
     for _ in range(max_iters):
-        if cancel is not None and cancel.is_set():
-            raise RuntimeError(
-                "_directed_min_labels: cancelled — the sibling "
-                "coloring failed first")
-        cand = (e.join(labels, e["src"] == labels["node"])
-                 .select(F.col("dst").alias("node"),
-                         F.col("lab").alias("cand")))
-        # fused probe (r17): the old-label comparison rides the round's
-        # checkpoint job and the probe is one narrow SUM — see
-        # connected_components for the rationale and exactness argument
-        # (cand's nodes are e's dst endpoints, a subset of ``nodes``, so
-        # the inner join drops nothing)
-        nxt = (labels.unionByName(cand.withColumnRenamed("cand", "lab"))
-               .groupBy("node")
-               .agg(F.min("lab").alias("lab"))
-               .join(labels.withColumnRenamed("lab", "__old"), "node")
-               .select("node", "lab",
-                       (F.col("lab") != F.col("__old")).alias("__chg"))
-               .transform(_ckpt))
-        changed = nxt.agg(
-            F.sum(F.col("__chg").cast("long"))).first()[0]
-        labels = nxt.select("node", "lab")
-        if not changed:
-            return labels
+        # u -> v: v's f label reaches u; u's b label reaches v
+        fwd = (e.join(lab.select(F.col("node").alias("dst"), "f"), "dst")
+               .select(F.col("src").alias("node"), "f"))
+        bwd = (e.join(lab.select(F.col("node").alias("src"), "b"), "src")
+               .select(F.col("dst").alias("node"), "b"))
+        # each node's own row carries its old labels (__f, __b) into the
+        # aggregation, as in connected_components
+        lab, m = _ckpt_obs(
+            lab.select("node", "f", "b", F.col("f").alias("__f"),
+                       F.col("b").alias("__b"))
+            .unionByName(fwd, allowMissingColumns=True)
+            .unionByName(bwd, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.min("f").alias("f"), F.min("b").alias("b"),
+                 F.max("__f").alias("__f"), F.max("__b").alias("__b")),
+            "node", "f", "b",
+            changed=F.count_if((F.col("f") != F.col("__f"))
+                               | (F.col("b") != F.col("__b"))))
+        if not m["changed"]:
+            return lab
     raise RuntimeError(
-        f"_directed_min_labels did not converge in {max_iters} rounds")
+        f"_fw_bw_colors did not converge in {max_iters} rounds")
 
 
 def strongly_connected_components(edges: DataFrame,
@@ -382,51 +417,43 @@ def strongly_connected_components(edges: DataFrame,
     node whose only edges are self-loops, which is a valid singleton
     SCC (self-loop edges drop from the traversal relation, but the
     node universe derives from the UNFILTERED endpoints; ADVICE r13).
-    Raises past ``max_iters`` outer rounds (and each inner propagation
-    carries its own ``max_iters`` bound) — fail loud, never a
+    Raises past ``max_iters`` outer rounds (and the inner coloring
+    loop carries its own ``max_iters`` bound) — fail loud, never a
     half-converged labeling.
 
-    Scale shape per outer round: the trim loop (two node-sized
-    distincts + semi-joins per layer) + two directed min-label
-    fixpoints (edge-join + node-min-agg with broadcastable node-sized
-    labels, per-round localCheckpoint) + one node anti-join + one edge
-    semi-join, each over a relation that only ever SHRINKS."""
+    Scale shape: the caller's lineage is read ONCE, into the distinct
+    pair checkpoint both the traversal edges and the node universe
+    derive from. Per outer round: the trim loop (one checkpoint job
+    per layer: node flags + two semi-joins) + one fused coloring
+    fixpoint (``_fw_bw_colors``: edge-joins + node-min-agg over
+    broadcastable node-sized labels, one job per round) + one node
+    anti-join + one edge semi-join, each over a relation that only
+    ever SHRINKS, each count observed on its own checkpoint job."""
     s, d = F.col(src_col), F.col(dst_col)
-    allp = edges.select(s.alias("src"), d.alias("dst"))
-    e = (allp.filter(F.col("src") != F.col("dst"))
-         .distinct()
-         .transform(_ckpt))
-    nodes = (allp.select(F.col("src").alias("node"))
-             .unionByName(allp.select(F.col("dst").alias("node")))
-             .distinct()
-             .transform(_ckpt))
+    is_edge = F.col("src") != F.col("dst")
+    allp, m = _ckpt_obs(edges.select(s.alias("src"), d.alias("dst"))
+                        .distinct(), n=F.count_if(is_edge))
+    n_e = m["n"]
+    e = allp.filter(is_edge)
+    nodes = _endpoints(allp)
     settled = (nodes.select("node", F.col("node").alias("component"))
                .limit(0))
-    n_e = e.count()
     for rounds in range(1, max_iters + 1):
         # TRIM to fixpoint: any live node missing an inbound or an
         # outbound live edge is a singleton SCC. Each layer's removal
-        # can expose the next (a tail peels layer by layer). r17
-        # restructure (guide §1.2 — fewer actions per layer): a layer
-        # is ONE checkpoint of the core-filtered edge relation + one
-        # cheap count of the materialized RDD; the trimmed singletons
-        # are NOT settled per layer but derived once after the loop
-        # (pre-trim universe ANTI-JOIN surviving endpoints — the layer
-        # order never changes which nodes survive, only how fast we
-        # find them), which deletes the per-layer settle checkpoint,
-        # its isEmpty probe, and the per-layer settled union of the
-        # previous shape (3 jobs -> 2 per active layer, and the 2nd is
-        # a checkpointed-RDD count). The fixpoint certificate is the
-        # edge count: the core semi-join only ever REMOVES edges, so
-        # an unchanged count means every endpoint already has both
-        # flags — exactly the old "nothing trimmed" condition. Lineage
-        # discipline unchanged: every relation derives from a
-        # checkpointed leaf (the exponential-plan trap note of the
-        # previous shape still applies).
+        # can expose the next (a tail peels layer by layer). A layer is
+        # ONE checkpoint of the core-filtered edge relation with its
+        # row count observed; the trimmed singletons are not settled
+        # per layer but derived once after the loop (pre-trim universe
+        # ANTI-JOIN surviving endpoints — the layer order never changes
+        # which nodes survive, only how fast we find them). The
+        # fixpoint certificate is the edge count: the core semi-join
+        # only ever REMOVES edges, so an unchanged count means every
+        # endpoint already has both flags. Every relation derives from
+        # a checkpointed leaf, so lineage stays flat.
         while n_e > 0:
-            # one pass over the CHECKPOINTED e: which endpoints have
-            # both an inbound AND an outbound live edge
-            # (cycle-eligible core)
+            # one pass over e: which endpoints have both an inbound AND
+            # an outbound live edge (cycle-eligible core)
             flags = (e.select(F.col("src").alias("node"),
                               F.lit(1).alias("o"), F.lit(0).alias("i"))
                      .unionByName(
@@ -437,26 +464,20 @@ def strongly_connected_components(edges: DataFrame,
                      .agg(F.max("o").alias("o"), F.max("i").alias("i")))
             core = (flags.filter((F.col("o") == 1) & (F.col("i") == 1))
                     .select("node"))
-            e2 = (e.join(core.withColumnRenamed("node", "src"),
-                         "src", "semi")
-                  .join(core.withColumnRenamed("node", "dst"),
-                        "dst", "semi")
-                  .select("src", "dst")
-                  .transform(_ckpt))
-            n_e2 = e2.count()
-            if n_e2 == n_e:
+            e2, m = _ckpt_obs(
+                e.join(core.withColumnRenamed("node", "src"), "src", "semi")
+                .join(core.withColumnRenamed("node", "dst"), "dst", "semi")
+                .select("src", "dst"), n=F.count(F.lit(1)))
+            if m["n"] == n_e:
                 break  # removed nothing: every endpoint is in the core
-            e, n_e = e2, n_e2
+            e, n_e = e2, m["n"]
         if n_e == 0:
             live = nodes.limit(0)
         else:
             # at the trim fixpoint the live universe IS e's endpoint
             # set (the break above proves endpoints(e) ⊆ core ⊆
             # endpoints(e))
-            live = (e.select(F.col("src").alias("node"))
-                    .unionByName(e.select(F.col("dst").alias("node")))
-                    .distinct()
-                    .transform(_ckpt))
+            live = _endpoints(e).transform(_ckpt)
         settled = settled.unionByName(
             nodes.join(live, "node", "left_anti")
                  .select("node", F.col("node").alias("component")))
@@ -464,50 +485,19 @@ def strongly_connected_components(edges: DataFrame,
         if n_e == 0:
             return (settled, rounds) if return_rounds else settled
         settled = settled.transform(_ckpt)
-        rev = e.select(F.col("dst").alias("src"),
-                       F.col("src").alias("dst"))
-        # the two directed fixpoints are INDEPENDENT jobs over the same
-        # checkpointed subgraph — overlap them from two driver threads
-        # (guide §2.6) so the backward coloring's rounds back-fill the
-        # idle capacity of the forward coloring's straggler tail; each
-        # fixpoint is exact integer arithmetic, so concurrency cannot
-        # perturb a bit of either result
-        import threading
-        from concurrent.futures import (FIRST_EXCEPTION,
-                                        ThreadPoolExecutor, wait)
-        cancel = threading.Event()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_fwd = pool.submit(_directed_min_labels, rev, nodes,
-                                max_iters, cancel)
-            f_bwd = pool.submit(_directed_min_labels, e, nodes,
-                                max_iters, cancel)
-            # FIRST_EXCEPTION + the shared cancel flag: a failed
-            # coloring aborts its sibling at the next round boundary
-            # instead of letting it run out its full budget while the
-            # pool's shutdown blocks the error (ADVICE r17)
-            wait([f_fwd, f_bwd], return_when=FIRST_EXCEPTION)
-            failed = next((f for f in (f_fwd, f_bwd)
-                           if f.done() and f.exception() is not None),
-                          None)
-            if failed is not None:
-                cancel.set()
-                raise failed.exception()
-            fwd = f_fwd.result().withColumnRenamed("lab", "__f")
-            bwd = f_bwd.result().withColumnRenamed("lab", "__b")
-        now = (fwd.join(bwd, "node")
-               .filter(F.col("__f") == F.col("__b"))
-               .select("node", F.col("__f").alias("component")))
+        lab = _fw_bw_colors(e, nodes, max_iters)
+        now = (lab.filter(F.col("f") == F.col("b"))
+               .select("node", F.col("f").alias("component")))
         settled = settled.unionByName(now).transform(_ckpt)
-        nodes = (nodes.join(now, "node", "left_anti")
-                 .transform(_ckpt))
-        if nodes.count() == 0:
+        nodes, m = _ckpt_obs(nodes.join(now, "node", "left_anti"),
+                             n=F.count(F.lit(1)))
+        if m["n"] == 0:
             return (settled, rounds) if return_rounds else settled
-        live = nodes.withColumnRenamed("node", "src")
-        e = (e.join(live, "src", "semi")
-             .join(nodes.withColumnRenamed("node", "dst"), "dst", "semi")
-             .select("src", "dst")
-             .transform(_ckpt))
-        n_e = e.count()
+        e, m = _ckpt_obs(
+            e.join(nodes.withColumnRenamed("node", "src"), "src", "semi")
+            .join(nodes.withColumnRenamed("node", "dst"), "dst", "semi")
+            .select("src", "dst"), n=F.count(F.lit(1)))
+        n_e = m["n"]
     raise RuntimeError(
         f"strongly_connected_components did not converge in "
         f"{max_iters} rounds")
@@ -544,7 +534,9 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
     authority 0. Scale shape: per iteration two edge-relation joins +
     two node-keyed sums + two single-row total aggregates (broadcast
     back — graph-metadata sized, never collected to the driver);
-    node-sized vectors broadcast at host-graph scale. Overflow bound:
+    node-sized vectors broadcast at host-graph scale. The edge and node
+    relations are checkpointed once (the node count is observed on the
+    node checkpoint's job, not a separate count). Overflow bound:
     s * MICROS needs s < 2^63/1e6 ≈ 9.2e12 — safe while max in-degree
     x MICROS stays under it (any realistic host graph).
 
@@ -558,10 +550,10 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
     src, dst = F.col(src_col), F.col(dst_col)
     e = (edges.select(src.alias("src"), dst.alias("dst")).distinct()
          .transform(_ckpt))
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    n = nodes.count()
+    # node-sized checkpoint: every normalization joins it, and its
+    # count rides the same job
+    nodes, m = _ckpt_obs(_endpoints(e), n=F.count(F.lit(1)))
+    n = m["n"]
     if init_hub is not None:
         h = (nodes.join(
             init_hub.select("node",
@@ -634,15 +626,16 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
     returns (core, rounds).
 
     Convergence certificate: the alive set only ever SHRINKS, so two
-    consecutive equal counts — one exact integer per round — prove
-    the fixpoint. Loud failure past ``max_iters`` (a path graph peels
-    one layer from each end per round, O(n/2) rounds — the documented
-    adversary; host graphs peel in a handful).
+    consecutive equal counts — one exact integer per round, observed
+    on the round's degree checkpoint job — prove the fixpoint. Loud
+    failure past ``max_iters`` (a path graph peels one layer from each
+    end per round, O(n/2) rounds — the documented adversary; host
+    graphs peel in a handful).
 
     Scale shape per round: two semi-joins filtering the (shrinking)
     edge relation to alive endpoints + one node-keyed count — the
     alive relation is node-sized (broadcastable at host-graph scale),
-    per-round localCheckpoint keeps lineage flat."""
+    and one checkpoint job per round keeps lineage flat."""
     s, d = F.col(src_col), F.col(dst_col)
     cn = (edges.select(F.least(s, d).alias("u"),
                        F.greatest(s, d).alias("v"))
@@ -653,30 +646,29 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
            .unionByName(cn.select(F.col("v").alias("node"),
                                   F.col("u").alias("other")))
            .transform(_ckpt))
-    alive = sym.select("node").distinct().transform(_ckpt)
-    n_alive = alive.count()
+    alive, m = _ckpt_obs(sym.select("node").distinct(),
+                         n=F.count(F.lit(1)))
+    n_alive = m["n"]
     for rounds in range(1, max_iters + 1):
-        deg = (sym.join(alive, "node", "semi")
-               .join(alive.withColumnRenamed("node", "other"),
-                     "other", "semi")
-               .groupBy("node")
-               .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-               .transform(_ckpt))
+        deg, m = _ckpt_obs(
+            sym.join(alive, "node", "semi")
+            .join(alive.withColumnRenamed("node", "other"), "other", "semi")
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).cast("long").alias("core_degree")),
+            kept=F.count_if(F.col("core_degree") >= k))
         nxt = deg.filter(F.col("core_degree") >= k)
-        n_nxt = nxt.count()
-        if n_nxt == n_alive:
+        if m["kept"] == n_alive:
             # fixpoint: deg was computed over this exact alive set, so
             # the surviving rows carry the final core degrees
             core = nxt.select("node", "core_degree")
             return (core, rounds) if return_rounds else core
-        # no checkpoint (r17): alive is a narrow filter+project over the
+        # no checkpoint: alive is a narrow filter+project over the
         # round's ALREADY-CHECKPOINTED deg relation — the next round's
         # two semi-joins re-scan that flat leaf cheaply, and lineage
         # stays bounded at depth one because deg re-checkpoints every
-        # round. The previous eager checkpoint here was a third job per
-        # round buying nothing.
+        # round.
         alive = nxt.select("node")
-        n_alive = n_nxt
+        n_alive = m["kept"]
     raise RuntimeError(f"k_core did not converge in {max_iters} rounds")
 
 
@@ -774,15 +766,14 @@ def pagerank_personalized(edges: DataFrame, seeds: DataFrame,
     the seed relation is one extra node-sized left join folded into
     the checkpointed teleport base."""
     src, dst = F.col(src_col), F.col(dst_col)
-    e = (edges.select(src.alias("src"), dst.alias("dst")).distinct()
-         .transform(_ckpt))
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    sd = (seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-          .transform(_ckpt))
-    nodes = nodes.unionByName(sd).distinct()
-    k = sd.count()
+    e = _ckpt_out_edges(
+        edges.select(src.alias("src"), dst.alias("dst")).distinct(),
+        "od", F.count(F.lit(1)))
+    sd, m = _ckpt_obs(
+        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
+        k=F.count(F.lit(1)))
+    k = m["k"]
+    nodes = _endpoints(e).unionByName(sd).distinct()
     tnum = (100 - damping_pct) * MICROS // 100
     if k == 0 or tnum // k == 0:
         raise ValueError(
@@ -794,13 +785,11 @@ def pagerank_personalized(edges: DataFrame, seeds: DataFrame,
                     F.when(F.col("__s") == 1, F.lit(tnum // k))
                      .otherwise(F.lit(0)).cast("long").alias("tele"))
             .transform(_ckpt))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     ranks = base.select(
         "node", F.when(F.col("tele") > 0, F.lit(MICROS // k))
                  .otherwise(F.lit(0)).cast("long").alias("r"))
     for i in range(iterations):
         contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .join(outdeg, "src")
                     .select(F.col("dst").alias("node"),
                             F.expr("r div od").alias("c")))
         s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
@@ -844,24 +833,23 @@ def pagerank_fixed(edges: DataFrame, iterations: int = 3,
     nodes are dropped; nodes missing from init would iterate from
     NULL — they are seeded with the uniform share instead)."""
     src, dst = F.col(src_col), F.col(dst_col)
-    e = edges.select(src.alias("src"), dst.alias("dst")).distinct()
-    # Materialize the DISTINCT edge relation ONCE: e is referenced by
-    # every iteration (contrib join + outdeg) plus nodes, and without a
-    # checkpoint each reference re-executes the caller's full upstream
-    # lineage — for a crawl-derived graph that is the whole link
-    # extraction over the corpus, K x 2 times (measured 38.6 s for
-    # K=10 at sf10 vs 3.5 s checkpointed). The checkpoint is
-    # edge-relation sized — host-graph scale, KBs-to-GBs at web scale,
-    # never corpus-sized.
-    e = e.transform(_ckpt)
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    # two scalars of driver state: node count and the teleport term —
-    # graph-metadata sized, not data sized
-    n = nodes.count()
+    # Materialize the DISTINCT edge relation ONCE, each source's
+    # out-degree riding along: e is referenced by every iteration plus
+    # nodes, and without a checkpoint each reference re-executes the
+    # caller's full upstream lineage — for a crawl-derived graph that
+    # is the whole link extraction over the corpus, K x 2 times
+    # (measured 38.6 s for K=10 at sf10 vs 3.5 s checkpointed). The
+    # checkpoint is edge-relation sized — host-graph scale, KBs-to-GBs
+    # at web scale, never corpus-sized.
+    e = _ckpt_out_edges(
+        edges.select(src.alias("src"), dst.alias("dst")).distinct(),
+        "od", F.count(F.lit(1)))
+    # the node relation is every iteration's left side: checkpointed
+    # once, its count (driver state with the teleport term —
+    # graph-metadata sized, not data sized) observed on the same job
+    nodes, m = _ckpt_obs(_endpoints(e), n=F.count(F.lit(1)))
+    n = m["n"]
     teleport = ((100 - damping_pct) * MICROS // 100) // n
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     if init_ranks is not None:
         ranks = (nodes.join(
             init_ranks.select(F.col("node"),
@@ -881,7 +869,6 @@ def pagerank_fixed(edges: DataFrame, iterations: int = 3,
         # keeps the bit-for-bit warm-start contract over the full long
         # domain (regression: tests/test_graph.py).
         contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .join(outdeg, "src")
                     .select(F.col("dst").alias("node"),
                             F.expr("r div od").alias("c")))
         s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
@@ -976,18 +963,17 @@ def pagerank_weighted(edges: DataFrame, iterations: int = 3,
     ``init_ranks`` warm-starts exactly as in pagerank_fixed: K stored
     + K' warm = K+K' from scratch bit-for-bit, because every step is
     a pure exact function of the previous vector."""
-    e = _collapse_weighted_edges(edges, src_col, dst_col, weight_col,
-                                 "pagerank_weighted")
-    # edge-relation-sized checkpoint: referenced by every iteration
-    # plus nodes/outw (the pagerank_fixed lesson); materializing every
-    # group row here is what fires the guard at call time
-    e = e.transform(_ckpt)
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    n = nodes.count()
+    # edge-relation-sized checkpoint carrying each source's total
+    # outbound weight: referenced by every iteration plus nodes (the
+    # pagerank_fixed lesson); materializing every group row here is
+    # what fires the guard at call time
+    e = _ckpt_out_edges(
+        _collapse_weighted_edges(edges, src_col, dst_col, weight_col,
+                                 "pagerank_weighted"),
+        "tw", F.sum("w"))
+    nodes, m = _ckpt_obs(_endpoints(e), n=F.count(F.lit(1)))
+    n = m["n"]
     teleport = ((100 - damping_pct) * MICROS // 100) // n
-    outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
     if init_ranks is not None:
         ranks = (nodes.join(
             init_ranks.select(F.col("node"),
@@ -1001,7 +987,6 @@ def pagerank_weighted(edges: DataFrame, iterations: int = 3,
                              F.lit(MICROS // n).cast("long").alias("r"))
     for i in range(iterations):
         contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .join(outw, "src")
                     .select(F.col("dst").alias("node"),
                             F.expr("w * (r div tw)").alias("c")))
         s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
@@ -1053,16 +1038,15 @@ def pagerank_weighted_personalized(edges: DataFrame, seeds: DataFrame,
     host-pair-sized edge join + node-keyed sum over a checkpointed
     collapsed relation; the seed relation is one node-sized left join
     folded into the checkpointed teleport base."""
-    e = (_collapse_weighted_edges(edges, src_col, dst_col, weight_col,
-                                  "pagerank_weighted_personalized")
-         .transform(_ckpt))
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    sd = (seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-          .transform(_ckpt))
-    nodes = nodes.unionByName(sd).distinct()
-    k = sd.count()
+    e = _ckpt_out_edges(
+        _collapse_weighted_edges(edges, src_col, dst_col, weight_col,
+                                 "pagerank_weighted_personalized"),
+        "tw", F.sum("w"))
+    sd, m = _ckpt_obs(
+        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
+        k=F.count(F.lit(1)))
+    k = m["k"]
+    nodes = _endpoints(e).unionByName(sd).distinct()
     tnum = (100 - damping_pct) * MICROS // 100
     if k == 0 or tnum // k == 0:
         raise ValueError(
@@ -1074,13 +1058,11 @@ def pagerank_weighted_personalized(edges: DataFrame, seeds: DataFrame,
                     F.when(F.col("__s") == 1, F.lit(tnum // k))
                      .otherwise(F.lit(0)).cast("long").alias("tele"))
             .transform(_ckpt))
-    outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
     ranks = base.select(
         "node", F.when(F.col("tele") > 0, F.lit(MICROS // k))
                  .otherwise(F.lit(0)).cast("long").alias("r"))
     for i in range(iterations):
         contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .join(outw, "src")
                     .select(F.col("dst").alias("node"),
                             F.expr("w * (r div tw)").alias("c")))
         s = contrib.groupBy("node").agg(F.sum("c").alias("s"))

@@ -289,9 +289,25 @@ def us(col: Column | str) -> Column:
 # for them lands.
 _REGATE = [
     # strongly_connected_components lost its unused trim-probe branch
+    # and fused its two colorings; its fixture reads the links once
     "web_host_scc", "web_bowtie_classes",
     # triangle_counts' broadcast gate moved to core.fits_broadcast
     "web_cocitation_triangles",
+    # operators.graph: convergence certificates ride the checkpoint
+    # jobs (observe), CC reads its edges once, PageRank/HITS hoist
+    # their out-degree/weight totals and node relation
+    "web_host_components", "web_host_components_star", "web_host_kcore",
+    "web_crawl_depth", "web_crawl_frontier", "web_host_hits",
+    "web_hits_warm_start", "web_host_pagerank",
+    "web_pagerank_personalized", "web_pagerank_warm_start",
+    "web_pagerank_weighted", "web_pagerank_weighted_warm",
+    "web_pagerank_weighted_personalized", "web_mirror_sets",
+    "web_mirror_sets_incremental", "dedup_entity_clusters",
+    "dedup_entity_persisted", "dedup_entity_store_takedown",
+    "dedup_entity_store_compacted", "dedup_entity_incremental",
+    "stream_er_maintain",
+    # dedup.connected_components retired for the graph operator
+    "dedup_clusters", "dedup_semantic_contract",
 ]
 VERIFY_HEAD_SIZE = 50
 _LEDGER_DIR = Path(__file__).resolve().parents[2]

@@ -388,6 +388,8 @@ def dedup_clusters(spark, sf_dir):
     equivalent recursive CTE). Two plants (20 one-token copies, 8
     two-token copies) force multi-node components so transitivity is
     exercised, not just pair mirroring."""
+    from clif_spark.operators import graph as G
+
     d = io.load_table(spark, sf_dir, "documents")
     p1 = d.filter(F.col("doc_id") < 20).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
@@ -397,7 +399,10 @@ def dedup_clusters(spark, sf_dir):
         F.concat("text", F.lit(" extra trailing token two")).alias("text"))
     docs2 = d.select("doc_id", "text").unionByName(p1).unionByName(p2)
     pairs = dedup.minhash_near_dups(docs2, threshold=0.5)
-    return dedup.connected_components(pairs)
+    # minhash pairs are a < b, so no self-loop (which graph CC drops)
+    return (G.connected_components(pairs, "a", "b")
+            .select(F.col("node").alias("doc"),
+                    F.col("component").alias("cluster_id")))
 
 
 _NGRAM_JACCARD_ORACLE = r"""

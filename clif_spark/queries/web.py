@@ -3258,11 +3258,16 @@ def _host_scc_edges(spark, sf_dir):
     even or ≡3 mod 4 — five 3-host directed cycles with the chain
     heads left as one-way tails (see _HOST_SCC_ORACLE's comment for
     the expected partition)."""
-    base = _host_component_edges(spark, sf_dir)
     n = F.regexp_extract("src", r"(\d+)", 1).cast("int")
-    rev = (base.filter((n % 2 == 0) | (n % 4 == 3))
-           .select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return base.unionByName(rev)
+    fwd = F.struct("src", "dst")
+    back = F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # one pass over the link lineage: each row emits itself, plus its
+    # reversal where the source number qualifies
+    return (_host_component_edges(spark, sf_dir)
+            .select(F.explode(
+                F.when((n % 2 == 0) | (n % 4 == 3), F.array(fwd, back))
+                 .otherwise(F.array(fwd))).alias("__e"))
+            .select("__e.src", "__e.dst"))
 
 
 @query("web_host_scc", oracle=_HOST_SCC_ORACLE, headline=True)
@@ -3285,10 +3290,11 @@ def web_host_scc(spark, sf_dir):
     weak-vs-strong, multi-hop mutuality, and the 'src10' < 'src9'
     lexicographic trap are all load-bearing.
 
-    Shape: O(settle rounds) x two directed min-label fixpoints, each
-    round one edge-join + node-min-agg over broadcastable node-sized
-    labels on a shrinking subgraph; per-round localCheckpoint; loud
-    failure past the shared FIXPOINT budget."""
+    Shape: O(settle rounds) x one fused forward/backward min-label
+    fixpoint, each round two edge-joins + one node-min-agg over
+    broadcastable node-sized labels on a shrinking subgraph, one
+    checkpoint job per round; loud failure past the shared FIXPOINT
+    budget."""
     from pyspark.sql import Window
 
     from clif_spark.operators import graph as G

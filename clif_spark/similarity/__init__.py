@@ -521,7 +521,7 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iter: int = 10,
     see convergence instead of trusting it.
 
     Execution shape (the 100 TB story, same discipline as
-    ``dedup.connected_components``):
+    ``operators.graph.connected_components``):
     - ASSIGN is a pure narrow expression — centroids inline as literals
       (``_cell_ranks``, the same mechanism as the LSH hyperplanes), so each
       iteration's assignment costs one scan, zero shuffles.
@@ -624,7 +624,8 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
     The count() this needs is one columnless scan; pass an explicit k to
     skip it.
     """
-    from clif_spark.dedup import connected_components, pairs_from_buckets
+    from clif_spark.dedup import pairs_from_buckets
+    from clif_spark.operators.graph import connected_components
 
     if k is None:
         k = min(max(8, vectors.count() // 1500), 4096)
@@ -649,7 +650,9 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
                      F.round(cosine(F.col("__va"), F.col("__vb"), dim), 4)
                       .alias("cos"))
              .filter(F.col("cos") >= threshold))
-    comp = connected_components(edges)
+    # candidate pairs are a < b, so no self-loop (which graph CC drops)
+    comp = connected_components(edges, "a", "b").select(
+        F.col("node").alias("doc"), F.col("component").alias("cluster_id"))
     return (vectors.select(F.col(id_col))
             .join(assign.withColumnRenamed(id_col, "__aid"),
                   F.col(id_col) == F.col("__aid"))

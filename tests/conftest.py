@@ -64,3 +64,27 @@ def _build_entry(spark, name: str):
         plan = df._jdf.queryExecution().executedPlan().toString()
         _QUERY_DF_CACHE[key] = (df, plan)
     return _QUERY_DF_CACHE[key]
+
+
+def launched(spark, action):
+    """Run ``action()`` and count what it launched: (result, jobs,
+    sql_executions), read after the listener bus drains. Jobs outside
+    any job group count by the status tracker's newest id; executions
+    by the SQL status store's newest execution id, because
+    ``executionsCount()`` alone falls once the store evicts old ones."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def marks():
+        bus.waitUntilEmpty()
+        job = max(sc.statusTracker().getJobIdsForGroup() or [-1])
+        n = store.executionsCount()
+        execution = (store.executionsList(n - 1, 1).head().executionId()
+                     if n else -1)
+        return job, execution
+
+    job0, ex0 = marks()
+    result = action()
+    job1, ex1 = marks()
+    return result, job1 - job0, ex1 - ex0

@@ -494,6 +494,7 @@ def test_pagerank_weighted_guard_catches_raw_row_corruption(spark):
     (ADVICE r16: the old eager filter().count() re-executed the
     caller's full upstream lineage once per call)."""
     import pytest
+    from conftest import launched
     from pyspark.errors import SparkRuntimeException
 
     from clif_spark.operators import graph as G
@@ -517,18 +518,10 @@ def test_pagerank_weighted_guard_catches_raw_row_corruption(spark):
     edges = spark.createDataFrame(
         [("a", "b", 2), ("b", "c", 1), ("c", "a", 3)],
         "src string, dst string, weight long")
-    sc = spark.sparkContext
-
-    def jobs_for(action):
-        before = max(sc.statusTracker().getJobIdsForGroup() or [-1])
-        action()
-        return max(sc.statusTracker().getJobIdsForGroup()
-                   or [-1]) - before
-
-    base_jobs = jobs_for(
-        lambda: G.pagerank_fixed(edges.drop("weight"), iterations=1))
-    weighted_jobs = jobs_for(
-        lambda: G.pagerank_weighted(edges, iterations=1))
+    _, base_jobs, _ = launched(
+        spark, lambda: G.pagerank_fixed(edges.drop("weight"), iterations=1))
+    _, weighted_jobs, _ = launched(
+        spark, lambda: G.pagerank_weighted(edges, iterations=1))
     assert weighted_jobs == base_jobs
 
 
@@ -617,3 +610,122 @@ def test_reliable_checkpoint_option_writes_to_dir_and_matches(spark):
         assert os.listdir(cdir), "no checkpoint data written"
     finally:
         spark.conf.unset(G.CHECKPOINT_DIR_CONF)
+
+
+def test_reliable_checkpoint_follows_a_changed_dir(spark):
+    """ADVICE r18 #2: changing spark.clif.graph.checkpointDir between
+    calls re-points the SparkContext — the second directory receives
+    the second call's reliable checkpoints (previously the first
+    directory, once set on the context, silently kept them all)."""
+    import os
+    import shutil
+    import tempfile
+
+    from clif_spark.operators import graph as G
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e")], "src string, dst string")
+    base = sorted(map(tuple, G.connected_components(edges).collect()))
+    dirs = [tempfile.mkdtemp(prefix="clif_graph_ckpt_") for _ in range(2)]
+    try:
+        for cdir in dirs:
+            spark.conf.set(G.CHECKPOINT_DIR_CONF, cdir)
+            got = sorted(map(tuple,
+                             G.connected_components(edges).collect()))
+            assert got == base
+            assert os.listdir(cdir), f"no checkpoint data under {cdir}"
+    finally:
+        spark.conf.unset(G.CHECKPOINT_DIR_CONF)
+        for cdir in dirs:
+            shutil.rmtree(cdir, ignore_errors=True)
+
+
+def test_cc_and_scc_read_their_edge_lineage_once(spark):
+    """The caller's edge lineage is evaluated in ONE pass per call: a
+    row-counting UDF inside it runs exactly once per input row through
+    CC and through SCC, final collect included (both directions of the
+    undirected view, and SCC's traversal edges and node universe, all
+    derive from one checkpoint)."""
+    from pyspark.sql.types import StringType
+
+    from clif_spark.operators import graph as G
+
+    rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+            ("e", "d"), ("f", "f")]
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    tick_udf = F.udf(tick, StringType()).asNondeterministic()
+    edges = (spark.createDataFrame(rows, "src string, dst string")
+             .select(tick_udf("src").alias("src"), "dst"))
+    for op in (G.connected_components, G.strongly_connected_components):
+        acc.value = 0
+        op(edges).collect()
+        assert acc.value == len(rows), op.__name__
+
+
+def test_connected_components_one_execution_per_round(spark):
+    """Each CC round is ONE SQL execution — the label checkpoint, with
+    the convergence count observed on it — plus one for the edge
+    checkpoint: rounds + 1 in total, not a probe job per round."""
+    from conftest import launched
+
+    from clif_spark.operators import graph as G
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                  "src long, dst long")
+    (labels, rounds), _, executions = launched(
+        spark, lambda: G.connected_components(chain, return_rounds=True))
+    assert rounds >= 6  # labels travel six hops
+    assert executions == rounds + 1
+    assert {r.component for r in labels.collect()} == {0}
+
+
+def test_scc_fused_colorings_with_unequal_round_counts(spark):
+    """The forward and backward colorings run in one loop; on a graph
+    where they need different round counts (a 6-cycle with a chord:
+    backward labels cross it in 3 rounds, forward ones need 5), the
+    converged one must hold still while the other finishes. Matches a
+    brute-force mutual-reachability labeling, including a bridge node
+    (7) that survives trim and settles in a later outer round."""
+    from clif_spark.operators import graph as G
+
+    pairs = ([(i, (i + 1) % 6) for i in range(6)] + [(0, 3)]
+             + [(10, 11), (11, 10), (3, 10), (2, 7), (7, 10)])
+    nodes = sorted({v for p in pairs for v in p})
+
+    def rounds(flow):
+        """Min-label rounds to fixpoint when labels move x -> y."""
+        lab, r = {v: v for v in nodes}, 0
+        while True:
+            r += 1
+            nxt = dict(lab)
+            for x, y in flow:
+                nxt[y] = min(nxt[y], lab[x])
+            if nxt == lab:
+                return r
+            lab = nxt
+
+    # fixture precondition: the two colorings converge at different rounds
+    assert rounds(pairs) != rounds([(d, s) for s, d in pairs])
+
+    def reach(v):
+        seen, todo = {v}, [v]
+        while todo:
+            x = todo.pop()
+            for s, d in pairs:
+                if s == x and d not in seen:
+                    seen.add(d)
+                    todo.append(d)
+        return seen
+
+    r = {v: reach(v) for v in nodes}
+    want = {v: min(w for w in r[v] if v in r[w]) for v in nodes}
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    got = {x.node: x.component
+           for x in G.strongly_connected_components(edges).collect()}
+    assert got == want
+    assert want[7] == 7 and want[3] == 0 and want[11] == 10

@@ -353,6 +353,7 @@ def test_with_audit_counters_ride_the_single_action(spark):
     independently recomputed values, and (b) cost ZERO extra Spark jobs —
     the observation piggybacks on the one collect, which is the entire
     point at 100 TB."""
+    from conftest import launched
     from pyspark.sql import functions as F
 
     from clif_spark.operators import core
@@ -365,18 +366,12 @@ def test_with_audit_counters_ride_the_single_action(spark):
     out, obs_flt = core.with_audit(
         filtered, "filtered", n=F.count(F.lit(1)),
         k_max=F.max("k"))
-    sc = spark.sparkContext
-
-    def jobs_for(action):
-        before = max(sc.statusTracker().getJobIdsForGroup() or [-1])
-        result = action()
-        return result, max(sc.statusTracker().getJobIdsForGroup()
-                           or [-1]) - before
-
     # baseline: the identical aggregation without any observation
-    _, base_jobs = jobs_for(
+    _, base_jobs, _ = launched(
+        spark,
         lambda: df.filter(F.col("k") < 3).groupBy("k").count().collect())
-    rows, obs_jobs = jobs_for(lambda: out.groupBy("k").count().collect())
+    rows, obs_jobs, _ = launched(
+        spark, lambda: out.groupBy("k").count().collect())
     assert obs_jobs == base_jobs  # metrics rode along: zero extra jobs
     assert obs_in.get == {"n": 10_000, "v_sum": sum((i % 100) for i in range(10_000))}
     exp_flt = sum(1 for i in range(10_000) if i % 7 < 3)

@@ -231,14 +231,15 @@ def test_dsum_checked_mode_fails_loud_past_the_bound(spark):
 def test_connected_components_chain_and_star(spark):
     """Min-label propagation finds multi-hop components: a 4-chain, a star,
     and an isolated pair; labels are the component minimum."""
-    from clif_spark.dedup import connected_components
+    from clif_spark.operators.graph import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4),        # chain 1-2-3-4
          (10, 11), (10, 12), (10, 13),  # star centered at 10
          (20, 21)],                     # isolated pair
         "a long, b long")
-    got = {r.doc: r.cluster_id for r in connected_components(pairs).collect()}
+    got = {r.node: r.component
+           for r in connected_components(pairs, "a", "b").collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1,
                    10: 10, 11: 10, 12: 10, 13: 10,
                    20: 20, 21: 20}
