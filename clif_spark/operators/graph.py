@@ -20,14 +20,18 @@ Design decisions that make an ITERATIVE float algorithm driver-gateable:
 Scale shape: each iteration is one join edges->ranks (hash on src, or
 broadcast when ranks fit — host graphs are host-count sized, MILLIONS of
 rows for the whole web, so broadcast is realistic) plus one groupBy(dst)
-sum. K iterations = K such stages; lineage grows linearly, so the loop
-checkpoints the rank vector each iteration to keep plans bounded
-(default checkpoint_every=1 since r18 — measured 7-10% faster than the
-chained K-plan at sf0.1/sf1, because every iteration then plans from a
-materialized node-sized relation with REAL size stats instead of
-K-compounded estimates, and the final action stops re-running broadcast
-sub-jobs over the whole chain; real deployments checkpoint to storage —
-see CHECKPOINT_DIR_CONF).
+sum. K iterations = K such stages; the loop checkpoints the rank vector
+every iteration — measured 7-10% faster than the chained K-plan at
+sf0.1/sf1 (r18), because every iteration then plans from a materialized
+node-sized relation with REAL size stats instead of K-compounded
+estimates, and the final action stops re-running broadcast sub-jobs
+over the whole chain; real deployments checkpoint to storage — see
+CHECKPOINT_DIR_CONF.
+
+PageRank exists once (``pagerank``): uniform and personalized
+teleport, unweighted and weighted edges, cold and warm starts are its
+arguments, not separate forms — unweighted is weighted with w = 1 and
+uniform is personalized with every node a seed, both bit for bit.
 
 Every iterative operator here reads the caller's edge lineage (for a
 crawl graph, the whole link extraction) in ONE pass into an edge-sized
@@ -105,15 +109,6 @@ def _endpoints(rel: DataFrame) -> DataFrame:
     in one pass."""
     return (rel.select(F.explode(F.array("src", "dst")).alias("node"))
             .distinct())
-
-
-def _ckpt_out_edges(e: DataFrame, name: str, total: Column) -> DataFrame:
-    """Checkpoint a (src, dst, ...) edge relation with each source's
-    outbound ``total`` (an aggregate over its out-edges) carried as
-    column ``name`` — the loop invariant every PageRank iteration
-    divides by, computed once instead of re-aggregated per iteration."""
-    return (e.withColumn(name, total.over(Window.partitionBy("src")))
-            .transform(_ckpt))
 
 
 #: Default fixpoint-round budget shared by the iterative operators AND
@@ -505,7 +500,6 @@ def strongly_connected_components(edges: DataFrame,
 
 def hits_fixed(edges: DataFrame, iterations: int = 3,
                src_col: str = "src", dst_col: str = "dst",
-               checkpoint_every: int = 4,
                init_hub: DataFrame | None = None) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) over a DISTINCT edge
     relation — the co-citation-family complement to PageRank: an
@@ -525,7 +519,7 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
     bans; L1 normalization keeps the same fixed-point DIRECTION class
     (normalization only rescales between iterations) with every
     operation exact integer arithmetic, so both engines agree
-    bit-for-bit (the pagerank_fixed discipline; documented deviation).
+    bit-for-bit (the pagerank discipline; documented deviation).
     Each truncating division loses <1 micro per node per step —
     irrelevant for ranking, stated for mass-conservation readers.
 
@@ -544,7 +538,7 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
     vector: the hub vector is the iteration's ONLY carried state (each
     authority vector is recomputed from the current hubs), and every
     operation is exact, so K stored + K' warm iterations equal K+K'
-    from scratch BIT-FOR-BIT — the pagerank_fixed warm-start contract
+    from scratch BIT-FOR-BIT — the pagerank warm-start contract
     on the HITS pair. Nodes missing from init seed with the uniform
     share; ranks for vanished nodes drop."""
     src, dst = F.col(src_col), F.col(dst_col)
@@ -583,7 +577,7 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
                                        f" div t").cast("long").alias("r")))
 
     a = None
-    for i in range(iterations):
+    for _ in range(iterations):
         a_raw = (e.join(h.withColumnRenamed("node", "src"), "src")
                  .groupBy("dst").agg(F.sum("r").alias("s"))
                  .withColumnRenamed("dst", "node"))
@@ -592,9 +586,6 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
                  .groupBy("src").agg(F.sum("r").alias("s"))
                  .withColumnRenamed("src", "node"))
         h = _norm(h_raw)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            h = h.transform(_ckpt)
-            a = a.transform(_ckpt)
     return (nodes
             .join(h.withColumnRenamed("r", "hub_micros"), "node", "left")
             .join(a.withColumnRenamed("r", "auth_micros"), "node", "left")
@@ -727,181 +718,21 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
             .agg(F.count(F.lit(1)).cast("long").alias("n_triangles")))
 
 
-def pagerank_personalized(edges: DataFrame, seeds: DataFrame,
-                          iterations: int = 3, damping_pct: int = 85,
-                          src_col: str = "src", dst_col: str = "dst",
-                          checkpoint_every: int = 1) -> DataFrame:
-    """PERSONALIZED PageRank (random surfer restarting at a SEED set
-    instead of uniformly — Haveliwala's topic-sensitive form): the
-    teleport mass (100 - d)% * MICROS // 100 splits over the seed
-    nodes only, and the iteration starts from the uniform-over-seeds
-    vector, so rank measures proximity to the seed list under the
-    link structure — the crawl-budget prior for topic- or
-    site-focused crawling (hosts near the seeds rank high even when
-    globally obscure; spam farms far from the seeds get nothing).
-
-    Same exactness discipline as pagerank_fixed (which this mirrors
-    rather than parameterizes — the uniform path stays bit-frozen for
-    its gated rows): integer-micros arithmetic throughout, true `div`
-    floor divisions, fixed iteration count, so the result is exactly
-    SQL-mirrorable. Nodes unreachable from the seeds hold rank 0 and
-    REMAIN in the output (the caller reads zero as "outside the
-    neighborhood", the useful signal).
-
-    Caller contract: ``seeds``' first column holds node ids; the node
-    universe is the edge endpoints UNION the seed set, so a seed
-    absent from the edge relation still gets its row — it holds its
-    teleport share but receives no inbound flow and (having no
-    out-edges) contributes none, exactly the isolated-node semantics.
-    (ADVICE r13: the previous left-join built the universe from edge
-    endpoints only, silently dropping off-graph seeds while still
-    counting them in k — the teleport mass summed below (100-d)% of
-    MICROS.) The per-seed share (100-d)% * MICROS // 100 // n_seeds
-    must be >= 1 micro, i.e. n_seeds <= ~150k at the default damping
-    — any larger personal set needs a bigger mass unit, and the
-    function fails loud.
-
-    Scale shape: identical to pagerank_fixed — K stages of edge-join
-    + node-keyed sum with a broadcastable node-sized rank relation;
-    the seed relation is one extra node-sized left join folded into
-    the checkpointed teleport base."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = _ckpt_out_edges(
-        edges.select(src.alias("src"), dst.alias("dst")).distinct(),
-        "od", F.count(F.lit(1)))
-    sd, m = _ckpt_obs(
-        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
-        k=F.count(F.lit(1)))
-    k = m["k"]
-    nodes = _endpoints(e).unionByName(sd).distinct()
-    tnum = (100 - damping_pct) * MICROS // 100
-    if k == 0 or tnum // k == 0:
-        raise ValueError(
-            f"pagerank_personalized: {k} seeds cannot each carry a "
-            f">= 1 micro teleport share of {tnum} — shrink the seed "
-            f"set or raise the mass unit")
-    base = (nodes.join(sd.withColumn("__s", F.lit(1)), "node", "left")
-            .select("node",
-                    F.when(F.col("__s") == 1, F.lit(tnum // k))
-                     .otherwise(F.lit(0)).cast("long").alias("tele"))
-            .transform(_ckpt))
-    ranks = base.select(
-        "node", F.when(F.col("tele") > 0, F.lit(MICROS // k))
-                 .otherwise(F.lit(0)).cast("long").alias("r"))
-    for i in range(iterations):
-        contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .select(F.col("dst").alias("node"),
-                            F.expr("r div od").alias("c")))
-        s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (base.join(s, "node", "left")
-                 .select("node",
-                         (F.col("tele")
-                          + F.expr(f"({damping_pct} * coalesce(s, "
-                                   f"CAST(0 AS BIGINT))) div 100"))
-                         .cast("long").alias("r")))
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.transform(_ckpt)
-    return ranks.select(F.col("node"),
-                        F.col("r").alias("rank_micros"),
-                        (F.col("r") / F.lit(float(MICROS)))
-                        .cast("double").alias("rank"))
-
-
-def pagerank_fixed(edges: DataFrame, iterations: int = 3,
-                   damping_pct: int = 85,
-                   src_col: str = "src", dst_col: str = "dst",
-                   checkpoint_every: int = 1,
-                   init_ranks: DataFrame | None = None) -> DataFrame:
-    """PageRank over a DISTINCT edge relation, ``iterations`` exact
-    integer-micros steps of
-
-        r'(u) = (100 - d)% * MICROS / N  +  d% * sum_{v->u} r(v) // out(v)
-
-    (all divisions floor; see module docstring for why). Returns
-    (node, rank_micros, rank) — rank = micros / 1e6 as double, one
-    exact divide. Nodes = union of both edge endpoints; a node with no
-    inbound links holds the teleport mass only.
-
-    ``init_ranks`` (node, rank_micros) WARM-STARTS the iteration from a
-    persisted rank table instead of the uniform vector — the
-    incremental form: because each step is a pure function of the
-    previous vector and the arithmetic is exact, K stored + K' warm
-    iterations equal K+K' from scratch BIT-FOR-BIT (the gated
-    web_pagerank_warm_start contract), so a standing rank table can be
-    advanced delivery by delivery without recomputing history. The
-    caller guarantees init covers the node set (ranks for vanished
-    nodes are dropped; nodes missing from init would iterate from
-    NULL — they are seeded with the uniform share instead)."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    # Materialize the DISTINCT edge relation ONCE, each source's
-    # out-degree riding along: e is referenced by every iteration plus
-    # nodes, and without a checkpoint each reference re-executes the
-    # caller's full upstream lineage — for a crawl-derived graph that
-    # is the whole link extraction over the corpus, K x 2 times
-    # (measured 38.6 s for K=10 at sf10 vs 3.5 s checkpointed). The
-    # checkpoint is edge-relation sized — host-graph scale, KBs-to-GBs
-    # at web scale, never corpus-sized.
-    e = _ckpt_out_edges(
-        edges.select(src.alias("src"), dst.alias("dst")).distinct(),
-        "od", F.count(F.lit(1)))
-    # the node relation is every iteration's left side: checkpointed
-    # once, its count (driver state with the teleport term —
-    # graph-metadata sized, not data sized) observed on the same job
-    nodes, m = _ckpt_obs(_endpoints(e), n=F.count(F.lit(1)))
-    n = m["n"]
-    teleport = ((100 - damping_pct) * MICROS // 100) // n
-    if init_ranks is not None:
-        ranks = (nodes.join(
-            init_ranks.select(F.col("node"),
-                              F.col("rank_micros").alias("__init")),
-            "node", "left")
-            .select("node",
-                    F.coalesce("__init", F.lit(MICROS // n))
-                     .cast("long").alias("r")))
-    else:
-        ranks = nodes.select("node",
-                             F.lit(MICROS // n).cast("long").alias("r"))
-    for i in range(iterations):
-        # TRUE integer division (`div`), not floor(double): floor(r/od)
-        # agrees with r // od only while r is small enough that the
-        # double rounding error stays under 1/od — guaranteed at micros
-        # scale but NOT for arbitrary caller-supplied init_ranks. `div`
-        # keeps the bit-for-bit warm-start contract over the full long
-        # domain (regression: tests/test_graph.py).
-        contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .select(F.col("dst").alias("node"),
-                            F.expr("r div od").alias("c")))
-        s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (nodes.join(s, "node", "left")
-                 .select("node",
-                         F.expr(f"CAST({teleport} AS BIGINT) + "
-                                f"(({damping_pct} * coalesce(s, "
-                                f"CAST(0 AS BIGINT))) div 100)")
-                         .cast("long").alias("r")))
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.transform(_ckpt)
-    return ranks.select(F.col("node"),
-                        F.col("r").alias("rank_micros"),
-                        (F.col("r") / F.lit(float(MICROS)))
-                        .cast("double").alias("rank"))
-
-
 def _collapse_weighted_edges(edges: DataFrame, src_col: str,
-                             dst_col: str, weight_col: str,
-                             fn_name: str) -> DataFrame:
-    """Multigraph collapse with the in-plan raw-weight guard, shared
-    by both weighted rank forms: parallel (src,dst) rows SUM their
-    weights, and the fail-loud guard runs on the RAW per-row weights,
-    BEFORE the collapse — post-aggregation totals would let a NULL
-    (skipped by SUM) or a negative row that nets positive with a
-    parallel edge pass silently, exactly the corruption the guard's
-    message promises to catch. It rides IN the collapse aggregation
-    (the dsum(checked=True) assert_true pattern) rather than as a
-    separate eager count: the caller's upstream edge lineage — the
-    whole corpus-sized link extraction for a crawl graph — executes
-    exactly ONCE, in the caller's eager checkpoint, which is also the
-    job that evaluates the guard for every group (ADVICE r16; the
-    job-count parity with pagerank_fixed is regression-pinned)."""
+                             dst_col: str, weight_col: str) -> DataFrame:
+    """Multigraph collapse with the in-plan raw-weight guard: parallel
+    (src,dst) rows SUM their weights, and the fail-loud guard runs on
+    the RAW per-row weights, BEFORE the collapse — post-aggregation
+    totals would let a NULL (skipped by SUM) or a negative row that
+    nets positive with a parallel edge pass silently, exactly the
+    corruption the guard's message promises to catch. It rides IN the
+    collapse aggregation (the dsum(checked=True) assert_true pattern)
+    rather than as a separate eager count: the caller's upstream edge
+    lineage — the whole corpus-sized link extraction for a crawl
+    graph — executes exactly ONCE, in pagerank's eager edge
+    checkpoint, which is also the job that evaluates the guard for
+    every group (ADVICE r16; the job-count parity with the unweighted
+    call is regression-pinned)."""
     src, dst = F.col(src_col), F.col(dst_col)
     w = F.col(weight_col)
     agg = (edges.groupBy(src.alias("src"), dst.alias("dst"))
@@ -911,7 +742,7 @@ def _collapse_weighted_edges(edges: DataFrame, src_col: str,
     guard = F.assert_true(
         F.col("__bad") == 0,
         F.concat(
-            F.lit(f"{fn_name}: "),
+            F.lit("pagerank: "),
             F.col("__bad").cast("string"),
             F.lit(" raw edge row(s) with NULL or non-positive weight"
                   " on one (src,dst) pair — weights must be positive"
@@ -923,145 +754,123 @@ def _collapse_weighted_edges(edges: DataFrame, src_col: str,
                       F.when(guard.isNull(), F.col("__w")).alias("w"))
 
 
-def pagerank_weighted(edges: DataFrame, iterations: int = 3,
-                      damping_pct: int = 85,
-                      src_col: str = "src", dst_col: str = "dst",
-                      weight_col: str = "weight",
-                      checkpoint_every: int = 1,
-                      init_ranks: DataFrame | None = None) -> DataFrame:
-    """PageRank over a WEIGHTED edge relation — ``iterations`` exact
-    integer-micros steps of
+def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85,
+             src_col: str = "src", dst_col: str = "dst",
+             weight_col: str | None = None,
+             seeds: DataFrame | None = None,
+             init_ranks: DataFrame | None = None) -> DataFrame:
+    """PageRank in exact integer micros: ``iterations`` steps of
 
-        r'(u) = (100-d)% * MICROS / N
-                + d% * sum_{v->u} w(v,u) * (r(v) div W(v))
+        r'(u) = tele(u) + d% * sum_{v->u} w(v,u) * (r(v) div W(v))
 
-    where W(v) is v's total outbound weight: each UNIT of weight
-    carries one floor-divided share ``r div W``, so a (v,u) edge of
-    weight w contributes exactly w shares — link multiplicity (the
-    per-host-pair ``n_urls`` evidence a crawl's link extraction
-    already aggregates) feeds rank instead of being flattened to 0/1.
-    This is the form real crawl priors use: ten distinct URLs linking
-    a host is stronger evidence than one.
+    with every division a floor (see the module docstring for why),
+    where W(v) is v's total outbound weight, so each UNIT of weight
+    carries one share ``r(v) div W(v)``. Returns (node, rank_micros,
+    rank) — rank = micros / 1e6 as double, one exact divide.
 
-    Mirrors rather than parameterizes ``pagerank_fixed`` (the
-    unweighted path stays bit-frozen for its gated rows — the
-    pagerank_personalized precedent). Degenerate identity, pinned by
-    test: all weights 1 makes W(v) the out-degree and w * (r div W)
-    = r div od, so the result equals pagerank_fixed BIT-FOR-BIT.
+    The variants are data, not code:
 
-    Exactness: integer-micros, true `div` floors, BIGINT sums — same
-    driver-gateable class as the whole module. Mass note: each edge
-    truncates < w micros total (one micro per weight unit); ranking
-    unaffected. Overflow bound: sum_{v->u} w * (r div W) <= sum r <=
-    MICROS * N shares before damping — same bound as pagerank_fixed.
+    - **Weights.** ``weight_col`` unset ranks the DISTINCT edge
+      relation with w = 1, so W(v) is the out-degree and
+      w * (r div W) = r div od bit for bit. Set, the weight is link
+      multiplicity (a crawl's per-host-pair ``n_urls``: ten distinct
+      URLs linking a host are stronger evidence than one). Weights
+      must be positive integers and parallel (src,dst) rows SUM; a
+      NULL, zero or negative raw row fails loud at call time (a w=0
+      edge would silently alter W(v) for every sibling edge).
+    - **Teleport.** ``seeds`` unset teleports uniformly: every node is
+      a seed, k = N. Set, the surfer restarts at the seed set only
+      (Haveliwala's topic-sensitive form): tele(u) =
+      (100 - d)% * MICROS // 100 // k on the k seeds and 0 elsewhere,
+      and the iteration starts from MICROS // k on each seed — rank
+      then measures link proximity to the seeds, the crawl-budget
+      prior for topic- or site-focused crawling. The seed frame's
+      first column holds node ids. The node universe is the edge
+      endpoints UNION the seeds, so a seed with no edges keeps its
+      row: it holds its teleport share, receives no inbound flow and
+      contributes none (ADVICE r13). Nodes unreachable from the seeds
+      hold rank 0 and REMAIN in the output.
+    - **Warm start.** ``init_ranks`` (node, rank_micros) starts the
+      iteration from a persisted rank table instead of the initial
+      vector. Each step is a pure exact function of the previous
+      vector, so K stored + K' warm iterations equal K+K' from
+      scratch BIT-FOR-BIT (the gated warm-start rows): a standing rank
+      table advances delivery by delivery without recomputing
+      history. Ranks of vanished nodes are dropped; nodes missing from
+      init start from the initial share.
 
-    Parallel (src,dst) rows SUM their weights (the multigraph
-    collapse); weights must be positive integers — a zero/negative/
-    NULL weight is upstream corruption and fails loud (a w=0 edge
-    would silently alter W(v) for every sibling edge).
+    Fails loud (ValueError) unless each teleport share is at least 1
+    micro, i.e. k <= (100 - d)% * MICROS // 100 (150,000 at the default
+    damping) — a larger graph or seed set needs a bigger mass unit;
+    an empty graph and an empty seed set fail the same way. Each
+    floor division truncates < 1 micro per weight unit, so total mass
+    shrinks by < (sum w + N) micros per iteration — irrelevant for
+    ranking. Overflow bound: sum_{v->u} w * (r div W) <= sum r <=
+    MICROS * N before damping.
 
-    ``init_ranks`` warm-starts exactly as in pagerank_fixed: K stored
-    + K' warm = K+K' from scratch bit-for-bit, because every step is
-    a pure exact function of the previous vector."""
-    # edge-relation-sized checkpoint carrying each source's total
-    # outbound weight: referenced by every iteration plus nodes (the
-    # pagerank_fixed lesson); materializing every group row here is
-    # what fires the guard at call time
-    e = _ckpt_out_edges(
-        _collapse_weighted_edges(edges, src_col, dst_col, weight_col,
-                                 "pagerank_weighted"),
-        "tw", F.sum("w"))
-    nodes, m = _ckpt_obs(_endpoints(e), n=F.count(F.lit(1)))
-    n = m["n"]
-    teleport = ((100 - damping_pct) * MICROS // 100) // n
-    if init_ranks is not None:
-        ranks = (nodes.join(
-            init_ranks.select(F.col("node"),
-                              F.col("rank_micros").alias("__init")),
-            "node", "left")
-            .select("node",
-                    F.coalesce("__init", F.lit(MICROS // n))
-                     .cast("long").alias("r")))
+    Scale shape: K stages of edge join + node-keyed sum against a
+    node-sized rank relation (broadcastable at host-graph scale).
+    Jobs: one edge checkpoint (carrying W and, when weighted, firing
+    the guard), one observed count (the node checkpoint when uniform,
+    the seed checkpoint when seeded, plus the seeded teleport base's
+    checkpoint), then one rank checkpoint per iteration."""
+    if weight_col is None:
+        we = (edges.select(F.col(src_col).alias("src"),
+                           F.col(dst_col).alias("dst"))
+              .distinct().withColumn("w", F.lit(1).cast("long")))
     else:
-        ranks = nodes.select("node",
-                             F.lit(MICROS // n).cast("long").alias("r"))
-    for i in range(iterations):
-        contrib = (e.join(ranks, e["src"] == ranks["node"])
-                    .select(F.col("dst").alias("node"),
-                            F.expr("w * (r div tw)").alias("c")))
-        s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (nodes.join(s, "node", "left")
-                 .select("node",
-                         F.expr(f"CAST({teleport} AS BIGINT) + "
-                                f"(({damping_pct} * coalesce(s, "
-                                f"CAST(0 AS BIGINT))) div 100)")
-                         .cast("long").alias("r")))
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.transform(_ckpt)
-    return ranks.select(F.col("node"),
-                        F.col("r").alias("rank_micros"),
-                        (F.col("r") / F.lit(float(MICROS)))
-                        .cast("double").alias("rank"))
-
-
-def pagerank_weighted_personalized(edges: DataFrame, seeds: DataFrame,
-                                   iterations: int = 3,
-                                   damping_pct: int = 85,
-                                   src_col: str = "src",
-                                   dst_col: str = "dst",
-                                   weight_col: str = "weight",
-                                   checkpoint_every: int = 1) -> DataFrame:
-    """WEIGHTED PERSONALIZED PageRank — the composition of the two
-    gated forms (pagerank_personalized's seed-restart teleport,
-    pagerank_weighted's link-multiplicity shares): the random surfer
-    restarts at the SEED LIST and each (v,u) edge of weight w carries
-    exactly w floor-divided shares ``r(v) div W(v)`` — the actual
-    topic-focused crawl-budget prior, where rank measures
-    multiplicity-weighted link proximity to the seeds.
-
-    Mirrors rather than parameterizes its two parents (their gated
-    rows stay bit-frozen — the module's precedent). Degenerate
-    identities, both pinned bit-for-bit in tests/test_graph.py:
-    all weights 1 == pagerank_personalized (W(v) becomes out-degree);
-    seeds == all nodes == pagerank_weighted (per-seed teleport and
-    init collapse to the uniform shares).
-
-    Exactness: integer-micros, true `div` floors, BIGINT sums — the
-    module's driver-gateable class. Caller contract on seeds is
-    pagerank_personalized's (first column = node ids, universe =
-    endpoints UNION seeds, per-seed share must be >= 1 micro, fails
-    loud otherwise). Weights must be positive integers; the raw-row
-    guard rides the multigraph-collapse aggregation (the r16
-    pagerank_weighted pattern — zero extra jobs).
-
-    Scale shape: identical to pagerank_weighted — K stages of
-    host-pair-sized edge join + node-keyed sum over a checkpointed
-    collapsed relation; the seed relation is one node-sized left join
-    folded into the checkpointed teleport base."""
-    e = _ckpt_out_edges(
-        _collapse_weighted_edges(edges, src_col, dst_col, weight_col,
-                                 "pagerank_weighted_personalized"),
-        "tw", F.sum("w"))
-    sd, m = _ckpt_obs(
-        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
-        k=F.count(F.lit(1)))
+        we = _collapse_weighted_edges(edges, src_col, dst_col, weight_col)
+    # Materialize the edge relation ONCE, each source's total weight W
+    # riding along: every iteration references it, and without the
+    # checkpoint each reference re-executes the caller's full upstream
+    # lineage — for a crawl-derived graph the whole link extraction,
+    # K x 2 times (measured 38.6 s for K=10 at sf10 vs 3.5 s
+    # checkpointed). Edge-relation sized, never corpus-sized.
+    e = (we.withColumn("tw", F.sum("w").over(Window.partitionBy("src")))
+         .transform(_ckpt))
+    count = F.count(F.lit(1))
+    if seeds is None:
+        nodes, m = _ckpt_obs(_endpoints(e), k=count)
+    else:
+        sd, m = _ckpt_obs(
+            seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
+            k=count)
+        nodes = _endpoints(e).unionByName(sd).distinct()
     k = m["k"]
-    nodes = _endpoints(e).unionByName(sd).distinct()
     tnum = (100 - damping_pct) * MICROS // 100
     if k == 0 or tnum // k == 0:
         raise ValueError(
-            f"pagerank_weighted_personalized: {k} seeds cannot each "
-            f"carry a >= 1 micro teleport share of {tnum} — shrink "
-            f"the seed set or raise the mass unit")
-    base = (nodes.join(sd.withColumn("__s", F.lit(1)), "node", "left")
-            .select("node",
-                    F.when(F.col("__s") == 1, F.lit(tnum // k))
-                     .otherwise(F.lit(0)).cast("long").alias("tele"))
-            .transform(_ckpt))
-    ranks = base.select(
-        "node", F.when(F.col("tele") > 0, F.lit(MICROS // k))
-                 .otherwise(F.lit(0)).cast("long").alias("r"))
-    for i in range(iterations):
+            f"pagerank: a teleport of {tnum} micros over {k} "
+            f"{'node' if seeds is None else 'seed'}(s) leaves no "
+            f">= 1 micro share — shrink the graph or seed set, or "
+            f"raise the mass unit")
+    if seeds is None:
+        # a projection of the node checkpoint: every node is a seed
+        base = nodes.select("node",
+                            F.lit(tnum // k).cast("long").alias("tele"))
+    else:
+        base = (nodes.join(sd.withColumn("__s", F.lit(1)), "node", "left")
+                .select("node",
+                        F.when(F.col("__s") == 1, F.lit(tnum // k))
+                         .otherwise(F.lit(0)).cast("long").alias("tele"))
+                .transform(_ckpt))
+    r0 = F.when(F.col("tele") > 0, F.lit(MICROS // k)).otherwise(F.lit(0))
+    ranks = base
+    if init_ranks is not None:
+        # joins the initial vector only, never base: the snapshot read
+        # stays out of every iteration's plan
+        ranks = base.join(
+            init_ranks.select("node", F.col("rank_micros").alias("__init")),
+            "node", "left")
+        r0 = F.coalesce("__init", r0)
+    ranks = ranks.select("node", r0.cast("long").alias("r"))
+    for _ in range(iterations):
+        # TRUE integer division (`div`), not floor(double): floor(r/W)
+        # agrees with r // W only while r is small enough that the
+        # double rounding error stays under 1/W — guaranteed at micros
+        # scale but NOT for arbitrary caller-supplied init_ranks. `div`
+        # keeps the bit-for-bit warm-start contract over the full long
+        # domain (regression: tests/test_graph.py).
         contrib = (e.join(ranks, e["src"] == ranks["node"])
                     .select(F.col("dst").alias("node"),
                             F.expr("w * (r div tw)").alias("c")))
@@ -1071,9 +880,8 @@ def pagerank_weighted_personalized(edges: DataFrame, seeds: DataFrame,
                          (F.col("tele")
                           + F.expr(f"({damping_pct} * coalesce(s, "
                                    f"CAST(0 AS BIGINT))) div 100"))
-                         .cast("long").alias("r")))
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.transform(_ckpt)
+                         .cast("long").alias("r"))
+                 .transform(_ckpt))
     return ranks.select(F.col("node"),
                         F.col("r").alias("rank_micros"),
                         (F.col("r") / F.lit(float(MICROS)))

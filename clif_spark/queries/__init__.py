@@ -295,7 +295,9 @@ _REGATE = [
     "web_cocitation_triangles",
     # operators.graph: convergence certificates ride the checkpoint
     # jobs (observe), CC reads its edges once, PageRank/HITS hoist
-    # their out-degree/weight totals and node relation
+    # their out-degree/weight totals and node relation; the four
+    # PageRank forms are one pagerank, and HITS lost its unused
+    # periodic-checkpoint branch
     "web_host_components", "web_host_components_star", "web_host_kcore",
     "web_crawl_depth", "web_crawl_frontier", "web_host_hits",
     "web_hits_warm_start", "web_host_pagerank",

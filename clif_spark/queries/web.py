@@ -1791,6 +1791,29 @@ def _link_edges(spark, sf_dir):
         urlfn.url_host(F.col("u")).alias("dst"))
 
 
+def _weighted_host_edges(spark, sf_dir):
+    """(src_host, dst_host, n_urls) off _link_urls — the weighted
+    PageRank input: each host pair's DISTINCT resolved-URL count is
+    its link-multiplicity weight (the weighted oracles' ``we``)."""
+    return (_link_urls(spark, sf_dir)
+            .select("src_host", "u",
+                    urlfn.url_host(F.col("u")).alias("dst_host"))
+            .groupBy("src_host", "dst_host")
+            .agg(F.count_distinct(F.col("u")).cast("long")
+                 .alias("n_urls")))
+
+
+def _seed_hosts(edges, col):
+    """The crawl seeds of a host edge relation: the lexicographic min
+    and max of its source column ``col`` — deterministic, mirrored in
+    SQL (the oracles' ``pseeds``) and present at every scale factor (a
+    planted literal would vanish under the scale generator's
+    differently-spelled host names)."""
+    m = edges.agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
+    return (m.select(F.explode(F.array("lo", "hi")).alias("node"))
+            .distinct())
+
+
 @query(
     "web_link_graph",
     oracle=f"""
@@ -2609,7 +2632,7 @@ def _pagerank_ctes(iterations: int = 3, damping: int = 85
     prev = "r0"
     # teleport numerator DERIVED from the damping parameter (not a
     # hardcoded 150000), so a caller passing damping != 85 gets an
-    # oracle consistent with pagerank_fixed's (100-d)% * MICROS // 100
+    # oracle consistent with graph.pagerank's (100-d)% * MICROS // 100
     teleport_num = (100 - damping) * 1_000_000 // 100
     for i in range(1, iterations + 1):
         ctes += f""",
@@ -2691,7 +2714,7 @@ def web_host_hits(spark, sf_dir):
 
     Shape: per iteration two edge joins + two node-keyed sums + two
     single-row totals broadcast back (never collected); node-sized
-    vectors broadcast at host-graph scale — the pagerank_fixed
+    vectors broadcast at host-graph scale — the graph.pagerank
     shape doubled."""
     from clif_spark.operators import graph as G
 
@@ -2737,7 +2760,7 @@ def web_hits_warm_start(spark, sf_dir):
 
 def _pagerank_oracle(iterations: int = 3, damping: int = 85) -> str:
     """Unrolled K-iteration integer-micros PageRank — the SQL form of
-    operators/graph.pagerank_fixed, generated from the same constants
+    operators/graph.pagerank, generated from the same constants
     so the two cannot drift."""
     ctes, prev = _pagerank_ctes(iterations, damping)
     return f"""
@@ -2754,7 +2777,7 @@ def web_host_pagerank(spark, sf_dir):
     """D5b (engine ext.): PageRank over the extracted host graph — the
     ITERATIVE-algorithm class, driver-gated exactly (not a tolerance
     band): 3 fixed iterations in integer-micros arithmetic
-    (operators/graph.pagerank_fixed), where every per-edge contribution
+    (operators/graph.pagerank), where every per-edge contribution
     is a floor division and every sum is a BIGINT add — exact,
     order-independent, bit-identical to the oracle's unrolled 3-stage
     SQL generated from the same constants. The planted graph has
@@ -2767,12 +2790,12 @@ def web_host_pagerank(spark, sf_dir):
     each iteration one edge-relation scan with no corpus shuffle."""
     from clif_spark.operators import graph as G
 
-    return G.pagerank_fixed(_link_edges(spark, sf_dir), iterations=3)
+    return G.pagerank(_link_edges(spark, sf_dir), iterations=3)
 
 
 def _ppr_ctes(iterations: int = 3, damping: int = 85) -> str:
     """Unrolled K-iteration PERSONALIZED PageRank — the SQL form of
-    operators/graph.pagerank_personalized with the same seed
+    operators/graph.pagerank with seeds, the same seed
     derivation as web_crawl_depth (lexicographic min and max source
     host: deterministic, present at every scale factor), generated
     from the same constants so the two cannot drift."""
@@ -2837,17 +2860,15 @@ def web_pagerank_personalized(spark, sf_dir):
     pure flow-through mass with no teleport).
 
     Exactness: integer-micros arithmetic, true `div` floors, fixed K
-    (operators/graph.pagerank_personalized) — bit-identical to the
+    (operators/graph.pagerank with seeds) — bit-identical to the
     unrolled oracle generated from the same constants. Shape: K
     stages of edge-join + node-keyed sum; the teleport base is one
     checkpointed node-sized relation."""
     from clif_spark.operators import graph as G
 
     edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
-    m = edges.agg(F.min("src").alias("lo"), F.max("src").alias("hi"))
-    seeds = (m.select(F.explode(F.array("lo", "hi")).alias("node"))
-             .distinct())
-    return G.pagerank_personalized(edges, seeds, iterations=3)
+    return G.pagerank(edges, iterations=3,
+                      seeds=_seed_hosts(edges, "src"))
 
 
 @query("web_pagerank_warm_start", oracle=_pagerank_oracle(iterations=6))
@@ -2873,7 +2894,7 @@ def web_pagerank_warm_start(spark, sf_dir):
     import tempfile
 
     edges = _link_edges(spark, sf_dir)
-    r3 = G.pagerank_fixed(edges, iterations=3)
+    r3 = G.pagerank(edges, iterations=3)
     root = tempfile.mkdtemp(prefix="clif_rank_store_")
     STR.upsert_cdc_snapshot(
         r3.select("node", "rank_micros",
@@ -2882,16 +2903,16 @@ def web_pagerank_warm_start(spark, sf_dir):
         root, keys=["node"], order=["__v", "node"], lineage="host-ranks")
     stored = STR.read_cdc_snapshot(spark, root) \
                 .select("node", "rank_micros")
-    return G.pagerank_fixed(edges, iterations=3, init_ranks=stored)
+    return G.pagerank(edges, iterations=3, init_ranks=stored)
 
 
 def _weighted_pagerank_oracle(iterations: int = 3,
                               damping: int = 85) -> str:
     """Unrolled K-iteration WEIGHTED integer-micros PageRank — the SQL
-    form of operators/graph.pagerank_weighted over the host graph with
-    the link extraction's DISTINCT-URL multiplicity (``n_urls``) as
-    the edge weight, generated from the same constants so the two
-    cannot drift: each iteration is
+    form of operators/graph.pagerank with ``weight_col`` over the host
+    graph with the link extraction's DISTINCT-URL multiplicity
+    (``n_urls``) as the edge weight, generated from the same constants
+    so the two cannot drift: each iteration is
 
         s(u) = sum_{v->u} w(v,u) * (r(v) // W(v)),   W(v) = sum out-w
         r'(u) = teleport + d% * s(u) // 100
@@ -2944,26 +2965,20 @@ def web_pagerank_weighted(spark, sf_dir):
     host links its cdn with multiple distinct URLs but its ring
     successor with fewer), so the ranks separate from the unweighted
     row's — a weight-ignoring regression cannot survive the hash; the
-    all-weights-1 degenerate identity against pagerank_fixed is
+    all-weights-1 degenerate identity against the unweighted call is
     pinned bit-for-bit in tests/test_graph.py.
 
     Exactness: integer-micros, true `div` floors, BIGINT sums
-    (operators/graph.pagerank_weighted) — bit-identical to the
+    (operators/graph.pagerank with weight_col) — bit-identical to the
     unrolled oracle generated from the same constants. Shape: K
     stages of (weighted edges join ranks → groupBy dst sum); the
     weighted edge relation is host-pair sized and checkpointed once;
     rank vectors are host-count sized (broadcastable at web scale)."""
     from clif_spark.operators import graph as G
 
-    edges = (_link_urls(spark, sf_dir)
-             .select("src_host", "u",
-                     urlfn.url_host(F.col("u")).alias("dst_host"))
-             .groupBy("src_host", "dst_host")
-             .agg(F.count_distinct(F.col("u")).cast("long")
-                  .alias("n_urls")))
-    return G.pagerank_weighted(
-        edges, iterations=3, src_col="src_host", dst_col="dst_host",
-        weight_col="n_urls")
+    return G.pagerank(
+        _weighted_host_edges(spark, sf_dir), iterations=3,
+        src_col="src_host", dst_col="dst_host", weight_col="n_urls")
 
 
 @query("web_pagerank_weighted_warm",
@@ -2988,16 +3003,10 @@ def web_pagerank_weighted_warm(spark, sf_dir):
     from clif_spark import streaming as STR
     from clif_spark.operators import graph as G
 
-    edges = (_link_urls(spark, sf_dir)
-             .select("src_host", "u",
-                     urlfn.url_host(F.col("u")).alias("dst_host"))
-             .groupBy("src_host", "dst_host")
-             .agg(F.count_distinct(F.col("u")).cast("long")
-                  .alias("n_urls"))
-             .localCheckpoint(eager=True))
+    edges = _weighted_host_edges(spark, sf_dir).localCheckpoint(eager=True)
 
     def ranks(iters, init=None):
-        return G.pagerank_weighted(
+        return G.pagerank(
             edges, iterations=iters, src_col="src_host",
             dst_col="dst_host", weight_col="n_urls",
             init_ranks=init)
@@ -3089,29 +3098,19 @@ def web_pagerank_weighted_personalized(spark, sf_dir):
     in either composition leg flips the hash.
 
     Exactness: integer-micros, true `div` floors
-    (operators/graph.pagerank_weighted_personalized) — bit-identical
-    to the unrolled seed-conditional weighted oracle generated from
-    the same constants. Both degenerate identities (all-weights-1 ==
-    personalized; seeds=all-nodes == weighted) are pinned bit-for-bit
-    in tests/test_graph.py. Shape: K stages of host-pair-sized edge
-    join + node-keyed sum; teleport base one checkpointed node-sized
-    relation."""
+    (operators/graph.pagerank with ``weight_col`` and ``seeds``) —
+    bit-identical to the unrolled seed-conditional weighted oracle
+    generated from the same constants. Both degenerate identities
+    (all-weights-1 == personalized; seeds=all-nodes == weighted) are
+    pinned bit-for-bit in tests/test_graph.py. Shape: K stages of
+    host-pair-sized edge join + node-keyed sum; teleport base one
+    checkpointed node-sized relation."""
     from clif_spark.operators import graph as G
 
-    urls = _link_urls(spark, sf_dir)
-    edges = (urls.select("src_host", "u",
-                         urlfn.url_host(F.col("u")).alias("dst_host"))
-             .groupBy("src_host", "dst_host")
-             .agg(F.count_distinct(F.col("u")).cast("long")
-                  .alias("n_urls"))
-             .localCheckpoint(eager=True))
-    m = edges.agg(F.min("src_host").alias("lo"),
-                  F.max("src_host").alias("hi"))
-    seeds = (m.select(F.explode(F.array("lo", "hi")).alias("node"))
-             .distinct())
-    return G.pagerank_weighted_personalized(
-        edges, seeds, iterations=3, src_col="src_host",
-        dst_col="dst_host", weight_col="n_urls")
+    edges = _weighted_host_edges(spark, sf_dir).localCheckpoint(eager=True)
+    return G.pagerank(
+        edges, iterations=3, src_col="src_host", dst_col="dst_host",
+        weight_col="n_urls", seeds=_seed_hosts(edges, "src_host"))
 
 
 # ONE oracle for BOTH component implementations (min-label propagation
@@ -3679,10 +3678,7 @@ def web_crawl_depth(spark, sf_dir):
     # materialized host-edge relation, not the full link-extraction
     # lineage twice (sf10: 17.4 s -> single-scan cost)
     edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
-    m = edges.agg(F.min("src").alias("lo"), F.max("src").alias("hi"))
-    seeds = (m.select(F.explode(F.array("lo", "hi")).alias("node"))
-             .distinct())
-    return G.bfs_depths(edges, seeds).select(
+    return G.bfs_depths(edges, _seed_hosts(edges, "src")).select(
         F.col("node").alias("host"), F.col("depth"))
 
 
@@ -3776,7 +3772,7 @@ def web_crawl_frontier(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("long").alias("n_referrers")))
     edges = links.select(F.col("src_host").alias("src"),
                          urlfn.url_host(F.col("u")).alias("dst"))
-    ranks = (G.pagerank_fixed(edges, iterations=3)
+    ranks = (G.pagerank(edges, iterations=3)
              .select(F.col("node").alias("host"), "rank_micros"))
     d = io.load_table(spark, sf_dir, "documents")
     # materialized ONCE (host-count sized): every rules/delay

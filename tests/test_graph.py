@@ -4,6 +4,7 @@ division diverges once ranks exceed ~2^53)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
 
@@ -33,7 +34,7 @@ def test_pagerank_integer_division_exact_beyond_double_precision(spark):
         "c": teleport + (85 * contrib) // 100,
     }
     got = {r.node: r.rank_micros for r in
-           G.pagerank_fixed(edges, iterations=1, init_ranks=init)
+           G.pagerank(edges, iterations=1, init_ranks=init)
             .collect()}
     assert got == expected
     # and the divergence is real: the double path would differ on b/c
@@ -110,8 +111,7 @@ def test_fixpoint_results_partition_invariant(spark):
         tr = {tuple(r) for r in G.triangle_counts(tri_edges).collect()}
         hi = {tuple(r) for r in G.hits_fixed(edges).collect()}
         kc = {tuple(r) for r in G.k_core(tri_edges, 2).collect()}
-        pp = {tuple(r) for r in G.pagerank_personalized(
-            edges, seeds).collect()}
+        pp = {tuple(r) for r in G.pagerank(edges, seeds=seeds).collect()}
         if parts == 1:
             cc1, bf1, ccs1, tr1, hi1, kc1, pp1 = \
                 cc, bf, ccs, tr, hi, kc, pp
@@ -312,10 +312,10 @@ def test_k_core_path_dissolves_and_rounds_bound(spark):
 
 
 def test_personalized_pagerank_seed_locality_and_identity(spark):
-    """pagerank_personalized: teleport mass lands ONLY on the seeds
+    """pagerank with seeds: teleport mass lands ONLY on the seeds
     (a node with no path from them holds rank 0 but stays in the
-    output), and with seeds = ALL nodes the personalized form equals
-    classic pagerank_fixed BIT-FOR-BIT (same teleport share tnum//n,
+    output), and with seeds = ALL nodes the personalized call equals
+    the uniform call BIT-FOR-BIT (same teleport share tnum//n,
     same uniform init — the degenerate-personalization identity)."""
     from clif_spark.operators import graph as G
 
@@ -325,7 +325,7 @@ def test_personalized_pagerank_seed_locality_and_identity(spark):
         "src string, dst string")
     seeds = spark.createDataFrame([("s",)], "node string")
     got = {r.node: r.rank_micros for r in
-           G.pagerank_personalized(edges, seeds, iterations=2)
+           G.pagerank(edges, iterations=2, seeds=seeds)
             .collect()}
     assert got["x"] == 0 and got["y"] == 0          # outside, present
     assert got["s"] == 150000                        # teleport only
@@ -344,10 +344,10 @@ def test_personalized_pagerank_seed_locality_and_identity(spark):
     all_nodes = spark.createDataFrame(
         [(n,) for n in "sabxy"], "node string")
     ppr = {tuple(r) for r in
-           G.pagerank_personalized(edges, all_nodes, iterations=3)
+           G.pagerank(edges, iterations=3, seeds=all_nodes)
             .collect()}
     classic = {tuple(r) for r in
-               G.pagerank_fixed(edges, iterations=3).collect()}
+               G.pagerank(edges, iterations=3).collect()}
     assert ppr == classic
 
 
@@ -414,7 +414,7 @@ def test_personalized_pagerank_off_graph_seed_keeps_row(spark):
         [("s", "a"), ("a", "b")], "src string, dst string")
     seeds = spark.createDataFrame([("s",), ("ghost",)], "node string")
     got = {r.node: r.rank_micros for r in
-           G.pagerank_personalized(edges, seeds, iterations=2)
+           G.pagerank(edges, iterations=2, seeds=seeds)
             .collect()}
     assert set(got) == {"s", "a", "b", "ghost"}
     tele, d = 75000, 85
@@ -428,15 +428,36 @@ def test_personalized_pagerank_off_graph_seed_keeps_row(spark):
     assert got == r
 
 
+
+@pytest.mark.parametrize("n_edges, n_seeds",
+                         [(150001, None), (1, 150001), (1, 0)],
+                         ids=["150002_nodes", "150001_seeds", "no_seeds"])
+def test_pagerank_teleport_underflow_fails_loud(spark, n_edges, n_seeds):
+    """Every teleport share must be >= 1 micro: (100-d)% * MICROS //
+    100 // k is 0 once k > 150,000 at the default damping, and a rank
+    vector with a 0 teleport silently loses mass (a 150,002-node path
+    used to come back with 750,005 micros in total and rank 0 on its
+    source). A uniform call counts every node as a seed, so a large
+    graph, a large seed set and an empty seed set all raise."""
+    from clif_spark.operators import graph as G
+
+    edges = spark.range(n_edges).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    seeds = (None if n_seeds is None else
+             spark.range(n_seeds).select(F.col("id").alias("node")))
+    with pytest.raises(ValueError, match="teleport"):
+        G.pagerank(edges, iterations=1, seeds=seeds)
+
 def test_pagerank_weighted_identity_and_multiplicity(spark):
-    """pagerank_weighted: (1) DEGENERATE IDENTITY — all weights 1 makes
-    W(v) the out-degree and w * (r div W) = r div od, so the result
-    must equal pagerank_fixed BIT-FOR-BIT (the contract that lets the
-    weighted form claim the same exact-arithmetic class); (2) weights
-    actually steer mass — doubling one edge's weight moves rank toward
-    its target and away from its sibling; (3) parallel (src,dst) rows
-    sum their weights (multigraph collapse: two w=1 rows == one w=2);
-    (4) a non-positive weight fails loud."""
+    """pagerank with weight_col: (1) DEGENERATE IDENTITY — all weights
+    1 makes W(v) the out-degree and w * (r div W) = r div od, so the
+    result must equal the unweighted call BIT-FOR-BIT (the contract
+    that lets the weighted call claim the same exact-arithmetic
+    class); (2) weights actually steer mass — doubling one edge's
+    weight moves rank toward its target and away from its sibling;
+    (3) parallel (src,dst) rows sum their weights (multigraph
+    collapse: two w=1 rows == one w=2); (4) a non-positive weight
+    fails loud."""
     import pytest
 
     from clif_spark.operators import graph as G
@@ -446,9 +467,10 @@ def test_pagerank_weighted_identity_and_multiplicity(spark):
         "src string, dst string")
     ones = edges.withColumn("weight", F.lit(1).cast("long"))
     fixed = {tuple(r) for r in
-             G.pagerank_fixed(edges, iterations=3).collect()}
+             G.pagerank(edges, iterations=3).collect()}
     weighted = {tuple(r) for r in
-                G.pagerank_weighted(ones, iterations=3).collect()}
+                G.pagerank(ones, iterations=3,
+                           weight_col="weight").collect()}
     assert weighted == fixed
 
     # weight 3 on a->b: b gains vs the uniform run, c loses
@@ -456,9 +478,9 @@ def test_pagerank_weighted_identity_and_multiplicity(spark):
         [("a", "b", 3), ("a", "c", 1), ("b", "c", 1), ("c", "a", 1)],
         "src string, dst string, weight long")
     got = {r.node: r.rank_micros for r in
-           G.pagerank_weighted(w3, iterations=3).collect()}
+           G.pagerank(w3, iterations=3, weight_col="weight").collect()}
     uni = {r.node: r.rank_micros for r in
-           G.pagerank_fixed(edges, iterations=3).collect()}
+           G.pagerank(edges, iterations=3).collect()}
     assert got["b"] > uni["b"] and got["c"] < uni["c"]
 
     # multigraph collapse: two parallel w=1 rows == one w=2 row
@@ -469,10 +491,10 @@ def test_pagerank_weighted_identity_and_multiplicity(spark):
     merged = spark.createDataFrame(
         [("a", "b", 2), ("a", "c", 1), ("b", "c", 1), ("c", "a", 1)],
         "src string, dst string, weight long")
-    assert {tuple(r) for r in
-            G.pagerank_weighted(par, iterations=2).collect()} == \
-           {tuple(r) for r in
-            G.pagerank_weighted(merged, iterations=2).collect()}
+    assert {tuple(r) for r in G.pagerank(
+                par, iterations=2, weight_col="weight").collect()} == \
+           {tuple(r) for r in G.pagerank(
+                merged, iterations=2, weight_col="weight").collect()}
 
     # fail-loud weight guard (in-plan assert_true since r16: fires at
     # call time via the eager multigraph-collapse checkpoint)
@@ -481,7 +503,7 @@ def test_pagerank_weighted_identity_and_multiplicity(spark):
                               "src string, dst string, weight long")
     with pytest.raises(SparkRuntimeException,
                        match="NULL or non-positive"):
-        G.pagerank_weighted(z, iterations=1)
+        G.pagerank(z, iterations=1, weight_col="weight")
 
 
 def test_pagerank_weighted_guard_catches_raw_row_corruption(spark):
@@ -490,9 +512,9 @@ def test_pagerank_weighted_guard_catches_raw_row_corruption(spark):
     that nets positive with a parallel edge, and a NULL row that SUM
     would silently skip, must both fail loud. Since r16 the guard
     rides IN the collapse aggregation (assert_true), so it costs zero
-    extra jobs — construction job count must equal pagerank_fixed's
-    (ADVICE r16: the old eager filter().count() re-executed the
-    caller's full upstream lineage once per call)."""
+    extra jobs — construction job count must equal the unweighted
+    call's (ADVICE r16: the old eager filter().count() re-executed
+    the caller's full upstream lineage once per call)."""
     import pytest
     from conftest import launched
     from pyspark.errors import SparkRuntimeException
@@ -504,13 +526,13 @@ def test_pagerank_weighted_guard_catches_raw_row_corruption(spark):
         "src string, dst string, weight long")
     with pytest.raises(SparkRuntimeException,
                        match="NULL or non-positive"):
-        G.pagerank_weighted(nets_positive, iterations=1)
+        G.pagerank(nets_positive, iterations=1, weight_col="weight")
     null_row = spark.createDataFrame(
         [("a", "b", 1), ("a", "b", None), ("b", "a", 1)],
         "src string, dst string, weight long")
     with pytest.raises(SparkRuntimeException,
                        match="NULL or non-positive"):
-        G.pagerank_weighted(null_row, iterations=1)
+        G.pagerank(null_row, iterations=1, weight_col="weight")
 
     # guard rides for free: constructing the weighted form runs exactly
     # as many jobs as the unweighted form (checkpoint + node count) —
@@ -519,20 +541,21 @@ def test_pagerank_weighted_guard_catches_raw_row_corruption(spark):
         [("a", "b", 2), ("b", "c", 1), ("c", "a", 3)],
         "src string, dst string, weight long")
     _, base_jobs, _ = launched(
-        spark, lambda: G.pagerank_fixed(edges.drop("weight"), iterations=1))
+        spark, lambda: G.pagerank(edges.drop("weight"), iterations=1))
     _, weighted_jobs, _ = launched(
-        spark, lambda: G.pagerank_weighted(edges, iterations=1))
+        spark,
+        lambda: G.pagerank(edges, iterations=1, weight_col="weight"))
     assert weighted_jobs == base_jobs
 
 
 def test_pagerank_weighted_personalized_identities(spark):
-    """pagerank_weighted_personalized degenerate identities, both
-    BIT-FOR-BIT (the contract that lets the composed form claim its
-    parents' exact-arithmetic class): (1) all weights 1 ==
-    pagerank_personalized on the distinct edge relation; (2) seeds =
-    all nodes == pagerank_weighted (per-seed teleport tnum//n and
-    init MICROS//n collapse to the uniform shares). Plus: the
-    composed form genuinely differs from BOTH parents on a fixture
+    """pagerank with weight_col AND seeds: degenerate identities, both
+    BIT-FOR-BIT (the contract that lets the composed call claim its
+    parents' exact-arithmetic class): (1) all weights 1 == the
+    seeded unweighted call on the distinct edge relation; (2) seeds =
+    all nodes == the uniform weighted call (per-seed teleport
+    tnum//n and init MICROS//n collapse to the uniform shares). Plus:
+    the composed call genuinely differs from BOTH parents on a fixture
     where seeds exclude a node and weights are non-uniform, and the
     in-plan weight guard fails loud."""
     import pytest
@@ -548,31 +571,31 @@ def test_pagerank_weighted_personalized_identities(spark):
 
     # (1) all-weights-1 == unweighted personalized
     ones = edges.withColumn("weight", F.lit(1).cast("long"))
-    got1 = {tuple(r) for r in G.pagerank_weighted_personalized(
-        ones, seeds, iterations=3).collect()}
-    exp1 = {tuple(r) for r in G.pagerank_personalized(
-        edges.drop("weight"), seeds, iterations=3).collect()}
+    got1 = {tuple(r) for r in G.pagerank(
+        ones, iterations=3, weight_col="weight", seeds=seeds).collect()}
+    exp1 = {tuple(r) for r in G.pagerank(
+        edges.drop("weight"), iterations=3, seeds=seeds).collect()}
     assert got1 == exp1
 
     # (2) seeds = all nodes == plain weighted
     allnodes = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("d",)], "node string")
-    got2 = {tuple(r) for r in G.pagerank_weighted_personalized(
-        edges, allnodes, iterations=3).collect()}
-    exp2 = {tuple(r) for r in G.pagerank_weighted(
-        edges, iterations=3).collect()}
+    got2 = {tuple(r) for r in G.pagerank(
+        edges, iterations=3, weight_col="weight", seeds=allnodes).collect()}
+    exp2 = {tuple(r) for r in G.pagerank(
+        edges, iterations=3, weight_col="weight").collect()}
     assert got2 == exp2
 
     # composed form differs from both parents on the asymmetric fixture
     got3 = {r.node: r.rank_micros for r in
-            G.pagerank_weighted_personalized(
-                edges, seeds, iterations=3).collect()}
+            G.pagerank(edges, iterations=3, weight_col="weight",
+                       seeds=seeds).collect()}
     assert got3 != {r.node: r.rank_micros for r in
-                    G.pagerank_personalized(
-                        edges.drop("weight"), seeds,
-                        iterations=3).collect()}
+                    G.pagerank(edges.drop("weight"), iterations=3,
+                               seeds=seeds).collect()}
     assert got3 != {r.node: r.rank_micros for r in
-                    G.pagerank_weighted(edges, iterations=3).collect()}
+                    G.pagerank(edges, iterations=3,
+                               weight_col="weight").collect()}
 
     # in-plan raw-row weight guard (the r16 pattern)
     bad = spark.createDataFrame(
@@ -580,7 +603,7 @@ def test_pagerank_weighted_personalized_identities(spark):
         "src string, dst string, weight long")
     with pytest.raises(SparkRuntimeException,
                        match="NULL or non-positive"):
-        G.pagerank_weighted_personalized(bad, seeds, iterations=1)
+        G.pagerank(bad, iterations=1, weight_col="weight", seeds=seeds)
 
 
 def test_reliable_checkpoint_option_writes_to_dir_and_matches(spark):

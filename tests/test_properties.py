@@ -1103,7 +1103,7 @@ def test_er_store_lifecycle_agrees_with_bruteforce(spark, names):
                           st.integers(min_value=1, max_value=4)),
                 min_size=1, max_size=12))
 def test_pagerank_weighted_agrees_with_python_recurrence(spark, raw):
-    """pagerank_weighted on random small weighted multigraphs vs a
+    """pagerank with weight_col on random small weighted multigraphs vs a
     pure-Python mirror of the documented integer recurrence
     (multigraph collapse by weight sum, per-unit share r // W(v),
     teleport + 85% damping floor-divided) — two iterations, every
@@ -1113,7 +1113,7 @@ def test_pagerank_weighted_agrees_with_python_recurrence(spark, raw):
 
     df = spark.createDataFrame(raw, "src string, dst string, weight long")
     got = {r.node: r.rank_micros for r in
-           G.pagerank_weighted(df, iterations=2).collect()}
+           G.pagerank(df, iterations=2, weight_col="weight").collect()}
 
     # pure-Python mirror
     w = {}
