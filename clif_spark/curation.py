@@ -69,15 +69,6 @@ HTML_ENTITIES: list[tuple[str, str]] = [
 ]
 
 
-def html_escape(col: Column) -> Column:
-    """Text -> HTML content escaping (&, <, > — the minimum a conformant
-    producer must escape). Inverse of the entity-decode half of
-    ``html_to_text``; used when synthesizing page bodies from text."""
-    out = F.replace(col, F.lit("&"), F.lit("&amp;"))
-    out = F.replace(out, F.lit("<"), F.lit("&lt;"))
-    return F.replace(out, F.lit(">"), F.lit("&gt;"))
-
-
 def html_to_text(col: Column) -> Column:
     """HTML -> visible text: the boilerplate-strip step between a crawl
     archive (clif_spark.warc) and every text operator in this module.

@@ -34,14 +34,6 @@ def classify(branches: Sequence[tuple[Column, Column | str]],
     return expr
 
 
-def rlike_any(col: Column, patterns: Sequence[str], ignore_case: bool = True) -> Column:
-    """F2/F13: boolean flag if any regex matches (grepl family,
-    `code/RCLIF_vitals.Rmd:150-153`, `code/RCLIF_adt.Rmd:35-86`)."""
-    prefix = "(?i)" if ignore_case else ""
-    combined = prefix + "(" + "|".join(patterns) + ")"
-    return col.rlike(combined)
-
-
 # ---------------------------------------------------------------------------
 # F3-F5: the med-dose string surgery (`code/RCLIF_medications.Rmd:138-140`).
 # ---------------------------------------------------------------------------

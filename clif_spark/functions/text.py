@@ -1,5 +1,5 @@
 """Text-analysis functions for the LLM-data-pipeline surface (north star:
-BASELINE.json — language-ID, quality scoring, token counting, fingerprinting).
+BASELINE.json — language-ID, token counting, fingerprinting).
 
 All Catalyst-native column expressions (split/regexp/higher-order functions);
 no Python UDFs anywhere, so every metric stays inside whole-stage codegen and
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Small English stopword set used by the quality/lang heuristics.
+#: Small English stopword set (text_quality_metrics' stopword ratio).
 STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "it", "that")
 
 #: BPE-ish tokenizer regex: letter runs, digit runs, or single non-space
@@ -23,11 +23,6 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 def tokens(col: Column) -> Column:
     """Whitespace tokens as array<string>."""
     return F.split(F.trim(col), r"\s+")
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(col)).cast("long")
 
 
 def bpe_token_count(col: Column) -> Column:
@@ -62,44 +57,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     # makes Catalyst re-split the string per offset — O(words²) work that
     # showed up as ~8x on the dedup benchmark.
     return F.transform(F.array(F.split(F.trim(col), r"\s+")), build)[0]
-
-
-def stopword_ratio(col: Column) -> Column:
-    """Fraction of whitespace tokens that are stopwords."""
-    toks = tokens(F.lower(col))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(col: Column) -> Column:
-    """Fraction of characters that are punctuation/symbols."""
-    n = F.length(col)
-    p = F.length(F.regexp_replace(col, r"[A-Za-z0-9\s]", ""))
-    return F.when(n > 0, p.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def mean_token_len(col: Column) -> Column:
-    """Mean whitespace-token length."""
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("long"),
-                        lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite [0,1] quality heuristic: favors documents with a healthy
-    stopword ratio (natural prose), low punctuation density, and mid-range
-    token length — the C4/Gopher-rule flavor of filtering, deterministic and
-    engine-native."""
-    sw = stopword_ratio(col)
-    pr = punct_ratio(col)
-    tl = mean_token_len(col)
-    score = (
-        F.lit(0.4) * F.least(sw * 4, F.lit(1.0))
-        + F.lit(0.3) * (F.lit(1.0) - F.least(pr * 5, F.lit(1.0)))
-        + F.lit(0.3) * F.when((tl >= 3) & (tl <= 10), 1.0).otherwise(0.0)
-    )
-    return F.round(score, 4)
 
 
 def lang_guess(col: Column) -> Column:

@@ -3,8 +3,15 @@ step every crawl pipeline runs between fetch and URL-level dedup (CC-Net
 keeps one document per canonical URL before any content dedup — it is
 the cheapest dedup signal in the stack, pure string work, no shuffle).
 
-All Catalyst regexp/array expressions — whole-stage codegen, linear per
-URL, fused into whatever stage produces the URLs. The DuckDB oracle
+Every rule is Spark SQL text. A public builder takes its inputs as SQL
+expressions (a column name is the usual case) and returns ONE
+``F.expr`` over the composed text, so the driver hands the JVM one
+string per call instead of building the tree node by node over py4j
+(the resolver is ~2,300 py4j calls as a Column tree, one parse as
+text). Catalyst lowers the text to the same regexp/array/higher-order
+expressions — whole-stage codegen, linear per URL, fused into whatever
+stage produces the URLs. Patterns are Spark raw literals (``r'...'``)
+so their backslashes reach the regex engine verbatim. The DuckDB oracle
 mirror lives beside the gated query (queries/web.py) with the identical
 step list; keep the two in sync rule-for-rule.
 
@@ -37,28 +44,36 @@ _AUTH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 
 
-def _no_fragment(url: Column) -> Column:
-    return F.regexp_replace(url, r"#.*$", "")
+def _no_fragment(url: str) -> str:
+    return f"regexp_replace({url}, r'#.*$', '')"
 
 
-def url_scheme(url: Column) -> Column:
-    return F.lower(F.regexp_extract(_no_fragment(url), _SCHEME_RE, 1))
+def _scheme(url: str) -> str:
+    return f"lower(regexp_extract({_no_fragment(url)}, r'{_SCHEME_RE}', 1))"
 
 
-def url_host(url: Column) -> Column:
+def url_scheme(url: str) -> Column:
+    return F.expr(_scheme(url))
+
+
+def _host(url: str) -> str:
+    auth = f"lower(regexp_extract({_no_fragment(url)}, r'{_AUTH_RE}', 1))"
+    scheme = _scheme(url)
+    return (f"regexp_replace(CASE "
+            f"WHEN {scheme} = 'http' THEN regexp_replace({auth}, r':80$', '') "
+            f"WHEN {scheme} = 'https' "
+            f"THEN regexp_replace({auth}, r':443$', '') "
+            f"ELSE {auth} END, r'^www\\.', '')")
+
+
+def url_host(url: str) -> Column:
     """Lowercased host with the scheme's DEFAULT port and leading
     ``www.`` stripped. Port stripping is scheme-aware: only http+``:80``
     and https+``:443`` are identity-preserving removals — stripping
     ``:443`` from an http URL would merge distinct resources (the
     DuckDB oracle CTE in queries/web.py mirrors this rule in
     lockstep)."""
-    auth = F.lower(F.regexp_extract(_no_fragment(url), _AUTH_RE, 1))
-    scheme = url_scheme(url)
-    stripped = (
-        F.when(scheme == "http", F.regexp_replace(auth, r":80$", ""))
-         .when(scheme == "https", F.regexp_replace(auth, r":443$", ""))
-         .otherwise(auth))
-    return F.regexp_replace(stripped, r"^www\.", "")
+    return F.expr(_host(url))
 
 
 # RFC 3986 §2.3 unreserved octets as UPPERCASE hex pairs: ALPHA
@@ -70,7 +85,24 @@ def url_host(url: Column) -> Column:
 _UNRESERVED_HEX_RE = r"^(4[1-9A-F]|5[0-9A]|5F|6[1-9A-F]|7[0-9A]|7E|3[0-9]|2[DE])$"
 
 
-def pct_normalize(s: Column) -> Column:
+def _pct(s: str) -> str:
+    # lambda var 'pct_x': callers nest this inside their own lambdas
+    # (the query-param transform binds 'qp')
+    hexd = "upper(substring(pct_x, 1, 2))"
+    rest = "substring(pct_x, 3, 2147483647)"
+    piece = (f"CASE WHEN NOT rlike({hexd}, r'^[0-9A-F]{{2}}$') "
+             f"THEN concat('%', pct_x) "
+             f"WHEN rlike({hexd}, r'{_UNRESERVED_HEX_RE}') "
+             f"THEN concat(decode(unhex({hexd}), 'UTF-8'), {rest}) "
+             f"ELSE concat('%', {hexd}, {rest}) END")
+    parts = f"split({s}, '%')"
+    tail = f"slice({parts}, 2, greatest(size({parts}) - 1, 0))"
+    normalized = (f"concat(element_at({parts}, 1), array_join("
+                  f"transform({tail}, pct_x -> {piece}), ''))")
+    return f"CASE WHEN contains({s}, '%') THEN {normalized} ELSE {s} END"
+
+
+def pct_normalize(s: str) -> Column:
     """RFC 3986 §6.2.2 percent-encoding normalization over one URL
     component: §6.2.2.2 decodes percent-encodings of UNRESERVED
     characters (``%69`` -> ``i``, two URLs differing only there are the
@@ -80,33 +112,31 @@ def pct_normalize(s: Column) -> Column:
     Malformed escapes (``%`` not followed by two hex digits) pass
     through verbatim. Gated on ``%`` presence: clean components (the
     overwhelming majority) pass through byte-identical with one
-    ``contains`` check. Pure Catalyst: split on ``%``, one
-    higher-order transform over the tail pieces. DuckDB mirror:
-    queries/web.py::_sql_pct — keep rule-for-rule in sync."""
-    parts = F.split(s, "%")
-
-    def piece(x: Column) -> Column:
-        hexd = F.upper(F.substring(x, 1, 2))
-        rest = F.substring(x, 3, 2147483647)
-        return (
-            F.when(~hexd.rlike(r"^[0-9A-F]{2}$"), F.concat(F.lit("%"), x))
-             .when(hexd.rlike(_UNRESERVED_HEX_RE),
-                   F.concat(F.decode(F.unhex(hexd), "UTF-8"), rest))
-             .otherwise(F.concat(F.lit("%"), hexd, rest)))
-
-    head = F.element_at(parts, 1)
-    tail = F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0)))
-    normalized = F.concat(head, F.array_join(F.transform(tail, piece), ""))
-    return F.when(s.contains("%"), normalized).otherwise(s)
+    ``contains`` check. Split on ``%``, one higher-order transform over
+    the tail pieces. DuckDB mirror: queries/web.py::_sql_pct — keep
+    rule-for-rule in sync."""
+    return F.expr(_pct(s))
 
 
-def url_path(url: Column) -> Column:
-    p = F.regexp_extract(_no_fragment(url), _PATH_RE, 1)
-    p = F.when(p == "", F.lit("/")).otherwise(p)
-    return pct_normalize(F.regexp_replace(p, r"^(.+?)/+$", "$1"))
+def _path(url: str) -> str:
+    p = f"regexp_extract({_no_fragment(url)}, r'{_PATH_RE}', 1)"
+    p = f"CASE WHEN {p} = '' THEN '/' ELSE {p} END"
+    return _pct(f"regexp_replace({p}, r'^(.+?)/+$', '$1')")
 
 
-def url_query_canonical(url: Column) -> Column:
+def url_path(url: str) -> Column:
+    return F.expr(_path(url))
+
+
+def _query(url: str) -> str:
+    q = f"regexp_extract({_no_fragment(url)}, r'\\?([^#]*)', 1)"
+    keep = ("qp <> '' AND NOT startswith(split_part(qp, '=', 1), 'utm_') "
+            "AND split_part(qp, '=', 1) <> 'fbclid'")
+    return (f"array_join(array_sort(filter(transform(split({q}, '&'), "
+            f"qp -> {_pct('qp')}), qp -> {keep})), '&')")
+
+
+def url_query_canonical(url: str) -> Column:
     """Query string with each param percent-normalized (RFC 3986
     §6.2.2 — see ``pct_normalize``), tracking params removed, and the
     rest sorted. Normalization runs FIRST: a percent-disguised
@@ -114,24 +144,15 @@ def url_query_canonical(url: Column) -> Column:
     canonical over the decoded forms. Tracking match is on the param
     NAME (the token before ``=``), so ``fbclid=abc`` drops and a
     legitimate ``id=fbclid`` survives."""
-    q = F.regexp_extract(_no_fragment(url), r"\?([^#]*)", 1)
-
-    def keep(x: Column) -> Column:
-        name = F.split_part(x, F.lit("="), F.lit(1))
-        return ((x != "") & ~F.startswith(name, F.lit("utm_"))
-                & (name != "fbclid"))
-
-    return F.array_join(
-        F.array_sort(F.filter(F.transform(F.split(q, "&"), pct_normalize),
-                              keep)), "&")
+    return F.expr(_query(url))
 
 
-def canonicalize_url(url: Column) -> Column:
+def canonicalize_url(url: str) -> Column:
     """Full canonical URL (see module docstring for the rule list)."""
-    qs = url_query_canonical(url)
-    return F.concat(
-        url_scheme(url), F.lit("://"), url_host(url), url_path(url),
-        F.when(qs == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs)))
+    qs = _query(url)
+    return F.expr(
+        f"concat({_scheme(url)}, '://', {_host(url)}, {_path(url)}, "
+        f"CASE WHEN {qs} = '' THEN '' ELSE concat('?', {qs}) END)")
 
 
 # Paths needing §5.2.4 work: a '.'/'..' segment anywhere, or an empty
@@ -143,37 +164,40 @@ def canonicalize_url(url: Column) -> Column:
 _DOTSEG_RE = r"(^|/)\.\.?(/|$)|//"
 
 
-def collapse_dot_segments(path: Column) -> Column:
+def _collapse(path: str) -> str:
+    folded = (f"aggregate(split({path}, '/'), '', (acc, seg) -> "
+              "CASE WHEN seg = '' OR seg = '.' THEN acc "
+              "WHEN seg = '..' THEN regexp_replace(acc, '/[^/]*$', '') "
+              "ELSE concat(acc, '/', seg) END)")
+    collapsed = f"CASE WHEN {folded} = '' THEN '/' ELSE {folded} END"
+    return (f"CASE WHEN rlike({path}, r'{_DOTSEG_RE}') THEN {collapsed} "
+            f"ELSE {path} END")
+
+
+def collapse_dot_segments(path: str) -> Column:
     """RFC 3986 §5.2.4 remove_dot_segments over an absolute path —
     applied only when a dot/empty segment is present (_DOTSEG_RE;
     clean paths pass through byte-identical, trailing slash and all).
-    The collapse itself is a single Catalyst ``aggregate`` (left fold)
-    over the ``/``-split segments with a STRING accumulator: ``.`` and
-    empty segments are no-ops, ``..`` pops the last appended segment
-    (a ``..`` at root stays at root, per spec), anything else appends.
+    The collapse itself is a single ``aggregate`` (left fold) over the
+    ``/``-split segments with a STRING accumulator: ``.`` and empty
+    segments are no-ops, ``..`` pops the last appended segment (a
+    ``..`` at root stays at root, per spec), anything else appends.
     Deliberate normalizations when the fold DOES run (both identical
     to what ``canonicalize_url`` does next): empty segments collapse
     (``a//b`` -> ``/a/b``) and a trailing ``/.``/``/..`` loses its
     directory-form trailing slash. The DuckDB oracle mirror
     (queries/web.py _LINK_EDGES_CTES) is the same gate + fold via
     list_reduce — keep the two in sync."""
-    segs = F.split(path, "/")
-    folded = F.aggregate(
-        segs, F.lit(""),
-        lambda acc, s: (
-            F.when((s == "") | (s == "."), acc)
-             .when(s == "..", F.regexp_replace(acc, "/[^/]*$", ""))
-             .otherwise(F.concat(acc, F.lit("/"), s))))
-    collapsed = F.when(folded == "", F.lit("/")).otherwise(folded)
-    return F.when(path.rlike(_DOTSEG_RE), collapsed).otherwise(path)
+    return F.expr(_collapse(path))
 
 
-def resolve_href(href: Column, base_scheme: Column, base_host: Column,
-                 base_path: Column | None = None) -> Column:
+def resolve_href(href: str, base_scheme: str, base_host: str,
+                 base_path: str | None = None) -> Column:
     """Resolve an extracted ``href`` against its page's
     scheme/host/path — the frontier-discovery step between link
-    extraction and canonicalization. RFC 3986 §5 reference resolution
-    over the hierarchical cases:
+    extraction and canonicalization. All four inputs are SQL
+    expressions (``"'https'"`` for a literal scheme). RFC 3986 §5
+    reference resolution over the hierarchical cases:
 
     - absolute (``scheme://...``) keeps its own scheme/authority, path
       dot-segments collapsed (§5.2.2 applies remove_dot_segments to
@@ -195,42 +219,41 @@ def resolve_href(href: Column, base_scheme: Column, base_host: Column,
 
     Fragments are stripped first (never sent to the server); a
     relative ref's own query string survives the splice."""
-    href = F.regexp_replace(href, r"#.*$", "")
-    rel_path = F.regexp_extract(href, r"^([^?#]*)", 1)
-    rel_qs = F.regexp_extract(href, r"(\?[^#]*)", 1)
-    root = F.concat(base_scheme, F.lit("://"), base_host)
-    resolved_abs = F.concat(root, collapse_dot_segments(rel_path), rel_qs)
+    h = _no_fragment(href)
+    rel_path = f"regexp_extract({h}, r'^([^?#]*)', 1)"
+    rel_qs = f"regexp_extract({h}, r'(\\?[^#]*)', 1)"
+    root = f"concat({base_scheme}, '://', {base_host})"
+    resolved_abs = f"concat({root}, {_collapse(rel_path)}, {rel_qs})"
     # absolute: rebuild as prefix + collapsed path + query. For a clean
     # path the collapse gate passes it through verbatim and the rebuild
     # is byte-identical to the fragment-stripped href.
-    abs_pre = F.regexp_extract(href, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)",
-                               1)
-    abs_path = F.regexp_extract(href, _PATH_RE, 1)
-    resolved_scheme = F.concat(abs_pre, collapse_dot_segments(abs_path),
-                               rel_qs)
+    abs_pre = (f"regexp_extract({h}, "
+               f"r'^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)")
+    abs_path = f"regexp_extract({h}, r'{_PATH_RE}', 1)"
+    resolved_scheme = f"concat({abs_pre}, {_collapse(abs_path)}, {rel_qs})"
     # protocol-relative: base scheme + ref authority + collapsed path.
-    pr_auth = F.regexp_extract(href, r"^//([^/?#]*)", 1)
-    pr_path = F.regexp_extract(href, r"^//[^/?#]*([^?#]*)", 1)
-    resolved_pr = F.concat(base_scheme, F.lit("://"), pr_auth,
-                           collapse_dot_segments(pr_path), rel_qs)
+    pr_auth = f"regexp_extract({h}, r'^//([^/?#]*)', 1)"
+    pr_path = f"regexp_extract({h}, r'^//[^/?#]*([^?#]*)', 1)"
+    resolved_pr = (f"concat({base_scheme}, '://', {pr_auth}, "
+                   f"{_collapse(pr_path)}, {rel_qs})")
     if base_path is None:
-        rel = F.lit(None).cast("string")
+        rel = "CAST(NULL AS STRING)"
     else:
-        base_dir = F.regexp_replace(base_path, r"[^/]*$", "")
-        merged = F.concat(base_dir, rel_path)
+        base_dir = f"regexp_replace({base_path}, '[^/]*$', '')"
+        merged = f"concat({base_dir}, {rel_path})"
         # §5.3: with an authority present and an empty (or slash-less,
         # hence directory-less) base path, the merge is '/' + ref.
-        merged = F.when(F.startswith(merged, F.lit("/")), merged) \
-                  .otherwise(F.concat(F.lit("/"), merged))
-        rel = F.concat(root, collapse_dot_segments(merged), rel_qs)
-    return (
-        F.when(href == "", F.lit(None))
-         .when(href.rlike(_SCHEME_RE), resolved_scheme)
-         .when(F.startswith(href, F.lit("//")), resolved_pr)
-         .when(F.startswith(href, F.lit("/")), resolved_abs)
-         .when(href.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*:")
-               | F.startswith(href, F.lit("?")), F.lit(None))
-         .otherwise(rel))
+        merged = (f"CASE WHEN startswith({merged}, '/') THEN {merged} "
+                  f"ELSE concat('/', {merged}) END")
+        rel = f"concat({root}, {_collapse(merged)}, {rel_qs})"
+    return F.expr(
+        f"CASE WHEN {h} = '' THEN NULL "
+        f"WHEN rlike({h}, r'{_SCHEME_RE}') THEN {resolved_scheme} "
+        f"WHEN startswith({h}, '//') THEN {resolved_pr} "
+        f"WHEN startswith({h}, '/') THEN {resolved_abs} "
+        f"WHEN rlike({h}, r'^[A-Za-z][A-Za-z0-9+.-]*:') "
+        f"OR startswith({h}, '?') THEN NULL "
+        f"ELSE {rel} END")
 
 
 def registered_domains(hosts, suffixes, host_col: str = "host"):

@@ -26,21 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Driver-provided TPC-H-ish testdata tables (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def read_parquet(spark: SparkSession, path: str | list[str],
                  merge_schema: bool = False) -> DataFrame:
     """S6/S7: parquet scan; pass a list of paths for union-of-part-files.
@@ -58,12 +43,11 @@ def read_parquet(spark: SparkSession, path: str | list[str],
 
 
 #: (session id, path) -> (session, DataFrame). The session object is held
-#: in the value so its id() can never be recycled while the memo lives —
-#: the same lifetime trick as queries._REGISTERED_VIEWS. Mutations hold
-#: _TABLE_MEMO_LOCK (a caller may resolve tables from multiple threads —
-#: e.g. concurrent streaming queries); stopped sessions are swept on
-#: insert so the memo cannot pin dead JVM-side plans for the process
-#: lifetime. The documented immutable-fixture caveat stands:
+#: in the value so its id() can never be recycled while the memo lives.
+#: Mutations hold _TABLE_MEMO_LOCK (a caller may resolve tables from
+#: multiple threads — e.g. concurrent streaming queries); stopped sessions
+#: are swept on insert so the memo cannot pin dead JVM-side plans for the
+#: process lifetime. The documented immutable-fixture caveat stands:
 #: invalidate_table_memo() is the REFRESH TABLE analog.
 _TABLE_MEMO: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
 _TABLE_MEMO_LOCK = __import__("threading").Lock()
@@ -243,11 +227,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if current < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
 def read_delimited(

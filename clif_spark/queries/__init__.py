@@ -173,12 +173,6 @@ def sql_dmean(expr: str, scale: int = 6) -> str:
     return _sql_digit_round(mean_micros, scale)
 
 
-#: Views registered per live SparkSession. Keyed by id() of the session
-#: wrapper with the session pinned as the value (temp views are per-session,
-#: not per-application, and pinning prevents id() reuse after GC).
-_REGISTERED_VIEWS: dict[tuple[int, str], SparkSession] = {}
-
-
 def pq(spark: SparkSession, sf_dir: str, table: str) -> str:
     """Resolved table reference for one-shot Spark SQL queries.
 
@@ -197,57 +191,15 @@ def pq(spark: SparkSession, sf_dir: str, table: str) -> str:
     (the driver pre-registers its tables as views). Catalog state is
     metadata only; scans still re-read the files each execution. The view
     is registered on the caller's ``spark``, the session that runs the
-    SQL: temp views are per session, so one on any other session is
-    invisible to it."""
+    SQL, whenever that session's catalog lacks it: temp views are per
+    session (one on any other session is invisible to it), and a view
+    the caller dropped is registered again."""
     safe = "".join(c if c.isalnum() else "_" for c in f"{sf_dir}_{table}")
     name = f"tv_{safe}"
-    key = (id(spark), name)
-    if key not in _REGISTERED_VIEWS:
+    if not spark.catalog.tableExists(name):
         spark.read.parquet(f"{sf_dir}/{table}.parquet") \
              .createOrReplaceTempView(name)
-        _REGISTERED_VIEWS[key] = spark
     return name
-
-
-#: Memoized name-bound Column trees, keyed per SparkContext. Same
-#: class of driver-chatter elimination as ``pq``'s temp views (r17,
-#: guide §1.2 per-task... driver work): the heavy expression builders
-#: (RFC 3986 resolver, fixture html synthesis) cost ~0.3-1.3 s of py4j
-#: round trips PER CALL at zero JVM work, and the hot lifecycle rows
-#: rebuild them up to three times per execution. A Column is an
-#: immutable UNRESOLVED expression tree bound by column NAME, so one
-#: tree serves every DataFrame carrying those names; Catalyst analysis
-#: and optimization still run per plan, so nothing the bench times is
-#: reused across reps except the Python-side tree construction — the
-#: exact analog of handing DuckDB its SQL string. The cache is scoped
-#: to ONE owning SparkContext (``_COL_CACHE_SC``): a context change
-#: clears every entry at once, so a long-lived process that restarts
-#: contexts cannot accumulate trees pinned to dead py4j handles
-#: (ADVICE r17 — the per-(id, key) form leaked entries keyed by dead
-#: contexts, and id() reuse could never be served because values are
-#: re-checked against the live object anyway).
-_COL_CACHE: dict[str, object] = {}
-_COL_CACHE_SC: object = None
-
-
-def memo_cols(key: str, builder: Callable[[], object]) -> object:
-    """Build-once Column trees for ``key`` under the active
-    SparkContext (falls back to plain construction when no context is
-    active). ``builder`` must return name-bound expressions only —
-    nothing resolved against a specific DataFrame."""
-    global _COL_CACHE_SC
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return builder()
-    if _COL_CACHE_SC is not sc:
-        _COL_CACHE.clear()
-        _COL_CACHE_SC = sc
-    hit = _COL_CACHE.get(key)
-    if hit is None:
-        hit = _COL_CACHE[key] = builder()
-    return hit
 
 
 def narrow_width(spark: SparkSession) -> int:
@@ -310,6 +262,21 @@ _REGATE = [
     "stream_er_maintain",
     # dedup.connected_components retired for the graph operator
     "dedup_clusters", "dedup_semantic_contract",
+    # the planted web inputs are one SQL text read by both engines and
+    # functions.url builds SQL text (every web.py row and the two
+    # streaming rows that reuse its fixtures)
+    "io_warc_roundtrip", "text_html_extract", "text_url_canonicalize",
+    "pipeline_web_ingest", "stream_web_ingest", "web_host_stats",
+    "web_robots_filter", "web_robots_parse", "web_robots_wildcards",
+    "web_sitemap_parse", "web_sitemap_index", "web_robots_agent_fallback",
+    "web_robots_crawl_delay", "warc_record_pairing", "web_link_graph",
+    "web_anchor_text", "web_host_bm25f", "web_bm25f_incremental",
+    "web_bm25f_takedown", "web_bm25f_compacted", "web_registered_domain",
+    "pipeline_crawl_corpus", "stream_crawl_corpus", "pipeline_wet_export",
+    "pipeline_wat_export", "web_cdx_index", "web_cdx_point_lookup",
+    "web_cdx_member_contract", "web_robots_sitemap_discovery",
+    "text_main_content", "web_cdx_revisit", "web_warc_revisit_roundtrip",
+    "web_recrawl_plan", "stream_cdx_maintain", "stream_bm25f_maintain",
 ]
 VERIFY_HEAD_SIZE = 50
 _LEDGER_DIR = Path(__file__).resolve().parents[2]

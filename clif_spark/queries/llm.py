@@ -2175,21 +2175,6 @@ def dedup_video_phash(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _sql_dot(a: str, b: str, dim: int) -> str:
-    """Unrolled dot product (0.0-seeded left fold — the bit pattern of the
-    HOF ``aggregate(zip_with(...))`` form, but whole-stage-codegen'd; Spark
-    SQL array subscripts are 0-based).
-
-    Elements are cast float->double individually (exact, bit-preserving):
-    casting the whole array once looks cheaper but CollapseProject inlines
-    the array cast into every one of the 2×dim subscript references, so the
-    array materializes ~128× per row — measured 2× slower than the HOF form
-    it was meant to beat."""
-    return "0.0D" + "".join(
-        f" + CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(dim))
-
-
 # Shared by the gated fold row (as its oracle) and the benched Arrow
 # row (as its like-for-like DuckDB reference): one logical query —
 # brute-force cosine top-10 for 5 query vectors.
@@ -2613,10 +2598,8 @@ def text_quality_metrics(spark, sf_dir):
     """Per-document quality features + composite score (C4/Gopher-style
     filtering): token counts (whitespace + BPE-ish regex), stopword ratio,
     punctuation density, mean token length. Pure column expressions —
-    whole-stage codegen over the scan, zero *data-shaped* shuffles. One-shot
-    SQL mirroring ``functions.text`` (the operator forms, exercised by
-    text_lang_id / text_fingerprint / the dedup shingle path) expression for
-    expression.
+    whole-stage codegen over the scan, zero *data-shaped* shuffles, issued
+    as one-shot SQL.
 
     The REPARTITION hint spreads the regex/HOF compute across the session
     width when the input arrives as one split (small single-file scan —

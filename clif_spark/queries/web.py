@@ -7,8 +7,8 @@ web-ingest pipeline chaining them.
 Testdata carries no crawl archive, so the queries build one INSIDE the
 plan from the documents table (the planted-input pattern,
 queries/curation.py module docstring): page HTML and URLs are
-deterministic Catalyst expressions mirrored verbatim in the oracle, the
-WARC container is our own builder, and the gate verifies that the full
+deterministic SQL expressions whose one text both the engine and the
+oracle evaluate, the WARC container is our own builder, and the gate verifies that the full
 build -> serialize -> parse -> extract chain inverts to exactly what the
 oracle computes straight off the documents table. The WARC leg has no
 DuckDB equivalent, so its fidelity is what the roundtrip gate (rows +
@@ -17,7 +17,6 @@ schema + value hash over every doc) actually measures.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -25,50 +24,39 @@ from clif_spark import curation, io, warc
 from clif_spark.functions import url as urlfn
 from clif_spark.operators.core import fits_broadcast
 from clif_spark.operators.graph import FIXPOINT_MAX_ITERS
-from clif_spark.queries import memo_cols, query
+from clif_spark.queries import query
 
-# --- shared planted inputs (Spark expression + DuckDB mirror) -----------
+# --- shared planted inputs (one SQL text, read by both engines) ---------
+#
+# Each planted input is ONE dialect-neutral SQL expression: the oracle
+# splices it into DuckDB SQL and the engine evaluates the same string
+# through F.expr/selectExpr (Spark SQL and DataFrame calls lower to the
+# same Catalyst plan). Neutral means: CAST(... AS STRING) (Spark rejects
+# a bare VARCHAR, DuckDB reads STRING as VARCHAR), chr(10) for newlines
+# and character classes instead of backslash escapes (Spark's parser
+# unescapes '\d' to 'd', DuckDB keeps the backslash), and || only
+# between operands that need no arithmetic precedence. Pinned by
+# tests/test_web_fixtures.py.
 
 _URL_PRE = "https://corpus.example/"
 
-
-def _doc_url_col():
-    return F.concat(F.lit(_URL_PRE), F.col("source"), F.lit("/"),
-                    F.col("doc_id").cast("string"))
-
-
 _DOC_URL_SQL = (f"'{_URL_PRE}' || source || '/' || "
-                "CAST(doc_id AS VARCHAR)")
+                "CAST(doc_id AS STRING)")
 
 # Page template: a <style> block, an HTML comment, block + inline tags,
 # a <script> whose body contains < > && (tag-stripping alone would
 # corrupt it — the script rule must run first), and an entity probe
 # exercising decode order (&lt;b&gt; must become literal "<b>" AFTER tag
-# removal; &amp;amp; must single-pass to "&amp;").
-_PAGE_P1 = "<html><head><title>"
-_PAGE_P2 = ("</title><style>h1 {color: red}</style></head>"
-            "<body><!-- crawl ")
-_PAGE_P3 = " --><h1>Doc "
-_PAGE_P4 = ('</h1><p>entity probe: &lt;b&gt;&nbsp;&amp;amp; done</p><p>')
-_PAGE_P5 = ('</p><script type="text/javascript">'
-            "if (2<3 && 1>0) { var x = 1; }</script></body></html>")
-
-
-def _page_html_col():
-    return F.concat(
-        F.lit(_PAGE_P1), F.col("source"), F.lit(_PAGE_P2),
-        F.col("doc_id").cast("string"), F.lit(_PAGE_P3),
-        F.col("doc_id").cast("string"), F.lit(_PAGE_P4),
-        curation.html_escape(F.col("text")), F.lit(_PAGE_P5))
-
-
-def _page_html_sql() -> str:
-    esc = ("replace(replace(replace(text, '&', '&amp;'), '<', '&lt;'), "
-           "'>', '&gt;')")
-    return (f"'{_PAGE_P1}' || source || '{_PAGE_P2}' || "
-            f"CAST(doc_id AS VARCHAR) || '{_PAGE_P3}' || "
-            f"CAST(doc_id AS VARCHAR) || '{_PAGE_P4}' || {esc} || "
-            f"'{_PAGE_P5}'")
+# removal; &amp;amp; must single-pass to "&amp;"). The body text is
+# HTML-escaped (&, <, >: the minimum a conformant producer escapes).
+_PAGE_HTML_SQL = (
+    "'<html><head><title>' || source || '</title><style>h1 {color: red}"
+    "</style></head><body><!-- crawl ' || CAST(doc_id AS STRING) || "
+    "' --><h1>Doc ' || CAST(doc_id AS STRING) || '</h1><p>entity probe: "
+    "&lt;b&gt;&nbsp;&amp;amp; done</p><p>' || "
+    "replace(replace(replace(text, '&', '&amp;'), '<', '&lt;'), "
+    "'>', '&gt;') || '</p><script type=\"text/javascript\">"
+    "if (2<3 && 1>0) { var x = 1; }</script></body></html>'")
 
 
 def _sql_html_to_text(expr: str) -> str:
@@ -134,7 +122,7 @@ def io_warc_roundtrip(spark, sf_dir):
     exchange here is the test harness's own 8-file assembly."""
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", "text", _doc_url_col().alias("url"),
+        "doc_id", "text", F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     files = warc.assemble_warc_files(
         warc.build_warc_records(docs), gzip_records="mixed")
@@ -157,7 +145,7 @@ def _html_extract_oracle() -> str:
     pattern)."""
     return f"""
     WITH page AS (
-      SELECT doc_id, {_page_html_sql()} AS html FROM documents)
+      SELECT doc_id, {_PAGE_HTML_SQL} AS html FROM documents)
     SELECT doc_id, {_sql_html_to_text('html')} AS extracted,
            CAST(length({_sql_html_to_text('html')}) AS BIGINT) AS n_chars
     FROM page
@@ -179,7 +167,7 @@ def text_html_extract(spark, sf_dir):
     regex chain from the same step tables, so extraction rules are
     pinned in one place (curation.HTML_STRIP_STEPS)."""
     d = io.load_table(spark, sf_dir, "documents")
-    page = d.select("doc_id", _page_html_col().alias("html"))
+    page = d.select("doc_id", F.expr(_PAGE_HTML_SQL).alias("html"))
     ext = curation.html_to_text(F.col("html"))
     return page.select(
         "doc_id", ext.alias("extracted"),
@@ -188,6 +176,11 @@ def text_html_extract(spark, sf_dir):
 
 # --- D1: URL canonicalization + URL-level dedup -------------------------
 
+# Planted raw URLs. Percent-encoding decoys, each observable in the
+# canonical hash: %69 (unreserved -> must decode back into the shared
+# 'articles' collision group), %75tm_source (the tracking filter must
+# fire on the DECODED name), %2f (reserved -> must stay encoded with
+# UPPERCASE hex).
 _RAW_URL_SQL = """
          (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS' ELSE 'https' END)
          || '://'
@@ -196,45 +189,17 @@ _RAW_URL_SQL = """
          || '.Example.COM'
          || (CASE WHEN doc_id % 4 = 0 THEN ':443' ELSE '' END)
          || (CASE WHEN doc_id % 8 = 0 THEN '/art%69cles/'
-             ELSE '/articles/' END) || CAST(doc_id % 40 AS VARCHAR)
+             ELSE '/articles/' END) || CAST(doc_id % 40 AS STRING)
          || (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '' END)
          || (CASE WHEN doc_id % 2 = 0
              THEN '?' || (CASE WHEN doc_id % 16 = 0
                           THEN '%75tm_source' ELSE 'utm_source' END)
-                  || '=feed&id=' || CAST(doc_id % 40 AS VARCHAR)
-             ELSE '?id=' || CAST(doc_id % 40 AS VARCHAR)
+                  || '=feed&id=' || CAST(doc_id % 40 AS STRING)
+             ELSE '?id=' || CAST(doc_id % 40 AS STRING)
                   || '&utm_campaign=x' END)
          || (CASE WHEN doc_id % 9 = 0 THEN '&ref=a%2fb' ELSE '' END)
          || (CASE WHEN doc_id % 3 = 0 THEN '#sec1' ELSE '' END)
 """
-
-
-def _raw_url_col():
-    # percent-encoding decoys (mirrored in _RAW_URL_SQL), each
-    # observable in the canonical hash: %69 (unreserved -> must decode
-    # back into the shared 'articles' collision group), %75tm_source
-    # (the tracking filter must fire on the DECODED name), %2f
-    # (reserved -> must stay encoded with UPPERCASE hex)
-    did = F.col("doc_id")
-    return F.concat(
-        F.when(did % 3 == 0, F.lit("HTTPS")).otherwise(F.lit("https")),
-        F.lit("://"),
-        F.when(did % 5 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.when(did % 2 == 0, F.upper("source")).otherwise(F.col("source")),
-        F.lit(".Example.COM"),
-        F.when(did % 4 == 0, F.lit(":443")).otherwise(F.lit("")),
-        F.when(did % 8 == 0, F.lit("/art%69cles/"))
-         .otherwise(F.lit("/articles/")), (did % 40).cast("string"),
-        F.when(did % 6 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.when(did % 2 == 0,
-               F.concat(F.lit("?"),
-                        F.when(did % 16 == 0, F.lit("%75tm_source"))
-                         .otherwise(F.lit("utm_source")),
-                        F.lit("=feed&id="), (did % 40).cast("string")))
-         .otherwise(F.concat(F.lit("?id="), (did % 40).cast("string"),
-                             F.lit("&utm_campaign=x"))),
-        F.when(did % 9 == 0, F.lit("&ref=a%2fb")).otherwise(F.lit("")),
-        F.when(did % 3 == 0, F.lit("#sec1")).otherwise(F.lit("")))
 
 
 def _sql_pct(e: str) -> str:
@@ -345,12 +310,11 @@ def text_url_canonicalize(spark, sf_dir):
     canonical_url; URL-keyed skew is bounded (a canonical URL's dup
     group is refetch-count sized, not corpus-sized)."""
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "n_chars", _raw_url_col().alias("url"))
-    u = F.col("url")
+    raw = d.select("doc_id", "n_chars", F.expr(_RAW_URL_SQL).alias("url"))
     canon = raw.select(
         "doc_id", "n_chars",
-        urlfn.url_host(u).alias("host"),
-        urlfn.canonicalize_url(u).alias("canonical_url"))
+        urlfn.url_host("url").alias("host"),
+        urlfn.canonicalize_url("url").alias("canonical_url"))
     w = Window.partitionBy("canonical_url")
     return (canon
             .withColumn("dup_count", F.count(F.lit(1)).over(w).cast("long"))
@@ -370,7 +334,7 @@ _KEEP_CHARS = 60
     "pipeline_web_ingest",
     oracle=f"""
     WITH page AS (
-      SELECT doc_id, source, {_page_html_sql()} AS html FROM documents),
+      SELECT doc_id, source, {_PAGE_HTML_SQL} AS html FROM documents),
     ext AS (
       SELECT doc_id, source,
              {_sql_html_to_text('html')} AS t FROM page)
@@ -403,8 +367,8 @@ def pipeline_web_ingest(spark, sf_dir):
     char/token sums) — no float-sum ordering concerns."""
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", _page_html_col().alias("page"),
-        _doc_url_col().alias("url"),
+        "doc_id", F.expr(_PAGE_HTML_SQL).alias("page"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     files = warc.assemble_warc_files(
         warc.build_warc_records(docs, payload_col="page"),
@@ -448,8 +412,8 @@ def stream_web_ingest(spark, sf_dir):
 
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", _page_html_col().alias("page"),
-        _doc_url_col().alias("url"),
+        "doc_id", F.expr(_PAGE_HTML_SQL).alias("page"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     files = warc.assemble_warc_files(
         warc.build_warc_records(docs, payload_col="page"),
@@ -502,11 +466,10 @@ def web_host_stats(spark, sf_dir):
     docs, so the hot host's state is its URL count, not its row
     count."""
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "n_chars", _raw_url_col().alias("url"))
-    u = F.col("url")
+    raw = d.select("doc_id", "n_chars", F.expr(_RAW_URL_SQL).alias("url"))
     canon = raw.select(
-        urlfn.url_host(u).alias("host"),
-        urlfn.canonicalize_url(u).alias("canonical_url"))
+        urlfn.url_host("url").alias("host"),
+        urlfn.canonicalize_url("url").alias("canonical_url"))
     n_docs = F.count(F.lit(1)).cast("long")
     n_urls = F.count_distinct(F.col("canonical_url")).cast("long")
     return canon.groupBy("host").agg(
@@ -567,9 +530,9 @@ def web_robots_filter(spark, sf_dir):
     key and canonicalization shared with web_host_stats via the same
     oracle CTEs so one rule set governs all URL-keyed rows."""
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "n_chars", _raw_url_col().alias("url"))
+    raw = d.select("doc_id", "n_chars", F.expr(_RAW_URL_SQL).alias("url"))
     canon = raw.select(
-        urlfn.url_host(F.col("url")).alias("host"), "n_chars")
+        urlfn.url_host("url").alias("host"), "n_chars")
     deny = spark.createDataFrame(_DENY_HOSTS, "host string, reason string")
     # ONE corpus pass: broadcast left join marks each doc with its
     # host's deny reason (NULL = allowed), then one host-keyed
@@ -594,7 +557,7 @@ def web_robots_filter(spark, sf_dir):
 
 # --- D4: robots.txt PARSE -> rules -> prefix filter ----------------------
 
-# Planted robots.txt per host (Spark expression + DuckDB mirror): a
+# Planted robots.txt per host (one SQL text for both engines): a
 # comment, a googlebot-only group that must be IGNORED (its Disallow: /
 # would block everything), and a wildcard group with two user-agent
 # lines (RFC 9309 multi-agent groups) whose rules exercise every §2.2.2
@@ -611,37 +574,14 @@ def web_robots_filter(spark, sf_dir):
 #   Disallow:                 empty value = no-op marker, dropped
 # plus Crawl-delay directives: 99 in the decoy googlebot group (must be
 # ignored for '*') and k+1 in the wildcard group (the gated
-# web_robots_crawl_delay value — rule parsing must skip these lines).
-_ROBOTS_K_SQL = ("CAST(CAST(regexp_extract(source, '(\\d+)', 1) AS INT)"
-                 " % 4 AS VARCHAR)")
-
-
-def _robots_txt_col():
-    k = F.regexp_extract("source", r"(\d+)", 1).cast("int") % 4
-    ks = k.cast("string")
-    return F.concat(
-        F.lit("# robots for "), F.col("source"), F.lit(".example.com\n"),
-        F.lit("User-agent: googlebot\nDisallow: /\nCrawl-delay: 99\n\n"),
-        F.lit("User-agent: *\nUser-agent: ccbot\n"),
-        F.lit("Crawl-delay: "), (k + 1).cast("string"), F.lit("\n"),
-        F.lit("Disallow: /articles/"), ks, F.lit("\n"),
-        F.lit("Allow: /articles/"), ks, F.lit("5\n"),
-        F.lit("Disallow: /articles/25\n"),
-        F.lit("Allow: /articles/2\n"),
-        F.lit("Disallow: /cgi-bin/\n"),
-        F.lit("Disallow:\n"),
-        # Sitemap: discovery lines (group-INDEPENDENT per sitemaps.org;
-        # the rules/delay parsers must keep ignoring them — any leak
-        # into a prefix rule flips those rows' hashes). The second line
-        # pins case-insensitive directive matching AND the cross-host
-        # flag; same-k cdn hosts mirror the link-graph fixture.
-        F.lit("Sitemap: https://"), F.col("source"),
-        F.lit(".example.com/sm/articles.xml\n"),
-        F.when(k % 2 == 0,
-               F.concat(F.lit("SITEMAP: https://cdn"), ks,
-                        F.lit(".example.com/shared/Sitemap.xml")))
-         .otherwise(F.lit("")))
-
+# web_robots_crawl_delay value — rule parsing must skip these lines),
+# and Sitemap: discovery lines (group-INDEPENDENT per sitemaps.org; the
+# rules/delay parsers must keep ignoring them — any leak into a prefix
+# rule flips those rows' hashes). The second Sitemap line pins
+# case-insensitive directive matching AND the cross-host flag; same-k
+# cdn hosts mirror the link-graph fixture.
+_ROBOTS_K_SQL = ("CAST(CAST(regexp_extract(source, '([0-9]+)', 1) AS INT)"
+                 " % 4 AS STRING)")
 
 _ROBOTS_TXT_SQL = (
     "'# robots for ' || source || '.example.com' || chr(10) || "
@@ -649,7 +589,7 @@ _ROBOTS_TXT_SQL = (
     "'Crawl-delay: 99' || chr(10) "
     "|| chr(10) || "
     "'User-agent: *' || chr(10) || 'User-agent: ccbot' || chr(10) || "
-    f"'Crawl-delay: ' || CAST(CAST({_ROBOTS_K_SQL} AS INT) + 1 AS VARCHAR)"
+    f"'Crawl-delay: ' || CAST(CAST({_ROBOTS_K_SQL} AS INT) + 1 AS STRING)"
     " || chr(10) || "
     f"'Disallow: /articles/' || {_ROBOTS_K_SQL} || chr(10) || "
     f"'Allow: /articles/' || {_ROBOTS_K_SQL} || '5' || chr(10) || "
@@ -662,6 +602,15 @@ _ROBOTS_TXT_SQL = (
     f"(CASE WHEN CAST({_ROBOTS_K_SQL} AS INT) % 2 = 0 THEN "
     f"'SITEMAP: https://cdn' || {_ROBOTS_K_SQL} || "
     "'.example.com/shared/Sitemap.xml' ELSE '' END)")
+
+_ROBOTS_BODY = f"{_ROBOTS_TXT_SQL} AS robots_txt"
+
+
+def _host_bodies(d, *bodies: str):
+    """One row per corpus host: ``host`` plus the planted per-host
+    ``bodies`` (SQL text over ``source``, e.g. ``_ROBOTS_BODY``)."""
+    return d.select("source").distinct().selectExpr(
+        "source || '.example.com' AS host", *bodies)
 
 
 # Shared robots-rules CTE chain (srcs -> robots -> ... -> hostrules),
@@ -771,7 +720,7 @@ def web_robots_parse(spark, sf_dir):
     ``robots.txt`` bodies (planted, with a decoy googlebot-only group
     whose ``Disallow: /`` must be IGNORED, a multi-agent wildcard
     group, and rules exercising every RFC 9309 §2.2.2 precedence
-    behavior — see the fixture comment above _robots_txt_col) parse
+    behavior — see the fixture comment above _ROBOTS_K_SQL) parse
     into (host, prefix, allow) rules via
     ``functions.robots.robots_rules`` — posexplode + lag-window group
     detection, pure Catalyst — and apply to the canonicalized URL
@@ -795,19 +744,16 @@ def web_robots_parse(spark, sf_dir):
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "source", _raw_url_col().alias("url"))
+    raw = d.select("doc_id", "source", F.expr(_RAW_URL_SQL).alias("url"))
     urls = raw.select(
         "doc_id",
-        urlfn.url_host(F.col("url")).alias("host"),
-        urlfn.url_path(F.col("url")).alias("path"))
+        urlfn.url_host("url").alias("host"),
+        urlfn.url_path("url").alias("path"))
     # materialized ONCE (host-count sized): every rules/delay
     # derivation references this relation — without the checkpoint each
     # reference re-executes the distinct over the corpus (plan-asserted
     # scan bound in tests/test_plans.py)
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     rules = robotsfn.robots_rules(robots)
     counts = (rules.groupBy("host").agg(
         F.count_if(~F.col("allow")).cast("long").alias("n_disallow"),
@@ -849,18 +795,6 @@ _WILD_TXT_SQL = (
     "'Allow: /articles/3*' || chr(10) || "
     "'Disallow: /articles/*.' || chr(10) || "
     "'Disallow: /x*y$'")
-
-
-def _wild_txt_col():
-    k = (F.regexp_extract("source", r"(\d+)", 1).cast("int") % 4) \
-        .cast("string")
-    return F.concat(
-        F.lit("User-agent: googlebot\nDisallow: /\n\n"),
-        F.lit("User-agent: *\n"),
-        F.lit("Disallow: /articles/*"), k, F.lit("$\n"),
-        F.lit("Allow: /articles/3*\n"),
-        F.lit("Disallow: /articles/*.\n"),
-        F.lit("Disallow: /x*y$"))
 
 
 # DuckDB mirror of functions/robots.py::pattern_regex — NULL for
@@ -926,15 +860,13 @@ def web_robots_wildcards(spark, sf_dir):
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "source", _raw_url_col().alias("url"))
+    raw = d.select("doc_id", "source", F.expr(_RAW_URL_SQL).alias("url"))
     urls = raw.select(
         "doc_id",
-        urlfn.url_host(F.col("url")).alias("host"),
-        urlfn.url_path(F.col("url")).alias("path"))
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _wild_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+        urlfn.url_host("url").alias("host"),
+        urlfn.url_path("url").alias("path"))
+    robots = _host_bodies(
+        d, f"{_WILD_TXT_SQL} AS robots_txt").localCheckpoint(eager=True)
     rules = robotsfn.robots_rules(robots)
     tagged = robotsfn.apply_robots_rules(urls, rules)
     blocked = F.col("robots_blocked")
@@ -992,9 +924,9 @@ _SITEMAP_SQL = (
     "'<url><loc>https://' || source || '.example.com/articles/' || "
     f"{_ROBOTS_K_SQL} || '</loc>' || "
     f"'<lastmod>2026-0' || CAST(CAST({_ROBOTS_K_SQL} AS INT) + 1 "
-    "AS VARCHAR) || '-15</lastmod>' || "
+    "AS STRING) || '-15</lastmod>' || "
     f"'<priority>0.' || CAST(CAST({_ROBOTS_K_SQL} AS INT) + 1 "
-    "AS VARCHAR) || '</priority></url>' || chr(10) || "
+    "AS STRING) || '</priority></url>' || chr(10) || "
     "'<url><loc>https://' || source || '.example.com/articles/1' || "
     f"{_ROBOTS_K_SQL} || '</loc></url>' || chr(10) || "
     "'<url><loc>https://' || source || "
@@ -1003,26 +935,6 @@ _SITEMAP_SQL = (
     "'<url>' || chr(10) || '  <loc> https://' || source || "
     "'.example.com/articles/25 </loc>' || chr(10) || '</url>' || "
     "chr(10) || '</urlset>'")
-
-
-def _sitemap_col():
-    k = F.regexp_extract("source", r"(\d+)", 1).cast("int") % 4
-    ks = k.cast("string")
-    host = F.concat(F.col("source"), F.lit(".example.com"))
-    return F.concat(
-        F.lit('<?xml version="1.0" encoding="UTF-8"?>\n'),
-        F.lit('<urlset xmlns="http://www.sitemaps.org/schemas/'
-              'sitemap/0.9">\n'),
-        F.lit("<url><loc>https://"), host, F.lit("/articles/"), ks,
-        F.lit("</loc><lastmod>2026-0"), (k + 1).cast("string"),
-        F.lit("-15</lastmod><priority>0."), (k + 1).cast("string"),
-        F.lit("</priority></url>\n"),
-        F.lit("<url><loc>https://"), host, F.lit("/articles/1"), ks,
-        F.lit("</loc></url>\n"),
-        F.lit("<url><loc>https://"), host,
-        F.lit("/cgi-bin/tool</loc><priority>1.0</priority></url>\n"),
-        F.lit("<url>\n  <loc> https://"), host,
-        F.lit("/articles/25 </loc>\n</url>\n</urlset>"))
 
 
 @query(
@@ -1092,10 +1004,8 @@ def web_sitemap_parse(spark, sf_dir):
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    smaps = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _sitemap_col().alias("xml"))
-        .localCheckpoint(eager=True))
+    smaps = _host_bodies(d, f"{_SITEMAP_SQL} AS xml").localCheckpoint(
+        eager=True)
     blocks = smaps.select(
         "host",
         F.explode(F.regexp_extract_all(
@@ -1112,11 +1022,8 @@ def web_sitemap_parse(spark, sf_dir):
                                   1), F.lit("")).alias("lastmod"),
         (prio.cast("decimal(7,6)") * 1000000).cast("long")
          .alias("priority_micros"))
-    seeds = entries.withColumn("path", urlfn.url_path(F.col("loc")))
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    seeds = entries.withColumn("path", urlfn.url_path("loc"))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     rules = robotsfn.robots_rules(robots)
     return (robotsfn.apply_robots_rules(seeds, rules)
             .select("host", "loc", "lastmod", "priority_micros",
@@ -1141,7 +1048,7 @@ _SMIDX_SQL = (
     "'<sitemap><loc>https://' || source || "
     "'.example.com/sm/articles.xml</loc>' || "
     f"'<lastmod>2026-05-0' || CAST(CAST({_ROBOTS_K_SQL} AS INT) + 1 "
-    "AS VARCHAR) || '</lastmod></sitemap>' || chr(10) || "
+    "AS STRING) || '</lastmod></sitemap>' || chr(10) || "
     "'<sitemap>' || chr(10) || '  <loc> https://' || source || "
     "'.example.com/sm/news.xml </loc>' || chr(10) || '</sitemap>' || "
     "chr(10) || "
@@ -1154,7 +1061,7 @@ _SMCHILD_SQL = (
     "(CASE cname "
     "WHEN 'articles' THEN "
     "'<urlset><url><loc>https://' || host || '/articles/' || ck || "
-    "'</loc><priority>0.' || CAST(CAST(ck AS INT) + 1 AS VARCHAR) || "
+    "'</loc><priority>0.' || CAST(CAST(ck AS INT) + 1 AS STRING) || "
     "'</priority></url>' || chr(10) || "
     "'<url><loc>https://' || host || '/articles/9' || ck || "
     "'</loc></url></urlset>' "
@@ -1163,42 +1070,6 @@ _SMCHILD_SQL = (
     "'</loc><lastmod>2026-06-2' || ck || '</lastmod></url></urlset>' "
     "ELSE '<urlset><url><loc>https://' || host || "
     "'/extra/0</loc></url></urlset>' END)")
-
-
-def _smidx_col():
-    k = F.regexp_extract("source", r"(\d+)", 1).cast("int") % 4
-    host = F.concat(F.col("source"), F.lit(".example.com"))
-    return F.concat(
-        F.lit('<?xml version="1.0"?>\n<sitemapindex>\n'),
-        F.lit("<sitemap><loc>https://"), host,
-        F.lit("/sm/articles.xml</loc><lastmod>2026-05-0"),
-        (k + 1).cast("string"), F.lit("</lastmod></sitemap>\n"),
-        F.lit("<sitemap>\n  <loc> https://"), host,
-        F.lit("/sm/news.xml </loc>\n</sitemap>\n"),
-        F.when(k % 2 == 0,
-               F.concat(F.lit("<sitemap><loc>https://"), host,
-                        F.lit("/sm/extra.xml</loc></sitemap>\n")))
-         .otherwise(F.lit("")),
-        F.lit("</sitemapindex>"))
-
-
-def _smchild_body() -> Column:
-    ck = F.col("ck")
-    host = F.col("host")
-    return (
-        F.when(F.col("cname") == "articles", F.concat(
-            F.lit("<urlset><url><loc>https://"), host,
-            F.lit("/articles/"), ck, F.lit("</loc><priority>0."),
-            (ck.cast("int") + 1).cast("string"),
-            F.lit("</priority></url>\n<url><loc>https://"), host,
-            F.lit("/articles/9"), ck, F.lit("</loc></url></urlset>")))
-         .when(F.col("cname") == "news", F.concat(
-            F.lit("<urlset><url><loc>https://"), host, F.lit("/news/"),
-            ck, F.lit("</loc><lastmod>2026-06-2"), ck,
-            F.lit("</lastmod></url></urlset>")))
-         .otherwise(F.concat(
-            F.lit("<urlset><url><loc>https://"), host,
-            F.lit("/extra/0</loc></url></urlset>"))))
 
 
 @query(
@@ -1266,11 +1137,8 @@ def web_sitemap_index(spark, sf_dir):
     50k-per-file cap, and a real fetch step would slot in as a
     per-child source read at child-file-count parallelism."""
     d = io.load_table(spark, sf_dir, "documents")
-    k = F.regexp_extract("source", r"(\d+)", 1).cast("int") % 4
-    idx = d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _smidx_col().alias("xml"),
-        k.cast("string").alias("ck"))
+    idx = _host_bodies(d, f"{_SMIDX_SQL} AS xml",
+                       f"{_ROBOTS_K_SQL} AS ck")
     blocks = idx.select(
         "host", "ck",
         F.explode(F.regexp_extract_all(
@@ -1287,7 +1155,7 @@ def web_sitemap_index(spark, sf_dir):
         F.regexp_extract("sitemap_loc", r"/sm/([a-z]+)\.xml$", 1))
     bodies = fetched.select(
         "host", "sitemap_loc", "index_lastmod",
-        _smchild_body().alias("body"))
+        F.expr(_SMCHILD_SQL).alias("body"))
     leaf = bodies.select(
         "host", "sitemap_loc", "index_lastmod",
         F.explode(F.regexp_extract_all(
@@ -1403,19 +1271,16 @@ def web_robots_agent_fallback(spark, sf_dir):
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "source", _raw_url_col().alias("url"))
+    raw = d.select("doc_id", "source", F.expr(_RAW_URL_SQL).alias("url"))
     urls = raw.select(
         "doc_id",
-        urlfn.url_host(F.col("url")).alias("host"),
-        urlfn.url_path(F.col("url")).alias("path"))
+        urlfn.url_host("url").alias("host"),
+        urlfn.url_path("url").alias("path"))
     # materialized ONCE (host-count sized): every rules/delay
     # derivation references this relation — without the checkpoint each
     # reference re-executes the distinct over the corpus (plan-asserted
     # scan bound in tests/test_plans.py)
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     df = urls
     for agent in ("googlebot", "newsbot", "ccbot"):
         rules = robotsfn.robots_rules(robots, agent=agent)
@@ -1471,18 +1336,15 @@ def web_robots_crawl_delay(spark, sf_dir):
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    raw = d.select("doc_id", "source", _raw_url_col().alias("url"))
-    hd = (raw.select(urlfn.url_host(F.col("url")).alias("host"))
+    raw = d.select("doc_id", "source", F.expr(_RAW_URL_SQL).alias("url"))
+    hd = (raw.select(urlfn.url_host("url").alias("host"))
           .groupBy("host")
           .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
     # materialized ONCE (host-count sized): every rules/delay
     # derivation references this relation — without the checkpoint each
     # reference re-executes the distinct over the corpus (plan-asserted
     # scan bound in tests/test_plans.py)
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     delays = robotsfn.robots_crawl_delay(robots)
     return (hd.join(delays, "host")
             .select("host", "n_docs",
@@ -1530,7 +1392,7 @@ def warc_record_pairing(spark, sf_dir):
     uri-count sized."""
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", "text", "source", _doc_url_col().alias("url"),
+        "doc_id", "text", "source", F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     req_payload = F.concat(
         F.lit("GET /"), F.col("source"), F.lit("/"),
@@ -1610,8 +1472,8 @@ def warc_record_pairing(spark, sf_dir):
 #   mailto: / ?q=1       non-hierarchical -> dropped
 # Out-degrees land at 3-5 with cdn hosts as dangling sinks — real
 # structure for PageRank to converge on.
-_SRC_N = "CAST(regexp_extract(source, '(\\d+)', 1) AS INT)"
-_M_SQL = "CAST(doc_id % 40 AS VARCHAR)"
+_SRC_N = "CAST(regexp_extract(source, '([0-9]+)', 1) AS INT)"
+_M_SQL = "CAST(doc_id % 40 AS STRING)"
 # The % 20 ring modulus below caps the host-graph diameter well under
 # FIXPOINT_MAX_ITERS; the recursive oracles bound their recursion at
 # that SAME constant, so growing the ring past the budget fails both
@@ -1620,7 +1482,7 @@ _M_SQL = "CAST(doc_id % 40 AS VARCHAR)"
 
 _LINK_PAGE_SQL = (
     "'<html><body><a href=\"https://src' || "
-    f"CAST(({_SRC_N} + 1) % 20 AS VARCHAR) || "
+    f"CAST(({_SRC_N} + 1) % 20 AS STRING) || "
     f"'.example.com' || (CASE WHEN {_SRC_N} % 4 = 0 THEN '/dot/..' "
     f"ELSE '' END) || '/p/' || {_M_SQL} || '\">n</a>' || "
     f"(CASE WHEN {_SRC_N} % 3 = 0 THEN "
@@ -1631,47 +1493,16 @@ _LINK_PAGE_SQL = (
     f"'<a href=\"/a/' || {_M_SQL} || '/../up/' || {_M_SQL} || '\">v</a>' "
     "ELSE '' END) || "
     f"'<a href=\"./sub/' || {_M_SQL} || '?id=' || {_M_SQL} || '\">w</a>' || "
-    f"'<a href=\"//cdn' || CAST({_SRC_N} % 5 AS VARCHAR) || "
+    f"'<a href=\"//cdn' || CAST({_SRC_N} % 5 AS STRING) || "
     f"'.example.com' || (CASE WHEN {_SRC_N} % 2 = 0 THEN '/dl/..' "
     "ELSE '' END) || '/x\">c</a>' || "
     "'<a href=\"mailto:x@y\">m</a><a href=\"?q=1\">q</a>'"
     " || '</body></html>'")
 
 
-def _link_page_col():
-    n = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    m = (F.col("doc_id") % 40).cast("string")
-    return F.concat(
-        F.lit('<html><body><a href="https://src'),
-        ((n + 1) % 20).cast("string"),
-        F.lit(".example.com"),
-        F.when(n % 4 == 0, F.lit("/dot/..")).otherwise(F.lit("")),
-        F.lit("/p/"), m, F.lit('">n</a>'),
-        F.when(n % 3 == 0,
-               F.concat(F.lit('<a href="/local/'), m, F.lit('">s</a>')))
-         .otherwise(F.lit("")),
-        F.lit('<a href="../up/'), m, F.lit('">u</a>'),
-        F.when(n % 3 == 1,
-               F.concat(F.lit('<a href="/a/'), m, F.lit("/../up/"), m,
-                        F.lit('">v</a>'))).otherwise(F.lit("")),
-        F.lit('<a href="./sub/'), m, F.lit("?id="), m, F.lit('">w</a>'),
-        F.lit('<a href="//cdn'), (n % 5).cast("string"),
-        F.lit(".example.com"),
-        F.when(n % 2 == 0, F.lit("/dl/..")).otherwise(F.lit("")),
-        F.lit('/x">c</a>'),
-        F.lit('<a href="mailto:x@y">m</a><a href="?q=1">q</a>'),
-        F.lit("</body></html>"))
-
-
-def _link_base_path_col():
-    # every seventh doc has the EMPTY base path (page URL is bare
-    # scheme://host): its relative hrefs exercise the RFC 3986 §5.3
-    # empty-base merge ('/' + ref), ADVICE r11
-    return F.when(F.col("doc_id") % 7 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("/a/"), (F.col("doc_id") % 40).cast("string"),
-                 F.lit("/page")))
-
-
+# Every seventh doc has the EMPTY base path (page URL is bare
+# scheme://host): its relative hrefs exercise the RFC 3986 §5.3
+# empty-base merge ('/' + ref), ADVICE r11.
 _LINK_BASE_PATH_SQL = (f"(CASE WHEN doc_id % 7 = 0 THEN '' "
                        f"ELSE '/a/' || {_M_SQL} || '/page' END)")
 
@@ -1761,24 +1592,14 @@ def _link_urls(spark, sf_dir):
     pages -> href explode -> full RFC 3986 reference resolution against
     the page's scheme/host/base-path (functions.url.resolve_href)."""
     d = io.load_table(spark, sf_dir, "documents")
-
-    def _cols():
-        pages = [
-            F.concat("source", F.lit(".example.com")).alias("src_host"),
-            _link_base_path_col().alias("base_path"),
-            _link_page_col().alias("html")]
-        href = F.explode(F.regexp_extract_all(
-            "html", F.lit(r'href="([^"]+)"'), F.lit(1))).alias("href")
-        resolved = urlfn.resolve_href(
-            F.col("href"), F.lit("https"), F.col("src_host"),
-            base_path=F.col("base_path"))
-        return pages, href, resolved
-
-    # memoized name-bound trees (queries.memo_cols): the resolver tree
-    # alone is ~0.3 s of py4j construction and every D5 row rebuilds it
-    page_cols, href, resolved = memo_cols("link_url_cols", _cols)
-    pages = d.select("doc_id", *page_cols)
-    hrefs = pages.select("src_host", "base_path", href)
+    pages = d.selectExpr(
+        "source || '.example.com' AS src_host",
+        f"{_LINK_BASE_PATH_SQL} AS base_path", f"{_LINK_PAGE_SQL} AS html")
+    hrefs = pages.selectExpr(
+        "src_host", "base_path",
+        "explode(regexp_extract_all(html, 'href=\"([^\"]+)\"', 1)) AS href")
+    resolved = urlfn.resolve_href("href", "'https'", "src_host",
+                                  base_path="base_path")
     return (hrefs.select("src_host", resolved.alias("u"))
             .filter(F.col("u").isNotNull()))
 
@@ -1788,7 +1609,7 @@ def _link_edges(spark, sf_dir):
     input."""
     return _link_urls(spark, sf_dir).select(
         F.col("src_host").alias("src"),
-        urlfn.url_host(F.col("u")).alias("dst"))
+        urlfn.url_host("u").alias("dst"))
 
 
 def _weighted_host_edges(spark, sf_dir):
@@ -1797,7 +1618,7 @@ def _weighted_host_edges(spark, sf_dir):
     its link-multiplicity weight (the weighted oracles' ``we``)."""
     return (_link_urls(spark, sf_dir)
             .select("src_host", "u",
-                    urlfn.url_host(F.col("u")).alias("dst_host"))
+                    urlfn.url_host("u").alias("dst_host"))
             .groupBy("src_host", "dst_host")
             .agg(F.count_distinct(F.col("u")).cast("long")
                  .alias("n_urls")))
@@ -1845,7 +1666,7 @@ def web_link_graph(spark, sf_dir):
     scan."""
     return (_link_urls(spark, sf_dir)
             .select("src_host", "u",
-                    urlfn.url_host(F.col("u")).alias("dst_host"))
+                    urlfn.url_host("u").alias("dst_host"))
             .groupBy("src_host", "dst_host")
             .agg(F.count(F.lit(1)).cast("long").alias("n_links"),
                  F.count_distinct(F.col("u")).cast("long")
@@ -1875,7 +1696,7 @@ _ANCHOR_EXTRA_SQL = (f"(CASE WHEN {_SRC_N} % 3 = 0 THEN "
                      "'\"><b>hot</b> link</a>' "
                      f"WHEN {_SRC_N} % 3 = 2 THEN "
                      "'<a href=\"https://www.src' || "
-                     f"CAST({_SRC_N} AS VARCHAR) || "
+                     f"CAST({_SRC_N} AS STRING) || "
                      f"'.example.com:443/w' || {_M_SQL} || "
                      "'\">hot www</a>' ELSE '' END)")
 _ANCHOR_PAT = '<a href="([^"]+)">(.*?)</a>'
@@ -2001,28 +1822,10 @@ def _anchor_rows_from(d):
     delivery-scoped form web_bm25f_incremental folds per delivery
     (anchors belong to the page that CARRIES them, so splitting the
     corpus splits the anchor relation exactly)."""
-    def _page_cols():
-        n = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-        m = (F.col("doc_id") % 40).cast("string")
-        extra = F.when(
-            n % 3 == 0,
-            F.concat(F.lit('<a href="/local/'), m,
-                     F.lit('"><b>hot</b> link</a>'))
-        ).when(
-            n % 3 == 2,
-            F.concat(F.lit('<a href="https://www.src'), n.cast("string"),
-                     F.lit(".example.com:443/w"), m,
-                     F.lit('">hot www</a>'))
-        ).otherwise(F.lit(""))
-        return [
-            F.concat("source", F.lit(".example.com")).alias("src_host"),
-            _link_base_path_col().alias("base_path"),
-            F.concat(_link_page_col(), extra).alias("html")]
-
-    # name-bound column trees memoized per context (queries.memo_cols):
-    # this builder runs up to three times per web_bm25f_incremental
-    # execution and costs ~1 s of pure py4j chatter per build
-    pages = d.select(*memo_cols("anchor_page_cols", _page_cols))
+    pages = d.selectExpr(
+        "source || '.example.com' AS src_host",
+        f"{_LINK_BASE_PATH_SQL} AS base_path",
+        f"{_LINK_PAGE_SQL} || {_ANCHOR_EXTRA_SQL} AS html")
     # ONE regex pass over the page (r17, guide §1.2 per-task work): the
     # previous shape ran regexp_extract_all over the FULL html twice —
     # once per capture group — then zipped positionally; this one
@@ -2037,23 +1840,15 @@ def _anchor_rows_from(d):
     # it once per branch of the resolver's CASE tree (~15x; measured
     # 2.4 s vs 1.0 s at sf0.1 — CollapseProject re-inlines a
     # projected alias, a lambda body is safe).
-    def _out_cols():
-        matches = F.regexp_extract_all("html", F.lit(_ANCHOR_PAT),
-                                       F.lit(0))
-        a = F.explode(F.transform(matches, lambda m: F.struct(
-            F.regexp_extract(m, _ANCHOR_PAT, 1).alias("hrefs"),
-            F.regexp_extract(m, _ANCHOR_PAT, 2).alias("rawtexts")))) \
-            .alias("a")
-        resolved = urlfn.resolve_href(
-            F.col("a.hrefs"), F.lit("https"), F.col("src_host"),
-            base_path=F.col("base_path"))
-        atext = F.trim(F.regexp_replace(F.regexp_replace(
-            F.col("a.rawtexts"), F.lit("<[^>]*>"), F.lit(" ")),
-            F.lit("[ \\t]+"), F.lit(" ")))
-        return a, resolved, atext
-
-    a, resolved, atext = memo_cols("anchor_out_cols", _out_cols)
-    z = pages.select("src_host", "base_path", a)
+    z = pages.selectExpr(
+        "src_host", "base_path",
+        f"explode(transform(regexp_extract_all(html, '{_ANCHOR_PAT}', 0), "
+        f"m -> struct(regexp_extract(m, '{_ANCHOR_PAT}', 1) AS hrefs, "
+        f"regexp_extract(m, '{_ANCHOR_PAT}', 2) AS rawtexts))) AS a")
+    resolved = urlfn.resolve_href("a.hrefs", "'https'", "src_host",
+                                  base_path="base_path")
+    atext = F.expr("trim(regexp_replace(regexp_replace(a.rawtexts, "
+                   r"'<[^>]*>', ' '), r'[ \t]+', ' '))")
     return (z.select("src_host", resolved.alias("dst_url"),
                      atext.alias("atext"))
             .filter(F.col("dst_url").isNotNull()))
@@ -2202,7 +1997,7 @@ def _bm25f_counts(d):
     bcounts = (btoks.groupBy("host", "term")
                .agg(F.count(F.lit(1)).cast("long").alias("c")))
     atoks = (_anchor_rows_from(d)
-             .select(urlfn.url_host(F.col("dst_url")).alias("host"),
+             .select(urlfn.url_host("dst_url").alias("host"),
                      "atext")
              .filter(F.col("atext") != "")
              .select("host", F.explode(F.split(F.lower("atext"), " "))
@@ -2893,7 +2688,9 @@ def web_pagerank_warm_start(spark, sf_dir):
 
     import tempfile
 
-    edges = _link_edges(spark, sf_dir)
+    # materialized once: both pagerank calls read these edges, and an
+    # uncheckpointed lineage would rerun the corpus link extraction
+    edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
     r3 = G.pagerank(edges, iterations=3)
     root = tempfile.mkdtemp(prefix="clif_rank_store_")
     STR.upsert_cdc_snapshot(
@@ -3765,13 +3562,13 @@ def web_crawl_frontier(spark, sf_dir):
 
     links = _link_urls(spark, sf_dir)
     frontier = (links.select(
-        urlfn.canonicalize_url(F.col("u")).alias("url"),
-        urlfn.url_host(F.col("u")).alias("host"),
-        urlfn.url_path(F.col("u")).alias("path"))
+        urlfn.canonicalize_url("u").alias("url"),
+        urlfn.url_host("u").alias("host"),
+        urlfn.url_path("u").alias("path"))
         .groupBy("url", "host", "path")
         .agg(F.count(F.lit(1)).cast("long").alias("n_referrers")))
     edges = links.select(F.col("src_host").alias("src"),
-                         urlfn.url_host(F.col("u")).alias("dst"))
+                         urlfn.url_host("u").alias("dst"))
     ranks = (G.pagerank(edges, iterations=3)
              .select(F.col("node").alias("host"), "rank_micros"))
     d = io.load_table(spark, sf_dir, "documents")
@@ -3779,10 +3576,7 @@ def web_crawl_frontier(spark, sf_dir):
     # derivation references this relation — without the checkpoint each
     # reference re-executes the distinct over the corpus (plan-asserted
     # scan bound in tests/test_plans.py)
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     rules = robotsfn.robots_rules(robots)
     delays = robotsfn.robots_crawl_delay(robots)
     tagged = robotsfn.apply_robots_rules(frontier, rules)
@@ -3825,7 +3619,7 @@ _CRAWL_FUNNEL_ORACLE = f"""
     {_ROBOTS_RULES_CTES},
     {_ROBOTS_VERDICT_CTES},
     page AS (
-      SELECT doc_id, source, {_page_html_sql()} AS html FROM documents),
+      SELECT doc_id, source, {_PAGE_HTML_SQL} AS html FROM documents),
     ext AS (
       SELECT doc_id, {_sql_html_to_text('html')} AS t FROM page),
     doc AS (
@@ -3888,8 +3682,8 @@ def pipeline_crawl_corpus(spark, sf_dir):
 
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", _page_html_col().alias("page"),
-        _doc_url_col().alias("url"),
+        "doc_id", F.expr(_PAGE_HTML_SQL).alias("page"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     files = warc.assemble_warc_files(
         warc.build_warc_records(docs, payload_col="page"),
@@ -3902,20 +3696,16 @@ def pipeline_crawl_corpus(spark, sf_dir):
          .alias("source"),
         curation.html_to_text(F.col("payload").cast("string"))
          .alias("t"))
-    raw = _raw_url_col()
     enriched = base.select(
         "doc_id", "t",
-        urlfn.url_host(raw).alias("host"),
-        urlfn.url_path(raw).alias("path"),
-        urlfn.canonicalize_url(raw).alias("canonical_url"))
+        urlfn.url_host(_RAW_URL_SQL).alias("host"),
+        urlfn.url_path(_RAW_URL_SQL).alias("path"),
+        urlfn.canonicalize_url(_RAW_URL_SQL).alias("canonical_url"))
     # materialized ONCE (host-count sized): every rules/delay
     # derivation references this relation — without the checkpoint each
     # reference re-executes the distinct over the corpus (plan-asserted
     # scan bound in tests/test_plans.py)
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     rules = robotsfn.robots_rules(robots)
     tagged = robotsfn.apply_robots_rules(enriched, rules)
 
@@ -3993,8 +3783,8 @@ def stream_crawl_corpus(spark, sf_dir):
 
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", _page_html_col().alias("page"),
-        _doc_url_col().alias("url"),
+        "doc_id", F.expr(_PAGE_HTML_SQL).alias("page"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     files = warc.assemble_warc_files(
         warc.build_warc_records(docs, payload_col="page"),
@@ -4005,10 +3795,7 @@ def stream_crawl_corpus(spark, sf_dir):
     # derivation references this relation — without the checkpoint each
     # reference re-executes the distinct over the corpus (plan-asserted
     # scan bound in tests/test_plans.py)
-    robots = (d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
-        .localCheckpoint(eager=True))
+    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
     rules = robotsfn.robots_rules(robots).localCheckpoint(eager=True)
     counters_root = tempfile.mkdtemp(prefix="clif_funnel_counters_")
     kept_root = tempfile.mkdtemp(prefix="clif_funnel_kept_")
@@ -4029,12 +3816,11 @@ def stream_crawl_corpus(spark, sf_dir):
              .alias("source"),
             curation.html_to_text(F.col("payload").cast("string"))
              .alias("t"))
-        raw = _raw_url_col()
         enriched = base.select(
             "doc_id", "t",
-            urlfn.url_host(raw).alias("host"),
-            urlfn.url_path(raw).alias("path"),
-            urlfn.canonicalize_url(raw).alias("canonical_url"))
+            urlfn.url_host(_RAW_URL_SQL).alias("host"),
+            urlfn.url_path(_RAW_URL_SQL).alias("path"),
+            urlfn.canonicalize_url(_RAW_URL_SQL).alias("canonical_url"))
         tagged = robotsfn.apply_robots_rules(enriched, rules)
         qpass = (curation.quality_classifier_logit(
             F.col("t"), dim=1024, weight_of=w_of) / F.lit(1000)) > 0
@@ -4094,7 +3880,7 @@ def stream_crawl_corpus(spark, sf_dir):
     "pipeline_wet_export",
     oracle=f"""
     WITH page AS (
-      SELECT doc_id, {_page_html_sql()} AS html FROM documents)
+      SELECT doc_id, {_PAGE_HTML_SQL} AS html FROM documents)
     SELECT doc_id,
            {_sql_html_to_text('html')} AS extracted,
            CAST(length({_sql_html_to_text('html')}) AS BIGINT) AS n_chars,
@@ -4124,8 +3910,8 @@ def pipeline_wet_export(spark, sf_dir):
     harness itself plants."""
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", _page_html_col().alias("page"),
-        _doc_url_col().alias("url"),
+        "doc_id", F.expr(_PAGE_HTML_SQL).alias("page"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     warc_files = warc.assemble_warc_files(
         warc.build_warc_records(docs, payload_col="page"),
@@ -4193,8 +3979,8 @@ def pipeline_wat_export(spark, sf_dir):
     pass between them, zero shuffles."""
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", _link_page_col().alias("page"),
-        _doc_url_col().alias("url"),
+        "doc_id", F.expr(_LINK_PAGE_SQL).alias("page"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     warc_files = warc.assemble_warc_files(
         warc.build_warc_records(docs, payload_col="page"),
@@ -4309,7 +4095,7 @@ def _cdx_files_and_index(spark, sf_dir, members: bool = False):
     range reads skip prefix decompression entirely."""
     d = io.load_table(spark, sf_dir, "documents")
     docs = d.select(
-        "doc_id", "text", _doc_url_col().alias("url"),
+        "doc_id", "text", F.expr(_DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % _shard_count(d)).alias("file_id"))
     files = warc.assemble_warc_files(
         warc.build_warc_records(docs), gzip_records="mixed")
@@ -4581,9 +4367,7 @@ def web_robots_sitemap_discovery(spark, sf_dir):
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    robots = d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _robots_txt_col().alias("robots_txt"))
+    robots = _host_bodies(d, _ROBOTS_BODY)
     return robotsfn.robots_sitemaps(robots)
 
 
@@ -4606,36 +4390,15 @@ _MAIN_PAGE_SQL = (
     "<nav><a href=\"/\">Home</a> <a href=\"/about\">About us</a> "
     "<a href=\"/contact\">Contact page</a></nav>"
     "<div class=\"ad\">Ad</div>"
-    "<p>' || substr(text, 1, 120) || ' article body paragraph number ' "
-    "|| CAST(doc_id % 40 AS VARCHAR) || "
+    "<p>' || substring(text, 1, 120) || ' article body paragraph number ' "
+    "|| CAST(doc_id % 40 AS STRING) || "
     "' with one inline <a href=\"/ref\">reference</a> citation "
     "kept as content.</p>"
     "<p>Second short but sufficient prose block for doc ' || "
-    "CAST(doc_id AS VARCHAR) || ' here.</p>"
+    "CAST(doc_id AS STRING) || ' here.</p>"
     "<footer><a href=\"/tos\">Terms of service</a> "
     "<a href=\"/privacy\">Privacy policy</a> (c) corp</footer>"
     "</body></html>'")
-
-
-def _main_page_col():
-    return F.concat(
-        F.lit('<html><head><style>nav{color:red}</style>'
-              '<script>var x = "<a href=junk>decoy</a>";</script>'
-              '</head><body>'
-              '<nav><a href="/">Home</a> <a href="/about">About us</a> '
-              '<a href="/contact">Contact page</a></nav>'
-              '<div class="ad">Ad</div><p>'),
-        F.substring(F.col("text"), 1, 120),
-        F.lit(" article body paragraph number "),
-        (F.col("doc_id") % 40).cast("string"),
-        F.lit(' with one inline <a href="/ref">reference</a> citation '
-              "kept as content.</p><p>Second short but sufficient prose "
-              "block for doc "),
-        F.col("doc_id").cast("string"),
-        F.lit(" here.</p>"
-              '<footer><a href="/tos">Terms of service</a> '
-              '<a href="/privacy">Privacy policy</a> (c) corp</footer>'
-              "</body></html>"))
 
 
 def _main_content_oracle() -> str:
@@ -4705,7 +4468,7 @@ def text_main_content(spark, sf_dir):
     # values are the same array, so main_text and n_blocks are
     # bit-identical (same-session A/B: 0.73 vs 1.28 s, results
     # compared equal).
-    kept = curation.main_content_blocks(_main_page_col())
+    kept = curation.main_content_blocks(F.expr(_MAIN_PAGE_SQL))
     return (d.select("doc_id", kept.alias("__kept"))
             .select("doc_id",
                     F.array_join(
@@ -4775,10 +4538,10 @@ def web_cdx_revisit(spark, sf_dir):
     Python, no window. The standing index side is what
     ``web_cdx_index`` persists crawl over crawl."""
     d = io.load_table(spark, sf_dir, "documents")
-    cur = d.select("doc_id", _doc_url_col().alias("uri"),
+    cur = d.select("doc_id", F.expr(_DOC_URL_SQL).alias("uri"),
                    F.md5("text").alias("digest"))
     prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(_doc_url_col().alias("uri"),
+            .select(F.expr(_DOC_URL_SQL).alias("uri"),
                     F.when(F.col("doc_id") % 5 == 0,
                            F.md5(F.concat("text", F.lit("-v0"))))
                      .otherwise(F.md5("text")).alias("digest")))
@@ -4856,7 +4619,7 @@ def web_warc_revisit_roundtrip(spark, sf_dir):
                        F.concat("text", F.lit("-v0")))
                 .otherwise(F.col("text")))
     prev_docs = (d.filter(F.col("doc_id") % 4 != 3)
-                 .select("doc_id", _doc_url_col().alias("url"),
+                 .select("doc_id", F.expr(_DOC_URL_SQL).alias("url"),
                          prev_pay.alias("ptext"),
                          (F.col("doc_id") % nshards).alias("file_id")))
     prev_files = warc.assemble_warc_files(
@@ -4870,7 +4633,7 @@ def web_warc_revisit_roundtrip(spark, sf_dir):
                         "file_id", "record_offset")
                 .localCheckpoint(eager=True))
     # --- crawl 2: emit revisit where the indexed digest matches ---
-    cur = (d.select("doc_id", _doc_url_col().alias("url"), "text",
+    cur = (d.select("doc_id", F.expr(_DOC_URL_SQL).alias("url"), "text",
                     F.md5("text").alias("digest"),
                     (F.col("doc_id") % nshards).alias("file_id"))
            .join(cdx_prev.select("url", "pdigest", "prev_id"),
@@ -4985,10 +4748,10 @@ def web_mirror_sets(spark, sf_dir):
     from clif_spark.operators import graph as G
 
     d = io.load_table(spark, sf_dir, "documents")
-    cur = d.select(_doc_url_col().alias("uri"),
+    cur = d.select(F.expr(_DOC_URL_SQL).alias("uri"),
                    F.md5("text").alias("digest"))
     prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(_doc_url_col().alias("uri"),
+            .select(F.expr(_DOC_URL_SQL).alias("uri"),
                     F.when(F.col("doc_id") % 5 == 0,
                            F.md5(F.concat("text", F.lit("-v0"))))
                      .otherwise(F.md5("text")).alias("digest")))
@@ -5079,10 +4842,10 @@ def web_mirror_sets_incremental(spark, sf_dir):
     from clif_spark.operators import graph as G
 
     d = io.load_table(spark, sf_dir, "documents")
-    cur = d.select(_doc_url_col().alias("uri"),
+    cur = d.select(F.expr(_DOC_URL_SQL).alias("uri"),
                    F.md5("text").alias("digest"))
     prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(_doc_url_col().alias("uri"),
+            .select(F.expr(_DOC_URL_SQL).alias("uri"),
                     F.when(F.col("doc_id") % 5 == 0,
                            F.md5(F.concat("text", F.lit("-v0"))))
                      .otherwise(F.md5("text")).alias("digest")))
@@ -5105,7 +4868,7 @@ def web_mirror_sets_incremental(spark, sf_dir):
     # crawl 3 delta: every 6th URL now serves its successor's payload
     moved = (d.filter(F.col("doc_id") % 6 == 0)
              .select((F.col("doc_id") + 1).alias("nid"),
-                     _doc_url_col().alias("uri")))
+                     F.expr(_DOC_URL_SQL).alias("uri")))
     caps3 = (moved.join(d.select(F.col("doc_id").alias("nid"), "text"),
                         "nid")
              .select(F.col("uri").alias("src"),
@@ -5186,11 +4949,8 @@ def web_recrawl_plan(spark, sf_dir):
     the dedup exchange a crawler pays anyway; sitemap parse stays
     host-count sized (the web_sitemap_parse plan)."""
     d = io.load_table(spark, sf_dir, "documents")
-    k = F.regexp_extract("source", r"(\d+)", 1).cast("int") % 4
-    smaps = d.select("source").distinct().select(
-        F.concat("source", F.lit(".example.com")).alias("host"),
-        _sitemap_col().alias("xml"), k.alias("k")).localCheckpoint(
-            eager=True)
+    smaps = _host_bodies(d, f"{_SITEMAP_SQL} AS xml",
+                         f"{_SRC_N} % 4 AS k").localCheckpoint(eager=True)
     blocks = smaps.select(
         "host", "k",
         F.explode(F.regexp_extract_all(

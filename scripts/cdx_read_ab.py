@@ -45,7 +45,7 @@ def main() -> None:
     nshards = (int(sys.argv[3]) if len(sys.argv) > 3
                else _web._shard_count(d))
     docs = d.select(
-        "doc_id", "text", _web._doc_url_col().alias("url"),
+        "doc_id", "text", F.expr(_web._DOC_URL_SQL).alias("url"),
         (F.col("doc_id") % nshards).alias("file_id"))
     # ALL-GZIP layout: the prefix-decompression cost is the comparison
     files = warc.assemble_warc_files(

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from clif_spark import io, warc
-from clif_spark.queries.web import _doc_url_col, _shard_count
+from clif_spark.queries.web import _DOC_URL_SQL, _shard_count
 from clif_spark.session import build_session
 
 
@@ -32,11 +32,11 @@ def main() -> None:
     d = io.load_table(spark, sf_dir, "documents")
     nshards = _shard_count(d)
     prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(_doc_url_col().alias("url"),
+            .select(F.expr(_DOC_URL_SQL).alias("url"),
                     F.when(F.col("doc_id") % 5 == 0,
                            F.md5(F.concat("text", F.lit("-v0"))))
                      .otherwise(F.md5("text")).alias("pdigest")))
-    cur = (d.select("doc_id", _doc_url_col().alias("url"), "text",
+    cur = (d.select("doc_id", F.expr(_DOC_URL_SQL).alias("url"), "text",
                     F.md5("text").alias("digest"),
                     (F.col("doc_id") % nshards).alias("file_id"))
            .join(prev, "url", "left"))

@@ -528,9 +528,8 @@ def test_url_canonicalize_edge_cases(spark):
          "https://site.com/p?id=9"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], ["url"])
-    from pyspark.sql import functions as F
     out = [r["c"] for r in
-           df.select(urlfn.canonicalize_url(F.col("url")).alias("c"))
+           df.select(urlfn.canonicalize_url("url").alias("c"))
              .collect()]
     assert out == [e for _, e in cases]
 
@@ -544,8 +543,6 @@ def test_resolve_href_reference_resolution(spark):
     normalizations pinned: empty segments collapse and a trailing
     directory-form slash is dropped (both identical to what
     canonicalize_url does next)."""
-    from pyspark.sql import functions as F
-
     from clif_spark.functions import url as urlfn
 
     base = ("https", "h.com", "/a/b/page")
@@ -578,13 +575,13 @@ def test_resolve_href_reference_resolution(spark):
     ]
     df = spark.createDataFrame([(h,) for h, _ in cases], ["href"])
     out = [r["u"] for r in df.select(urlfn.resolve_href(
-        F.col("href"), F.lit(base[0]), F.lit(base[1]),
-        base_path=F.lit(base[2])).alias("u")).collect()]
+        "href", f"'{base[0]}'", f"'{base[1]}'",
+        base_path=f"'{base[2]}'").alias("u")).collect()]
     assert out == [e for _, e in cases]
     # without a base_path, relative refs fall back to NULL (the
     # pre-round-11 documented subset)
     out2 = [r["u"] for r in df.select(urlfn.resolve_href(
-        F.col("href"), F.lit(base[0]), F.lit(base[1])).alias("u"))
+        "href", f"'{base[0]}'", f"'{base[1]}'").alias("u"))
         .collect()]
     expect2 = [e if (h.startswith(("/", "//"))
                      or "://" in h) and e else None
@@ -598,8 +595,8 @@ def test_resolve_href_reference_resolution(spark):
     rdf = spark.createDataFrame([(h,) for h, _ in rel_cases], ["href"])
     for empty_base in ("", "page"):
         out3 = [r["u"] for r in rdf.select(urlfn.resolve_href(
-            F.col("href"), F.lit("https"), F.lit("h.com"),
-            base_path=F.lit(empty_base)).alias("u")).collect()]
+            "href", "'https'", "'h.com'",
+            base_path=f"'{empty_base}'").alias("u")).collect()]
         assert out3 == [e for _, e in rel_cases], empty_base
 
 
@@ -983,8 +980,6 @@ def test_url_canonicalize_randomized_vs_reference(spark):
     import random
     import re
 
-    from pyspark.sql import functions as F
-
     from clif_spark.functions import url as urlfn
 
     unreserved = ("ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -1051,7 +1046,7 @@ def test_url_canonicalize_randomized_vs_reference(spark):
             + rng.choice(frags))
     df = spark.createDataFrame([(u,) for u in urls], ["url"])
     got = [r.c for r in
-           df.select(urlfn.canonicalize_url(F.col("url")).alias("c"))
+           df.select(urlfn.canonicalize_url("url").alias("c"))
              .collect()]
     expected = [ref_canon(u) for u in urls]
     mism = [(u, g, e) for u, g, e in zip(urls, got, expected) if g != e]

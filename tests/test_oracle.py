@@ -313,3 +313,19 @@ def test_driver_adapter_configures_a_foreign_session(spark):
     want = _pdf_rowset(build_query_cached(spark, name).toPandas())
     assert got == want
     assert other.conf.get("spark.sql.ansi.enabled") == "false"
+
+
+def test_pq_query_rebuilds_after_its_view_is_dropped(spark):
+    """``pq`` asks the caller's session catalog whether its view exists
+    instead of remembering registrations in a process-wide table: after
+    the caller drops the view, rebuilding a ``pq`` query registers it
+    again rather than handing back a name the session no longer knows
+    (TABLE_OR_VIEW_NOT_FOUND)."""
+    from clif_spark.queries import REGISTRY, pq
+
+    name = "pipeline_vitals"
+    other = spark.newSession()
+    want = _pdf_rowset(REGISTRY[name].fn(other, SF_DIR).toPandas())
+    other.catalog.dropTempView(pq(other, SF_DIR, "events"))
+    got = _pdf_rowset(REGISTRY[name].fn(other, SF_DIR).toPandas())
+    assert got == want
