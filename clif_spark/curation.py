@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from clif_spark.functions.text import tokens
+from clif_spark.operators.core import materialize
 
 #: PII patterns shared by the Spark and oracle forms. Kept RE2-compatible
 #: (no lookaround/backreferences) so Java regex (Spark) and RE2 (DuckDB)
@@ -863,18 +864,18 @@ def dsir_importance(docs: DataFrame, target: Column,
     bucket_of = lambda f: (
         F.conv(F.substring(F.md5(F.concat(F.lit("dsir:"), f)), 1, 4),
                16, 10).cast("long") % n_buckets)
-    # localCheckpoint: the bucket-array relation feeds BOTH passes, and
+    # materialized: the bucket-array relation feeds BOTH passes, and
     # tokenize+hash is the dominant cost — recomputing it for the second
     # pass measurably loses (A/B at 50k docs: recompute 107 s vs
     # materialize-once; BASELINE.md round 7). The materialized form is
     # doc-count rows of n_buckets-bounded int arrays — far smaller than
     # the corpus text it replaces.
-    base = docs.select(
+    base = materialize(docs.select(
         F.col(id_col).alias("doc"), target.alias("is_target"),
         F.array_distinct(F.transform(
             F.filter(F.array_distinct(F.concat(unigrams, bigrams)),
                      lambda f: f != ""),
-            bucket_of)).alias("bks")).localCheckpoint(eager=True)
+            bucket_of)).alias("bks")))
     hist_rows = (base.select("is_target", F.explode("bks").alias("bucket"))
                  .groupBy("bucket")
                  .agg(F.count(F.lit(1)).alias("n_raw"),

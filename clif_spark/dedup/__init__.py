@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from clif_spark.functions.text import fingerprint, word_ngrams
 from clif_spark.io import ensure_parallelism
+from clif_spark.operators.core import materialize
 
 #: (bands, rows-per-band) for MinHash LSH. P(candidate) = 1-(1-J^r)^b:
 #: J=0.8 -> 0.98, J=0.2 -> 0.15 with b=4, r=2.
@@ -603,22 +604,21 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.6,
     # arrays); Catalyst performs no common-subexpression elimination
     # across them, so without materialization the tokenize+distinct
     # recomputes per occurrence — measured 36 s -> 13 s at 5k docs just
-    # from this (BASELINE.md round 7). localCheckpoint is the repo's
+    # from this (BASELINE.md round 7). core.materialize is the repo's
     # sanctioned reuse tool for data-sized intermediates in multi-pass
     # operators (same discipline as operators.graph / kmeans): one
     # materialization, N reads, lineage truncated.
-    toks = doc_tokens(docs, id_col, text_col).localCheckpoint(eager=True)
+    toks = materialize(doc_tokens(docs, id_col, text_col))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     w_doc = Window.partitionBy("doc")
     ranked = (toks.join(freq, "tok")
                   .withColumn("rnk", F.row_number().over(
                       w_doc.orderBy(F.col("df").asc(), F.col("tok").asc())))
                   .withColumn("sz", F.count(F.lit(1)).over(w_doc)))
-    prefix = (ranked.filter(
-        F.col("rnk") <= F.col("sz")
-        - F.ceil(F.lit(float(threshold)) * F.col("sz")) + 1)
-        .select("tok", "doc", "sz")
-        .localCheckpoint(eager=True))  # read twice (pa/pb join sides)
+    prefix = materialize(  # read twice (pa/pb join sides)
+        ranked.filter(F.col("rnk") <= F.col("sz")
+                      - F.ceil(F.lit(float(threshold)) * F.col("sz")) + 1)
+        .select("tok", "doc", "sz"))
     if max_bucket is not None:
         cands = pairs_from_buckets(prefix.select("tok", "doc"), ["tok"],
                                    "doc", max_bucket=max_bucket)

@@ -11,8 +11,8 @@ the kmeans/connected-components driver-loop discipline):
   map-side-combined pair count -> ONE argmax row to the driver (the same
   dimension-scale collect budget as the k-means centroid pull). The merge
   is then applied vocab-wide as a pure narrow HOF fold — no shuffle.
-- ``localCheckpoint`` per round cuts lineage exactly like kmeans; the
-  driver loop is control flow only.
+- ``core.materialize`` per round cuts lineage like kmeans and releases
+  the round it replaces; the driver loop is control flow only.
 - Application to a corpus goes through the vocabulary again: tokenize the
   DISTINCT words (vocab-sized narrow work), broadcast-join the word ->
   tokens mapping back to the corpus. Documents never re-fold merges.
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from clif_spark.operators.core import materialize, release
 
 
 def _sql_str(s: str) -> str:
@@ -70,7 +72,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 10,
     Each round: pair explode over the vocab (weighted by word count),
     keyed count, one argmax row to the driver (count desc, pair asc — the
     deterministic tiebreak), then a narrow fold applies the merge."""
-    state = word_vocab(docs, text_col).localCheckpoint()
+    state = materialize(word_vocab(docs, text_col))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pairs = state.select(
@@ -86,8 +88,10 @@ def bpe_train(docs: DataFrame, n_merges: int = 10,
             break
         a, b = top[0]["p"]["a"], top[0]["p"]["b"]
         merges.append((a, b))
-        state = (state.withColumn("syms", merge_pair("syms", a, b))
-                      .localCheckpoint())
+        old = state
+        state = materialize(state.withColumn("syms", merge_pair("syms", a, b)))
+        release(old)
+    release(state)
     return merges
 
 

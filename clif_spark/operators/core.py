@@ -274,7 +274,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str],
              .drop("__in_old", "__in_new"))
 
 
-def with_audit(df: DataFrame, name: str, **metrics: Column):
+def with_audit(df: DataFrame, name: str | None = None, **metrics: Column):
     """Attach pipeline audit counters that ride the SAME action — the
     production alternative to sprinkling ``count()`` calls (each of which
     is a full extra pass; at 100 TB a three-stage pipeline with per-stage
@@ -302,6 +302,69 @@ def with_audit(df: DataFrame, name: str, **metrics: Column):
     return df.observe(obs, *exprs), obs
 
 
+# --- materialization ---------------------------------------------------------
+
+#: Session conf naming a directory (HDFS/object store in production)
+#: for RELIABLE checkpoints, which survive executor loss. Unset (the
+#: default, and the bench) every cut is a local checkpoint.
+CHECKPOINT_DIR_CONF = "spark.clif.checkpointDir"
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """The engine's one eager lineage cut: ``checkpoint`` under
+    ``CHECKPOINT_DIR_CONF`` when set, ``localCheckpoint`` otherwise. A
+    cut costs a job and the plan's statistics, so it earns its place
+    only when the relation is read more than once downstream, pins a
+    store version before that store is written, or cuts a loop's
+    lineage. A changed conf re-points the SparkContext on the next call
+    (``setCheckpointDir`` appends a UUID subdirectory, so the context's
+    directory is compared by its parent)."""
+    spark = df.sparkSession
+    cdir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
+    if cdir:
+        sc = spark.sparkContext
+        hpath = sc._jvm.org.apache.hadoop.fs.Path
+        want = hpath(cdir)
+        want = want.getFileSystem(
+            sc._jsc.hadoopConfiguration()).makeQualified(want).toString()
+        cur = sc._jsc.sc().getCheckpointDir()
+        if cur.isEmpty() or hpath(cur.get()).getParent().toString() != want:
+            sc.setCheckpointDir(cdir)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+def materialize_observed(df: DataFrame, *cols: str,
+                         **metrics: Column) -> tuple[DataFrame, dict]:
+    """``materialize`` whose one job also computes ``metrics`` (``with_audit``
+    aggregates over ``df``'s rows) — a count or convergence certificate
+    without a second action. Returns the relation, projected to ``cols``
+    when given, and the metric values."""
+    df, obs = with_audit(df, **metrics)
+    if cols:
+        df = df.select(*cols)
+    return materialize(df), obs.get
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free what ``materialize`` wrote for each of ``dfs`` — a local
+    checkpoint's executor blocks, a reliable checkpoint's directory —
+    launching no job. Fixpoint loops call it on the generation a round
+    replaced once nothing lazy still reads it; anything else (None, an
+    input, a projection over a materialization) is skipped."""
+    for df in dfs:
+        plan = None if df is None else df._jdf.queryExecution().analyzed()
+        if plan is None or plan.getClass().getSimpleName() != "LogicalRDD":
+            continue
+        rdd = plan.rdd()
+        rdd.unpersist(False)
+        path = rdd.getCheckpointFile()
+        if path.isDefined():
+            sc = df.sparkSession.sparkContext
+            p = sc._jvm.org.apache.hadoop.fs.Path(path.get())
+            p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+
+
 def global_sorted_index(df: DataFrame, order: Sequence[str | Column],
                         index_col: str = "global_rank",
                         num_partitions: int | None = None) -> DataFrame:
@@ -316,7 +379,7 @@ def global_sorted_index(df: DataFrame, order: Sequence[str | Column],
     - ``repartitionByRange(order)`` + ``sortWithinPartitions``: the
       one real exchange; partitions are contiguous, even-sized key
       ranges (sampled boundaries);
-    - ``localCheckpoint(eager)``: MATERIALIZES the partitioning before
+    - ``materialize``: MATERIALIZES the partitioning before
       anything reads it twice — the offsets pass and the stamping pass
       must see byte-identical partition assignment, and a re-executed
       range exchange may RESAMPLE boundaries (correctness, not just
@@ -339,9 +402,8 @@ def global_sorted_index(df: DataFrame, order: Sequence[str | Column],
     n = num_partitions or max(
         2, spark.sparkContext.defaultParallelism)
     cols = [F.col(c) if isinstance(c, str) else c for c in order]
-    rp = (df.repartitionByRange(n, *cols)
-            .sortWithinPartitions(*cols)
-            .localCheckpoint(eager=True))
+    rp = materialize(df.repartitionByRange(n, *cols)
+                     .sortWithinPartitions(*cols))
     counts = (rp.select(F.spark_partition_id().alias("__pid"))
                 .groupBy("__pid").count().collect())
     offsets: dict[int, int] = {}

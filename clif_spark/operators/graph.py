@@ -26,7 +26,7 @@ sf0.1/sf1 (r18), because every iteration then plans from a materialized
 node-sized relation with REAL size stats instead of K-compounded
 estimates, and the final action stops re-running broadcast sub-jobs
 over the whole chain; real deployments checkpoint to storage — see
-CHECKPOINT_DIR_CONF.
+``core.CHECKPOINT_DIR_CONF``.
 
 PageRank exists once (``pagerank``): uniform and personalized
 teleport, unweighted and weighted edges, cold and warm starts are its
@@ -37,72 +37,20 @@ Every iterative operator here reads the caller's edge lineage (for a
 crawl graph, the whole link extraction) in ONE pass into an edge-sized
 checkpoint and derives everything else from checkpointed leaves. A
 fixpoint round is ONE checkpoint job: its convergence certificate is a
-``df.observe`` metric riding that job (``_ckpt_obs``), not a separate
-count/first probe.
+``df.observe`` metric riding that job (``core.materialize_observed``),
+not a separate count/first probe; the generation a round replaces is
+released (``core.release``) once its successor is written.
 """
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from clif_spark.operators.core import fits_broadcast, with_audit
+from clif_spark.operators.core import (fits_broadcast, materialize,
+                                       materialize_observed, release)
 
 MICROS = 1_000_000
-
-#: Session conf that switches every iterative operator in this module
-#: from ``localCheckpoint`` (executor-block storage — fast, but one
-#: executor loss kills the job at cluster scale) to RELIABLE
-#: checkpoints under the named directory (HDFS/object-store path in
-#: production). Unset (the default) keeps the exact r17 behavior; the
-#: bench never sets it. VERDICT r17 item 8.
-CHECKPOINT_DIR_CONF = "spark.clif.graph.checkpointDir"
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Eager lineage-cut for the iterative loops: reliable
-    ``checkpoint`` when ``spark.clif.graph.checkpointDir`` is set on
-    the session (cluster fault-tolerance posture — survives executor
-    loss), ``localCheckpoint`` otherwise (the single-box default; same
-    plan-truncation semantics, blocks live on executors). When the conf
-    names a different directory than the SparkContext checkpoints to,
-    the context is re-pointed at it (``setCheckpointDir`` appends a
-    UUID subdirectory, so the context's directory is compared by its
-    parent) — a changed conf takes effect on the next call."""
-    spark = df.sparkSession
-    cdir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
-    if cdir:
-        sc = spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path
-        want = hpath(cdir)
-        want = want.getFileSystem(
-            sc._jsc.hadoopConfiguration()).makeQualified(want).toString()
-        cur = sc._jsc.sc().getCheckpointDir()
-        if cur.isEmpty() or hpath(cur.get()).getParent().toString() != want:
-            sc.setCheckpointDir(cdir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-#: observation names must be unique among live observations
-_OBS_SEQ = itertools.count()
-
-
-def _ckpt_obs(df: DataFrame, *cols: str,
-              **metrics: Column) -> tuple[DataFrame, dict]:
-    """``_ckpt`` whose job also computes ``metrics`` (aggregates over
-    ``df``'s rows, via ``core.with_audit``): returns the checkpointed
-    relation — projected to ``cols`` when given, so a metric may read
-    a column the result does not keep — and the metric values. The
-    fixpoint loops' convergence certificates ride the round's one
-    checkpoint job this way instead of a second count/first action."""
-    df, obs = with_audit(df, f"graph_ckpt_{next(_OBS_SEQ)}", **metrics)
-    if cols:
-        df = df.select(*cols)
-    return _ckpt(df), obs.get
-
 
 def _endpoints(rel: DataFrame) -> DataFrame:
     """Distinct ``node`` over both endpoints of a (src, dst) relation,
@@ -156,7 +104,7 @@ def connected_components(edges: DataFrame, src_col: str = "src",
           .select("__e.src", "__e.dst")
           .filter(F.col("src") != F.col("dst"))
           .distinct()
-          .transform(_ckpt))
+          .transform(materialize))
     labels = (ue.select(F.col("src").alias("node")).distinct()
               .select("node", F.col("node").alias("component")))
     for rounds in range(1, max_iters + 1):
@@ -167,7 +115,8 @@ def connected_components(edges: DataFrame, src_col: str = "src",
         # on the round's one checkpoint job without a join back to the
         # old labels. A label only ever moves DOWN, so "no changed
         # label" == fixpoint.
-        labels, m = _ckpt_obs(
+        prev = labels
+        labels, m = materialize_observed(
             labels.withColumn("__old", F.col("component"))
             .unionByName(cand, allowMissingColumns=True)
             .groupBy("node")
@@ -175,6 +124,7 @@ def connected_components(edges: DataFrame, src_col: str = "src",
                  F.max("__old").alias("__old")),
             "node", "component",
             changed=F.count_if(F.col("component") != F.col("__old")))
+        release(prev)
         if not m["changed"]:
             return (labels, rounds) if return_rounds else labels
     raise RuntimeError(
@@ -201,7 +151,7 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     certificate, loud failure past ``max_iters``."""
     s, d = F.col(src_col), F.col(dst_col)
     e = (edges.select(s.alias("src"), d.alias("dst")).distinct()
-         .transform(_ckpt))
+         .transform(materialize))
 
     def cert():
         return {"n": F.count(F.lit(1)), "total": F.sum("depth")}
@@ -211,17 +161,19 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     # observed on each checkpoint job. The seed-sized checkpoint also
     # keeps the caller's seed lineage (possibly a corpus-scan
     # aggregate) out of the loop.
-    depths, prev = _ckpt_obs(
+    depths, prev = materialize_observed(
         seeds.select(F.col(seeds.columns[0]).alias("node"),
                      F.lit(0).cast("long").alias("depth")), **cert())
     for _ in range(max_iters):
         cand = (e.join(depths, e["src"] == depths["node"])
                  .select(F.col("dst").alias("node"),
                          (F.col("depth") + F.lit(1)).alias("depth")))
-        depths, now = _ckpt_obs(
+        old = depths
+        depths, now = materialize_observed(
             depths.unionByName(cand)
             .groupBy("node")
             .agg(F.min("depth").alias("depth")), **cert())
+        release(old)
         if now == prev:
             return depths
         prev = now
@@ -264,13 +216,13 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
     Returns (node, component); with ``return_rounds=True`` returns
     (labels, rounds) for round-count instrumentation."""
     s, d = F.col(src_col), F.col(dst_col)
-    e, m = _ckpt_obs(edges.select(s.alias("u"), d.alias("v"))
-                     .filter(F.col("u") != F.col("v"))
-                     .distinct(), n=F.count(F.lit(1)))
+    e, m = materialize_observed(edges.select(s.alias("u"), d.alias("v"))
+                                .filter(F.col("u") != F.col("v"))
+                                .distinct(), n=F.count(F.lit(1)))
     n_e = m["n"]
     nodes = (e.select(F.explode(F.array("u", "v")).alias("node"))
              .distinct()
-             .transform(_ckpt))
+             .transform(materialize))
 
     def _sym(rel):
         return (rel.unionByName(rel.select(F.col("v").alias("u"),
@@ -289,12 +241,12 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
                    .select(F.col("v").alias("u"),
                            F.col("__m").alias("v"))
                    .distinct()
-                   .transform(_ckpt))
+                   .transform(materialize))
         # SMALL-STAR: m(u) = min over the SMALLER neighbors (all < u),
         # to which the smaller neighbors AND u itself rewire
         nbrs2 = _sym(e_large).filter(F.col("v") < F.col("u"))
         mins2 = nbrs2.groupBy("u").agg(F.min("v").alias("__m"))
-        nxt, m = _ckpt_obs(
+        nxt, m = materialize_observed(
             nbrs2.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("__m").alias("v"))
             .unionByName(mins2.select("u", F.col("__m").alias("v")))
@@ -304,6 +256,7 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
         # and nxt \ e == ∅ together imply nxt == e; when the counts
         # differ (every non-final round) the exceptAll is skipped
         changed = m["n"] != n_e or nxt.exceptAll(e).count() != 0
+        release(e_large, e)
         e, n_e = nxt, m["n"]
         if not changed:
             # fixpoint: e is the star node -> component min; roots
@@ -343,7 +296,8 @@ def _fw_bw_colors(e: DataFrame, nodes: DataFrame,
                .select(F.col("dst").alias("node"), "b"))
         # each node's own row carries its old labels (__f, __b) into the
         # aggregation, as in connected_components
-        lab, m = _ckpt_obs(
+        prev = lab
+        lab, m = materialize_observed(
             lab.select("node", "f", "b", F.col("f").alias("__f"),
                        F.col("b").alias("__b"))
             .unionByName(fwd, allowMissingColumns=True)
@@ -354,6 +308,7 @@ def _fw_bw_colors(e: DataFrame, nodes: DataFrame,
             "node", "f", "b",
             changed=F.count_if((F.col("f") != F.col("__f"))
                                | (F.col("b") != F.col("__b"))))
+        release(prev)
         if not m["changed"]:
             return lab
     raise RuntimeError(
@@ -426,8 +381,9 @@ def strongly_connected_components(edges: DataFrame,
     ever SHRINKS, each count observed on its own checkpoint job."""
     s, d = F.col(src_col), F.col(dst_col)
     is_edge = F.col("src") != F.col("dst")
-    allp, m = _ckpt_obs(edges.select(s.alias("src"), d.alias("dst"))
-                        .distinct(), n=F.count_if(is_edge))
+    allp, m = materialize_observed(
+        edges.select(s.alias("src"), d.alias("dst")).distinct(),
+        n=F.count_if(is_edge))
     n_e = m["n"]
     e = allp.filter(is_edge)
     nodes = _endpoints(allp)
@@ -459,12 +415,14 @@ def strongly_connected_components(edges: DataFrame,
                      .agg(F.max("o").alias("o"), F.max("i").alias("i")))
             core = (flags.filter((F.col("o") == 1) & (F.col("i") == 1))
                     .select("node"))
-            e2, m = _ckpt_obs(
+            e2, m = materialize_observed(
                 e.join(core.withColumnRenamed("node", "src"), "src", "semi")
                 .join(core.withColumnRenamed("node", "dst"), "dst", "semi")
                 .select("src", "dst"), n=F.count(F.lit(1)))
             if m["n"] == n_e:
+                release(e2)
                 break  # removed nothing: every endpoint is in the core
+            release(e)
             e, n_e = e2, m["n"]
         if n_e == 0:
             live = nodes.limit(0)
@@ -472,26 +430,34 @@ def strongly_connected_components(edges: DataFrame,
             # at the trim fixpoint the live universe IS e's endpoint
             # set (the break above proves endpoints(e) ⊆ core ⊆
             # endpoints(e))
-            live = _endpoints(e).transform(_ckpt)
+            live = _endpoints(e).transform(materialize)
+        # the previous generations of settled and nodes go once the
+        # lazy union reading them is written
+        old = (settled, nodes)
         settled = settled.unionByName(
             nodes.join(live, "node", "left_anti")
                  .select("node", F.col("node").alias("component")))
-        nodes = live
         if n_e == 0:
             return (settled, rounds) if return_rounds else settled
-        settled = settled.transform(_ckpt)
+        settled = materialize(settled)
+        release(*old)
+        nodes = live
         lab = _fw_bw_colors(e, nodes, max_iters)
         now = (lab.filter(F.col("f") == F.col("b"))
                .select("node", F.col("f").alias("component")))
-        settled = settled.unionByName(now).transform(_ckpt)
-        nodes, m = _ckpt_obs(nodes.join(now, "node", "left_anti"),
-                             n=F.count(F.lit(1)))
+        old = (settled, nodes, lab)
+        settled = materialize(settled.unionByName(now))
+        nodes, m = materialize_observed(
+            nodes.join(now, "node", "left_anti"), n=F.count(F.lit(1)))
+        release(*old)
         if m["n"] == 0:
             return (settled, rounds) if return_rounds else settled
-        e, m = _ckpt_obs(
+        old = e
+        e, m = materialize_observed(
             e.join(nodes.withColumnRenamed("node", "src"), "src", "semi")
             .join(nodes.withColumnRenamed("node", "dst"), "dst", "semi")
             .select("src", "dst"), n=F.count(F.lit(1)))
+        release(old)
         n_e = m["n"]
     raise RuntimeError(
         f"strongly_connected_components did not converge in "
@@ -543,10 +509,10 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
     share; ranks for vanished nodes drop."""
     src, dst = F.col(src_col), F.col(dst_col)
     e = (edges.select(src.alias("src"), dst.alias("dst")).distinct()
-         .transform(_ckpt))
+         .transform(materialize))
     # node-sized checkpoint: every normalization joins it, and its
     # count rides the same job
-    nodes, m = _ckpt_obs(_endpoints(e), n=F.count(F.lit(1)))
+    nodes, m = materialize_observed(_endpoints(e), n=F.count(F.lit(1)))
     n = m["n"]
     if init_hub is not None:
         h = (nodes.join(
@@ -559,8 +525,9 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
         h = nodes.select("node",
                          F.lit(MICROS // n).cast("long").alias("r"))
 
-    def _norm(raw):
-        """(node, s) -> all nodes with s * MICROS div total (exact).
+    def _norm(raw, prev):
+        """(node, s) -> (filled, all nodes with s * MICROS div total)
+        (exact), releasing ``prev``, the side's previous filled vector.
         The filled vector is node-relation sized and referenced TWICE
         (the total and the rescale) — without the checkpoint each
         normalization level re-executes its whole upstream chain
@@ -570,22 +537,24 @@ def hits_fixed(edges: DataFrame, iterations: int = 3,
         filled = (nodes.join(raw, "node", "left")
                   .select("node", F.coalesce("s", F.lit(0))
                           .cast("long").alias("s"))
-                  .transform(_ckpt))
+                  .transform(materialize))
+        release(prev)
         total = filled.agg(F.sum("s").alias("t"))
-        return (filled.crossJoin(F.broadcast(total))
-                .select("node", F.expr(f"(s * CAST({MICROS} AS BIGINT))"
-                                       f" div t").cast("long").alias("r")))
+        return filled, (
+            filled.crossJoin(F.broadcast(total))
+            .select("node", F.expr(f"(s * CAST({MICROS} AS BIGINT))"
+                                   f" div t").cast("long").alias("r")))
 
-    a = None
+    a = fa = fh = None
     for _ in range(iterations):
         a_raw = (e.join(h.withColumnRenamed("node", "src"), "src")
                  .groupBy("dst").agg(F.sum("r").alias("s"))
                  .withColumnRenamed("dst", "node"))
-        a = _norm(a_raw)
+        fa, a = _norm(a_raw, fa)
         h_raw = (e.join(a.withColumnRenamed("node", "dst"), "dst")
                  .groupBy("src").agg(F.sum("r").alias("s"))
                  .withColumnRenamed("src", "node"))
-        h = _norm(h_raw)
+        fh, h = _norm(h_raw, fh)
     return (nodes
             .join(h.withColumnRenamed("r", "hub_micros"), "node", "left")
             .join(a.withColumnRenamed("r", "auth_micros"), "node", "left")
@@ -632,21 +601,24 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
                        F.greatest(s, d).alias("v"))
           .filter(F.col("u") != F.col("v"))
           .distinct()
-          .transform(_ckpt))
+          .transform(materialize))
     sym = (cn.select(F.col("u").alias("node"), F.col("v").alias("other"))
            .unionByName(cn.select(F.col("v").alias("node"),
                                   F.col("u").alias("other")))
-           .transform(_ckpt))
-    alive, m = _ckpt_obs(sym.select("node").distinct(),
-                         n=F.count(F.lit(1)))
+           .transform(materialize))
+    alive, m = materialize_observed(sym.select("node").distinct(),
+                                    n=F.count(F.lit(1)))
     n_alive = m["n"]
+    deg = alive  # the materialization alive reads
     for rounds in range(1, max_iters + 1):
-        deg, m = _ckpt_obs(
+        old = deg
+        deg, m = materialize_observed(
             sym.join(alive, "node", "semi")
             .join(alive.withColumnRenamed("node", "other"), "other", "semi")
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree")),
             kept=F.count_if(F.col("core_degree") >= k))
+        release(old)
         nxt = deg.filter(F.col("core_degree") >= k)
         if m["kept"] == n_alive:
             # fixpoint: deg was computed over this exact alive set, so
@@ -694,7 +666,7 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
                        F.greatest(s, d).alias("v"))
           .filter(F.col("u") != F.col("v"))
           .distinct()
-          .transform(_ckpt))
+          .transform(materialize))
     e1 = cn.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = cn.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = cn.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -827,12 +799,12 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85,
     # K x 2 times (measured 38.6 s for K=10 at sf10 vs 3.5 s
     # checkpointed). Edge-relation sized, never corpus-sized.
     e = (we.withColumn("tw", F.sum("w").over(Window.partitionBy("src")))
-         .transform(_ckpt))
+         .transform(materialize))
     count = F.count(F.lit(1))
     if seeds is None:
-        nodes, m = _ckpt_obs(_endpoints(e), k=count)
+        nodes, m = materialize_observed(_endpoints(e), k=count)
     else:
-        sd, m = _ckpt_obs(
+        sd, m = materialize_observed(
             seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
             k=count)
         nodes = _endpoints(e).unionByName(sd).distinct()
@@ -853,7 +825,7 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85,
                 .select("node",
                         F.when(F.col("__s") == 1, F.lit(tnum // k))
                          .otherwise(F.lit(0)).cast("long").alias("tele"))
-                .transform(_ckpt))
+                .transform(materialize))
     r0 = F.when(F.col("tele") > 0, F.lit(MICROS // k)).otherwise(F.lit(0))
     ranks = base
     if init_ranks is not None:
@@ -871,6 +843,7 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85,
         # scale but NOT for arbitrary caller-supplied init_ranks. `div`
         # keeps the bit-for-bit warm-start contract over the full long
         # domain (regression: tests/test_graph.py).
+        old = ranks
         contrib = (e.join(ranks, e["src"] == ranks["node"])
                     .select(F.col("dst").alias("node"),
                             F.expr("w * (r div tw)").alias("c")))
@@ -881,7 +854,8 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85,
                           + F.expr(f"({damping_pct} * coalesce(s, "
                                    f"CAST(0 AS BIGINT))) div 100"))
                          .cast("long").alias("r"))
-                 .transform(_ckpt))
+                 .transform(materialize))
+        release(old)
     return ranks.select(F.col("node"),
                         F.col("r").alias("rank_micros"),
                         (F.col("r") / F.lit(float(MICROS)))

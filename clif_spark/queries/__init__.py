@@ -277,6 +277,17 @@ _REGATE = [
     "web_cdx_member_contract", "web_robots_sitemap_discovery",
     "text_main_content", "web_cdx_revisit", "web_warc_revisit_roundtrip",
     "web_recrawl_plan", "stream_cdx_maintain", "stream_bm25f_maintain",
+    # every lineage cut goes through core.materialize; loops release
+    "ann_ivf_trained_recall_bound", "curation_dsir_importance",
+    "dedup_image_phash_incremental", "dedup_image_store_takedown",
+    "dedup_incremental_persisted", "dedup_prefix_filter_join",
+    "dedup_semantic_incremental", "dedup_store_takedown",
+    "mm_video_h264_skip", "o5_global_sorted_index",
+    "semantic_store_drift_recall", "semantic_store_rebuild_contract",
+    "semantic_store_takedown", "stream_image_sig_maintain",
+    "stream_incremental_dedup", "stream_partitioned_upsert",
+    "stream_semantic_maintain", "text_bpe_roundtrip",
+    "u11_partitioned_upsert",
 ]
 VERIFY_HEAD_SIZE = 50
 _LEDGER_DIR = Path(__file__).resolve().parents[2]

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from clif_spark import curation, dedup, io, multimodal, sampling, similarity
 from clif_spark.functions import text as TX
+from clif_spark.operators.core import materialize, materialize_observed
 from clif_spark.queries import narrow_width, pq, query
 
 # ---------------------------------------------------------------------------
@@ -384,7 +385,7 @@ def dedup_clusters(spark, sf_dir):
     (doc, cluster_id = min doc id in the component) — the keep-one-per-
     cluster grouping a dedup pipeline actually acts on, and the registry's
     iterative-algorithm representative (driver-coordinated min-label
-    propagation with localCheckpoint lineage truncation; the oracle is the
+    propagation with per-round lineage cuts; the oracle is the
     equivalent recursive CTE). Two plants (20 one-token copies, 8
     two-token copies) force multi-node components so transitivity is
     exercised, not just pair mirroring."""
@@ -684,11 +685,11 @@ def dedup_semantic_incremental(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="clif_semstore_")
     similarity.semantic_store_build(e, root, k=8, max_iter=3)
 
-    d1 = _semantic_planted(e, 100000).localCheckpoint()
+    d1 = materialize(_semantic_planted(e, 100000))
     r1 = _semantic_screen_contract(
         d1, similarity.semantic_store_screen(spark, d1, root), 1)
     similarity.semantic_store_admit(spark, d1, root, version=1)
-    d2 = _semantic_planted(e, 200000).localCheckpoint()
+    d2 = materialize(_semantic_planted(e, 200000))
     r2 = _semantic_screen_contract(
         d2, similarity.semantic_store_screen(spark, d2, root), 2)
     return r1.unionByName(r2)
@@ -983,15 +984,15 @@ def dedup_incremental_persisted(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="clif_sigstore_")
     dedup.signature_store_admit(
         dedup.minhash_signature_rows(d), root, version=0)
-    # localCheckpoint: the delivery's signatures are computed ONCE and
+    # materialized: the delivery's signatures are computed ONCE and
     # shared by screen + admit (Catalyst does no cross-subplan CSE), and
     # the screen plan's lineage to the documents table is cut — the scan
-    # set below is the signature store + checkpointed rows, nothing else.
-    s1 = dedup.minhash_signature_rows(d1).localCheckpoint()
+    # set below is the signature store + materialized rows, nothing else.
+    s1 = materialize(dedup.minhash_signature_rows(d1))
     r1 = (dedup.signature_store_screen(spark, s1, root, threshold=0.5)
           .withColumn("delivery", F.lit(1).cast("long")))
     dedup.signature_store_admit(s1, root, version=1)
-    s2 = dedup.minhash_signature_rows(d2).localCheckpoint()
+    s2 = materialize(dedup.minhash_signature_rows(d2))
     r2 = (dedup.signature_store_screen(spark, s2, root, threshold=0.5)
           .withColumn("delivery", F.lit(2).cast("long")))
     return (r1.unionByName(r2)
@@ -1338,13 +1339,12 @@ def semantic_store_takedown(spark, sf_dir):
         return (similarity.semantic_store_screen(spark, delivery, root,
                                                  threshold=0.9999)
                 .withColumn("phase", F.lit(phase))
-                .select("phase", "old_id", "new_id", "cos")
-                .localCheckpoint())  # pin THIS store version's answer
+                .select("phase", "old_id", "new_id", "cos"))
 
-    pre = screen("pre_delete")
+    pre = materialize(screen("pre_delete"))  # pin THIS store version
     takedown = e.filter(F.col("vec_id") % 5 == 0).select("vec_id")
     similarity.semantic_store_delete(spark, takedown, root, version=1)
-    post = screen("post_delete")
+    post = materialize(screen("post_delete"))
     STR.compact_cdc_snapshot(spark, root)
     post_c = screen("post_compact")
     return pre.unionByName(post).unionByName(post_c)
@@ -1391,10 +1391,9 @@ def semantic_store_rebuild_contract(spark, sf_dir):
         return (similarity.semantic_store_screen(spark, delivery, root,
                                                  threshold=0.9999)
                 .withColumn("phase", F.lit(phase))
-                .select("phase", "old_id", "new_id", "cos")
-                .localCheckpoint())
+                .select("phase", "old_id", "new_id", "cos"))
 
-    pre = screen("pre_rebuild")
+    pre = materialize(screen("pre_rebuild"))  # pin THIS store version
     similarity.semantic_store_rebuild(spark, root, version=1, k=16,
                                       max_iter=5)
     post = screen("post_rebuild")
@@ -1511,19 +1510,18 @@ def dedup_store_takedown(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="clif_sigstore_takedown_")
     dedup.signature_store_admit(
         dedup.minhash_signature_rows(d), root, version=0)
-    sigs = dedup.minhash_signature_rows(delivery).localCheckpoint()
+    sigs = materialize(dedup.minhash_signature_rows(delivery))
 
     def screen(phase: str):
         return (dedup.signature_store_screen(spark, sigs, root,
                                              threshold=0.5)
                 .withColumn("phase", F.lit(phase))
-                .select("phase", "old_id", "new_id", "jaccard")
-                .localCheckpoint())  # pin THIS store version's answer
+                .select("phase", "old_id", "new_id", "jaccard"))
 
-    pre = screen("pre_delete")
+    pre = materialize(screen("pre_delete"))  # pin THIS store version
     takedown = d.filter(F.col("doc_id") % 10 == 0).select("doc_id")
     dedup.signature_store_delete(spark, takedown, root, version=1)
-    post = screen("post_delete")
+    post = materialize(screen("post_delete"))
     STR.compact_cdc_snapshot(spark, root)
     post_c = screen("post_compact")
     return pre.unionByName(post).unionByName(post_c)
@@ -1851,15 +1849,15 @@ def dedup_image_phash_incremental(spark, sf_dir):
     dedup.chunk_sig_store_admit(
         _image_sig(base), root, 0, id_col="doc_id")
 
-    d1 = _image_sig(copies).localCheckpoint()
+    d1 = materialize(_image_sig(copies))
     s1 = (dedup.chunk_sig_store_screen(spark, d1, root,
                                        id_col="doc_id")
           .select(F.lit(1).cast("long").alias("delivery"),
                   "new_id", "old_id", "hamming"))
-    out1 = s1.localCheckpoint()
+    out1 = materialize(s1)  # pinned before the admit grows the store
     dedup.chunk_sig_store_admit(d1, root, 1, id_col="doc_id")
 
-    d2 = _image_sig(bumped).localCheckpoint()
+    d2 = _image_sig(bumped)
     s2 = (dedup.chunk_sig_store_screen(spark, d2, root,
                                        id_col="doc_id")
           .select(F.lit(2).cast("long").alias("delivery"),
@@ -1913,26 +1911,26 @@ def dedup_image_store_takedown(spark, sf_dir):
     dedup.chunk_sig_store_admit(
         _image_sig(copies), root, 1, id_col="doc_id")
 
-    removed = (io.load_table(spark, sf_dir, "documents")
-               .filter(F.col("doc_id") % 20 == 0)
-               .select("doc_id").localCheckpoint())
-    n_removed = removed.count()
+    removed, m = materialize_observed(
+        io.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 20 == 0).select("doc_id"))
+    n_removed = m["n_rows"]
     dedup.chunk_sig_store_delete(spark, removed, root, 2,
                                  id_col="doc_id")
 
-    d2 = _image_sig(bumped).localCheckpoint()
-    pre = (dedup.chunk_sig_store_screen(spark, d2, root,
-                                        id_col="doc_id")
-           .select("new_id", "old_id", "hamming").localCheckpoint())
+    d2 = materialize(_image_sig(bumped))
+    pre = materialize(dedup.chunk_sig_store_screen(spark, d2, root,
+                                                   id_col="doc_id")
+                      .select("new_id", "old_id", "hamming"))
 
     dropped = STR.compact_cdc_snapshot(spark, root)
     if dropped != n_removed:
         raise RuntimeError(
             f"image-store compaction dropped {dropped} rows, expected "
             f"the {n_removed} takedown tombstones")
-    post = (dedup.chunk_sig_store_screen(spark, d2, root,
-                                         id_col="doc_id")
-            .select("new_id", "old_id", "hamming").localCheckpoint())
+    post = materialize(dedup.chunk_sig_store_screen(spark, d2, root,
+                                                    id_col="doc_id")
+                       .select("new_id", "old_id", "hamming"))
     # physical reclaim must be semantically invisible (screen results
     # are planted-family sized, so the two exceptAll probes are cheap)
     if (pre.exceptAll(post).limit(1).count()
@@ -3499,8 +3497,7 @@ def mm_video_h264_skip(spark, sf_dir):
     throwing, both flip counts."""
     d = (io.load_table(spark, sf_dir, "documents")
          .filter(F.col("doc_id") < 600).select("doc_id", "text"))
-    payload = (multimodal.synth_mixed_codec_mp4(d)
-               .localCheckpoint())  # build containers once, read twice
+    payload = materialize(multimodal.synth_mixed_codec_mp4(d))  # read twice
     total = (multimodal.extract_video_frames(payload)
              .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_frames")))
     dec = (multimodal.video_frame_pixel_stats(payload)

@@ -880,8 +880,8 @@ def _entity_recs(spark, sf_dir):
     v3 = (cust.filter(key % 150 == 0)
           .select((key + 3000000).cast("long").alias("rid"),
                   F.concat(F.col("c_name"), F.lit("x")).alias("name")))
-    return (base.unionByName(v1).unionByName(v2).unionByName(v3)
-            .localCheckpoint(eager=True))
+    return core.materialize(
+        base.unionByName(v1).unionByName(v2).unionByName(v3))
 
 
 def _entity_match_edges(a, b, symmetric: bool = False):
@@ -1090,18 +1090,16 @@ def _er_store_delivery(spark, delta, root, version,
 
     raw_store = (read_fn() if read_fn is not None
                  else STR.read_cdc_snapshot(spark, root))
-    store = (raw_store
-             .select("rid", "name", "cluster")
-             .localCheckpoint(eager=True))
-    delta = delta.localCheckpoint(eager=True)
+    store = core.materialize(raw_store.select("rid", "name", "cluster"))
+    delta = core.materialize(delta)
     star = (store.filter(F.col("cluster") != F.col("rid"))
             .select(F.col("rid").alias("src"),
                     F.col("cluster").alias("dst")))
     new_edges = _entity_match_edges(
         delta, store.select("rid", "name").unionByName(delta))
-    comp = (G.connected_components(star.unionByName(new_edges))
-            .withColumnRenamed("node", "rid")
-            .localCheckpoint(eager=True))
+    comp = core.materialize(
+        G.connected_components(star.unionByName(new_edges))
+        .withColumnRenamed("node", "rid"))
     delta_rows = (delta.join(comp, "rid", "left")
                   .select("rid", "name",
                           F.coalesce("component", F.col("rid"))
@@ -1131,16 +1129,15 @@ def _er_store_takedown(spark, removed, root, version):
     from clif_spark import streaming as STR
     from clif_spark.operators import graph as G
 
-    store = (STR.read_cdc_snapshot(spark, root)
-             .select("rid", "name", "cluster")
-             .localCheckpoint(eager=True))
-    removed = removed.select("rid").localCheckpoint(eager=True)
+    store = core.materialize(
+        STR.read_cdc_snapshot(spark, root).select("rid", "name", "cluster"))
+    removed = core.materialize(removed.select("rid"))
     hit = (store.join(removed, "rid", "semi")
            .select("cluster").distinct())
-    members = (store.join(F.broadcast(hit), "cluster", "semi")
-               .join(removed, "rid", "left_anti")
-               .select("rid", "name")
-               .localCheckpoint(eager=True))
+    members = core.materialize(
+        store.join(F.broadcast(hit), "cluster", "semi")
+        .join(removed, "rid", "left_anti")
+        .select("rid", "name"))
     comp = (G.connected_components(
                 _entity_match_edges(members, members, symmetric=True))
             .withColumnRenamed("node", "rid"))
@@ -1248,8 +1245,7 @@ def dedup_entity_incremental(spark, sf_dir):
             .select(F.col("node").alias("src"),
                     F.col("component").alias("dst")))
     v4, trunc, fresh = _entity_delta_families(spark, sf_dir)
-    delta = (v4.unionByName(trunc).unionByName(fresh)
-             .localCheckpoint(eager=True))
+    delta = core.materialize(v4.unionByName(trunc).unionByName(fresh))
     # delta-vs-all verify: old-old pairs never recomputed
     new_edges = _entity_match_edges(delta, recs.unionByName(delta))
     merged = G.connected_components(star.unionByName(new_edges))
@@ -1358,13 +1354,13 @@ def dedup_entity_store_compacted(spark, sf_dir):
     from clif_spark import streaming as STR
 
     root, trunc = _er_store_build(spark, sf_dir, "clif_er_cmp_store_")
-    trunc = trunc.localCheckpoint(eager=True)
+    trunc, m = core.materialize_observed(trunc)
     _er_store_takedown(spark, trunc.select("rid"), root, 3)
     # plain-scan counts for the invariants — the windowed report adds
     # an exchange a row count does not need
     live_before = STR.read_cdc_snapshot(spark, root).count()
     n_removed = STR.compact_cdc_snapshot(spark, root)
-    n_trunc = trunc.count()
+    n_trunc = m["n_rows"]
     if n_removed != n_trunc:
         raise RuntimeError(
             f"dedup_entity_store_compacted: compaction removed "

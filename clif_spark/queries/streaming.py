@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from clif_spark import io, streaming
+from clif_spark.operators.core import materialize
 from clif_spark.queries import query, us
 from clif_spark.queries import llm as _llm
 from clif_spark.queries import relational as _rel
@@ -633,7 +634,7 @@ def stream_incremental_dedup(spark, sf_dir):
     maxFilesPerTrigger=1, one delivery per file with mtimes pinned so
     the file source replays them in delivery order) runs the
     screen-then-admit cycle inside foreachBatch — signatures computed
-    once per delivery (localCheckpoint), screened against the store's
+    once per delivery (materialized), screened against the store's
     CURRENT version (signature-sized scan, never corpus text), results
     appended to a parquet sink, then admitted as a new store version
     (upsert_cdc_snapshot copy-on-write). The settled sink must equal the
@@ -684,9 +685,8 @@ def stream_incremental_dedup(spark, sf_dir):
         if batch_df.isEmpty():
             return
         tag = int(batch_df.agg(F.max("delivery")).first()[0])
-        sigs = (dedup.minhash_signature_rows(
-                    batch_df.select("doc_id", "text"))
-                .localCheckpoint())
+        sigs = materialize(dedup.minhash_signature_rows(
+            batch_df.select("doc_id", "text")))
         bspark = batch_df.sparkSession
         # Replay-safe sink (the idempotent_parquet_sink recipe): each
         # batch OWNS a __batch_id partition and dynamic overwrite
@@ -1221,8 +1221,8 @@ def stream_semantic_maintain(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="clif_sem_stream_store_")
     similarity.semantic_store_build(e, root, k=8, max_iter=3)
 
-    d1 = _llm._semantic_planted(e, 100000).localCheckpoint()
-    d2 = _llm._semantic_planted(e, 200000).localCheckpoint()
+    d1 = materialize(_llm._semantic_planted(e, 100000))
+    d2 = materialize(_llm._semantic_planted(e, 200000))
     scratch, schema = _land_deliveries(
         [(ver, df.withColumn("__v", F.lit(ver).cast("long")))
          for ver, df in ((1, d1), (2, d2))],
@@ -1248,8 +1248,8 @@ def stream_semantic_maintain(spark, sf_dir):
                 raise RuntimeError(
                     "stream_semantic_maintain: fresh-checkpoint "
                     "redelivery re-applied instead of skipping")
-            delta = (batch_df.filter(F.col("__v") == ver).drop("__v")
-                     .localCheckpoint())
+            delta = materialize(
+                batch_df.filter(F.col("__v") == ver).drop("__v"))
             hits = similarity.semantic_store_screen(spark, delta, root)
             if hits.limit(1).isEmpty():
                 raise RuntimeError(
@@ -1321,8 +1321,8 @@ def stream_image_sig_maintain(spark, sf_dir):
         _llm._image_sig(base), root, 0, id_col="doc_id")
     res_root = tempfile.mkdtemp(prefix="clif_imgsig_res_")
 
-    d1 = _llm._image_sig(copies).localCheckpoint()
-    d2 = _llm._image_sig(bumped).localCheckpoint()
+    d1 = _llm._image_sig(copies)
+    d2 = _llm._image_sig(bumped)
     scratch, schema = _land_deliveries(
         [(ver, df.withColumn("__v", F.lit(ver).cast("long")))
          for ver, df in ((1, d1), (2, d2))],
@@ -1345,8 +1345,8 @@ def stream_image_sig_maintain(spark, sf_dir):
                 raise RuntimeError(
                     "stream_image_sig_maintain: fresh-checkpoint "
                     "redelivery re-applied instead of skipping")
-            delta = (batch_df.filter(F.col("__v") == ver).drop("__v")
-                     .localCheckpoint())
+            delta = materialize(
+                batch_df.filter(F.col("__v") == ver).drop("__v"))
             hits = (dedup.chunk_sig_store_screen(spark, delta, root,
                                                  id_col="doc_id")
                     .select(F.lit(int(ver)).cast("long")

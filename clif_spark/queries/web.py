@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from clif_spark import curation, io, warc
 from clif_spark.functions import url as urlfn
-from clif_spark.operators.core import fits_broadcast
+from clif_spark.operators.core import fits_broadcast, materialize
 from clif_spark.operators.graph import FIXPOINT_MAX_ITERS
 from clif_spark.queries import query
 
@@ -613,6 +613,15 @@ def _host_bodies(d, *bodies: str):
         "source || '.example.com' AS host", *bodies)
 
 
+def _robots_bodies(d):
+    """``_host_bodies`` with the planted robots.txt, materialized ONCE
+    (host-count sized): the rules and delay derivations read it at
+    least twice, and without the cut each read re-executes the
+    distinct over the corpus (plan-asserted scan bound in
+    tests/test_plans.py)."""
+    return materialize(_host_bodies(d, _ROBOTS_BODY))
+
+
 # Shared robots-rules CTE chain (srcs -> robots -> ... -> hostrules),
 # parameterized over the planted body so web_robots_parse / the funnel
 # (the precedence fixture) and web_robots_wildcards (the §2.2.3
@@ -749,11 +758,7 @@ def web_robots_parse(spark, sf_dir):
         "doc_id",
         urlfn.url_host("url").alias("host"),
         urlfn.url_path("url").alias("path"))
-    # materialized ONCE (host-count sized): every rules/delay
-    # derivation references this relation — without the checkpoint each
-    # reference re-executes the distinct over the corpus (plan-asserted
-    # scan bound in tests/test_plans.py)
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
     rules = robotsfn.robots_rules(robots)
     counts = (rules.groupBy("host").agg(
         F.count_if(~F.col("allow")).cast("long").alias("n_disallow"),
@@ -865,8 +870,8 @@ def web_robots_wildcards(spark, sf_dir):
         "doc_id",
         urlfn.url_host("url").alias("host"),
         urlfn.url_path("url").alias("path"))
-    robots = _host_bodies(
-        d, f"{_WILD_TXT_SQL} AS robots_txt").localCheckpoint(eager=True)
+    robots = materialize(
+        _host_bodies(d, f"{_WILD_TXT_SQL} AS robots_txt"))
     rules = robotsfn.robots_rules(robots)
     tagged = robotsfn.apply_robots_rules(urls, rules)
     blocked = F.col("robots_blocked")
@@ -999,13 +1004,12 @@ def web_sitemap_parse(spark, sf_dir):
     Shape: sitemaps are host-count sized end to end (one body per
     host; parse, verdict, and output all host-scale — the ONLY
     corpus-touching work is the source distinct feeding the planted
-    bodies, checkpointed once). Reference analog: none (north-star
-    crawl-governance surface)."""
+    bodies; the robots rules read theirs twice, so only it is cut).
+    Reference analog: none (north-star crawl-governance surface)."""
     from clif_spark.functions import robots as robotsfn
 
     d = io.load_table(spark, sf_dir, "documents")
-    smaps = _host_bodies(d, f"{_SITEMAP_SQL} AS xml").localCheckpoint(
-        eager=True)
+    smaps = _host_bodies(d, f"{_SITEMAP_SQL} AS xml")
     blocks = smaps.select(
         "host",
         F.explode(F.regexp_extract_all(
@@ -1023,7 +1027,7 @@ def web_sitemap_parse(spark, sf_dir):
         (prio.cast("decimal(7,6)") * 1000000).cast("long")
          .alias("priority_micros"))
     seeds = entries.withColumn("path", urlfn.url_path("loc"))
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
     rules = robotsfn.robots_rules(robots)
     return (robotsfn.apply_robots_rules(seeds, rules)
             .select("host", "loc", "lastmod", "priority_micros",
@@ -1276,11 +1280,7 @@ def web_robots_agent_fallback(spark, sf_dir):
         "doc_id",
         urlfn.url_host("url").alias("host"),
         urlfn.url_path("url").alias("path"))
-    # materialized ONCE (host-count sized): every rules/delay
-    # derivation references this relation — without the checkpoint each
-    # reference re-executes the distinct over the corpus (plan-asserted
-    # scan bound in tests/test_plans.py)
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
     df = urls
     for agent in ("googlebot", "newsbot", "ccbot"):
         rules = robotsfn.robots_rules(robots, agent=agent)
@@ -1340,11 +1340,7 @@ def web_robots_crawl_delay(spark, sf_dir):
     hd = (raw.select(urlfn.url_host("url").alias("host"))
           .groupBy("host")
           .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-    # materialized ONCE (host-count sized): every rules/delay
-    # derivation references this relation — without the checkpoint each
-    # reference re-executes the distinct over the corpus (plan-asserted
-    # scan bound in tests/test_plans.py)
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
     delays = robotsfn.robots_crawl_delay(robots)
     return (hd.join(delays, "host")
             .select("host", "n_docs",
@@ -2029,7 +2025,7 @@ def _bm25f_score(bcounts, acounts, materialized: bool = False):
     from pyspark.sql import Window
 
     def _cut(df):
-        return df if materialized else df.localCheckpoint(eager=True)
+        return df if materialized else materialize(df)
 
     bcounts = _cut(bcounts)
     # hosts with >= 1 body token == distinct source hosts (split('')
@@ -2398,8 +2394,7 @@ def web_cocitation_triangles(spark, sf_dir):
     # host-pair-sized checkpoint: the self-join references the deduped
     # relation twice — without it the corpus link extraction runs once
     # per leg (the pagerank lesson applied before it bites)
-    e = (_link_edges(spark, sf_dir).distinct()
-         .localCheckpoint(eager=True))
+    e = materialize(_link_edges(spark, sf_dir).distinct())
     a = e.select(F.col("src").alias("s"), F.col("dst").alias("u"))
     b = e.select(F.col("src").alias("s"), F.col("dst").alias("v"))
     cocite = (a.join(b, "s")
@@ -2538,7 +2533,7 @@ def web_hits_warm_start(spark, sf_dir):
     from clif_spark import streaming as STR
     from clif_spark.operators import graph as G
 
-    edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_link_edges(spark, sf_dir))
     h1 = G.hits_fixed(edges, iterations=1)
     root = tempfile.mkdtemp(prefix="clif_hits_store_")
     STR.upsert_cdc_snapshot(
@@ -2661,7 +2656,7 @@ def web_pagerank_personalized(spark, sf_dir):
     checkpointed node-sized relation."""
     from clif_spark.operators import graph as G
 
-    edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_link_edges(spark, sf_dir))
     return G.pagerank(edges, iterations=3,
                       seeds=_seed_hosts(edges, "src"))
 
@@ -2690,7 +2685,7 @@ def web_pagerank_warm_start(spark, sf_dir):
 
     # materialized once: both pagerank calls read these edges, and an
     # uncheckpointed lineage would rerun the corpus link extraction
-    edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_link_edges(spark, sf_dir))
     r3 = G.pagerank(edges, iterations=3)
     root = tempfile.mkdtemp(prefix="clif_rank_store_")
     STR.upsert_cdc_snapshot(
@@ -2800,7 +2795,7 @@ def web_pagerank_weighted_warm(spark, sf_dir):
     from clif_spark import streaming as STR
     from clif_spark.operators import graph as G
 
-    edges = _weighted_host_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_weighted_host_edges(spark, sf_dir))
 
     def ranks(iters, init=None):
         return G.pagerank(
@@ -2904,7 +2899,7 @@ def web_pagerank_weighted_personalized(spark, sf_dir):
     checkpointed node-sized relation."""
     from clif_spark.operators import graph as G
 
-    edges = _weighted_host_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_weighted_host_edges(spark, sf_dir))
     return G.pagerank(
         edges, iterations=3, src_col="src_host", dst_col="dst_host",
         weight_col="n_urls", seeds=_seed_hosts(edges, "src_host"))
@@ -2969,7 +2964,7 @@ def web_host_components(spark, sf_dir):
 
     Shape: O(diameter) rounds of edge-join + node-min-agg over a
     host-count-sized label relation (broadcastable at web scale),
-    per-round localCheckpoint, loud failure past max_iters."""
+    one lineage cut per round, loud failure past max_iters."""
     from clif_spark.operators import graph as G
     from pyspark.sql import Window
 
@@ -3219,7 +3214,7 @@ def _kcore_ctes(k: int, rounds: int) -> str:
     CTEs re-evaluate the whole upstream chain exponentially —
     measured 210 s inlined vs 0.4 s materialized at sf0.001, same
     7 rows (the SQL mirror of the engine's own per-round
-    localCheckpoint lesson)."""
+    lineage-cut lesson)."""
     parts = []
     prev = "ka0"
     for i in range(1, rounds + 1):
@@ -3393,15 +3388,14 @@ def web_bowtie_classes(spark, sf_dir):
     rev = (e.filter((n >= 8) & (n <= 14))
            .select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # one materialization: the SCC pass and both BFS legs re-read it
-    edges = e.unionByName(rev).distinct().localCheckpoint(eager=True)
+    edges = materialize(e.unionByName(rev).distinct())
 
-    scc = G.strongly_connected_components(edges).localCheckpoint(
-        eager=True)
+    scc = materialize(G.strongly_connected_components(edges))
     sizes = scc.groupBy("component").agg(F.count(F.lit(1)).alias("__c"))
     core_lab = (sizes.orderBy(F.desc("__c"), F.asc("component"))
                 .limit(1).select("component"))
-    core = (scc.join(F.broadcast(core_lab), "component", "semi")
-            .select("node").localCheckpoint(eager=True))
+    core = materialize(scc.join(F.broadcast(core_lab), "component", "semi")
+                       .select("node"))
     rev_edges = edges.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst"))
     reaches_core = G.bfs_depths(rev_edges, core).select("node")
@@ -3474,7 +3468,7 @@ def web_crawl_depth(spark, sf_dir):
     # the seed aggregate and bfs_depths' distinct both read the
     # materialized host-edge relation, not the full link-extraction
     # lineage twice (sf10: 17.4 s -> single-scan cost)
-    edges = _link_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_link_edges(spark, sf_dir))
     return G.bfs_depths(edges, _seed_hosts(edges, "src")).select(
         F.col("node").alias("host"), F.col("depth"))
 
@@ -3572,11 +3566,7 @@ def web_crawl_frontier(spark, sf_dir):
     ranks = (G.pagerank(edges, iterations=3)
              .select(F.col("node").alias("host"), "rank_micros"))
     d = io.load_table(spark, sf_dir, "documents")
-    # materialized ONCE (host-count sized): every rules/delay
-    # derivation references this relation — without the checkpoint each
-    # reference re-executes the distinct over the corpus (plan-asserted
-    # scan bound in tests/test_plans.py)
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
     rules = robotsfn.robots_rules(robots)
     delays = robotsfn.robots_crawl_delay(robots)
     tagged = robotsfn.apply_robots_rules(frontier, rules)
@@ -3701,11 +3691,7 @@ def pipeline_crawl_corpus(spark, sf_dir):
         urlfn.url_host(_RAW_URL_SQL).alias("host"),
         urlfn.url_path(_RAW_URL_SQL).alias("path"),
         urlfn.canonicalize_url(_RAW_URL_SQL).alias("canonical_url"))
-    # materialized ONCE (host-count sized): every rules/delay
-    # derivation references this relation — without the checkpoint each
-    # reference re-executes the distinct over the corpus (plan-asserted
-    # scan bound in tests/test_plans.py)
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
     rules = robotsfn.robots_rules(robots)
     tagged = robotsfn.apply_robots_rules(enriched, rules)
 
@@ -3791,12 +3777,8 @@ def stream_crawl_corpus(spark, sf_dir):
         gzip_records="mixed")
     scratch = tempfile.mkdtemp(prefix="clif_stream_funnel_src_")
     files.repartition(4).write.mode("overwrite").parquet(scratch)
-    # materialized ONCE (host-count sized): every rules/delay
-    # derivation references this relation — without the checkpoint each
-    # reference re-executes the distinct over the corpus (plan-asserted
-    # scan bound in tests/test_plans.py)
-    robots = _host_bodies(d, _ROBOTS_BODY).localCheckpoint(eager=True)
-    rules = robotsfn.robots_rules(robots).localCheckpoint(eager=True)
+    robots = _robots_bodies(d)
+    rules = materialize(robotsfn.robots_rules(robots))
     counters_root = tempfile.mkdtemp(prefix="clif_funnel_counters_")
     kept_root = tempfile.mkdtemp(prefix="clif_funnel_kept_")
     ckpt = tempfile.mkdtemp(prefix="clif_stream_funnel_ckpt_")
@@ -3824,11 +3806,11 @@ def stream_crawl_corpus(spark, sf_dir):
         tagged = robotsfn.apply_robots_rules(enriched, rules)
         qpass = (curation.quality_classifier_logit(
             F.col("t"), dim=1024, weight_of=w_of) / F.lit(1000)) > 0
-        flagged = tagged.select(
+        flagged = materialize(tagged.select(
             "doc_id", "host", "canonical_url",
             F.length("t").alias("tlen"),
             F.col("robots_blocked").alias("blocked"),
-            qpass.alias("qpass")).localCheckpoint(eager=True)
+            qpass.alias("qpass")))
         counters = flagged.groupBy("host").agg(
             F.count(F.lit(1)).cast("long").alias("n_fetched"),
             F.count_if(F.col("blocked")).cast("long")
@@ -4479,6 +4461,30 @@ def text_main_content(spark, sf_dir):
 
 # --- S9f: cross-crawl revisit / mirror classification ---------------------
 
+# The previous crawl's captures, one text each for both engines: 3/4 of
+# the URIs were crawled before, and every fifth of those has changed
+# content since (its old digest differs); every thirteenth doc was also
+# captured at a mirror host.
+_PREV_DIGEST_SQL = ("CASE WHEN doc_id % 5 = 0 THEN md5(text || '-v0') "
+                    "ELSE md5(text) END")
+_MIRROR_URI_SQL = ("'https://mirror.example/' || source || '/' || "
+                   "CAST(doc_id AS STRING)")
+_PREV_CAPS_SQL = f"""
+      SELECT {_DOC_URL_SQL} AS uri, {_PREV_DIGEST_SQL} AS digest
+      FROM documents WHERE doc_id % 4 <> 3
+      UNION ALL
+      SELECT {_MIRROR_URI_SQL}, md5(text)
+      FROM documents WHERE doc_id % 13 = 0"""
+
+
+def _prev_caps(d):
+    """(uri, digest) of the previous crawl — ``_PREV_CAPS_SQL``."""
+    return (d.filter("doc_id % 4 <> 3")
+            .selectExpr(f"{_DOC_URL_SQL} AS uri",
+                        f"{_PREV_DIGEST_SQL} AS digest")
+            .unionByName(d.filter("doc_id % 13 = 0").selectExpr(
+                f"{_MIRROR_URI_SQL} AS uri", "md5(text) AS digest")))
+
 
 @query(
     "web_cdx_revisit",
@@ -4486,18 +4492,7 @@ def text_main_content(spark, sf_dir):
     WITH cur AS (
       SELECT doc_id, {_DOC_URL_SQL} AS uri, md5(text) AS digest
       FROM documents),
-    prev AS (
-      -- last crawl's index: 3/4 of URIs were seen before; every fifth
-      -- of those changed content since (digest differs)
-      SELECT {_DOC_URL_SQL} AS uri,
-             CASE WHEN doc_id % 5 = 0 THEN md5(text || '-v0')
-                  ELSE md5(text) END AS digest
-      FROM documents WHERE doc_id % 4 <> 3),
-    mirrors AS (
-      SELECT 'https://mirror.example/' || source || '/' ||
-             CAST(doc_id AS VARCHAR) AS uri, md5(text) AS digest
-      FROM documents WHERE doc_id % 13 = 0),
-    prev_all AS (SELECT * FROM prev UNION ALL SELECT * FROM mirrors),
+    prev_all AS ({_PREV_CAPS_SQL}),
     by_digest AS (
       SELECT digest, COUNT(DISTINCT uri) AS n_uris,
              MIN(uri) AS one_uri
@@ -4540,18 +4535,7 @@ def web_cdx_revisit(spark, sf_dir):
     d = io.load_table(spark, sf_dir, "documents")
     cur = d.select("doc_id", F.expr(_DOC_URL_SQL).alias("uri"),
                    F.md5("text").alias("digest"))
-    prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(F.expr(_DOC_URL_SQL).alias("uri"),
-                    F.when(F.col("doc_id") % 5 == 0,
-                           F.md5(F.concat("text", F.lit("-v0"))))
-                     .otherwise(F.md5("text")).alias("digest")))
-    mirrors = (d.filter(F.col("doc_id") % 13 == 0)
-               .select(F.concat(F.lit("https://mirror.example/"),
-                                F.col("source"), F.lit("/"),
-                                F.col("doc_id").cast("string"))
-                        .alias("uri"),
-                       F.md5("text").alias("digest")))
-    prev_all = prev.unionByName(mirrors)
+    prev_all = _prev_caps(d)
     by_uri = (prev_all.groupBy("uri")
               .agg(F.min("digest").alias("prev_digest")))
     by_digest = (prev_all.groupBy("digest")
@@ -4622,16 +4606,16 @@ def web_warc_revisit_roundtrip(spark, sf_dir):
                  .select("doc_id", F.expr(_DOC_URL_SQL).alias("url"),
                          prev_pay.alias("ptext"),
                          (F.col("doc_id") % nshards).alias("file_id")))
-    prev_files = warc.assemble_warc_files(
+    prev_files = materialize(warc.assemble_warc_files(
         warc.build_warc_records(prev_docs, payload_col="ptext"),
-        gzip_records="mixed").localCheckpoint(eager=True)
-    cdx_prev = (warc.parse_warc(prev_files)
-                .filter(F.col("warc_type") == "response")
-                .select(F.col("target_uri").alias("url"),
-                        F.md5(F.col("payload_text")).alias("pdigest"),
-                        F.col("record_id").alias("prev_id"),
-                        "file_id", "record_offset")
-                .localCheckpoint(eager=True))
+        gzip_records="mixed"))
+    cdx_prev = materialize(
+        warc.parse_warc(prev_files)
+        .filter(F.col("warc_type") == "response")
+        .select(F.col("target_uri").alias("url"),
+                F.md5(F.col("payload_text")).alias("pdigest"),
+                F.col("record_id").alias("prev_id"),
+                "file_id", "record_offset"))
     # --- crawl 2: emit revisit where the indexed digest matches ---
     cur = (d.select("doc_id", F.expr(_DOC_URL_SQL).alias("url"), "text",
                     F.md5("text").alias("digest"),
@@ -4647,9 +4631,9 @@ def web_warc_revisit_roundtrip(spark, sf_dir):
     cur_files = warc.assemble_warc_files(
         resp_recs.select("doc_id", "file_id", "record")
         .unionByName(rev_recs.select("doc_id", "file_id", "record")),
-        gzip_records="mixed").localCheckpoint(eager=True)
+        gzip_records="mixed")
     # --- cold read-back + resolution ---
-    parsed = warc.parse_warc(cur_files).localCheckpoint(eager=True)
+    parsed = materialize(warc.parse_warc(cur_files))
     resp_out = (parsed.filter(F.col("warc_type") == "response")
                 .select(F.col("target_uri").alias("uri"),
                         F.lit("response").alias("warc_type"),
@@ -4664,13 +4648,12 @@ def web_warc_revisit_roundtrip(spark, sf_dir):
                         F.octet_length("payload").cast("long")
                          .alias("stored_bytes")))
     # digest pairing THROUGH the index: (uri, digest) -> referred span
-    pairs = (rev_rows.join(
+    pairs = materialize(rev_rows.join(
         cdx_prev,
         (rev_rows["url"] == cdx_prev["url"])
         & (rev_rows["rdigest"] == cdx_prev["pdigest"]))
         .select(rev_rows["url"].alias("url"), "stored_bytes",
-                "file_id", "record_offset")
-        .localCheckpoint(eager=True))
+                "file_id", "record_offset"))
     fetched = (warc.read_records_at(
         prev_files, pairs.select("file_id", "record_offset"))
         .filter(F.col("warc_type") == "response")
@@ -4689,15 +4672,7 @@ def web_warc_revisit_roundtrip(spark, sf_dir):
     WITH RECURSIVE
     mcaps AS (
       SELECT {_DOC_URL_SQL} AS uri, md5(text) AS digest FROM documents
-      UNION ALL
-      SELECT {_DOC_URL_SQL},
-             CASE WHEN doc_id % 5 = 0 THEN md5(text || '-v0')
-                  ELSE md5(text) END
-      FROM documents WHERE doc_id % 4 <> 3
-      UNION ALL
-      SELECT 'https://mirror.example/' || source || '/' ||
-             CAST(doc_id AS VARCHAR), md5(text)
-      FROM documents WHERE doc_id % 13 = 0),
+      UNION ALL{_PREV_CAPS_SQL}),
     medges AS (SELECT DISTINCT uri AS src, digest AS dst FROM mcaps),
     mue AS (SELECT src, dst FROM medges
             UNION SELECT dst, src FROM medges),
@@ -4750,18 +4725,7 @@ def web_mirror_sets(spark, sf_dir):
     d = io.load_table(spark, sf_dir, "documents")
     cur = d.select(F.expr(_DOC_URL_SQL).alias("uri"),
                    F.md5("text").alias("digest"))
-    prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(F.expr(_DOC_URL_SQL).alias("uri"),
-                    F.when(F.col("doc_id") % 5 == 0,
-                           F.md5(F.concat("text", F.lit("-v0"))))
-                     .otherwise(F.md5("text")).alias("digest")))
-    mirrors = (d.filter(F.col("doc_id") % 13 == 0)
-               .select(F.concat(F.lit("https://mirror.example/"),
-                                F.col("source"), F.lit("/"),
-                                F.col("doc_id").cast("string"))
-                        .alias("uri"),
-                       F.md5("text").alias("digest")))
-    caps = cur.unionByName(prev).unionByName(mirrors)
+    caps = cur.unionByName(_prev_caps(d))
     comp = G.connected_components(
         caps.select(F.col("uri").alias("src"),
                     F.col("digest").alias("dst")))
@@ -4780,15 +4744,7 @@ def web_mirror_sets(spark, sf_dir):
     WITH RECURSIVE
     icaps AS (
       SELECT {_DOC_URL_SQL} AS uri, md5(text) AS digest FROM documents
-      UNION ALL
-      SELECT {_DOC_URL_SQL},
-             CASE WHEN doc_id % 5 = 0 THEN md5(text || '-v0')
-                  ELSE md5(text) END
-      FROM documents WHERE doc_id % 4 <> 3
-      UNION ALL
-      SELECT 'https://mirror.example/' || source || '/' ||
-             CAST(doc_id AS VARCHAR), md5(text)
-      FROM documents WHERE doc_id % 13 = 0
+      UNION ALL{_PREV_CAPS_SQL}
       UNION ALL
       SELECT u1.uri, md5(d2.text)
       FROM (SELECT doc_id, {_DOC_URL_SQL} AS uri FROM documents
@@ -4844,18 +4800,7 @@ def web_mirror_sets_incremental(spark, sf_dir):
     d = io.load_table(spark, sf_dir, "documents")
     cur = d.select(F.expr(_DOC_URL_SQL).alias("uri"),
                    F.md5("text").alias("digest"))
-    prev = (d.filter(F.col("doc_id") % 4 != 3)
-            .select(F.expr(_DOC_URL_SQL).alias("uri"),
-                    F.when(F.col("doc_id") % 5 == 0,
-                           F.md5(F.concat("text", F.lit("-v0"))))
-                     .otherwise(F.md5("text")).alias("digest")))
-    mirrors = (d.filter(F.col("doc_id") % 13 == 0)
-               .select(F.concat(F.lit("https://mirror.example/"),
-                                F.col("source"), F.lit("/"),
-                                F.col("doc_id").cast("string"))
-                        .alias("uri"),
-                       F.md5("text").alias("digest")))
-    caps12 = cur.unionByName(prev).unionByName(mirrors)
+    caps12 = cur.unionByName(_prev_caps(d))
     # the standing state: components over crawls 1-2, kept as star
     # edges (node -> component min; roots carry no edge — their
     # component is recovered from any member)
@@ -4949,8 +4894,8 @@ def web_recrawl_plan(spark, sf_dir):
     the dedup exchange a crawler pays anyway; sitemap parse stays
     host-count sized (the web_sitemap_parse plan)."""
     d = io.load_table(spark, sf_dir, "documents")
-    smaps = _host_bodies(d, f"{_SITEMAP_SQL} AS xml",
-                         f"{_SRC_N} % 4 AS k").localCheckpoint(eager=True)
+    smaps = materialize(_host_bodies(d, f"{_SITEMAP_SQL} AS xml",
+                                     f"{_SRC_N} % 4 AS k"))
     blocks = smaps.select(
         "host", "k",
         F.explode(F.regexp_extract_all(

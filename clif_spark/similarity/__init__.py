@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from clif_spark.io import ensure_parallelism
+from clif_spark.operators.core import materialize
 
 
 def _bound_ipc_tasks(df: DataFrame, bytes_per_task: int = 8 << 20
@@ -530,7 +531,7 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iter: int = 10,
       corpus size. The k×dim result collects to the driver (dimension-table
       scale, the footprint ``ivf_centroids`` already documents).
     - The driver-side loop is control flow only; per-round lineage is cut
-      by ``localCheckpoint`` on the input, not by recursive plan growth
+      by ``core.materialize`` on the input, not by recursive plan growth
       (each round's plan references the checkpointed base, not the prior
       round).
     - Init is deterministic: the k vectors with the smallest
@@ -544,10 +545,9 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iter: int = 10,
     """
     if max_iter < 1:
         raise ValueError("kmeans requires max_iter >= 1")
-    v = (ensure_parallelism(vectors)
-         .select(F.col(id_col).alias("__id"),
-                 F.col(vec_col).cast("array<double>").alias("__v"))
-         .localCheckpoint(eager=True))
+    v = materialize(ensure_parallelism(vectors).select(
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).cast("array<double>").alias("__v")))
     init = (v.orderBy(F.md5(F.concat(F.lit(seed + ":"),
                                      F.col("__id").cast("string"))), "__id")
              .limit(k).select("__v").collect())

@@ -812,11 +812,11 @@ def upsert_partitioned_snapshot(batch_df: DataFrame, root: str,
     else:
         base = stamped.limit(0)
     merged = _core.upsert_keep_latest(base, stamped, keys, order)
-    # localCheckpoint: the merge output must be MATERIALIZED before the
-    # write — Spark (correctly) refuses to overwrite a path that is
-    # still being read by the same plan's lineage. The checkpoint is
-    # touched-partition sized, i.e. exactly the rewrite set.
-    merged = merged.localCheckpoint(eager=True)
+    # the merge output must be MATERIALIZED before the write — Spark
+    # (correctly) refuses to overwrite a path that is still being read
+    # by the same plan's lineage. The cut is touched-partition sized,
+    # i.e. exactly the rewrite set.
+    merged = _core.materialize(merged)
     (merged.write
            .mode("overwrite")
            .option("partitionOverwriteMode", "dynamic")
@@ -864,6 +864,8 @@ def compact_partitioned_snapshot(spark: SparkSession, root: str,
     import shutil
     import urllib.parse
 
+    from clif_spark.operators import core as _core
+
     snap = spark.read.parquet(root)
     # collect each partition value TWICE — typed (for the isin prune)
     # and as Spark's own string rendering (cast to string matches the
@@ -877,10 +879,13 @@ def compact_partitioned_snapshot(spark: SparkSession, root: str,
     if not dirty_rows:
         return 0
     dirty = [r["__v"] for r in dirty_rows]
-    sub = snap.filter(F.col(part_col).isin(dirty))
-    n_tomb = sub.filter(F.col(tombstone_col)).count()
-    cleaned = (sub.filter(~F.col(tombstone_col))
-               .localCheckpoint(eager=True))
+    # materialized before the overwrite (the plan must not read the path
+    # it rewrites); the tombstone count rides that job
+    sub, m = _core.materialize_observed(
+        snap.filter(F.col(part_col).isin(dirty)),
+        n_tomb=F.count_if(F.col(tombstone_col)))
+    n_tomb = m["n_tomb"]
+    cleaned = sub.filter(~F.col(tombstone_col))
     survivors = {r[0] for r in
                  cleaned.select(F.col(part_col).cast("string"))
                  .distinct().collect()}

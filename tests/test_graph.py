@@ -607,7 +607,7 @@ def test_pagerank_weighted_personalized_identities(spark):
 
 
 def test_reliable_checkpoint_option_writes_to_dir_and_matches(spark):
-    """VERDICT r17 item 8: with spark.clif.graph.checkpointDir set, the
+    """VERDICT r17 item 8: with spark.clif.checkpointDir set, the
     iterative operators cut lineage through RELIABLE checkpoints under
     that directory (cluster fault-tolerance posture) and produce the
     identical labeling; unset (the default) keeps localCheckpoint —
@@ -615,6 +615,7 @@ def test_reliable_checkpoint_option_writes_to_dir_and_matches(spark):
     import os
     import tempfile
 
+    from clif_spark.operators import core
     from clif_spark.operators import graph as G
 
     edges = spark.createDataFrame(
@@ -624,7 +625,7 @@ def test_reliable_checkpoint_option_writes_to_dir_and_matches(spark):
 
     cdir = tempfile.mkdtemp(prefix="clif_graph_ckpt_")
     assert os.listdir(cdir) == []
-    spark.conf.set(G.CHECKPOINT_DIR_CONF, cdir)
+    spark.conf.set(core.CHECKPOINT_DIR_CONF, cdir)
     try:
         got = sorted(map(tuple,
                          G.connected_components(edges).collect()))
@@ -632,11 +633,11 @@ def test_reliable_checkpoint_option_writes_to_dir_and_matches(spark):
         # reliable checkpoints physically landed under the conf'd dir
         assert os.listdir(cdir), "no checkpoint data written"
     finally:
-        spark.conf.unset(G.CHECKPOINT_DIR_CONF)
+        spark.conf.unset(core.CHECKPOINT_DIR_CONF)
 
 
 def test_reliable_checkpoint_follows_a_changed_dir(spark):
-    """ADVICE r18 #2: changing spark.clif.graph.checkpointDir between
+    """ADVICE r18 #2: changing spark.clif.checkpointDir between
     calls re-points the SparkContext — the second directory receives
     the second call's reliable checkpoints (previously the first
     directory, once set on the context, silently kept them all)."""
@@ -644,6 +645,7 @@ def test_reliable_checkpoint_follows_a_changed_dir(spark):
     import shutil
     import tempfile
 
+    from clif_spark.operators import core
     from clif_spark.operators import graph as G
 
     edges = spark.createDataFrame(
@@ -652,13 +654,13 @@ def test_reliable_checkpoint_follows_a_changed_dir(spark):
     dirs = [tempfile.mkdtemp(prefix="clif_graph_ckpt_") for _ in range(2)]
     try:
         for cdir in dirs:
-            spark.conf.set(G.CHECKPOINT_DIR_CONF, cdir)
+            spark.conf.set(core.CHECKPOINT_DIR_CONF, cdir)
             got = sorted(map(tuple,
                              G.connected_components(edges).collect()))
             assert got == base
             assert os.listdir(cdir), f"no checkpoint data under {cdir}"
     finally:
-        spark.conf.unset(G.CHECKPOINT_DIR_CONF)
+        spark.conf.unset(core.CHECKPOINT_DIR_CONF)
         for cdir in dirs:
             shutil.rmtree(cdir, ignore_errors=True)
 

@@ -19,6 +19,7 @@ SHARED_FIXTURES = [
     "_ROBOTS_TXT_SQL", "_WILD_TXT_SQL", "_SITEMAP_SQL", "_SMIDX_SQL",
     "_SMCHILD_SQL", "_SRC_N", "_M_SQL", "_LINK_PAGE_SQL",
     "_LINK_BASE_PATH_SQL", "_ANCHOR_EXTRA_SQL", "_MAIN_PAGE_SQL",
+    "_PREV_DIGEST_SQL", "_MIRROR_URI_SQL",
 ]
 
 # The documents columns plus the per-child columns the sitemap-index
