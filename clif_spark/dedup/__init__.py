@@ -206,8 +206,7 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
                       bands: int = DEFAULT_BANDS,
                       rows_per_band: int = DEFAULT_ROWS_PER_BAND,
                       verify: str = "carry",
-                      max_bucket: int = 200,
-                      broadcast_pairs: bool = True) -> DataFrame:
+                      max_bucket: int = 200) -> DataFrame:
     """End-to-end near-dup pipeline: shingle -> minhash bands -> LSH buckets
     -> exact-Jaccard verify -> pairs over threshold.
 
@@ -229,9 +228,7 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
       The corpus-wide shuffle stays narrow at the price of recomputing the
       shingle arrays on the verify side — the shape for corpora with
       unbounded document lengths (or pair it with a materialized staging
-      table for the shingle relation). For candidate sets too large to
-      broadcast (dup-heavy crawls: >~10M pairs) also pass
-      ``broadcast_pairs=False`` to fall back to shuffle joins.
+      table for the shingle relation).
     """
     sh = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc"),
@@ -307,10 +304,8 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
     keys = (sh.select("doc", *band_cols)
               .unpivot(["doc"], [f"band_{b}" for b in range(bands)],
                        "band", "band_key"))
-    pairs = pairs_from_buckets(keys, ["band", "band_key"], "doc",
-                               max_bucket=max_bucket)
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
+    pairs = F.broadcast(pairs_from_buckets(keys, ["band", "band_key"],
+                                           "doc", max_bucket=max_bucket))
     sa = sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -489,8 +484,7 @@ def chunk_sig_store_delete(spark, doc_ids: DataFrame, root: str,
 
 def chunk_sig_store_screen(spark, sigs: DataFrame, root: str,
                            id_col: str = "doc",
-                           max_hamming: int = 4,
-                           max_bucket: int | None = None) -> DataFrame:
+                           max_hamming: int = 4) -> DataFrame:
     """Screen a delivery of chunk signatures against the persisted
     store: band on the four 16-bit chunks exactly as
     ``hamming_pairs_from_chunks`` (candidates share one exact chunk —
@@ -503,18 +497,7 @@ def chunk_sig_store_screen(spark, sigs: DataFrame, root: str,
     is broadcast (deliveries are small against a standing corpus), so
     the screen is one store-sized scan with no shuffle — at 100 TB the
     signature relation is ~1e-4 of the corpus bytes and the screen
-    never touches an image.
-
-    ``max_bucket`` (ADVICE r17) is the hamming_pairs_from_chunks skew
-    guard transplanted to the store side: a hot 16-bit band value
-    (constant/monotone images share chunks) makes the band join
-    quadratic in that bucket — the cap counts STORE rows per
-    (band, val) in one extra store-sized aggregation and drops
-    oversized buckets before the join, trading those candidates away
-    exactly as the banding siblings do. Default None keeps the exact
-    uncapped semantics the gated rows were hashed under (their
-    fixtures carry no hot band, so the screen stays one scan + one
-    broadcast join with zero extra jobs unless a caller opts in)."""
+    never touches an image."""
     from clif_spark.streaming import read_cdc_snapshot
 
     chunks = [f"c{m}" for m in range(SIMHASH_CHUNKS)]
@@ -531,12 +514,6 @@ def chunk_sig_store_screen(spark, sigs: DataFrame, root: str,
                             "bk.band", "bk.val")
 
     store = banded(read_cdc_snapshot(spark, root), "doc", "old_id")
-    if max_bucket is not None:
-        hot = (store.groupBy("band", "val")
-               .agg(F.count(F.lit(1)).alias("__n"))
-               .filter(F.col("__n") > max_bucket)
-               .select("band", "val"))
-        store = store.join(hot, ["band", "val"], "left_anti")
     delivery = banded(sigs, id_col, "new_id")
     joined = store.join(F.broadcast(delivery), ["band", "val"])
     hamming = sum(
@@ -563,8 +540,8 @@ def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
 
 
 def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.6,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        max_bucket: int | None = None) -> DataFrame:
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (the
     PPJoin/AllPairs family): all document pairs whose token-set Jaccard
     >= ``threshold``, with NO false negatives — the candidate-generation
@@ -580,9 +557,9 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.6,
     Plan shape, scale-first: one groupBy(token) for global frequencies,
     one shuffle join to attach them, a per-document window (entity-
     bounded: state is one doc's token list) to rank + cut the prefix,
-    then an equi self-JOIN on the prefix token for candidates and the
-    exact jaccard_verify join — every stage keyed, no driver traffic,
-    no all-pairs anywhere.
+    then an equi self-JOIN on the prefix token for candidates and an
+    exact per-pair token-array verify — every stage keyed, no driver
+    traffic, no all-pairs anywhere.
 
     Candidate generation is a JOIN, deliberately NOT the capped
     pairs_from_buckets expansion the approximate dedups share: dropping
@@ -595,9 +572,6 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.6,
     round 7). The join form is exact at any bucket size; skew within a
     hot prefix token is ordinary join-key skew — AQE skew-split
     territory, plan-visible, never a silent answer change.
-
-    ``max_bucket`` (optional) restores the capped approximate mode for
-    callers that explicitly want LSH-style bounded state over exactness.
     """
     # The token relation feeds FOUR distinct subplan occurrences (the
     # frequency pass, the ranking join, and both sides of the verify
@@ -619,12 +593,6 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.6,
         ranked.filter(F.col("rnk") <= F.col("sz")
                       - F.ceil(F.lit(float(threshold)) * F.col("sz")) + 1)
         .select("tok", "doc", "sz"))
-    if max_bucket is not None:
-        cands = pairs_from_buckets(prefix.select("tok", "doc"), ["tok"],
-                                   "doc", max_bucket=max_bucket)
-        return jaccard_verify(cands,
-                              toks.withColumnRenamed("tok", "shingle"),
-                              threshold=threshold)
     # LENGTH filter at the candidate join (PPJoin's companion prune):
     # J >= t forces max(|A|,|B|) <= min(|A|,|B|)/t, so wildly different
     # sizes can never qualify — applied with a +-1 slack so float

@@ -95,8 +95,12 @@ def connected_components(edges: DataFrame, src_col: str = "src",
     scan of the edge relation with no corpus shuffle. Per-round
     checkpoint keeps lineage flat (without it round K re-executes all
     K-1 predecessors — the pagerank lesson). Host-like graphs have
-    single-digit diameters; for high-diameter graphs use
-    connected_components_star (Kiveris et al., O(log^2 n) rounds)."""
+    single-digit diameters. A component whose diameter exceeds
+    ``max_iters`` raises; no answer is returned half-converged. This
+    is the engine's one CC algorithm: large-star/small-star
+    contraction saved at most two rounds per call but launched about
+    3x the jobs per round, so it ran 1.1-2.2x slower on every caller
+    and was removed (numbers in CHANGES.md)."""
     s, d = F.col(src_col), F.col(dst_col)
     ue = (edges.select(F.explode(F.array(
               F.struct(s.alias("src"), d.alias("dst")),
@@ -178,98 +182,6 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
             return depths
         prev = now
     raise RuntimeError(f"bfs_depths did not converge in {max_iters} rounds")
-
-
-def connected_components_star(edges: DataFrame, src_col: str = "src",
-                              dst_col: str = "dst",
-                              max_iters: int = FIXPOINT_MAX_ITERS,
-                              return_rounds: bool = False):
-    """Connected components via ALTERNATING LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", 2014) — the high-diameter alternative to min-label
-    propagation: label propagation pays O(diameter) rounds (a
-    100-hop mirror chain = 100 edge-relation scans), star contraction
-    provably converges in O(log^2 n) rounds regardless of diameter,
-    because each round rewires nodes directly toward their current
-    component minimum instead of moving labels one hop.
-
-    One round = two passes over the shrinking edge relation:
-    - LARGE-STAR at node u: every strictly-LARGER neighbor rewires to
-      m = min(neighborhood ∪ {u});
-    - SMALL-STAR at node u: every smaller-or-equal neighbor (and u)
-      rewires to the minimum of the small side.
-    Both preserve connectivity; at fixpoint the edge set IS the star
-    (node -> component minimum), so the result equals min-label
-    propagation's labeling EXACTLY — gated under the same
-    recursive-closure oracle. Fixpoint test: exact set equality of the
-    edge relation between rounds — both relations are distinct, so
-    equal row counts (observed on the checkpoint jobs) plus an empty
-    ``nxt EXCEPT ALL e`` prove it; the exceptAll runs only in a round
-    whose counts are equal.
-
-    Same discipline as the siblings: per-round checkpoint (the
-    pagerank lineage lesson), loud failure past ``max_iters``. Cost
-    per round: two groupBy-min + joins on a node-sized relation —
-    same exchange shape as one label round, so the O(log^2 n) vs
-    O(diameter) round count is the whole comparison.
-
-    Returns (node, component); with ``return_rounds=True`` returns
-    (labels, rounds) for round-count instrumentation."""
-    s, d = F.col(src_col), F.col(dst_col)
-    e, m = materialize_observed(edges.select(s.alias("u"), d.alias("v"))
-                                .filter(F.col("u") != F.col("v"))
-                                .distinct(), n=F.count(F.lit(1)))
-    n_e = m["n"]
-    nodes = (e.select(F.explode(F.array("u", "v")).alias("node"))
-             .distinct()
-             .transform(materialize))
-
-    def _sym(rel):
-        return (rel.unionByName(rel.select(F.col("v").alias("u"),
-                                           F.col("u").alias("v")))
-                .distinct())
-
-    for rounds in range(1, max_iters + 1):
-        nbrs = _sym(e)
-        # LARGE-STAR: m(u) = min over the FULL neighborhood and u
-        mins = (nbrs.groupBy("u")
-                .agg(F.min("v").alias("__mn"))
-                .select("u", F.least(F.col("__mn"), F.col("u"))
-                        .alias("__m")))
-        e_large = (nbrs.join(mins, "u")
-                   .filter(F.col("v") > F.col("u"))
-                   .select(F.col("v").alias("u"),
-                           F.col("__m").alias("v"))
-                   .distinct()
-                   .transform(materialize))
-        # SMALL-STAR: m(u) = min over the SMALLER neighbors (all < u),
-        # to which the smaller neighbors AND u itself rewire
-        nbrs2 = _sym(e_large).filter(F.col("v") < F.col("u"))
-        mins2 = nbrs2.groupBy("u").agg(F.min("v").alias("__m"))
-        nxt, m = materialize_observed(
-            nbrs2.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-            .unionByName(mins2.select("u", F.col("__m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct(), n=F.count(F.lit(1)))
-        # set equality: both relations are distinct, so |nxt| == |e|
-        # and nxt \ e == ∅ together imply nxt == e; when the counts
-        # differ (every non-final round) the exceptAll is skipped
-        changed = m["n"] != n_e or nxt.exceptAll(e).count() != 0
-        release(e_large, e)
-        e, n_e = nxt, m["n"]
-        if not changed:
-            # fixpoint: e is the star node -> component min; roots
-            # (and nothing else) are absent from the child side
-            labels = (nodes.join(
-                e.select(F.col("u").alias("node"),
-                         F.col("v").alias("__c")), "node", "left")
-                .select("node", F.coalesce("__c", "node")
-                        .alias("component")))
-            return (labels, rounds) if return_rounds else labels
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} "
-        f"rounds")
 
 
 def _fw_bw_colors(e: DataFrame, nodes: DataFrame,

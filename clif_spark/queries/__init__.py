@@ -250,7 +250,7 @@ _REGATE = [
     # their out-degree/weight totals and node relation; the four
     # PageRank forms are one pagerank, and HITS lost its unused
     # periodic-checkpoint branch
-    "web_host_components", "web_host_components_star", "web_host_kcore",
+    "web_host_components", "web_host_kcore",
     "web_crawl_depth", "web_crawl_frontier", "web_host_hits",
     "web_hits_warm_start", "web_host_pagerank",
     "web_pagerank_personalized", "web_pagerank_warm_start",
@@ -288,6 +288,8 @@ _REGATE = [
     "stream_incremental_dedup", "stream_partitioned_upsert",
     "stream_semantic_maintain", "text_bpe_roundtrip",
     "u11_partitioned_upsert",
+    # dedup.minhash_near_dups always broadcasts its rejoin pairs
+    "dedup_minhash_recall_bound", "pipeline_llm_curation",
 ]
 VERIFY_HEAD_SIZE = 50
 _LEDGER_DIR = Path(__file__).resolve().parents[2]

@@ -1068,8 +1068,7 @@ def _er_store_admit(rows, root, version):
         root, keys=["rid"], order=["__v", "rid"], lineage="er-store")
 
 
-def _er_store_delivery(spark, delta, root, version,
-                       read_fn=None, admit_fn=None):
+def _er_store_delivery(spark, delta, root, version):
     """Apply one delivery of (rid, name) records to the standing ER
     store: screen the delta against store records via the blocked
     two-pass verify (delta-vs-all — old-old pairs never re-verified),
@@ -1078,19 +1077,12 @@ def _er_store_delivery(spark, delta, root, version,
     plus ONLY the standing rows whose label changed — delta-sized in
     the attach case, merge-sized when a dirty record bridges standing
     clusters. The store parquet is the only standing input
-    (plan-pinned in tests/test_plans.py).
-
-    ``read_fn``/``admit_fn`` swap the store BACKEND (read live rows /
-    fold rows at a version) without touching the resolve legs — the
-    r16 backend A/B (scripts/er_store_ab.py) drives the identical
-    lifecycle over the partitioned and LSM forms through these; the
-    defaults are the gated CoW CDC path, bit-unchanged."""
+    (plan-pinned in tests/test_plans.py)."""
     from clif_spark import streaming as STR
     from clif_spark.operators import graph as G
 
-    raw_store = (read_fn() if read_fn is not None
-                 else STR.read_cdc_snapshot(spark, root))
-    store = core.materialize(raw_store.select("rid", "name", "cluster"))
+    store = core.materialize(STR.read_cdc_snapshot(spark, root)
+                             .select("rid", "name", "cluster"))
     delta = core.materialize(delta)
     star = (store.filter(F.col("cluster") != F.col("rid"))
             .select(F.col("rid").alias("src"),
@@ -1108,11 +1100,7 @@ def _er_store_delivery(spark, delta, root, version,
                .filter(F.col("component") != F.col("cluster"))
                .select("rid", "name",
                        F.col("component").alias("cluster")))
-    rows = delta_rows.unionByName(changed)
-    if admit_fn is not None:
-        admit_fn(rows, version)
-    else:
-        _er_store_admit(rows, root, version)
+    _er_store_admit(delta_rows.unionByName(changed), root, version)
 
 
 def _er_store_takedown(spark, removed, root, version):

@@ -2905,11 +2905,8 @@ def web_pagerank_weighted_personalized(spark, sf_dir):
         weight_col="n_urls", seeds=_seed_hosts(edges, "src_host"))
 
 
-# ONE oracle for BOTH component implementations (min-label propagation
-# and large-star/small-star contraction): the fixpoint labeling is a
-# pure function of the graph, so the two gated rows must hash-equal
-# under the identical recursive-CTE closure — any divergence between
-# the round structures is a bug in one of them.
+# The fixpoint labeling is a pure function of the graph, so min-label
+# propagation must hash-equal the recursive-CTE closure + MIN exactly.
 _HOST_COMPONENTS_ORACLE = f"""
     WITH RECURSIVE {_LINK_EDGES_CTES},
     e2 AS (SELECT DISTINCT src_host AS src, dst_host AS dst
@@ -2932,10 +2929,10 @@ _HOST_COMPONENTS_ORACLE = f"""
 
 
 def _host_component_edges(spark, sf_dir):
-    """The shared gated subgraph of the two component rows: host-to-
-    host cycle edges with every 4th dropped — five 4-host chains (see
-    web_host_components's docstring for why that shape is the fixture
-    that catches single-hop and numeric-min bugs)."""
+    """web_host_components' gated subgraph: host-to-host cycle edges
+    with every 4th dropped — five 4-host chains (see its docstring for
+    why that shape is the fixture that catches single-hop and
+    numeric-min bugs)."""
     return (_link_edges(spark, sf_dir)
             .filter(F.col("dst").startswith("src"))
             .filter(F.col("src") != F.col("dst"))
@@ -2969,31 +2966,6 @@ def web_host_components(spark, sf_dir):
     from pyspark.sql import Window
 
     comp = G.connected_components(_host_component_edges(spark, sf_dir))
-    return comp.select(
-        F.col("node").alias("host"), "component",
-        F.count(F.lit(1)).over(Window.partitionBy("component"))
-         .cast("long").alias("component_size"))
-
-
-@query("web_host_components_star", oracle=_HOST_COMPONENTS_ORACLE)
-def web_host_components_star(spark, sf_dir):
-    """D5d-star (engine ext.): the SAME components question answered
-    by the alternating large-star/small-star contraction
-    (operators/graph.connected_components_star, Kiveris et al. 2014)
-    — gated under the IDENTICAL recursive-CTE oracle as
-    web_host_components, so the two round structures must agree
-    hash-for-hash on the shared fixture. The variant exists for
-    HIGH-DIAMETER graphs: min-label propagation pays O(diameter)
-    edge-relation rounds, which web_mirror_sets' capture graphs can
-    hit when changed-URI bridge chains deepen (the documented risk in
-    that row); star contraction converges in O(log^2 n) rounds at the
-    same per-round exchange shape (unit-pinned: a 119-hop chain in
-    <=12 rounds where label propagation exhausts a 30-round budget)."""
-    from clif_spark.operators import graph as G
-    from pyspark.sql import Window
-
-    comp = G.connected_components_star(
-        _host_component_edges(spark, sf_dir))
     return comp.select(
         F.col("node").alias("host"), "component",
         F.count(F.lit(1)).over(Window.partitionBy("component"))
@@ -3390,7 +3362,9 @@ def web_bowtie_classes(spark, sf_dir):
     # one materialization: the SCC pass and both BFS legs re-read it
     edges = materialize(e.unionByName(rev).distinct())
 
-    scc = materialize(G.strongly_connected_components(edges))
+    # read three times below; SCC's colouring exit already returns a
+    # materialization, so no copy is made here
+    scc = G.strongly_connected_components(edges)
     sizes = scc.groupBy("component").agg(F.count(F.lit(1)).alias("__c"))
     core_lab = (sizes.orderBy(F.desc("__c"), F.asc("component"))
                 .limit(1).select("component"))
@@ -4709,17 +4683,13 @@ def web_mirror_sets(spark, sf_dir):
     groups) widen sets the same way.
 
     Shape: the bipartite (uri, digest) edge relation is CAPTURE-INDEX
-    sized, never corpus sized (one md5 per capture row). Algorithm
-    choice is MEASURED, not assumed (r13): capture graphs are mostly
-    shallow star components, where min-label propagation converges in
-    ~6 rounds and runs 1.7x faster than star contraction at sf10
-    (9.4 s vs 16.1 s — star pays two passes + an exact set-equality
-    probe per round, which only pays off when diameter is large); the
-    deep-chain risk (changed-URI bridge chains growing with crawl
-    count) is guarded by max_iters failing LOUD, and the remedy is one
-    line — connected_components_star, gated hash-equal under the same
-    oracle class (web_host_components_star), converges in O(log^2 n)
-    rounds regardless of diameter."""
+    sized, never corpus sized (one md5 per capture row). Capture
+    graphs are mostly shallow star components, where min-label
+    propagation converges in ~6 rounds (1.7x faster than star
+    contraction at sf10, 9.4 s vs 16.1 s; star contraction was
+    removed once it lost on every caller). The deep-chain risk
+    (changed-URI bridge chains growing with crawl count) is guarded
+    by max_iters failing LOUD, never by a half-converged answer."""
     from clif_spark.operators import graph as G
 
     d = io.load_table(spark, sf_dir, "documents")

@@ -587,8 +587,7 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iter: int = 10,
 def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
                    k: int | None = None, max_iter: int = 5,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   dim: int = 64,
-                   max_bucket: int | None = None) -> DataFrame:
+                   dim: int = 64) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     the embedding space with k-means, generate candidate pairs only WITHIN
     clusters, verify with exact cosine >= ``threshold``, connect verified
@@ -611,10 +610,8 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
     the class of bug the r7 prefix-filter scale test caught — see
     BASELINE.md round 7); within-cell quadratic cost is SemDeDup's own
     documented trade, dialed by the cluster count k (cells ~ n/k).
-    ``max_bucket`` (optional) restores the capped approximate mode for
-    callers that explicitly prefer bounded state over within-cell
-    completeness. Cosine verification joins only candidate pairs; the
-    component step is the existing edge-relation min-label propagation.
+    Cosine verification joins only candidate pairs; the component step
+    is the existing edge-relation min-label propagation.
 
     ``k=None`` (default) sizes the cluster count to the corpus —
     max(8, n/1500) capped at 4096 — so cells stay ~1500 vectors and the
@@ -624,7 +621,6 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
     The count() this needs is one columnless scan; pass an explicit k to
     skip it.
     """
-    from clif_spark.dedup import pairs_from_buckets
     from clif_spark.operators.graph import connected_components
 
     if k is None:
@@ -632,14 +628,10 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
     _, assign, _ = kmeans(vectors, k=k, max_iter=max_iter,
                           id_col=id_col, vec_col=vec_col)
     cells = assign.select("cell", F.col(id_col))
-    if max_bucket is not None:
-        cands = pairs_from_buckets(cells, ["cell"], id_col,
-                                   max_bucket=max_bucket)
-    else:
-        cands = (cells.withColumnRenamed(id_col, "a")
-                 .join(cells.withColumnRenamed(id_col, "b"), "cell")
-                 .filter(F.col("a") < F.col("b"))
-                 .select("a", "b").distinct())
+    cands = (cells.withColumnRenamed(id_col, "a")
+             .join(cells.withColumnRenamed(id_col, "b"), "cell")
+             .filter(F.col("a") < F.col("b"))
+             .select("a", "b").distinct())
     v = vectors.select(F.col(id_col), F.col(vec_col).alias("__v"))
     edges = (cands
              .join(v.select(F.col(id_col).alias("a"),

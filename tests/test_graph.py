@@ -104,8 +104,6 @@ def test_fixpoint_results_partition_invariant(spark):
         seeds = spark.createDataFrame([("n0",)], "node string")
         cc = {tuple(r) for r in G.connected_components(edges).collect()}
         bf = {tuple(r) for r in G.bfs_depths(edges, seeds).collect()}
-        ccs = {tuple(r) for r in
-               G.connected_components_star(edges).collect()}
         tri_edges = edges.unionByName(spark.createDataFrame(
             [("n0", "n2")], "src string, dst string"))
         tr = {tuple(r) for r in G.triangle_counts(tri_edges).collect()}
@@ -113,10 +111,8 @@ def test_fixpoint_results_partition_invariant(spark):
         kc = {tuple(r) for r in G.k_core(tri_edges, 2).collect()}
         pp = {tuple(r) for r in G.pagerank(edges, seeds=seeds).collect()}
         if parts == 1:
-            cc1, bf1, ccs1, tr1, hi1, kc1, pp1 = \
-                cc, bf, ccs, tr, hi, kc, pp
+            cc1, bf1, tr1, hi1, kc1, pp1 = cc, bf, tr, hi, kc, pp
     assert cc == cc1 and bf == bf1
-    assert ccs == ccs1 == cc1  # star == label, both partition-invariant
     assert tr == tr1 == {("n0", 1), ("n1", 1), ("n2", 1)}
     assert hi == hi1
     assert kc == kc1 == {("n0", 2), ("n1", 2), ("n2", 2)}
@@ -135,48 +131,6 @@ def test_bfs_depths_raises_without_convergence(spark):
     seeds = spark.createDataFrame([("a",)], "node string")
     with pytest.raises(RuntimeError, match="converge"):
         G.bfs_depths(edges, seeds, max_iters=1)
-
-
-def test_star_components_match_label_propagation(spark):
-    """connected_components_star must produce EXACTLY min-label
-    propagation's labeling (same fixpoint, different round structure):
-    multi-hop transitivity, lexicographic minimum, undirected
-    handling — the same fixture the label version pins."""
-    from clif_spark.operators import graph as G
-
-    edges = spark.createDataFrame(
-        [("n9", "n10"), ("n11", "n10"), ("n12", "n11"),
-         ("b", "a")],
-        "src string, dst string")
-    star = {r.node: r.component
-            for r in G.connected_components_star(edges).collect()}
-    label = {r.node: r.component
-             for r in G.connected_components(edges).collect()}
-    assert star == label == {"n9": "n10", "n10": "n10", "n11": "n10",
-                             "n12": "n10", "a": "a", "b": "a"}
-
-
-def test_star_components_deep_chain_beats_diameter(spark):
-    """The reason the star variant exists: on a DEEP CHAIN (diameter
-    119) min-label propagation needs O(diameter) rounds — more than
-    the shared budget — while star contraction converges in O(log^2 n)
-    rounds and labels every node with the chain minimum."""
-    import pytest
-
-    from clif_spark.operators import graph as G
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(119)], "src long, dst long")
-    labels, rounds = G.connected_components_star(chain,
-                                                 return_rounds=True)
-    got = {r.node: r.component for r in labels.collect()}
-    assert got == {i: 0 for i in range(120)}
-    assert rounds <= 12, rounds  # log-ish, nowhere near the diameter
-    # min-label propagation on the same graph pays one round per hop:
-    # a 30-round budget (over half the shared FIXPOINT budget) is not
-    # enough for a 119-hop chain
-    with pytest.raises(RuntimeError, match="converge"):
-        G.connected_components(chain, max_iters=30)
 
 
 def test_triangle_counts_clique_and_pendant(spark):
