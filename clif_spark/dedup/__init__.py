@@ -205,7 +205,6 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
                       threshold: float = 0.7,
                       bands: int = DEFAULT_BANDS,
                       rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-                      verify: str = "carry",
                       max_bucket: int = 200) -> DataFrame:
     """End-to-end near-dup pipeline: shingle -> minhash bands -> LSH buckets
     -> exact-Jaccard verify -> pairs over threshold.
@@ -214,21 +213,13 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
     an ``array<string>`` column, so band signatures are a *narrow* map —
     ``array_min(transform(shingles, slice(md5(s))))`` per band-row — instead
     of an explode+distinct shuffle of the full (doc, shingle) relation.
-    Verification then has two shapes, chosen by ``verify``:
-
-    - ``"carry"`` (default): shingle arrays ride along INTO the bucket
-      groupBy, pair expansion emits (a, b, sh_a, sh_b) directly, and exact
-      Jaccard + the threshold filter run before the final narrow distinct.
-      One scan of the corpus, two shuffles total, zero re-joins. The bucket
-      shuffle carries ``bands`` copies of each doc's shingle array — the
-      right trade for pre-chunked LLM-pipeline docs (bounded row width),
-      and per-bucket memory stays bounded by ``max_bucket`` × chunk size.
-    - ``"rejoin"``: buckets shuffle only (doc, band_key); candidate pairs
-      are broadcast back against the shingle relation for verification.
-      The corpus-wide shuffle stays narrow at the price of recomputing the
-      shingle arrays on the verify side — the shape for corpora with
-      unbounded document lengths (or pair it with a materialized staging
-      table for the shingle relation).
+    Verification carries the shingle arrays INTO the bucket groupBy: pair
+    expansion emits (a, b, sh_a, sh_b) directly, and exact Jaccard + the
+    threshold filter run before the final narrow distinct. One scan of the
+    corpus, two shuffles total, zero re-joins. The bucket shuffle carries
+    ``bands`` copies of each doc's shingle array — the right trade for
+    pre-chunked LLM-pipeline docs (bounded row width), and per-bucket
+    memory stays bounded by ``max_bucket`` × chunk size.
     """
     sh = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc"),
@@ -254,66 +245,43 @@ def minhash_near_dups(docs: DataFrame, id_col: str = "doc_id",
             F.col("hs"),
             lambda h: F.substring(h, slice_w * func_idx + 1, slice_w)))
 
-    if verify == "carry":
-        # Band index folded into the key: one explode + one groupBy, with
-        # the shingle arrays riding along in the bucket's collect_list.
-        # Keys use NULL-PROPAGATING concat (not concat_ws): shingle-less
-        # docs (array_min over [] is NULL) produce NULL keys, filtered
-        # AFTER the explode — a predicate on generator output cannot be
-        # pushed below the shingle projection, where the previous
-        # size(sh) > 0 pre-filter re-evaluated the whole shingle
-        # expression per row (measured -30% end-to-end at sf1).
-        bkeys = F.array(*[
-            F.concat(F.lit(str(b)), *sum(
-                ([F.lit("|"), _slice_min(b * rows_per_band + r)]
-                 for r in range(rows_per_band)), []))
-            for b in range(bands)])
-        keyed = (sh.select("doc", "sh", F.explode(bkeys).alias("bk"))
-                   .filter(F.col("bk").isNotNull()))
-        buckets = (keyed.groupBy("bk")
-                   .agg(F.array_sort(F.collect_list(F.struct("doc", "sh")))
-                         .alias("ds"))
-                   .filter(F.size("ds").between(2, max_bucket)))
-        pairs = F.flatten(F.transform(
-            F.col("ds"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ds"), i + F.lit(2),
-                        F.greatest(F.size(F.col("ds")) - i - 1, F.lit(0))),
-                lambda b: F.struct(a["doc"].alias("a"), b["doc"].alias("b"),
-                                   a["sh"].alias("sh_a"),
-                                   b["sh"].alias("sh_b")))))
-        ex = (buckets.select(F.explode(pairs).alias("p"))
-                     .select("p.a", "p.b", "p.sh_a", "p.sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        # Jaccard + threshold BEFORE the dedup shuffle: multi-band dupes
-        # score identically, so distinct on the narrow scored rows is exact.
-        return (ex.select("a", "b",
-                          F.round(inter / (F.size("sh_a") + F.size("sh_b")
-                                           - inter), 4).alias("jaccard"))
-                  .filter(F.col("jaccard") >= threshold)
-                  .distinct())
-
-    # rejoin path keeps the pre-filter: its concat_ws band keys would fuse
-    # every shingle-less doc into one degenerate "" bucket otherwise (the
-    # carry path above handles this with NULL-propagating keys instead).
-    sh = sh.filter(F.size("sh") > 0)
-    band_cols = []
-    for b in range(bands):
-        parts = [_slice_min(b * rows_per_band + r) for r in range(rows_per_band)]
-        band_cols.append(F.concat_ws("|", *parts).alias(f"band_{b}"))
-    keys = (sh.select("doc", *band_cols)
-              .unpivot(["doc"], [f"band_{b}" for b in range(bands)],
-                       "band", "band_key"))
-    pairs = F.broadcast(pairs_from_buckets(keys, ["band", "band_key"],
-                                           "doc", max_bucket=max_bucket))
-    sa = sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b"))
+    # Band index folded into the key: one explode + one groupBy, with
+    # the shingle arrays riding along in the bucket's collect_list.
+    # Keys use NULL-PROPAGATING concat (not concat_ws): shingle-less
+    # docs (array_min over [] is NULL) produce NULL keys, filtered
+    # AFTER the explode — a predicate on generator output cannot be
+    # pushed below the shingle projection, where the previous
+    # size(sh) > 0 pre-filter re-evaluated the whole shingle
+    # expression per row (measured -30% end-to-end at sf1).
+    bkeys = F.array(*[
+        F.concat(F.lit(str(b)), *sum(
+            ([F.lit("|"), _slice_min(b * rows_per_band + r)]
+             for r in range(rows_per_band)), []))
+        for b in range(bands)])
+    keyed = (sh.select("doc", "sh", F.explode(bkeys).alias("bk"))
+               .filter(F.col("bk").isNotNull()))
+    buckets = (keyed.groupBy("bk")
+               .agg(F.array_sort(F.collect_list(F.struct("doc", "sh")))
+                     .alias("ds"))
+               .filter(F.size("ds").between(2, max_bucket)))
+    pairs = F.flatten(F.transform(
+        F.col("ds"),
+        lambda a, i: F.transform(
+            F.slice(F.col("ds"), i + F.lit(2),
+                    F.greatest(F.size(F.col("ds")) - i - 1, F.lit(0))),
+            lambda b: F.struct(a["doc"].alias("a"), b["doc"].alias("b"),
+                               a["sh"].alias("sh_a"),
+                               b["sh"].alias("sh_b")))))
+    ex = (buckets.select(F.explode(pairs).alias("p"))
+                 .select("p.a", "p.b", "p.sh_a", "p.sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (pairs.join(sa, "a").join(sb, "b")
-                 .select("a", "b",
-                         F.round(inter / (F.size("sh_a") + F.size("sh_b")
-                                          - inter), 4).alias("jaccard"))
-                 .filter(F.col("jaccard") >= threshold))
+    # Jaccard + threshold BEFORE the dedup shuffle: multi-band dupes
+    # score identically, so distinct on the narrow scored rows is exact.
+    return (ex.select("a", "b",
+                      F.round(inter / (F.size("sh_a") + F.size("sh_b")
+                                       - inter), 4).alias("jaccard"))
+              .filter(F.col("jaccard") >= threshold)
+              .distinct())
 
 
 #: SimHash geometry: 64 bits = 4 chunks × 16 bits = 16 md5 hex chars × 4
@@ -381,7 +349,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     pigeonhole; pairs further apart surface only if some chunk still
     matches), verified with ``bit_count(a XOR b)`` summed over chunks.
 
-    Carry-style single scan (the MinHash ``verify="carry"`` shape): chunk
+    Carry-style single scan (the shape of ``minhash_near_dups``): chunk
     values ride into the band groupBy, pair expansion emits both signatures,
     Hamming + threshold filter run before the final narrow distinct.
     ``max_bucket`` is the usual skew guard. Output: (a, b, hamming).

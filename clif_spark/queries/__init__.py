@@ -288,7 +288,7 @@ _REGATE = [
     "stream_incremental_dedup", "stream_partitioned_upsert",
     "stream_semantic_maintain", "text_bpe_roundtrip",
     "u11_partitioned_upsert",
-    # dedup.minhash_near_dups always broadcasts its rejoin pairs
+    # dedup.minhash_near_dups lost its unused option and verify path
     "dedup_minhash_recall_bound", "pipeline_llm_curation",
 ]
 VERIFY_HEAD_SIZE = 50

@@ -217,7 +217,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup detection, end-to-end: word-3-gram shingles ->
     4 bands × 2 minhash rows (slices of one md5, engine-portable) -> bucket
     grouping for candidates (skew-guarded, shingle arrays carried through —
-    the ``verify="carry"`` single-scan shape of dedup.minhash_near_dups) ->
+    the single-scan shape of dedup.minhash_near_dups) ->
     exact-Jaccard verify >= 0.5. 20 near-copies (one appended token) are
     planted; each must surface. All-pairs never materializes — candidate
     generation is groupBy(band_key). One-shot SQL, same plan as the operator

@@ -152,9 +152,9 @@ def test_rolling_fingerprint_prefix_extension(spark):
 
 
 def test_minhash_sql_headline_equals_operator_forms(spark):
-    """The one-shot-SQL headline (queries.llm.dedup_minhash_lsh), the
-    carry-verify operator, and the rejoin-verify operator are three
-    formulations of one algorithm — results must be identical."""
+    """The one-shot-SQL headline (queries.llm.dedup_minhash_lsh) and the
+    carry-verify operator are two formulations of one algorithm — results
+    must be identical."""
     from pyspark.sql import functions as F
 
     from clif_spark import dedup, io
@@ -170,11 +170,8 @@ def test_minhash_sql_headline_equals_operator_forms(spark):
         F.concat("text", F.lit(" extra trailing token")).alias("text"))
     docs2 = d.select("doc_id", "text").unionByName(planted)
     carry = sorted(map(tuple, dedup.minhash_near_dups(
-        docs2, threshold=0.5, verify="carry").collect()))
-    rejoin = sorted(map(tuple, dedup.minhash_near_dups(
-        docs2, threshold=0.5, verify="rejoin").collect()))
+        docs2, threshold=0.5).collect()))
     assert sql_rows == carry
-    assert carry == rejoin
     assert len(carry) > 0  # planted near-dups must surface
 
 
@@ -284,14 +281,8 @@ def test_minhash_handles_shingleless_docs(spark):
          (3, "short"), (4, "short"), (5, "two words"), (6, "")],
         ["doc_id", "text"])
     got = {(r.a, r.b) for r in
-           dedup.minhash_near_dups(docs, threshold=0.5,
-                                   verify="carry").collect()}
+           dedup.minhash_near_dups(docs, threshold=0.5).collect()}
     assert got == {(1, 2)}
-    # rejoin path agrees (it keeps the pre-filter formulation)
-    got_r = {(r.a, r.b) for r in
-             dedup.minhash_near_dups(docs, threshold=0.5,
-                                     verify="rejoin").collect()}
-    assert got_r == {(1, 2)}
 
 
 def test_numeric_histogram_bins(spark):
